@@ -41,7 +41,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from precios_nexo_sperant_etl_spark.registry import queries  # noqa: E402
-from precios_nexo_sperant_etl_spark.session import get_spark  # noqa: E402
+from precios_nexo_sperant_etl_spark.session import get_spark, local_cpus  # noqa: E402
 from precios_nexo_sperant_etl_spark.sources.tables import load_tables  # noqa: E402
 
 #: Headline set: one representative per engine subsystem.
@@ -338,7 +338,7 @@ def main() -> None:
         "timing_scheme": "fixed HEADLINE order; median-of-3 for "
                          f"queries >{MEDIAN3_THRESHOLD_SEC}s",
         "sf": sf,
-        "cpus": os.environ.get("SPARK_GRAFT_CPUS", "32"),
+        "cpus": local_cpus(),
     }
     here = os.path.dirname(os.path.abspath(__file__))
     for name in ("BENCH_DETAIL.json",

@@ -28,7 +28,9 @@ def _is_narrow(df: DataFrame, width: int) -> bool:
     # scan partitions, so this can fan out a big single file that
     # didn't strictly need it — one linear narrow shuffle, exactly
     # what a CPU-dense consumer wants anyway. Non-file-backed frames
-    # (cached/derived inputs) fall back to the RDD probe.
+    # (cached/derived inputs) fall back to the RDD probe. Probe one base
+    # relation: a join or union lists the files of every input, so a
+    # single-file side behind it can be judged wide.
     try:
         files = df.inputFiles()
     except Exception:

@@ -17,15 +17,19 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.kpi import kpi_by_group, kpi_cards, value_counts
+from ..sources.ingest import COL_NUMERO
 
 
 def records(df: DataFrame, prefer: list[str] | None = None) -> DataFrame:
     """Stage 4 (python_json.py:192-205): ordered projection of the
     columns present, ready for ``df.write.json`` (Spark emits NULL for
-    null doubles natively — the NaN→None hygiene pass is free)."""
+    null doubles natively — the NaN→None hygiene pass is free). The
+    accented names are the ones ingest produces; the unaccented ones are
+    the reference's own spelling."""
     if prefer is None:
-        prefer = ["Proyecto", "Numero de inmueble", "Precio de lista",
-                  "Precio de lista_num", "Estado de inmueble", "Tipologia",
+        prefer = ["Proyecto", COL_NUMERO, "Numero de inmueble",
+                  "Precio de lista", "Precio de lista_num",
+                  "Estado de inmueble", "Tipología", "Tipologia",
                   "Area techada", "Area techada_num", "Area total",
                   "Area total_num", "Dormitorios", "Dormitorios_num", "Piso"]
     cols = [c for c in prefer if c in df.columns]

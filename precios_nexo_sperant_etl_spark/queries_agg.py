@@ -13,8 +13,9 @@ from .operators.join import before_after
 from .operators.kpi import kpi_by_group, kpi_cards, value_counts
 from .operators.pivot import pct_within_group, pivot_counts
 from .operators.serve import distinct_sorted, equality_filters, global_search, sort_page
+from .operators.spread import fanout
 from .registry import register
-from .queries_scale_common import _fanout, _sorted1
+from .queries_scale_common import _sorted1
 from .sources.tables import load_tables
 
 # DECIMAL type used by functions.exact — the oracle must accumulate in the
@@ -395,15 +396,15 @@ def _q1(spark: SparkSession, sf: str) -> DataFrame:
     # 2-decimal business values, so (12,2)*(5,2)→(18,4)→*(5,2)→(24,6) is
     # exact in both Spark and DuckDB — no double rounding anywhere until
     # the final cast of the (already exact) group sum.
-    # _fanout: at bench scale lineitem is one parquet file, so the
+    # fanout: at bench scale lineitem is one parquet file, so the
     # 8-way decimal partial aggregation otherwise runs in a single scan
     # task (~0.9 s serial); no-op on real multi-split inputs. Decimal
     # sums are exact integers, so the spread cannot change any value.
-    li = _fanout(_t(spark, sf, "lineitem").filter(
+    li = fanout(_t(spark, sf, "lineitem").filter(
         F.col("l_shipdate") <= F.lit("1998-09-02 00:00:00")
         .cast("timestamp_ntz"))
         .select("l_returnflag", "l_linestatus", "l_quantity",
-                "l_extendedprice", "l_discount", "l_tax"), spark)
+                "l_extendedprice", "l_discount", "l_tax"))
     ep = F.col("l_extendedprice").cast("decimal(12,2)")
     disc = F.col("l_discount").cast("decimal(4,2)")
     tax = F.col("l_tax").cast("decimal(4,2)")

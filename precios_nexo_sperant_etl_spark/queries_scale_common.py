@@ -29,7 +29,6 @@ __all__ = [
     "_duck_char_hash",
     "_duck_dot",
     "_duck_md5_hash",
-    "_fanout",
     "_sorted1",
     "_spread",
     "_t",
@@ -124,22 +123,6 @@ toks AS (SELECT doc_id, {_DUCK_TOKENS} AS tk FROM documents),
 shs AS (SELECT doc_id, unnest({_DUCK_SHINGLES}) AS s FROM toks),
 hs AS (SELECT DISTINCT doc_id, {_duck_md5_hash('s')} AS h FROM shs)
 """
-
-
-def _fanout(df, spark):
-    """Scale-adaptive pre-spread for expensive narrow stages (heavy
-    regex/explode/decimal projections that run BEFORE the first
-    exchange). At bench scale every base table is ONE parquet file, so
-    the whole pre-exchange stage executes in a single task (guide §2.5
-    "input skew: one huge unsplittable file — repartition immediately
-    after the read"); on a real deployment the scan already has ≥
-    cores splits and this is a NO-OP — the condition keeps the extra
-    round-robin exchange out of fleet-scale plans instead of hard-
-    coding a local[32] shape.
-    """
-    if df.rdd.getNumPartitions() >= spark.sparkContext.defaultParallelism:
-        return df
-    return df.repartition(spark.sparkContext.defaultParallelism)
 
 
 def _sorted1(df, *cols):

@@ -5,6 +5,7 @@ queries_scale_common.py for why the split is positional. Import order
 (queries_scale.py) IS the registration order; do not reorder.
 """
 
+from .operators.spread import fanout
 from .queries_scale_common import *  # noqa: F401,F403
 from .queries_scale_part1 import (  # noqa: F401 — earlier-part helpers
     _ANN_QUERY_IDS, _BANDS_SQL, _BPE_MERGES,
@@ -448,10 +449,10 @@ def _filter_funnel(spark: SparkSession, sf: str) -> DataFrame:
     # old shape joined gopher_quality_flags back on doc_id, scanning and
     # tokenizing the corpus TWICE plus a join exchange for flags that
     # are pure Column expressions over the same text.
-    # _fanout: all three signals are regex-dense and the bench-scale
+    # fanout: all three signals are regex-dense and the bench-scale
     # scan is one parquet file (single task); no-op on real multi-split
     # inputs.
-    base = _fanout(docs.select("doc_id", "text"), spark).select(
+    base = fanout(docs.select("doc_id", "text")).select(
         "doc_id",
         lang_pred_expr(F.col("text")).alias("lp"),
         F.md5(canonical_text(F.col("text"))).alias("h"),
@@ -1154,9 +1155,9 @@ ORDER BY type_a, type_b
 # ---------------------------------------------------------------------------
 
 def _discount_price_corr(spark: SparkSession, sf: str) -> DataFrame:
-    # _fanout: six decimal-product partial sums over 600k rows would
+    # fanout: six decimal-product partial sums over 600k rows would
     # otherwise run in the single-task local scan stage
-    li = _fanout(_t(spark, sf, "lineitem"), spark)
+    li = fanout(_t(spark, sf, "lineitem"))
     x = (F.col("l_discount").cast("decimal(18,2)") * 100).cast("long")
     y = F.col("l_extendedprice").cast("decimal(18,2)")
     agg = (li.groupBy("l_returnflag").agg(
@@ -1211,9 +1212,9 @@ FROM s ORDER BY l_returnflag
 
 
 def _winsorized_mean(spark: SparkSession, sf: str) -> DataFrame:
-    # _fanout: the exact-percentile partial buffers over the whole
+    # fanout: the exact-percentile partial buffers over the whole
     # orders table would otherwise build in the single-task scan stage
-    o = _fanout(_t(spark, sf, "orders"), spark)
+    o = fanout(_t(spark, sf, "orders"))
     pct = (o.groupBy("o_orderstatus").agg(
         F.expr("percentile(o_totalprice, 0.05)").alias("p5"),
         F.expr("percentile(o_totalprice, 0.95)").alias("p95")))
@@ -1280,8 +1281,8 @@ FROM c GROUP BY o_orderstatus ORDER BY o_orderstatus
 def _pareto_frontier(spark: SparkSession, sf: str) -> DataFrame:
     from pyspark.sql import Window
     from .operators.text import BPE_ISH_PATTERN, quality_expr
-    d = (_fanout(_t(spark, sf, "documents"), spark)
-         # _fanout: the regexp_count + quality_expr projection is the
+    d = (fanout(_t(spark, sf, "documents"))
+         # fanout: the regexp_count + quality_expr projection is the
          # expensive stage and otherwise runs in the single-task local
          # scan (no-op on real multi-split inputs)
          .select(
@@ -1708,7 +1709,7 @@ def _item_item_cf(spark: SparkSession, sf: str) -> DataFrame:
     # the distinct; the sorted set expanded bucket-locally (posexplode +
     # slice, codegen generators — no interpreted lambda) yields each
     # a < b pair exactly once, so pair counts and per-item counts are
-    # unchanged. No _fanout here: the keyless repartition's mandatory
+    # unchanged. No fanout here: the keyless repartition's mandatory
     # pre-sort (SPARK-23207) of the full lineitem projection measured
     # +0.6 s, more than the single-task partial agg it parallelizes.
     baskets = (_t(spark, sf, "lineitem")

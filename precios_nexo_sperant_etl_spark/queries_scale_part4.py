@@ -5,6 +5,7 @@ queries_scale_common.py for why the split is positional. Import order
 (queries_scale.py) IS the registration order; do not reorder.
 """
 
+from .operators.spread import fanout
 from .queries_scale_common import *  # noqa: F401,F403
 from .queries_scale_part1 import (  # noqa: F401 — earlier-part helpers
     _ANN_QUERY_IDS, _ENP_PLANES, _ENP_THRESHOLD,
@@ -3648,10 +3649,10 @@ def _winnowing_fingerprints(spark: SparkSession, sf: str) -> DataFrame:
 
     from .operators.text import md5_hash
 
-    d = _fanout(_t(spark, sf, "documents")
-                .select("doc_id", F.trim("text").alias("t"))
-                .where(F.length("t") >= _WIN_K + _WIN_W - 1), spark)
-    # _fanout: the k-gram explode + 1.4M md5()s otherwise run in the
+    d = fanout(_t(spark, sf, "documents")
+               .select("doc_id", F.trim("text").alias("t"))
+               .where(F.length("t") >= _WIN_K + _WIN_W - 1))
+    # fanout: the k-gram explode + 1.4M md5()s otherwise run in the
     # single-task local scan stage before the window exchange
     grams = (d.select(
         "doc_id", F.length("t").alias("n"),

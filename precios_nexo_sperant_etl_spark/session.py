@@ -1,9 +1,9 @@
 """SparkSession construction tuned for this engine.
 
-Local testing runs ``local[$SPARK_GRAFT_CPUS]`` (default 32 threads); the
-same configuration scales to a real cluster because every knob here is
-about *plan shape* (AQE, broadcast threshold, shuffle partition sizing),
-not about single-node tricks.
+Local testing runs ``local[$SPARK_GRAFT_CPUS]`` (default: one thread per
+core, ``os.cpu_count()``); the same configuration scales to a real
+cluster because every knob here is about *plan shape* (AQE, broadcast
+threshold, shuffle partition sizing), not about single-node tricks.
 """
 
 from __future__ import annotations
@@ -46,6 +46,26 @@ def configure(spark: SparkSession) -> SparkSession:
     return spark
 
 
+def local_cpus(cpus: str | int | None = None) -> int:
+    """The local thread count: ``cpus`` when given, else
+    ``$SPARK_GRAFT_CPUS``, else ``os.cpu_count()``. A set variable that is
+    not a positive integer raises ``ValueError`` here, where it is read,
+    rather than as an opaque master-URL error inside the JVM."""
+    if cpus:
+        return int(cpus)
+    raw = os.environ.get("SPARK_GRAFT_CPUS")
+    if raw is None:
+        return os.cpu_count() or 1
+    try:
+        n = int(raw)
+    except ValueError:
+        n = 0
+    if n < 1:
+        raise ValueError(
+            f"SPARK_GRAFT_CPUS must be a positive integer, got {raw!r}")
+    return n
+
+
 def get_spark(app_name: str = "precios-nexo-sperant-etl-spark",
               cpus: str | int | None = None,
               shuffle_partitions: str | int | None = None) -> SparkSession:
@@ -56,7 +76,7 @@ def get_spark(app_name: str = "precios-nexo-sperant-etl-spark",
     on a real cluster this is overridden (and AQE coalescing makes the
     static value mostly moot).
     """
-    cpus = str(cpus or os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = local_cpus(cpus)
     shuffle = str(shuffle_partitions or cpus)
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")

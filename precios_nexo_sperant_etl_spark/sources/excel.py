@@ -10,13 +10,9 @@ Only the legacy BIFF ``.xls`` path still needs xlrd (binary format,
 not worth reimplementing) and keeps its loud environment guard.
 
 These functions produce/consume the raw row matrix that
-:func:`..ingest.ingest_sheet` normalizes — the *engine* never depends
-on Excel libraries.
-
-At real scale, spreadsheet fleets should be read cluster-side: a
-``binaryFile`` scan + ``mapInPandas`` calling these same per-file
-readers, one task per workbook (each workbook is one self-contained
-blob, so the parse parallelizes per file).
+:func:`..ingest.ingest_project_files` normalizes — the *engine* never
+depends on Excel libraries. Each workbook is one self-contained blob,
+so the fan-in calls these readers on executors, one task per file.
 """
 
 from __future__ import annotations
@@ -385,7 +381,7 @@ def _cell_value(c: ElementTree.Element, shared: list[str]) -> object:
     # Numeric: int when the serialized form is integral (what openpyxl
     # yields for whole numbers), float otherwise. Date cells arrive as
     # their raw serial number — this reader ignores number-format styles;
-    # ingest_sheet stringifies values anyway.
+    # ingest stringifies values anyway.
     txt = v.text
     if re.fullmatch(r"-?\d+", txt):
         return int(txt)

@@ -3,21 +3,19 @@ re-expressed at the DataFrame boundary.
 
 Spark cannot represent duplicate or dirty column names post-hoc, so this
 layer runs *before a DataFrame is born* (SURVEY §1.3): raw rows (from any
-driver-side reader — xlrd, openpyxl, csv) pass through header detection
-and name cleanup in plain Python (tiny, per-file, driver-side), then
-become a DataFrame with positional columns that a named projection
-collapses via ``coalesce`` — the engine-side analog of the reference's
-``bfill(axis=1)`` duplicate-column handling.
+reader — the stdlib .xls/.xlsx codecs, csv, an in-memory matrix) pass
+through header detection, name cleanup, duplicate-column collapse (the
+reference's ``bfill(axis=1)``) and alias renames in plain Python, per
+file, ON EXECUTORS.
 
-The per-file Python here is O(header), not O(rows): all row data flows
-into Spark untouched, so 100 TB of spreadsheet exports would still ingest
-in parallel (one task per file via ``spark.createDataFrame`` per file, or
-a binaryFile scan + mapInPandas for true cluster-side parsing).
+There is one fan-in, :func:`ingest_project_files`: one task per file,
+only column names cross to the driver, and the aligned union is
+checkpointed once so later actions never re-read the workbooks.
 """
 
 from __future__ import annotations
 
-from collections.abc import Sequence
+from collections.abc import Iterable, Iterator, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -70,141 +68,31 @@ def alias_pick(cols: Sequence[str], aliases: Sequence[str], canonical: str) -> s
     return canonical
 
 
-def ingest_sheet(spark: SparkSession, rows: Sequence[Sequence[object]],
-                 project: str, header_row: int | None = None) -> DataFrame:
-    """Reference ingest for one tolerantly-read sheet (APN:186-228):
-
-    1. header detection (fallback: physical row 5, i.e. index 4)
-    2. header cleanup (collapse whitespace)
-    3. duplicate-name collapse: first non-null across same-named columns
-       (``_collapse_duplicate_name``/``bfill``, APN:149-179) becomes a
-       positional ``coalesce`` projection
-    4. alias → canonical renames
-    5. ensure target columns exist (null backfill, P4)
-    6. price coercion via the F4 parser
-    7. ``Proyecto`` literal + a deterministic ingest ordinal (``_ord``)
-       replacing pandas' physical row order for downstream tiebreaks
-    """
-    hdr_idx = header_row if header_row is not None else find_header_row(rows)
-    if hdr_idx is None:
-        hdr_idx = 4
-    header = [clean_col_name(c) for c in rows[hdr_idx]]
-    data = [[None if c == "" else str(c) if c is not None else None for c in r]
-            for r in rows[hdr_idx + 1:]]
-    width = len(header)
-    # The trailing long is the in-file ordinal — the deterministic stand-in
-    # for pandas' physical row order (SURVEY §2.6 W4), assigned before the
-    # rows are parallelized so no partitioning can change it.
-    data = [list(r)[:width] + [None] * max(0, width - len(r)) + [i]
-            for i, r in enumerate(data)]
-
-    pos_schema = StructType(
-        [StructField(f"_c{i}", StringType()) for i in range(width)]
-        + [StructField("_ord", LongType())])
-    raw = spark.createDataFrame(data, pos_schema)
-
-    # duplicate-name collapse: first non-null left-to-right (F15/W3)
-    seen: dict[str, list[int]] = {}
-    for i, name in enumerate(header):
-        seen.setdefault(name, []).append(i)
-    named = raw.select(*([
-        F.coalesce(*[F.col(f"_c{i}") for i in idxs]).alias(name) if len(idxs) > 1
-        else F.col(f"_c{idxs[0]}").alias(name)
-        for name, idxs in seen.items()
-    ] + [F.col("_ord")]))
-
-    ren = {}
-    for aliases, canonical in ((ALIASES_NUMERO, COL_NUMERO),
-                               (ALIASES_PRECIO, COL_PRECIO),
-                               (ALIASES_ESTADO, COL_ESTADO)):
-        picked = alias_pick(named.columns, aliases, canonical)
-        if picked != canonical:
-            ren[picked] = canonical
-    for old, new in ren.items():
-        named = named.withColumnRenamed(old, new)
-
-    for c in (COL_NUMERO, COL_PRECIO, COL_ESTADO):
-        if c not in named.columns:
-            named = named.withColumn(c, F.lit(None).cast("string"))
-
-    named = named.withColumn(COL_PRECIO, to_number(F.col(COL_PRECIO)))
-    # The reference overwrites any pre-existing Proyecto column
-    # (APN:233 ``df['Proyecto'] = project``); dropping first avoids a
-    # duplicate column name that would make F.col('Proyecto') ambiguous.
-    if "Proyecto" in named.columns:
-        named = named.drop("Proyecto")
-    return named.select(F.lit(project).alias("Proyecto"), "*")
-
-
-def union_projects(dfs: Sequence[DataFrame]) -> DataFrame:
-    """U1 (APN:235): pandas-concat semantics — align on the union of
-    column names, missing columns become NULL."""
-    out = dfs[0]
-    for df in dfs[1:]:
-        out = out.unionByName(df, allowMissingColumns=True)
-    return out
-
-
-def ingest_project_files(spark: SparkSession, archivos: dict[str, str],
-                         reader=None, header_row: int | None = None,
-                         on_skip=None) -> DataFrame:
-    """S5 tolerant fan-in (APN:186-230): per-project file map → one union.
-
-    Mirrors the reference's error budget exactly:
-
-    - missing path → warn and skip (``print(f"❌ No encontrado: ...")``)
-    - per-file read/parse exception → warn and skip (the APN:229
-      ``except Exception`` around the whole per-file block)
-    - **zero** successful loads → ``RuntimeError`` (APN:231-232) — a
-      silent empty union would let downstream stages "succeed" on
-      nothing, which is the one failure the reference refuses to mask.
-
-    ``reader(path) -> rows`` supplies the raw row matrix (defaults to the
-    tolerant .xls shim; inject a fake for tests / other formats).
-    ``on_skip(project, reason)`` observes skips (defaults to a log
-    warning) so fleets can alert on degraded ingests rather than
-    discovering them in the row counts.
-    """
-    import logging
-
-    if reader is None:
-        from .excel import read_xls_rows
-        reader = read_xls_rows
-    if on_skip is None:
-        log = logging.getLogger(__name__)
-        on_skip = lambda project, reason: log.warning(  # noqa: E731
-            "skipping %s: %s", project, reason)
-
-    import os
-
-    loaded = []
-    for project, path in archivos.items():
-        if isinstance(path, str) and not os.path.exists(path):
-            on_skip(project, f"not found: {path}")
-            continue
-        try:
-            rows = reader(path)
-            loaded.append(ingest_sheet(spark, rows, project, header_row))
-        except Exception as ex:  # noqa: BLE001 — per-file tolerance is the op
-            on_skip(project, f"{type(ex).__name__}: {ex}")
-    if not loaded:
-        raise RuntimeError(
-            "No project file could be read — check paths and formats "
-            "(reference: 'No se leyó ningún .xls')")
-    return union_projects(loaded)
-
-
 def drop_all_null_rows(df: DataFrame, subset: Sequence[str] | None = None) -> DataFrame:
     """P7 (python_json.py:130): remove rows where every column is null."""
     return df.na.drop(how="all", subset=list(subset) if subset else None)
 
 
+_NOTHING_READ = ("No project file could be read — check paths and formats "
+                 "(reference: 'No se leyó ningún .xls')")
+
+
 def _parse_file_rows(rows: Sequence[Sequence[object]],
                      header_row: int | None) -> tuple[list[str], list[list]]:
-    """The per-file half of :func:`ingest_sheet`, shaped for executors:
-    header detect → clean names → positional duplicate collapse
-    (first non-null left-to-right) → alias renames → in-file ordinal.
-    Pure Python on ONE file's rows; returns (column names, row lists)."""
+    """Reference ingest for ONE tolerantly-read sheet (APN:186-228), pure
+    Python so it runs on executors:
+
+    1. header detection (fallback: physical row 5, i.e. index 4)
+    2. header cleanup (collapse whitespace)
+    3. duplicate-name collapse: first non-null left-to-right across
+       same-named columns (``_collapse_duplicate_name``/``bfill``,
+       APN:149-179)
+    4. alias → canonical renames
+    5. the in-file ordinal, appended last — the deterministic stand-in
+       for pandas' physical row order (SURVEY §2.6 W4), assigned before
+       any partitioning can change it
+
+    Returns (column names, row lists); cells are strings or None."""
     hdr_idx = header_row if header_row is not None else find_header_row(rows)
     if hdr_idx is None:
         hdr_idx = 4
@@ -238,29 +126,70 @@ def _parse_file_rows(rows: Sequence[Sequence[object]],
     return names, out_rows
 
 
-def ingest_project_files_distributed(spark: SparkSession,
-                                     archivos: dict[str, str],
-                                     reader=None,
-                                     header_row: int | None = None,
-                                     on_skip=None) -> DataFrame:
-    """S5 fan-in at fleet scale: same tolerant semantics as
-    :func:`ingest_project_files` (missing path / per-file parse error →
-    warn and skip; zero successes → ``RuntimeError``) but the file
-    parsing runs ON EXECUTORS, one task per file, so 1 000 workbook
-    exports ingest in parallel instead of a driver-side loop.
+def union_names(name_lists: Iterable[Sequence[str]]) -> list[str]:
+    """U1 (APN:235): the first-seen-ordered union of column names —
+    pandas-concat column order."""
+    out: list[str] = []
+    seen: set[str] = set()
+    for names in name_lists:
+        for n in names:
+            if n not in seen:
+                seen.add(n)
+                out.append(n)
+    return out
+
+
+def align_rows(project: str, names: Sequence[str], rows: Iterable[list],
+               target: Sequence[str]) -> Iterator[tuple]:
+    """Align one file's :func:`_parse_file_rows` output to ``target``
+    by name: ``(project, *target values, _ord)``; a name the file lacks
+    is NULL, a file name outside ``target`` is dropped."""
+    pos = {n: i for i, n in enumerate(names)}
+    idxs = [pos.get(n) for n in target]
+    for r in rows:
+        yield tuple([project]
+                    + [None if i is None else r[i] for i in idxs]
+                    + [r[-1]])
+
+
+def ingest_project_files(spark: SparkSession, archivos: dict[str, str],
+                         reader=None, header_row: int | None = None,
+                         on_skip=None) -> DataFrame:
+    """S5 tolerant fan-in (APN:186-230): per-project file map → one
+    DataFrame.
+
+    Mirrors the reference's error budget exactly:
+
+    - missing path → warn and skip (``print(f"❌ No encontrado: ...")``)
+    - per-file read/parse exception → warn and skip (the APN:229
+      ``except Exception`` around the whole per-file block)
+    - **zero** successful loads → ``RuntimeError`` (APN:231-232) — a
+      silent empty union would let downstream stages "succeed" on
+      nothing, which is the one failure the reference refuses to mask.
+
+    ``reader(path) -> rows`` supplies the raw row matrix (defaults to the
+    tolerant .xls reader; inject a fake for tests / other formats). Only
+    ``str`` paths are checked for existence; anything else goes to
+    ``reader`` as it is. Reader and paths run on executors, so both must
+    pickle. ``on_skip(project, reason)`` observes skips (defaults to a
+    log warning) so fleets can alert on degraded ingests rather than
+    discovering them in the row counts.
 
     Mechanics: the (project, path) list is parallelized with one
-    partition per file; each task reads + header-normalizes its file
-    (:func:`_parse_file_rows` — the same logic ``ingest_sheet`` runs)
-    and yields tagged records. The parsed RDD is persisted once, a
-    NAMES-ONLY pass collects the union of column name lists (bounded
-    by header width × distinct layouts, never row data), then the row
-    pass aligns every file to that union (pandas-concat semantics, U1)
-    and becomes one DataFrame. Skip reports ride the same cached pass.
+    partition per file; each task reads and normalizes its file
+    (:func:`_parse_file_rows`). The parsed RDD is persisted once, a
+    NAMES-ONLY pass collects each file's column names (bounded by header
+    width × distinct layouts, never row data), then the row pass aligns
+    every file to the union (:func:`align_rows`) and becomes one
+    DataFrame, checkpointed so later actions do not re-read the files.
 
-    The driver-loop variant stays for small interactive runs; tests
-    pin that both produce identical rows."""
+    Columns: ``Proyecto`` (the map key, which overwrites any in-file
+    ``Proyecto`` as APN:233 does), the first-seen union of file headers,
+    the canonical columns no file had (all NULL), then ``_ord``, the
+    row's position within its own file. ``Precio de lista`` is parsed
+    by the F4 number parser."""
     import logging
+    import os
 
     if reader is None:
         from .excel import read_xls_rows
@@ -270,8 +199,6 @@ def ingest_project_files_distributed(spark: SparkSession,
         on_skip = lambda project, reason: log.warning(  # noqa: E731
             "skipping %s: %s", project, reason)
 
-    import os
-
     items = []
     for project, path in archivos.items():
         if isinstance(path, str) and not os.path.exists(path):
@@ -279,76 +206,47 @@ def ingest_project_files_distributed(spark: SparkSession,
             continue
         items.append((project, path))
     if not items:
-        raise RuntimeError(
-            "No project file could be read — check paths and formats "
-            "(reference: 'No se leyó ningún .xls')")
-
-    hdr = header_row
+        raise RuntimeError(_NOTHING_READ)
 
     def parse_one(item):
         project, path = item
         try:
-            names, rows = _parse_file_rows(reader(path), hdr)
+            names, rows = _parse_file_rows(reader(path), header_row)
             return ("ok", project, names, rows)
         except Exception as ex:  # noqa: BLE001 — per-file tolerance is the op
             return ("skip", project, f"{type(ex).__name__}: {ex}", None)
 
-    sc = spark.sparkContext
-    parsed = sc.parallelize(items, numSlices=len(items)).map(parse_one)
+    parsed = spark.sparkContext.parallelize(
+        items, numSlices=len(items)).map(parse_one)
     parsed.persist()
     try:
         # names-only pass: tiny driver traffic (no row data)
-        metas = parsed.map(lambda t: (t[0], t[1], t[2] if t[0] == "skip"
-                                      else tuple(t[2]))).collect()
-        all_names: list[str] = []
-        seen_names: set[str] = set()
-        n_ok = 0
-        for tag, project, info in metas:
+        file_names = []
+        for tag, project, info in parsed.map(lambda t: t[:3]).collect():
             if tag == "skip":
                 on_skip(project, info)
-                continue
-            n_ok += 1
-            for n in info:
-                if n not in seen_names:
-                    seen_names.add(n)
-                    all_names.append(n)
-        if not n_ok:
-            raise RuntimeError(
-                "No project file could be read — check paths and formats "
-                "(reference: 'No se leyó ningún .xls')")
-        for c in (COL_NUMERO, COL_PRECIO, COL_ESTADO):
-            if c not in seen_names:
-                seen_names.add(c)
-                all_names.append(c)
-
-        # APN:233 semantics: the map key OVERWRITES any in-file
-        # Proyecto column, so that name never enters the union
-        target = [n for n in all_names if n != "Proyecto"]
-
-        def align(t):
-            if t[0] != "ok":
-                return
-            _, project, names, rows = t
-            pos = {n: i for i, n in enumerate(names)}
-            idxs = [pos.get(n) for n in target]
-            for r in rows:
-                yield tuple(
-                    [project]
-                    + [None if i is None else r[i] for i in idxs]
-                    + [r[-1]])
-
-        out_schema = StructType(
+            else:
+                file_names.append(info)
+        if not file_names:
+            raise RuntimeError(_NOTHING_READ)
+        target = [n for n in union_names(
+            file_names + [[COL_NUMERO, COL_PRECIO, COL_ESTADO]])
+            if n != "Proyecto"]
+        schema = StructType(
             [StructField("Proyecto", StringType())]
             + [StructField(n, StringType()) for n in target]
             + [StructField("_ord", LongType())])
-        df = spark.createDataFrame(parsed.flatMap(align), out_schema)
+        aligned = parsed.filter(lambda t: t[0] == "ok").flatMap(
+            lambda t: align_rows(t[1], t[2], t[3], target))
         # Materialize ONCE before releasing the parsed cache:
-        # createDataFrame over an RDD is lazy, so unpersisting here
-        # without this would make every caller action re-read and
-        # re-parse all files. localCheckpoint pins the aligned rows in
-        # executor storage and truncates the lineage back to the
-        # Python parse closures.
-        df = df.localCheckpoint(eager=True)
+        # createDataFrame over an RDD is lazy, so without this every
+        # caller action would re-read and re-parse all files.
+        # localCheckpoint pins the aligned rows in executor storage and
+        # truncates the lineage back to the Python parse closures.
+        df = spark.createDataFrame(aligned, schema).localCheckpoint(eager=True)
         return df.withColumn(COL_PRECIO, to_number(F.col(COL_PRECIO)))
     finally:
         parsed.unpersist()
+
+
+ingest_project_files_distributed = ingest_project_files

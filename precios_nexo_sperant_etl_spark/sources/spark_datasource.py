@@ -6,22 +6,23 @@ record files, zipped datasets and SQLite exports ingest like any
 first-class format — planning on the driver, PARSING ON EXECUTORS,
 one input partition per file.
 
-Why this exists next to ``sources.ingest``: the RDD-based
-``ingest_project_files_distributed`` mirrors the reference's tolerant
-per-file fan-in (warn-and-skip, union-by-name across layouts); these
-formats are the Spark-idiomatic spelling for the common case of a
-CONSISTENT layout — they compose with every DataFrame reader option,
-show up in the plan as a scan, and let Catalyst prune columns on top.
-Both yield plain rows, so at 1 000 executors each file parses exactly
-where its partition is scheduled; nothing but the file list and (for
-xlsx) one header row ever crosses the driver.
+Why this exists next to ``sources.ingest``: ``ingest_project_files``
+is the reference's tolerant per-file fan-in (warn-and-skip,
+union-by-name across arbitrarily heterogeneous layouts); these formats
+are the Spark-idiomatic spelling for the common case of a CONSISTENT
+layout — they compose with every DataFrame reader option, show up in
+the plan as a scan, and let Catalyst prune columns on top. The xlsx
+reader normalizes and aligns with the same ingest helpers
+(``_parse_file_rows``, ``union_names``, ``align_rows``). Both parse on
+executors, one file per task; nothing but the file list and column
+names ever crosses the driver.
 
 Scale notes: the file list comes from a driver-side glob (metadata
 only). xlsx schema inference reads the header rows of the first
 ``samples`` files (default 1) at planning time and takes the
 first-seen-ordered union of names; other files align by name
 executor-side (missing name → null, extra name → dropped unless
-``strict=true``, which fails the read loudly; the tolerant RDD path
+``strict=true``, which fails the read loudly; ``ingest_project_files``
 remains the gear for arbitrarily heterogeneous layouts). WARC schema
 is static, so planning touches no data at all; `.zst` and `.gz`
 members inflate through the verified zstd/gzip seams
@@ -170,21 +171,15 @@ class ExcelDataSource(DataSource):
         return "xlsx"
 
     def schema(self) -> StructType:
-        from .ingest import _parse_file_rows
         from .excel import read_xlsx_rows
+        from .ingest import _parse_file_rows, union_names
         files = _file_list(self.options)
         n_samples = max(1, int(self.options.get("samples", 1)))
         hdr = self.options.get("header_row")
-        names: list[str] = []
-        seen: set[str] = set()
-        for sample in files[:n_samples]:
-            file_names, _ = _parse_file_rows(
-                read_xlsx_rows(sample, _sheet_opt(self.options)),
-                int(hdr) if hdr is not None else None)
-            for n in file_names:
-                if n not in seen:
-                    seen.add(n)
-                    names.append(n)
+        names = union_names(
+            _parse_file_rows(read_xlsx_rows(sample, _sheet_opt(self.options)),
+                             int(hdr) if hdr is not None else None)[0]
+            for sample in files[:n_samples])
         fields = [StructField("Proyecto", StringType())]
         fields += [StructField(n, StringType()) for n in names
                    if n != "Proyecto"]
@@ -236,7 +231,7 @@ class ExcelReader(DataSourceReader):
 
     def read(self, partition: _FilePartition):
         from .excel import read_xlsx_rows
-        from .ingest import _parse_file_rows
+        from .ingest import _parse_file_rows, align_rows
         if partition.path == "\x00empty":       # all files pruned
             return
         hdr = int(self.header_row) if self.header_row is not None else None
@@ -253,12 +248,7 @@ class ExcelReader(DataSourceReader):
                     f"{extra} absent from the inferred schema — raise "
                     "the 'samples' option (or drop strict) so no "
                     "column is silently lost")
-        pos = {n: i for i, n in enumerate(names)}
-        idxs = [pos.get(n) for n in target]
-        for r in rows:
-            yield tuple([project]
-                        + [None if i is None else r[i] for i in idxs]
-                        + [r[-1]])
+        yield from align_rows(project, names, rows, target)
 
 
 class _XlsxCommit(WriterCommitMessage):

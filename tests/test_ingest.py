@@ -1,12 +1,12 @@
 """Ingest-layer tests: header auto-detection, alias renames,
 duplicate-column collapse, null backfill, union-by-name (FIXTURES.md §A2
-quirks)."""
+quirks). Sheets go through the one fan-in, ``ingest_project_files``."""
 
 from pyspark.sql import functions as F
 
 from precios_nexo_sperant_etl_spark.sources.ingest import (
     COL_ESTADO, COL_NUMERO, COL_PRECIO, drop_all_null_rows, find_header_row,
-    ingest_sheet, union_projects)
+    ingest_project_files)
 
 MESSY_SHEET = [
     ["REPORTE DE PRECIOS", "", "", "", "", ""],          # banner
@@ -19,13 +19,20 @@ MESSY_SHEET = [
 ]
 
 
+def ingest_sheets(spark, sheets, header_row=None):
+    """The fan-in over in-memory sheets: each project's "path" is its own
+    row matrix, which the reader hands back unchanged."""
+    return ingest_project_files(spark, sheets, reader=lambda rows: rows,
+                                header_row=header_row)
+
+
 def test_find_header_row():
     assert find_header_row(MESSY_SHEET) == 3
     assert find_header_row([["x", "y"], ["1", "2"]]) is None
 
 
 def test_ingest_sheet_normalization(spark):
-    df = ingest_sheet(spark, MESSY_SHEET, project="Matera")
+    df = ingest_sheets(spark, {"Matera": MESSY_SHEET})
     # alias renames landed ('codigo' -> Número, 'precio lista' -> Precio…)
     for c in ("Proyecto", COL_NUMERO, COL_PRECIO, COL_ESTADO, "Tipología", "_ord"):
         assert c in df.columns, c
@@ -43,16 +50,19 @@ def test_ingest_sheet_normalization(spark):
 
 
 def test_union_by_name_null_backfill(spark):
-    a = ingest_sheet(spark, MESSY_SHEET, project="Matera")
-    b = ingest_sheet(spark, [
+    u = ingest_sheets(spark, {"Matera": MESSY_SHEET, "Fenix": [
         ["Número de inmueble", "Precio de lista", "Estado de inmueble"],
         ["201", "300,25", "Disponible"],
         ["202", "", None],
-    ], project="Fenix", header_row=0)
-    u = union_projects([a, b])
+    ]})
     assert u.count() == 5
     fenix = u.filter(F.col("Proyecto") == "Fenix").collect()
     assert all(r["Tipología"] is None for r in fenix)  # missing col -> NULL
+    # a canonical column no file has is backfilled after the file headers
+    only = ingest_sheets(spark, {"X": [["codigo", "Torre"], ["1", "T"]]})
+    assert only.columns == ["Proyecto", COL_NUMERO, "Torre", COL_PRECIO,
+                            COL_ESTADO, "_ord"]
+    assert only.collect()[0][COL_ESTADO] is None
 
 
 def test_drop_all_null_rows(spark):
@@ -64,8 +74,6 @@ def test_tolerant_fan_in(spark, tmp_path):
     """S5 (APN:186-230): missing file → skip, corrupt file → skip,
     surviving files union; zero survivors → RuntimeError."""
     import pytest
-
-    from precios_nexo_sperant_etl_spark.sources.ingest import ingest_project_files
 
     good = tmp_path / "good.xls"
     good.write_text("placeholder")
@@ -114,8 +122,7 @@ def test_matera_duplicate_header_collapse(spark):
             + sum(([None, None, None, f"{n[:3]}-last"] for n in dup_names), [])
             + [None] * len(singles))
 
-    df = ingest_sheet(spark, [header, row1, row2], project="Matera",
-                      header_row=0)
+    df = ingest_sheets(spark, {"Matera": [header, row1, row2]}, header_row=0)
     assert len(df.columns) == len(set(df.columns))        # no dup names survive
     for c in (COL_NUMERO, COL_PRECIO, COL_ESTADO):        # aliases picked
         assert c in df.columns, c
@@ -131,7 +138,7 @@ def test_xlsx_roundtrip_and_e2e_ingest(spark, tmp_path):
     """S1 is EXECUTABLE, not a guard: a workbook generated by the stdlib
     writer round-trips through the stdlib zip+XML reader (typed cells,
     sparse gaps, second sheet, shared-string-free inline text), and the
-    messy sheet flows through read_xlsx_rows → ingest_sheet end to end —
+    messy sheet flows through read_xlsx_rows → ingest end to end —
     the reference's pd.read_excel(...) → normalize path (APN:36)."""
     from precios_nexo_sperant_etl_spark.sources.excel import (read_xlsx_rows,
                                                               write_xlsx)
@@ -150,9 +157,8 @@ def test_xlsx_roundtrip_and_e2e_ingest(spark, tmp_path):
     assert tipos[2] == [None] * 4                       # empty physical row
     assert tipos[3][:3] == [-3, 1e300, False]
 
-    # E2E: reader output drives the full ingest normalization.
-    rows = read_xlsx_rows(path)                          # first sheet
-    df = ingest_sheet(spark, rows, project="Matera")
+    # E2E: reader output (first sheet) drives the full ingest normalization.
+    df = ingest_project_files(spark, {"Matera": path}, reader=read_xlsx_rows)
     got = {r[COL_NUMERO]: r for r in df.collect()}
     assert set(got) == {"101.0", "102", "A103"}
     assert got["101.0"][COL_PRECIO] == 1000.50
@@ -296,11 +302,11 @@ def test_xls_reader_cell_types(tmp_path):
 
 def test_xls_e2e_ingest(spark, tmp_path):
     """The reference's S2 path end to end: a legacy workbook (banner
-    rows, aliased headers) → stdlib BIFF reader → ingest_sheet."""
-    from precios_nexo_sperant_etl_spark.sources.excel import read_xls_rows
+    rows, aliased headers) → stdlib BIFF reader (the fan-in's default)
+    → ingest."""
     path = str(tmp_path / "precios.xls")
     _make_xls(path, MESSY_SHEET)
-    df = ingest_sheet(spark, read_xls_rows(path), project="Matera")
+    df = ingest_project_files(spark, {"Matera": path})
     got = {r[COL_NUMERO]: r for r in df.collect()}
     assert set(got) == {"101.0", "102", "A103"}
     assert got["101.0"][COL_PRECIO] == 1000.50

@@ -1,18 +1,17 @@
 """Ingest fan-in at fleet scale (VERDICT r9 item 7): the Matera shape —
 an 86-column export with duplicated headers (`tablas_actualizadas/
 Matera.xlsx`: `Tipo Inmueble` ×4, `Piso` ×4, `Área Total` ×4; 189 data
-rows) — replicated ×1000 files, ingested with the DISTRIBUTED fan-in
+rows) — replicated ×1000 files, ingested with the fan-in
 (one executor task per file, no driver-side per-cell loop), then run
 through the §3.1 pipeline operator chain (W1 dedup → J1/J2 match flags
 → F14 coalesce update → F16-F19 change flags → A1/A7 audit).
 
-Parallelism model (also in PLANS.md): `ingest_project_files` keeps the
-reference's driver-side loop for interactive runs; at fleet scale
-`ingest_project_files_distributed` parallelizes (project, path) with
-one partition per file, parses on executors, collects COLUMN NAMES
-only (bounded by header width × distinct layouts), and aligns rows to
-the name union executor-side. The only driver-side work is path
-existence checks and the names union.
+Parallelism model (also in PLANS.md): `ingest_project_files` is the one
+fan-in. It parallelizes (project, path) with one partition per file,
+parses on executors, collects COLUMN NAMES only (bounded by header
+width × distinct layouts), and aligns rows to the name union
+executor-side. The only driver-side work is path existence checks and
+the names union.
 """
 
 from __future__ import annotations
@@ -30,8 +29,7 @@ from precios_nexo_sperant_etl_spark.operators.update import coalesce_update
 from precios_nexo_sperant_etl_spark.sources.excel import (read_xlsx_rows,
                                                           write_xlsx)
 from precios_nexo_sperant_etl_spark.sources.ingest import (
-    COL_ESTADO, COL_NUMERO, COL_PRECIO, ingest_project_files,
-    ingest_project_files_distributed)
+    COL_ESTADO, COL_NUMERO, COL_PRECIO, ingest_project_files)
 
 N_FILES = 1000
 N_ROWS = 189
@@ -79,10 +77,11 @@ def matera_files(tmp_path_factory):
     return paths
 
 
-def test_distributed_matches_driver_loop(spark, tmp_path):
-    """Row-for-row parity between the driver-loop fan-in and the
-    distributed one, on heterogeneous layouts + one unreadable file +
-    one missing path (warn-and-skip both ways)."""
+def test_fan_in_heterogeneous_layouts(spark, tmp_path):
+    """Expected values for the fan-in over heterogeneous layouts + one
+    unreadable file + one missing path: both are warned-and-skipped, the
+    columns are Proyecto, the first-seen union of the file headers, then
+    _ord, and every row lands aligned by name."""
     sheet_a = _matera_sheet()
     sheet_b = [  # different layout: extra column, different aliases
         ["codigo", "precio", "estado", "Torre"],
@@ -95,28 +94,32 @@ def test_distributed_matches_driver_loop(spark, tmp_path):
     pc.write_bytes(b"not a zip at all")
     archivos = {"A": str(pa), "B": str(pb), "C": str(pc),
                 "D": str(tmp_path / "missing.xlsx")}
-    skips_loop, skips_dist = [], []
-    loop = ingest_project_files(
+    skips = []
+    df = ingest_project_files(
         spark, archivos, reader=read_xlsx_rows, header_row=None,
-        on_skip=lambda p, r: skips_loop.append(p))
-    dist = ingest_project_files_distributed(
-        spark, archivos, reader=read_xlsx_rows, header_row=None,
-        on_skip=lambda p, r: skips_dist.append(p))
-    assert sorted(skips_loop) == sorted(skips_dist) == ["C", "D"]
-    cols = sorted(loop.columns)
-    assert sorted(dist.columns) == cols
-    key = ["Proyecto", "_ord"]
-    a = {tuple(r) for r in loop.select(*key, *[c for c in cols
-                                               if c not in key]).collect()}
-    b = {tuple(r) for r in dist.select(*key, *[c for c in cols
-                                               if c not in key]).collect()}
-    assert a == b
+        on_skip=lambda p, r: skips.append((p, r.split(":")[0])))
+    assert sorted(skips) == [("C", "BadZipFile"), ("D", "not found")]
+
+    fillers = [f"Col {i}" for i in range(71)]
+    assert df.columns == (["Proyecto", COL_NUMERO, COL_PRECIO, COL_ESTADO,
+                           "Tipo Inmueble", "Piso", "Área Total"]
+                          + fillers + ["Torre", "_ord"])
+    blank = (None,) * (3 + len(fillers))
+    want = {("B", "7", 1234.5, "Disponible (Visible)", *blank, "T1", 0),
+            ("B", "8", None, "No Disponible (Separado)", *blank, "T2", 1)}
+    for i in range(N_ROWS):
+        estado = "Disponible (Visible)" if i % 3 else "No Disponible (Vendido)"
+        want.add(("A", f"U-{i:04d}", float(f"{1000 + i}.{i % 100:02d}"),
+                  estado, *(f"v{d}-{i % 7}" for d in range(3)),
+                  *(f"x{i % 5}",) * len(fillers), None, i))
+    got = [tuple(r) for r in df.collect()]
+    assert len(got) == len(want)
+    assert set(got) == want
 
 
 @pytest.fixture(scope="module")
 def matera_ingested(spark, matera_files):
-    df = ingest_project_files_distributed(
-        spark, matera_files, reader=read_xlsx_rows)
+    df = ingest_project_files(spark, matera_files, reader=read_xlsx_rows)
     df.persist()
     yield df
     df.unpersist()

@@ -8,22 +8,19 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from precios_nexo_sperant_etl_spark.plans.kpi_pipeline import records
 from precios_nexo_sperant_etl_spark.plans.reference_pipeline import update_prices
 from precios_nexo_sperant_etl_spark.sources.ingest import (COL_ESTADO, COL_NUMERO,
-                                                           COL_PRECIO, ingest_sheet,
-                                                           union_projects)
-from tests.test_ingest import MESSY_SHEET
+                                                           COL_PRECIO)
+from tests.test_ingest import MESSY_SHEET, ingest_sheets
 
 
 def _fixture(spark):
-    nexo = union_projects([
-        ingest_sheet(spark, MESSY_SHEET, project="Matera"),
-        ingest_sheet(spark, [
-            ["Número de inmueble", "Precio de lista", "Estado de inmueble"],
-            ["201", "300,25", "Disponible"],
-            ["202", "", None],
-        ], project="Fenix", header_row=0),
-    ])
+    nexo = ingest_sheets(spark, {"Matera": MESSY_SHEET, "Fenix": [
+        ["Número de inmueble", "Precio de lista", "Estado de inmueble"],
+        ["201", "300,25", "Disponible"],
+        ["202", "", None],
+    ]})
     sperant = spark.createDataFrame(
         [("Matera ", "A101", 1100.0, "disponible", dt.datetime(2024, 1, 1), 0),
          ("matera", "A101", 1200.0, "vendido", dt.datetime(2024, 2, 1), 1),
@@ -73,6 +70,17 @@ def test_update_prices_end_to_end(spark):
     # Sperant-only project even though its rows joined via normalized keys.
     assert [r[0] for r in out["solo_sperant"].collect()] == ["Solitario", "matera"]
     assert out["solo_nexo"].count() == 0
+
+
+def test_records_keep_ingest_columns(spark):
+    """records.json carries the unit number and typology under the
+    accented names ingest produces, so a dashboard can look a unit up."""
+    nexo, _ = _fixture(spark)
+    got = records(nexo)
+    assert got.columns == ["Proyecto", COL_NUMERO, COL_PRECIO, COL_ESTADO,
+                           "Tipología"]
+    assert {r[COL_NUMERO] for r in got.collect()} == {
+        "101.0", "102", "A103", "201", "202"}
 
 
 def test_update_prices_string_dates_drive_dedup(spark):

@@ -185,28 +185,26 @@ def main() -> None:
         "",
         "## Ingest parallelism model (VERDICT r9 item 7)",
         "",
-        "The xlsx/xls fan-in has two gears with identical warn-and-"
-        "skip semantics, pinned row-for-row equal by "
-        "`tests/test_ingest_scale.py`:",
-        "",
-        "- `sources.ingest.ingest_project_files` — the reference-"
-        "shaped driver-side loop (APN:186-230). Per-file Python is "
-        "O(header); fine for interactive runs over tens of files.",
-        "- `sources.ingest.ingest_project_files_distributed` — fleet "
-        "scale: the (project, path) list parallelizes with ONE "
-        "PARTITION PER FILE; each executor task runs the tolerant "
-        "reader + header detection + duplicate-name collapse + alias "
-        "renames (`_parse_file_rows`, the same logic `ingest_sheet` "
-        "applies); the parsed RDD persists once; the driver collects "
-        "COLUMN NAMES only (bounded by header width × distinct "
-        "layouts, never row data); a second pass aligns rows to the "
-        "name union executor-side (pandas-concat/U1 semantics) and "
-        "the result becomes one DataFrame with the F4 price coercion "
-        "applied as a Column expr. Driver-side work is path existence "
-        "checks + the names union — no per-cell loop anywhere on the "
-        "driver. Verified against the Matera shape (86 columns, "
-        "`Tipo Inmueble`/`Piso`/`Área Total` ×4, 189 rows) × 1000 "
-        "files, then through the §3.1 operator chain end-to-end.",
+        "The xlsx/xls fan-in is one function, "
+        "`sources.ingest.ingest_project_files` (APN:186-230; "
+        "`ingest_project_files_distributed` is an alias of it). The "
+        "(project, path) list parallelizes with ONE PARTITION PER "
+        "FILE; each executor task runs the tolerant reader + header "
+        "detection + duplicate-name collapse + alias renames "
+        "(`_parse_file_rows`); the parsed RDD persists once; the "
+        "driver collects COLUMN NAMES only (bounded by header width × "
+        "distinct layouts, never row data); a second pass aligns rows "
+        "to the first-seen name union executor-side "
+        "(`union_names`/`align_rows`, pandas-concat/U1 semantics, "
+        "shared with the `xlsx` data source); the result is "
+        "checkpointed once and gets the F4 price coercion as a Column "
+        "expr. Driver-side work is path existence checks + the names "
+        "union — no per-cell loop anywhere on the driver. Verified "
+        "against the Matera shape (86 columns, `Tipo Inmueble`/`Piso`/"
+        "`Área Total` ×4, 189 rows) × 1000 files, then through the "
+        "§3.1 operator chain end-to-end; `tests/test_ingest_scale.py` "
+        "pins the rows, skips and column order over heterogeneous "
+        "layouts.",
         "",
     ]
     out = os.path.join(os.path.dirname(os.path.dirname(
