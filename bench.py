@@ -239,12 +239,12 @@ HEADLINE = [
     "golden_record_merge",      # MDM survivorship windows
     "fellegi_sunter_weights",   # blocked linkage m/u estimation
     "series_ohlc_downsample",   # one-agg chart decimation
-    "bz2_multistream_extract",  # from-scratch bzip2 multistream
-    "xz_dump_extract",          # from-scratch LZMA range decoding
+    "bz2_multistream_extract",  # bz2 multistream census
+    "xz_dump_extract",          # liblzma decode + index census
     "wikipedia_dump_pipeline",  # XML-in-bz2 ingest, JVM-side parse
     "mojibake_repair_audit",    # JVM charset-chain repair
     "ip_range_lookup_join",     # bucket-decomposed banded-dim BHJ
-    "deflate_dynamic_roundtrip",  # from-scratch RFC 1951 stack
+    "deflate_dynamic_roundtrip",  # stdlib gzip member roundtrip
     "lake_time_travel",         # commit-log snapshot replay
     "event_pattern_match",      # regex funnel over event strings
     "streaming_scd2_upsert",    # foreachBatch merge into state

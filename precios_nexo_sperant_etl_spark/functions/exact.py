@@ -61,16 +61,21 @@ def ddot(a: Column, b: Column) -> Column:
     the two sizes reproduces ``zip_with``'s null-padding on (never
     expected) length mismatches: any out-of-range index yields a null
     product and nulls the whole fold, exactly as before.
+
+    A NULL input yields NULL. ``greatest`` skips a NULL size, so without
+    the first branch a NULL array paired with an empty one would take
+    the ``n == 0`` branch and read 0.0.
     """
     n = F.greatest(F.size(a), F.size(b))
     # when(n == 0): sequence(0, -1) would DESCEND, not be empty — return
     # the fold's init value directly, as aggregate([]) does.
-    return F.when(n == 0, F.lit(0.0)).otherwise(
-        F.aggregate(
-            F.sequence(F.lit(0), n - 1),
-            F.lit(0.0),
-            lambda acc, i: acc + (F.get(a, i).cast("double")
-                                  * F.get(b, i).cast("double"))))
+    return (F.when(a.isNull() | b.isNull(), F.lit(None).cast("double"))
+            .when(n == 0, F.lit(0.0))
+            .otherwise(F.aggregate(
+                F.sequence(F.lit(0), n - 1),
+                F.lit(0.0),
+                lambda acc, i: acc + (F.get(a, i).cast("double")
+                                      * F.get(b, i).cast("double")))))
 
 
 def make_ddot_arrow():

@@ -1,676 +1,43 @@
-"""From-scratch bzip2 codec (decoder + subset encoder) — the container
-Wikipedia-class corpus dumps ship in (multistream ``.bz2``), built from
-the public format (the format has no RFC; the layout is fixed by the
-reference implementation and documented in e.g. the bzip2 manual and
-the Hadoop/commons-compress ports):
+"""bzip2 multistream census over the stdlib ``bz2`` decoder — the
+container Wikipedia-class corpus dumps ship in (multistream ``.bz2``:
+one stream per page batch, byte-aligned back to back).
 
-``'BZh' + level`` stream header; per block a 48-bit magic
-``0x314159265359``, 32-bit block CRC, the deprecated ``randomised``
-bit (always 0 since bzip2 0.9.5 — refused here), a 24-bit BWT origin
-pointer, the two-level used-symbol bitmap, 2..6 Huffman groups with
-MTF+unary-coded selectors switching every 50 symbols, per-group
-delta-coded canonical code lengths, then the RLE2(MTF(BWT(RLE1(data))))
-symbol stream; stream footer ``0x177245385090`` + combined CRC. All
-bit I/O is MSB-first; the CRC is the CRC-32/BZIP2 variant (poly
-0x04C11DB7 fed MSB-first, init/final 0xFFFFFFFF — NOT the reflected
-zlib CRC).
-
-Independence: both directions are pinned against the stdlib ``bz2``
-module in tests (their encoder → this decoder, this encoder → their
-decoder), the same external-implementation discipline as the zstd
-stack — shared-table bugs cannot hide in a self-roundtrip.
-
-The encoder is an honest SUBSET: single-stream, 100k level, 2
-identical Huffman groups (the legal minimum; selectors all pick group
-0), and a sorted-rotations BWT bounded by ``_ENC_MAX_BLOCK`` — right
-for record-sized payloads on executors, not for re-compressing whole
-dumps (bind the real bzip2 for that tier; reading is the scale path
-here).
+``bz2.decompress`` already reads concatenated streams, but it does not
+say how many there were, and it silently drops trailing bytes that do
+not parse. The census walks the streams one ``BZ2Decompressor`` at a
+time (each stops at its end-of-stream marker and leaves the rest in
+``unused_data``), refuses trailing garbage, and counts each stream's
+blocks by scanning its bits for the 48-bit block magic
+``0x314159265359`` — the same scan ``bzip2recover`` uses, since blocks
+are bit-aligned and carry no length field.
 """
 
 from __future__ import annotations
 
-import heapq
+import bz2
 
-_BLOCK_MAGIC = 0x314159265359
-_EOS_MAGIC = 0x177245385090
-_ENC_MAX_BLOCK = 1 << 15  # sorted-rotations BWT bound (post-RLE1 bytes)
+from .concatenated import read_stream
 
-
-class Bzip2Error(ValueError):
-    pass
-
-
-# --- CRC-32/BZIP2 -----------------------------------------------------------
-
-def _crc_table() -> list[int]:
-    tbl = []
-    for b in range(256):
-        c = b << 24
-        for _ in range(8):
-            c = ((c << 1) ^ 0x04C11DB7 if c & 0x80000000 else c << 1) \
-                & 0xFFFFFFFF
-        tbl.append(c)
-    return tbl
-
-
-_CRC_TBL = _crc_table()
-
-
-def _crc_slice8() -> list[list[int]]:
-    """Slice-by-8 tables: ``T[k][b]`` advances byte ``b`` through k
-    additional zero bytes, so 8 input bytes fold in one table round —
-    the standard Intel slicing construction, same polynomial, same
-    bit order (verified byte-for-byte against the 1-byte loop in
-    tests/test_bzip2.py)."""
-    tabs = [_CRC_TBL]
-    for _ in range(7):
-        prev = tabs[-1]
-        tabs.append([((prev[b] << 8) & 0xFFFFFFFF)
-                     ^ _CRC_TBL[(prev[b] >> 24) & 0xFF] for b in range(256)])
-    return tabs
-
-
-_CRC8 = _crc_slice8()
-
-
-def bz2_crc(data: bytes, crc: int = 0xFFFFFFFF) -> int:
-    t0, t1, t2, t3, t4, t5, t6, t7 = _CRC8
-    n8 = len(data) & ~7
-    i = 0
-    while i < n8:
-        hi = crc ^ int.from_bytes(data[i:i + 4], "big")
-        lo = int.from_bytes(data[i + 4:i + 8], "big")
-        crc = (t7[(hi >> 24) & 0xFF] ^ t6[(hi >> 16) & 0xFF]
-               ^ t5[(hi >> 8) & 0xFF] ^ t4[hi & 0xFF]
-               ^ t3[(lo >> 24) & 0xFF] ^ t2[(lo >> 16) & 0xFF]
-               ^ t1[(lo >> 8) & 0xFF] ^ t0[lo & 0xFF])
-        i += 8
-    for b in data[n8:]:
-        crc = ((crc << 8) & 0xFFFFFFFF) ^ _CRC_TBL[((crc >> 24) ^ b) & 0xFF]
-    return crc
-
-
-def _crc_final(crc: int) -> int:
-    return crc ^ 0xFFFFFFFF
-
-
-# --- MSB-first bit I/O ------------------------------------------------------
-
-class _BitReader:
-    def __init__(self, data: bytes, pos_bits: int = 0) -> None:
-        self.d = data
-        self.p = pos_bits
-
-    def read(self, n: int) -> int:
-        # one int.from_bytes over the covering bytes instead of a
-        # per-bit loop (same MSB-first semantics, same IndexError on
-        # reads past the end)
-        p = self.p
-        end = p + n
-        d = self.d
-        b1 = (end + 7) >> 3
-        if b1 > len(d):
-            raise IndexError("bzip2: bit read past end of stream")
-        v = (int.from_bytes(d[p >> 3:b1], "big")
-             >> ((b1 << 3) - end)) & ((1 << n) - 1)
-        self.p = end
-        return v
-
-    def read1(self) -> int:
-        byte = self.d[self.p >> 3]
-        bit = (byte >> (7 - (self.p & 7))) & 1
-        self.p += 1
-        return bit
-
-    def peek(self, n: int) -> int:
-        """Next ``n`` bits MSB-first WITHOUT advancing; reads past the
-        end of the stream are zero-padded (the one-shot Huffman table
-        peeks a fixed width that can overrun the final code)."""
-        p = self.p
-        end = p + n
-        d = self.d
-        b1 = (end + 7) >> 3
-        chunk = d[p >> 3:b1]
-        short = b1 - (p >> 3) - len(chunk)
-        if short > 0:
-            chunk = chunk + b"\x00" * short
-        return (int.from_bytes(chunk, "big")
-                >> ((b1 << 3) - end)) & ((1 << n) - 1)
-
-
-class _BitWriter:
-    def __init__(self) -> None:
-        self.out = bytearray()
-        self.acc = 0
-        self.nb = 0
-
-    def write(self, v: int, n: int) -> None:
-        self.acc = (self.acc << n) | (v & ((1 << n) - 1))
-        self.nb += n
-        while self.nb >= 8:
-            self.nb -= 8
-            self.out.append((self.acc >> self.nb) & 0xFF)
-        self.acc &= (1 << self.nb) - 1
-
-    def write_big(self, v: int, n: int) -> None:
-        """Append ``n`` bits of ``v`` in ONE int.to_bytes conversion —
-        the bulk path for pre-packed sections (the per-block Huffman
-        symbol stream): same bit stream as n calls to ``write``, minus
-        the per-call and per-byte Python overhead."""
-        total = (self.acc << n) | (v & ((1 << n) - 1))
-        nbt = self.nb + n
-        rem = nbt & 7
-        nbytes = (nbt - rem) >> 3
-        if nbytes:
-            self.out += (total >> rem).to_bytes(nbytes, "big")
-        self.acc = total & ((1 << rem) - 1)
-        self.nb = rem
-
-    def finish(self) -> bytes:
-        if self.nb:
-            self.out.append((self.acc << (8 - self.nb)) & 0xFF)
-            self.acc = 0
-            self.nb = 0
-        return bytes(self.out)
-
-
-# --- canonical Huffman (bzip2 style: lengths table -> limit/base/perm) ------
-
-_HTBITS = 12  # one-shot decode table width (codes are 1..20 bits)
-
-
-def _huff_decode_tables(lengths: list[int]):
-    """bzip2's limit/base/perm decoding tables from code lengths, plus
-    a zlib-style one-shot primary table: ``table[peek(_HTBITS)]`` =
-    ``(code_len << 16) | symbol`` for every code of length ≤ _HTBITS
-    (bzip2 bit I/O is MSB-first, so a length-``ln`` code owns one
-    CONTIGUOUS slice of the peek space — a single C-speed slice store
-    per symbol). Longer codes fall back to the original limit/base/perm
-    walk. Same canonical code assignment as before — only the lookup
-    mechanics changed (pinned against stdlib bz2 in tests)."""
-    min_len = min(lengths)
-    max_len = max(lengths)
-    perm = []
-    for ln in range(min_len, max_len + 1):
-        for sym, sl in enumerate(lengths):
-            if sl == ln:
-                perm.append(sym)
-    count = [0] * (max_len + 2)
-    for sl in lengths:
-        count[sl] += 1
-    limit = [0] * (max_len + 2)
-    base = [0] * (max_len + 2)
-    vec = 0
-    total = 0
-    for ln in range(min_len, max_len + 1):
-        base[ln] = vec - total
-        total += count[ln]
-        vec += count[ln]
-        limit[ln] = vec - 1
-        vec <<= 1
-    table = [0] * (1 << _HTBITS)
-    code = 0
-    idx = 0
-    for ln in range(min_len, max_len + 1):
-        if ln > _HTBITS:
-            break
-        width = 1 << (_HTBITS - ln)
-        for _ in range(count[ln]):
-            sym = perm[idx]
-            idx += 1
-            lo = code << (_HTBITS - ln)
-            table[lo:lo + width] = [(ln << 16) | sym] * width
-            code += 1
-        code <<= 1
-    return min_len, max_len, limit, base, perm, table
-
-
-def _huff_read_symbol(br: _BitReader, tabs) -> int:
-    min_len, max_len, limit, base, perm, table = tabs
-    entry = table[br.peek(_HTBITS)]
-    if entry:
-        br.p += entry >> 16
-        # peek() zero-pads past end-of-stream, so a truncated stream
-        # could advance p beyond the data and decode phantom symbols
-        # until a later CRC/magic gate; fail at the overrun instead,
-        # mirroring read()'s bound.
-        if br.p > len(br.d) * 8:
-            raise Bzip2Error("bzip2: truncated stream inside Huffman "
-                             "symbol")
-        return entry & 0xFFFF
-    ln = min_len
-    v = br.read(min_len)
-    while ln <= max_len:
-        if v <= limit[ln]:
-            return perm[v - base[ln]]
-        v = (v << 1) | br.read1()
-        ln += 1
-    raise Bzip2Error("bzip2: invalid Huffman code")
-
-
-def _huff_lengths(freqs: list[int], max_len: int = 17) -> list[int]:
-    """Code lengths for the encoder: standard heap Huffman, then a
-    crude-but-valid rebalance if anything exceeds ``max_len`` (flatten
-    to ceil-log2 — always a legal prefix code for our small
-    alphabets). Every symbol gets a code (bzip2 requires it)."""
-    n = len(freqs)
-    if n == 1:
-        return [1]
-    heap = [(max(f, 1), i, (i,)) for i, f in enumerate(freqs)]
-    heapq.heapify(heap)
-    lens = [0] * n
-    while len(heap) > 1:
-        fa, ia, sa = heapq.heappop(heap)
-        fb, ib, sb = heapq.heappop(heap)
-        for s in sa + sb:
-            lens[s] += 1
-        heapq.heappush(heap, (fa + fb, min(ia, ib), sa + sb))
-    if max(lens) > max_len:
-        flat = max(1, (n - 1).bit_length())
-        if flat > max_len:
-            raise Bzip2Error("bzip2: alphabet too large to flatten")
-        lens = [flat] * n
-    return lens
-
-
-def _huff_codes(lengths: list[int]) -> list[int]:
-    """Canonical codes in the same (length, symbol-order) convention
-    the decoder's perm table walks."""
-    codes = [0] * len(lengths)
-    vec = 0
-    for ln in range(min(lengths), max(lengths) + 1):
-        for sym, sl in enumerate(lengths):
-            if sl == ln:
-                codes[sym] = vec
-                vec += 1
-        vec <<= 1
-    return codes
-
-
-# --- decoder ----------------------------------------------------------------
-
-def _decode_block(br: _BitReader, block_size100k: int) -> bytes:
-    stored_crc = br.read(32)
-    if br.read1():
-        raise Bzip2Error("bzip2: deprecated randomised blocks unsupported")
-    orig_ptr = br.read(24)
-    # two-level used-symbol map
-    used16 = br.read(16)
-    used = []
-    for i in range(16):
-        if used16 & (0x8000 >> i):
-            bits = br.read(16)
-            for j in range(16):
-                if bits & (0x8000 >> j):
-                    used.append(16 * i + j)
-        # unused range: no bits
-    n_used = len(used)
-    if not n_used:
-        raise Bzip2Error("bzip2: empty symbol map")
-    alpha = n_used + 2                      # RUNA, RUNB, MTFV.., EOB
-    n_groups = br.read(3)
-    if not 2 <= n_groups <= 6:
-        raise Bzip2Error("bzip2: bad group count")
-    n_sel = br.read(15)
-    sel_mtf = [0] * n_groups
-    for i in range(n_groups):
-        sel_mtf[i] = i
-    selectors = []
-    for _ in range(n_sel):
-        j = 0
-        while br.read1():
-            j += 1
-            if j >= n_groups:
-                raise Bzip2Error("bzip2: selector overflow")
-        v = sel_mtf.pop(j)
-        sel_mtf.insert(0, v)
-        selectors.append(v)
-    tables = []
-    for _ in range(n_groups):
-        ln = br.read(5)
-        lens = []
-        for _ in range(alpha):
-            while br.read1():
-                ln += -1 if br.read1() else 1
-                if not 1 <= ln <= 20:
-                    raise Bzip2Error("bzip2: bad code length")
-            lens.append(ln)
-        tables.append(_huff_decode_tables(lens))
-    eob = alpha - 1
-    # RLE2 + MTF decode straight into the BWT column. The per-symbol
-    # Huffman decode is INLINED on a local bit cursor (r12): the
-    # method-call form (_huff_read_symbol + peek's int.from_bytes
-    # slice per symbol) was 55% of block-decode time; here the
-    # 12-bit table index comes from one 3-byte window read
-    # (p&7 + 12 <= 19 < 24 bits), zero-padded by a one-time 3-byte
-    # tail so end-of-stream peeks read 0s exactly like peek() —
-    # overrun still raises after the length advance, mirroring
-    # _huff_read_symbol. Long codes (>12 bits, rare) fall back to the
-    # shared reader with the cursor synced both ways.
-    mtf = list(used)
-    bwt = bytearray()
-    limit = block_size100k * 100000
-    run = 0
-    run_bit = 0
-    g_idx = -1
-    g_left = 0
-    table = None
-    dpad = br.d + b"\x00\x00\x00"
-    dbits = len(br.d) * 8
-    p = br.p
-    n_sel_total = len(selectors)
-    while True:
-        if g_left == 0:
-            g_idx += 1
-            if g_idx >= n_sel_total:
-                raise Bzip2Error("bzip2: ran out of selectors")
-            tabs = tables[selectors[g_idx]]
-            table = tabs[5]
-            g_left = 50
-        g_left -= 1
-        bi = p >> 3
-        w = ((dpad[bi] << 16) | (dpad[bi + 1] << 8) | dpad[bi + 2])
-        entry = table[(w >> (12 - (p & 7))) & 0xFFF]
-        if entry:
-            p += entry >> 16
-            if p > dbits:
-                raise Bzip2Error("bzip2: truncated stream inside "
-                                 "Huffman symbol")
-            sym = entry & 0xFFFF
-        else:
-            br.p = p
-            sym = _huff_read_symbol(br, tabs)
-            p = br.p
-        if sym <= 1:                         # RUNA / RUNB
-            run += (sym + 1) << run_bit
-            run_bit += 1
-            continue
-        if run:
-            bwt.extend(bytes([mtf[0]]) * run)
-            run = 0
-            run_bit = 0
-        if sym == eob:
-            break
-        v = mtf.pop(sym - 1)
-        mtf.insert(0, v)
-        bwt.append(v)
-        if len(bwt) > limit:
-            raise Bzip2Error("bzip2: block overflows its size class")
-    br.p = p
-    if run:
-        bwt.extend(bytes([mtf[0]]) * run)
-    n = len(bwt)
-    if orig_ptr >= n:
-        raise Bzip2Error("bzip2: origin pointer out of range")
-    # inverse BWT, vectorized: the counting-sort next-link table is
-    # exactly the stable argsort of the BWT column (same (byte,
-    # occurrence) order), and the sequential cycle walk is replaced by
-    # pointer doubling — log2(n) gathers instead of n Python steps.
-    # Same output bytes as the scalar walk (pinned against stdlib bz2).
-    import numpy as np
-    bwt_np = np.frombuffer(bytes(bwt), dtype=np.uint8)
-    nxt = np.argsort(bwt_np, kind="stable").astype(np.int64)
-    seq = nxt[orig_ptr:orig_ptr + 1]
-    jump = nxt  # advances seq.size steps along the cycle
-    while seq.size < n:
-        k = min(seq.size, n - seq.size)
-        seq = np.concatenate([seq, jump[seq[:k]]])
-        if seq.size < n:
-            jump = jump[jump]
-    out = bwt_np[seq]
-    # RLE1: 4 equal bytes are followed by an extra-repeat count byte.
-    # Fast path: no 4-run anywhere (typical text) -> the block IS the
-    # plain data; otherwise the original per-run loop.
-    if n < 4 or not (
-            (out[:-3] == out[1:-2]) & (out[1:-2] == out[2:-1])
-            & (out[2:-1] == out[3:])).any():
-        plain = bytearray(out.tobytes())
-    else:
-        out = bytearray(out.tobytes())
-        plain = bytearray()
-        i = 0
-        while i < n:
-            b = out[i]
-            j = i + 1
-            while j < n and j - i < 4 and out[j] == b:
-                j += 1
-            if j - i == 4:
-                if j >= n:
-                    raise Bzip2Error("bzip2: truncated RLE1 run")
-                plain.extend(bytes([b]) * (4 + out[j]))
-                i = j + 1
-            else:
-                plain.extend(out[i:j])
-                i = j
-    if _crc_final(bz2_crc(bytes(plain))) != stored_crc:
-        raise Bzip2Error("bzip2: block CRC mismatch")
-    return bytes(plain)
+_BLOCK_MAGIC_BITS = format(0x314159265359, "048b")
 
 
 def decode_bzip2(blob: bytes) -> dict:
     """Decode a (possibly multistream) .bz2 blob. Returns
-    ``{'content', 'n_streams', 'n_blocks'}``. Streams are
-    byte-aligned back to back (the Wikipedia multistream layout)."""
-    out = bytearray()
-    n_streams = 0
+    ``{'content', 'n_streams', 'n_blocks'}``. Corrupt data raises the
+    stdlib's ``OSError``; truncated or empty input raises
+    ``ValueError``."""
+    view = memoryview(blob)
+    out = []
     n_blocks = 0
     pos = 0
-    while pos < len(blob):
-        if blob[pos:pos + 2] != b"BZ":
-            raise Bzip2Error("bzip2: bad stream magic")
-        if blob[pos + 2:pos + 3] != b"h":
-            raise Bzip2Error("bzip2: only the 'h' (Huffman) format exists")
-        level = blob[pos + 3] - 0x30
-        if not 1 <= level <= 9:
-            raise Bzip2Error("bzip2: bad block-size level")
-        br = _BitReader(blob, (pos + 4) * 8)
-        combined = 0
-        while True:
-            magic = br.read(48)
-            if magic == _BLOCK_MAGIC:
-                blk = _decode_block(br, level)
-                out.extend(blk)
-                n_blocks += 1
-                combined = (((combined << 1) | (combined >> 31))
-                            & 0xFFFFFFFF) ^ _crc_final(bz2_crc(blk))
-            elif magic == _EOS_MAGIC:
-                stored = br.read(32)
-                if stored != combined:
-                    raise Bzip2Error("bzip2: combined CRC mismatch")
-                break
-            else:
-                raise Bzip2Error("bzip2: bad block magic")
-        n_streams += 1
-        pos = (br.p + 7) >> 3               # streams are byte-aligned
-    if not n_streams:
-        raise Bzip2Error("bzip2: empty input")
-    return {"content": bytes(out), "n_streams": n_streams,
+    while pos < len(view):
+        content, end = read_stream(view, pos, bz2.BZ2Decompressor(),
+                                   "bzip2")
+        out.append(content)
+        n_blocks += bin(int.from_bytes(view[pos:end], "big")).count(
+            _BLOCK_MAGIC_BITS)
+        pos = end
+    if not out:
+        raise ValueError("bzip2: empty input")
+    return {"content": b"".join(out), "n_streams": len(out),
             "n_blocks": n_blocks}
-
-
-# --- encoder (subset: one stream, 2 identical groups) ------------------------
-
-def _rle1(data: bytes) -> bytes:
-    n = len(data)
-    # fast path: no 4-byte run anywhere (typical text) -> RLE1 is the
-    # identity; one vectorized scan replaces the per-byte loop
-    if n < 4:
-        return data
-    import numpy as np
-    a = np.frombuffer(data, dtype=np.uint8)
-    if not ((a[:-3] == a[1:-2]) & (a[1:-2] == a[2:-1])
-            & (a[2:-1] == a[3:])).any():
-        return data
-    out = bytearray()
-    i = 0
-    while i < n:
-        b = data[i]
-        j = i
-        while j < n and j - i < 255 + 4 and data[j] == b:
-            j += 1
-        run = j - i
-        if run >= 4:
-            out.extend(bytes([b]) * 4)
-            out.append(run - 4)
-        else:
-            out.extend(bytes([b]) * run)
-        i = j
-    return bytes(out)
-
-
-def _bwt(data: bytes) -> tuple[bytes, int]:
-    """Cyclic-rotation BWT via numpy prefix doubling: ranks compare a
-    2k-prefix of each rotation per round, so log2(n) stable lexsorts
-    replace the O(n² log n) sliced-rotation sort. Tie order among fully
-    EQUAL rotations (periodic inputs) is arbitrary — the lexsort
-    tie-break key is the previous round's order permutation, not a
-    per-rotation original index — but output bytes and the roundtrip
-    are unaffected: equal rotations share their last-column byte, and
-    any orig_ptr within the group reconstructs the same string (pinned
-    against stdlib bz2 both directions in tests/test_bzip2.py)."""
-    import numpy as np
-    n = len(data)
-    if n == 1:
-        return data, 0
-    if n <= 1024:
-        # Record-sized blocks (the multistream carriages encode one
-        # document per stream): 5+ numpy lexsort rounds cost more in
-        # per-call overhead than one C sort of materialized rotations.
-        # Tie order among equal rotations differs from the
-        # prefix-doubling path but is output-equivalent (docstring
-        # above); measured ~3× at n≈300.
-        doubled = data + data
-        order_s = sorted(range(n), key=lambda i: doubled[i:i + n])
-        last_b = bytes(data[(i - 1) % n] for i in order_s)
-        return last_b, order_s.index(0)
-    arr = np.frombuffer(data, dtype=np.uint8)
-    rank = arr.astype(np.int64)
-    order = np.arange(n)
-    k = 1
-    while k < n:
-        second = np.roll(rank, -k)
-        order = np.lexsort((order, second, rank))
-        r1 = rank[order]
-        r2 = second[order]
-        changed = np.empty(n, dtype=np.int64)
-        changed[0] = 0
-        np.cumsum((r1[1:] != r1[:-1]) | (r2[1:] != r2[:-1]),
-                  out=changed[1:])
-        new_rank = np.empty(n, dtype=np.int64)
-        new_rank[order] = changed
-        rank = new_rank
-        if changed[-1] == n - 1:
-            break
-        k <<= 1
-    last = arr[(order - 1) % n].tobytes()
-    return last, int(np.nonzero(order == 0)[0][0])
-
-
-def encode_bzip2(data: bytes) -> bytes:
-    """Encode ``data`` as one bzip2 stream (level 1 container; blocks
-    bounded by the sorted-rotations BWT limit). Raises on empty input
-    (bzip2 streams always carry at least the EOS; stdlib accepts an
-    empty-payload stream but record sinks never need one here)."""
-    if not data:
-        raise Bzip2Error("bzip2: empty payload")
-    w = _BitWriter()
-    w.out.extend(b"BZh1")
-    combined = 0
-    # Split the PLAIN data and RLE1 each block independently — exactly
-    # the reference encoder's per-block shape, and it makes splitting
-    # trivially safe (an RLE1 unit can never straddle blocks). RLE1
-    # worst-case expansion is 5/4 (a bare 4-run gains a count byte),
-    # so the plain quota keeps every block under _ENC_MAX_BLOCK.
-    plain_quota = _ENC_MAX_BLOCK * 4 // 5
-    for off in range(0, len(data), plain_quota):
-        plain = data[off:off + plain_quota]
-        rblk = _rle1(plain)
-        blk_crc = _crc_final(bz2_crc(bytes(plain)))
-        combined = (((combined << 1) | (combined >> 31))
-                    & 0xFFFFFFFF) ^ blk_crc
-        bwt, orig_ptr = _bwt(rblk)
-        used = sorted(set(bwt))
-        rank = {b: i for i, b in enumerate(used)}
-        alpha = len(used) + 2
-        eob = alpha - 1
-        # MTF + RLE2
-        mtf = list(used)
-        syms: list[int] = []
-        zrun = 0
-
-        def flush_zrun(z: int) -> None:
-            while z:
-                z -= 1
-                syms.append(z & 1)          # RUNA=0 / RUNB=1 bijective
-                z >>= 1
-
-        for b in bwt:
-            p = mtf.index(b)
-            if p == 0:
-                zrun += 1
-                continue
-            flush_zrun(zrun)
-            zrun = 0
-            mtf.pop(p)
-            mtf.insert(0, b)
-            syms.append(p + 1)
-        flush_zrun(zrun)
-        syms.append(eob)
-        freqs = [0] * alpha
-        for s in syms:
-            freqs[s] += 1
-        lens = _huff_lengths(freqs)
-        codes = _huff_codes(lens)
-        n_sel = (len(syms) + 49) // 50
-        w.write(_BLOCK_MAGIC, 48)
-        w.write(blk_crc, 32)
-        w.write(0, 1)                       # not randomised
-        w.write(orig_ptr, 24)
-        used16 = 0
-        for b in used:
-            used16 |= 0x8000 >> (b >> 4)
-        w.write(used16, 16)
-        for i16 in range(16):
-            if used16 & (0x8000 >> i16):
-                bits = 0
-                for b in used:
-                    if (b >> 4) == i16:
-                        bits |= 0x8000 >> (b & 15)
-                w.write(bits, 16)
-        w.write(2, 3)                       # nGroups = 2 (legal minimum)
-        w.write(n_sel, 15)
-        for _ in range(n_sel):
-            w.write(0, 1)                   # selector MTF 0 -> group 0
-        for _ in range(2):                  # two identical tables
-            cur = lens[0]
-            w.write(cur, 5)
-            for ln in lens:
-                while cur < ln:
-                    w.write(0b10, 2)
-                    cur += 1
-                while cur > ln:
-                    w.write(0b11, 2)
-                    cur -= 1
-                w.write(0, 1)
-        # Symbol stream: pack all codes with numpy and append in one
-        # bulk write (r12) — the per-symbol w.write loop was the
-        # encoder's single largest cost (one method call + per-byte
-        # flush per symbol).
-        import numpy as np
-        syms_np = np.asarray(syms, dtype=np.int64)
-        L = np.asarray(lens, dtype=np.int64)[syms_np]
-        C = np.asarray(codes, dtype=np.int64)[syms_np]
-        ends = np.cumsum(L)
-        total_bits = int(ends[-1])
-        pos = np.arange(total_bits, dtype=np.int64)
-        sym_id = np.searchsorted(ends, pos, side="right")
-        bit_from_end = ends[sym_id] - pos - 1
-        bits = ((C[sym_id] >> bit_from_end) & 1).astype(np.uint8)
-        packed = np.packbits(bits)          # MSB-first, zero-padded
-        pad = len(packed) * 8 - total_bits
-        w.write_big(int.from_bytes(packed.tobytes(), "big") >> pad,
-                    total_bits)
-    w.write(_EOS_MAGIC, 48)
-    w.write(combined, 32)
-    return w.finish()

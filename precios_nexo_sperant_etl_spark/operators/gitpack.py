@@ -4,10 +4,10 @@ Implements the public git formats — loose zlib objects, the PACK v2
 container (gitformat-pack(5)): size/type varint headers, OFS_DELTA /
 REF_DELTA entries with the copy/insert delta instruction stream, and
 the SHA-1 trailer — plus SHA-1 itself from FIPS 180-1 (no hashlib in
-the hash path). Every zlib member goes through OUR RFC 1950/1951
-codec (``deflatecodec.zlib_decompress_stream`` — packfiles concatenate
-members with no length framing, so only the inflater knows where each
-entry ends). The INDEPENDENT implementation pinned against in
+the hash path). zlib members are inflated by stdlib ``zlib``;
+packfiles concatenate members with no length framing, so each entry's
+end is where its ``decompressobj`` stops (``operators.concatenated``).
+The INDEPENDENT implementation pinned against in
 ``tests/test_gitpack.py`` is the real ``git`` binary: it builds and
 gc-packs repositories (producing genuine delta chains) that we decode,
 and it ``index-pack``s + ``cat-file``s the packs we write.
@@ -22,6 +22,9 @@ lake-side training-data capability.
 from __future__ import annotations
 
 import struct
+import zlib
+
+from .concatenated import read_stream
 
 
 class GitError(ValueError):
@@ -85,8 +88,10 @@ def object_sha(obj_type: str, content: bytes) -> str:
 def read_loose_object(blob: bytes) -> tuple[str, bytes]:
     """Decode one loose object file (zlib '<type> <size>\\0<content>'),
     verifying the declared size."""
-    from .deflatecodec import zlib_decompress
-    raw = zlib_decompress(blob)
+    try:
+        raw = zlib.decompress(blob)
+    except zlib.error as exc:
+        raise GitError(f"bad loose object: {exc}") from exc
     nul = raw.index(b"\x00")
     header = raw[:nul].decode("ascii")
     obj_type, size_s = header.split(" ")
@@ -154,13 +159,21 @@ def apply_delta(base: bytes, delta: bytes) -> bytes:
 # packfiles
 # ---------------------------------------------------------------------------
 
+def _inflate_member(pack: memoryview, pos: int) -> tuple[bytes, int]:
+    """Inflate the zlib member at ``pos``; return it and the position
+    just past its Adler-32 trailer."""
+    try:
+        return read_stream(pack, pos, zlib.decompressobj(), "git pack")
+    except zlib.error as exc:
+        raise GitError(f"bad zlib member at {pos}: {exc}") from exc
+
+
 def parse_pack(pack: bytes) -> list[dict]:
     """Decode every object in a PACK v2/v3 stream (no .idx needed:
     entries are walked sequentially, OFS_DELTA bases resolved by
     offset, REF_DELTA bases by the shas computed so far). Returns
     [{sha, type, content, offset}] in pack order. The trailing SHA-1
     checksum is verified with OUR sha1."""
-    from .deflatecodec import zlib_decompress_stream
     if pack[:4] != b"PACK":
         raise GitError("bad pack magic")
     version = struct.unpack_from(">I", pack, 4)[0]
@@ -170,6 +183,7 @@ def parse_pack(pack: bytes) -> list[dict]:
     if sha1(pack[:-20]) != pack[-20:]:
         raise GitError("pack SHA-1 trailer mismatch")
     pos = 12
+    view = memoryview(pack)
     by_offset: dict[int, tuple[str, bytes]] = {}
     by_sha: dict[str, tuple[str, bytes]] = {}
     out: list[dict] = []
@@ -207,7 +221,7 @@ def parse_pack(pack: bytes) -> list[dict]:
             shift += 7
         stored_as = "full"
         if obj_type in _TYPE_NAMES:
-            content, pos = zlib_decompress_stream(pack, pos)
+            content, pos = _inflate_member(view, pos)
             tname = _TYPE_NAMES[obj_type]
         elif obj_type == 6:             # OFS_DELTA
             b = pack[pos]
@@ -220,7 +234,7 @@ def parse_pack(pack: bytes) -> list[dict]:
             base_off = entry_off - ofs
             if base_off not in by_offset:
                 raise GitError(f"OFS_DELTA base at {base_off} not seen")
-            delta, pos = zlib_decompress_stream(pack, pos)
+            delta, pos = _inflate_member(view, pos)
             tname, base = by_offset[base_off]
             content = apply_delta(base, delta)
             stored_as = "ofs_delta"
@@ -232,7 +246,7 @@ def parse_pack(pack: bytes) -> list[dict]:
             if base_sha not in by_sha:
                 raise GitError(f"REF_DELTA base {base_sha} not in pack "
                                "(thin packs need an object store)")
-            delta, pos = zlib_decompress_stream(pack, pos)
+            delta, pos = _inflate_member(view, pos)
             tname, base = by_sha[base_sha]
             content = apply_delta(base, delta)
             stored_as = "ref_delta"
@@ -251,8 +265,7 @@ def parse_pack(pack: bytes) -> list[dict]:
 
 def build_pack(objects: list[tuple[str, bytes]]) -> bytes:
     """Minimal non-delta PACK v2 writer (every entry stored whole,
-    zlib via OUR encoder) — `git index-pack` accepts the result."""
-    from .deflatecodec import zlib_compress
+    zlib-compressed) — `git index-pack` accepts the result."""
     rev = {name: num for num, name in _TYPE_NAMES.items()}
     out = bytearray(b"PACK" + struct.pack(">II", 2, len(objects)))
     for obj_type, content in objects:
@@ -266,7 +279,7 @@ def build_pack(objects: list[tuple[str, bytes]]) -> bytes:
             b0 = size & 0x7F
             size >>= 7
         hdr.append(b0)
-        out += hdr + zlib_compress(content)
+        out += hdr + zlib.compress(content)
     out += sha1(bytes(out))
     return bytes(out)
 

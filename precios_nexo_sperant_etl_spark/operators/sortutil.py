@@ -32,9 +32,25 @@ import os
 from pyspark.sql import DataFrame
 
 
+def _guard_rows() -> int | None:
+    """The ``SPARK_GRAFT_SERIAL_SORT_GUARD`` row bound, or None when
+    unset. A value that is not a non-negative integer raises
+    ``ValueError`` here, before any Spark job runs."""
+    raw = os.environ.get("SPARK_GRAFT_SERIAL_SORT_GUARD", "")
+    if not raw:
+        return None
+    try:
+        n = int(raw)
+    except ValueError:
+        n = -1
+    if n < 0:
+        raise ValueError("SPARK_GRAFT_SERIAL_SORT_GUARD must be a "
+                         f"non-negative integer, got {raw!r}")
+    return n
+
+
 def final_sort(df: DataFrame, *cols: str) -> DataFrame:
-    guard = os.environ.get("SPARK_GRAFT_SERIAL_SORT_GUARD", "")
-    if guard:
-        if df.count() > int(guard):
-            return df.orderBy(*cols)
+    guard = _guard_rows()
+    if guard is not None and df.count() > guard:
+        return df.orderBy(*cols)
     return df.repartition(1).sortWithinPartitions(*cols)

@@ -1,15 +1,14 @@
-"""From-scratch ZIP archive reader/writer over the from-scratch DEFLATE.
+"""From-scratch ZIP container reader/writer over stdlib raw DEFLATE.
 
 Implements the public PKWARE APPNOTE.TXT container format: End Of
 Central Directory (+ ZIP64 EOCD/locator), central directory file
 headers, local file headers, data-descriptor streams, methods 0
-(stored) and 8 (deflate — routed through our RFC 1951 codec in
-``operators.deflatecodec``, not stdlib zlib), CRC-32 verification with
-our own table, and UTF-8 name handling (general-purpose bit 11 and the
-CP437 legacy fallback). No ``zipfile``/``zlib`` import appears in this
-module; stdlib ``zipfile`` is the INDEPENDENT implementation the tests
-pin against in both directions (it writes with zlib's deflate, we
-decode; we encode, it reads and ``testzip``s).
+(stored) and 8 (raw RFC 1951 deflate through ``zlib`` with
+``wbits=-15``), CRC-32 verification, and UTF-8 name handling
+(general-purpose bit 11 and the CP437 legacy fallback). The container
+walk is ours; stdlib ``zipfile`` is the independent implementation the
+tests pin against in both directions (it writes, we read; we write, it
+reads and ``testzip``s).
 
 Reference parity context: the reference ETL walks directories of loose
 .xlsx workbooks (Actualizar_Precios_de_Nexo.py:33-45); datasets at
@@ -27,8 +26,7 @@ sizes, which also makes the reader robust to self-extractor prefixes
 from __future__ import annotations
 
 import struct
-
-from .deflatecodec import DeflateError, crc32, deflate, inflate
+import zlib
 
 _EOCD_SIG = 0x06054B50
 _EOCD64_SIG = 0x06064B50
@@ -179,8 +177,8 @@ def zip_extract(blob: bytes) -> list[dict]:
             data = comp
         elif e["method"] == 8:
             try:
-                data = inflate(comp)
-            except DeflateError as exc:
+                data = zlib.decompress(comp, -15)
+            except zlib.error as exc:
                 raise ZipError(
                     f"deflate error in {e['name']!r}: {exc}") from exc
         else:
@@ -191,7 +189,7 @@ def zip_extract(blob: bytes) -> list[dict]:
                            f"says {e['uncompressed_size']}, got {len(data)}")
         out.append({"name": e["name"], "data": data,
                     "method": e["method"],
-                    "crc_ok": crc32(data) == e["crc"]})
+                    "crc_ok": zlib.crc32(data) == e["crc"]})
     return out
 
 
@@ -212,9 +210,10 @@ def zip_create(entries: list[tuple[str, bytes]],
         except UnicodeEncodeError:
             raw_name = name.encode("utf-8")
             flags = 1 << 11
-        crc = crc32(data)
+        crc = zlib.crc32(data)
         if method == "deflate":
-            comp = deflate(data)
+            c = zlib.compressobj(wbits=-15)
+            comp = c.compress(data) + c.flush()
             m = 8
             if len(comp) >= len(data):
                 comp, m = data, 0

@@ -13,12 +13,11 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import broadcast
 
 from ..functions.normalize import intlike_canon, norm_key
 from ..operators.audit import audit_summary, change_flags
 from ..operators.dedup import dedup_keep_latest
-from ..operators.join import key_set_difference, left_enrich
+from ..operators.join import key_set_difference, left_enrich, match_flags
 from ..operators.update import coalesce_update, tower_prefix
 from ..sources.ingest import COL_ESTADO, COL_NUMERO, COL_PRECIO
 
@@ -83,9 +82,14 @@ def update_prices(nexo: DataFrame, sperant: DataFrame,
     left = prepare_nexo(nexo)
     right = prepare_sperant(sperant, dedup_rule)
 
+    # The non-null ``_m`` marker rides the one join so the match flag
+    # mirrors the reference exactly: membership of the key pair in the
+    # deduped Sperant set (APN:422-424), not value non-nullness (a
+    # matching Sperant row may carry null price AND state).
     merged = left_enrich(
         left,
-        right.select("_key_proy", "_key_num", "precio_lista", "estado_comercial"),
+        right.select("_key_proy", "_key_num", "precio_lista", "estado_comercial",
+                     F.lit(True).alias("_m")),
         on=["_key_proy", "_key_num"])
 
     to_num = F.col(COL_PRECIO).cast("double")
@@ -99,16 +103,7 @@ def update_prices(nexo: DataFrame, sperant: DataFrame,
                           coalesce_update(F.col(COL_ESTADO),
                                           F.col("estado_comercial"), mode))
               .drop("precio_lista", "estado_comercial"))
-
-    # Match flag mirrors the reference exactly: membership of the key pair
-    # in the deduped Sperant set (APN:422-424), not value non-nullness
-    # (a matching Sperant row may carry null price AND state).
-    marker = right.select("_key_proy", "_key_num").withColumn("_m", F.lit(1))
-    merged = (merged
-              .join(broadcast(marker), ["_key_proy", "_key_num"], "left")
-              .withColumn("tiene_match", F.col("_m").isNotNull())
-              .withColumn("Sin_Match", ~F.col("tiene_match"))
-              .drop("_m"))
+    merged = match_flags(merged, "_m").drop("_m")
 
     flagged = change_flags(
         merged.withColumn("_precio_despues", F.col(COL_PRECIO).cast("double"))

@@ -4277,33 +4277,34 @@ FROM documents ORDER BY doc_id
 
 # ---------------------------------------------------------------------------
 # bz2_multistream_extract (round 11): the Wikipedia-dump carriage —
-# each document becomes its OWN bzip2 stream (our from-scratch
-# encoder, stdlib-bz2-interop-pinned in tests/test_bzip2.py), streams
-# concatenate back-to-back per group exactly like enwiki multistream
-# shards, and the composed blob is decoded back by the from-scratch
-# multistream decoder. Every published value (per-group stream/block
-# census, concatenated-content md5 and byte length) is recomputed by
-# the oracle from the parquet originals, so a byte lost anywhere in
-# RLE1→BWT→MTF→RLE2→Huffman→bit-pack→decode breaks the hash. The
-# texts are record-sized so each doc is exactly one block (the
-# encoder's 26k plain quota) — making n_blocks oracle-predictable.
+# each document becomes its OWN bzip2 stream (stdlib ``bz2.compress``),
+# streams concatenate back-to-back per group exactly like enwiki
+# multistream shards, and the composed blob is walked back by the
+# multistream census (operators/bzip2.py: one ``BZ2Decompressor`` per
+# stream, blocks counted by their 48-bit magic). Every published value
+# (per-group stream/block census, concatenated-content md5 and byte
+# length) is recomputed by the oracle from the parquet originals, so a
+# stream lost or split anywhere breaks the hash. The texts are
+# record-sized so each doc is exactly one block (far under the 900k
+# level-9 block) — making n_blocks oracle-predictable.
 # Scale: applyInPandas per group; codec work partition-local.
 # Registered BEHIND the r11 window (registration-pause discipline).
 # ---------------------------------------------------------------------------
 
 def _bz2_multistream_extract(spark: SparkSession, sf: str) -> DataFrame:
+    import bz2
     import hashlib
 
     import pandas as pd
 
-    from .operators.bzip2 import decode_bzip2, encode_bzip2
+    from .operators.bzip2 import decode_bzip2
 
     d = (_t(spark, sf, "documents")
          .select((F.col("doc_id") % 16).alias("gid"), "doc_id", "text"))
 
     def per_group(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("doc_id")
-        blob = b"".join(encode_bzip2((t + "\n").encode("utf-8"))
+        blob = b"".join(bz2.compress((t + "\n").encode("utf-8"))
                         for t in pdf["text"])
         r = decode_bzip2(blob)
         return pd.DataFrame([{
@@ -4334,25 +4335,23 @@ SELECT doc_id % 16 AS gid,
          AS content_md5
 FROM documents GROUP BY 1 ORDER BY gid
 """,
-    doc="Wikipedia-style bzip2 multistream carriage: one from-scratch "
-        "stream per document, concatenated per group, decoded back by "
-        "the from-scratch multistream decoder; census + content md5 "
+    doc="Wikipedia-style bzip2 multistream carriage: one stdlib bz2 "
+        "stream per document, concatenated per group, walked back by "
+        "the multistream census; stream/block counts + content md5 "
         "pinned against the parquet originals.",
 )
 
 
 # ---------------------------------------------------------------------------
-# xz_dump_extract (round 11): the xz-utils dump carriage decoded by
-# the from-scratch LZMA stack — per document the INDEPENDENT stdlib
-# lzma encoder produces a real .xz stream (check type alternating
-# CRC32/CRC64/SHA-256 by doc id, so all three verifiers run in the
-# driver-checked path) and operators.xzlzma decodes it back: range
-# coder, 12-state machine, literal contexts, rep distances, container
-# CRCs, index and footer all on the hot path. The oracle recomputes
-# every published value from the parquet originals; the decoder has
-# NO companion encoder, so nothing can hide in a self-roundtrip.
-# Scale: mapInPandas, codec work partition-local. Registered BEHIND
-# the r11 window (registration-pause discipline).
+# xz_dump_extract (round 11): the xz-utils dump carriage — per
+# document the stdlib lzma encoder produces a real .xz stream (check
+# type alternating CRC32/CRC64/SHA-256 by doc id, so all three
+# verifiers run in the driver-checked path) and the census in
+# operators/xzlzma.py decodes it back with liblzma, then reads the
+# check name from the stream flags and the block count from the index.
+# The oracle recomputes every published value from the parquet
+# originals. Scale: mapInPandas, codec work partition-local.
+# Registered BEHIND the r11 window (registration-pause discipline).
 # ---------------------------------------------------------------------------
 
 def _xz_dump_extract(spark: SparkSession, sf: str) -> DataFrame:
@@ -4406,8 +4405,8 @@ SELECT doc_id,
 FROM documents ORDER BY doc_id
 """,
     doc="xz/LZMA2 dump carriage: stdlib-encoded .xz streams (all three "
-        "check types) decoded by the from-scratch range-coder stack; "
-        "content md5 and structural census pinned per document.",
+        "check types) decoded by liblzma; check name, index block count "
+        "and content md5 pinned per document.",
 )
 
 
@@ -4415,8 +4414,8 @@ FROM documents ORDER BY doc_id
 # wikipedia_dump_pipeline (round 11): the canonical public-corpus
 # ingestion chain end-to-end — documents rendered as MediaWiki export
 # XML pages, carried as a bzip2 MULTISTREAM shard per group (one
-# from-scratch stream per page, the enwiki layout), decoded back by
-# the from-scratch bz2 decoder, and then parsed JVM-SIDE: page
+# stdlib bz2 stream per page, the enwiki layout), decoded back by
+# the multistream census, and then parsed JVM-SIDE: page
 # splitting and title/id/text extraction are codegen regexp_extract
 # over the decoded XML (the Spark-first half — only the codec crosses
 # into Python), XML entities unescaped in the pinned reverse order.
@@ -4427,9 +4426,11 @@ FROM documents ORDER BY doc_id
 # ---------------------------------------------------------------------------
 
 def _wikipedia_dump_pipeline(spark: SparkSession, sf: str) -> DataFrame:
+    import bz2
+
     import pandas as pd
 
-    from .operators.bzip2 import decode_bzip2, encode_bzip2
+    from .operators.bzip2 import decode_bzip2
 
     # 32 shards (was 8): the shard id never reaches the published rows
     # (pages are re-extracted from the XML), so the width is a pure
@@ -4449,7 +4450,7 @@ def _wikipedia_dump_pipeline(spark: SparkSession, sf: str) -> DataFrame:
             page = (f"<page><title>Doc {did}</title><id>{did}</id>"
                     f"<revision><id>{did * 7}</id>"
                     f"<text>{esc(t)}</text></revision></page>")
-            streams.append(encode_bzip2(page.encode("utf-8")))
+            streams.append(bz2.compress(page.encode("utf-8")))
         xml = decode_bzip2(b"".join(streams))["content"].decode("utf-8")
         return pd.DataFrame([{"gid": int(pdf["gid"].iloc[0]),
                               "xml": "<mediawiki>" + xml + "</mediawiki>"}])
@@ -4490,21 +4491,20 @@ SELECT doc_id,
 FROM documents ORDER BY doc_id
 """,
     doc="Wikipedia-dump ingestion chain: MediaWiki XML pages through "
-        "the from-scratch bzip2 multistream codec, parsed back with "
+        "a stdlib bzip2 multistream shard, parsed back with "
         "JVM-side codegen regex extraction and pinned-order entity "
         "unescaping; ids, titles and text md5s oracle-exact per page.",
 )
 
 
 # ---------------------------------------------------------------------------
-# deflate_dynamic_roundtrip (round 11): the from-scratch RFC 1951
-# stack on the driver-checked path — per document OUR dynamic-Huffman
-# deflate (LZ77 hash chains, 16/17/18 code-length RLE) wrapped as
-# gzip, decoded back by OUR inflate AND independently by the stdlib
-# (the executor asserts stdlib agreement per row; a False anywhere
-# breaks the value hash). Completes the from-scratch compression
-# suite's driver surface: zstd, bzip2, xz/LZMA, deflate. Scale:
-# mapInPandas, partition-local codec work.
+# deflate_dynamic_roundtrip (round 11): per document a stdlib gzip
+# member (dynamic-Huffman deflate) is written and read back, and the
+# executor asserts the content survived (a False anywhere breaks the
+# value hash). Both directions are stdlib zlib, so ``stdlib_agrees``
+# and ``self_ok`` carry the same check; both stay because they are
+# part of the published columns. Scale: mapInPandas, partition-local
+# codec work.
 # Registered BEHIND the r11 window (registration-pause discipline).
 # ---------------------------------------------------------------------------
 
@@ -4514,8 +4514,6 @@ def _deflate_dynamic_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
 
     import pandas as pd
 
-    from .operators.deflatecodec import gzip_compress, gzip_decompress
-
     d = _t(spark, sf, "documents").select("doc_id", "text")
     src = d.repartition(spark.sparkContext.defaultParallelism)
 
@@ -4524,13 +4522,12 @@ def _deflate_dynamic_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
             rows = []
             for did, t in zip(pdf["doc_id"].astype("int64"), pdf["text"]):
                 raw = t.encode("utf-8")
-                blob = gzip_compress(raw)
-                back = gzip_decompress(blob)
+                back = _gz.decompress(_gz.compress(raw, mtime=0))
                 rows.append({
                     "doc_id": int(did),
                     "content_len": len(back),
                     "content_md5": hashlib.md5(back).hexdigest(),
-                    "stdlib_agrees": _gz.decompress(blob) == raw,
+                    "stdlib_agrees": back == raw,
                     "self_ok": back == raw,
                 })
             yield pd.DataFrame(rows)
@@ -4553,8 +4550,8 @@ SELECT doc_id,
        TRUE AS self_ok
 FROM documents ORDER BY doc_id
 """,
-    doc="From-scratch dynamic-Huffman DEFLATE + gzip wrapper driver-"
-        "checked per document, with per-row stdlib-gzip agreement "
+    doc="gzip (dynamic-Huffman DEFLATE) member roundtrip driver-"
+        "checked per document, with the per-row roundtrip check "
         "asserted inside the value hash.",
 )
 
@@ -4697,7 +4694,7 @@ FROM s ORDER BY user_id
 # net.jpountz xxhash 32/64, both directions) live in tests/test_lz4.py
 # — the query proves the executor-side plumbing at data scale. Scale:
 # mapInPandas, partition-local codec work, identical shape to the
-# zstd/deflate/bzip2/xz roundtrip queries (exponents 0.15-0.69).
+# zstd/deflate/xz roundtrip queries (exponents 0.15-0.69).
 # Registered BEHIND the r11 window (registration-pause discipline).
 # ---------------------------------------------------------------------------
 
@@ -4756,7 +4753,7 @@ FROM documents ORDER BY doc_id
 # ---------------------------------------------------------------------------
 # zip_archive_extract (round 11): the from-scratch ZIP container
 # (operators/ziparchive.py — EOCD/ZIP64/central-directory walk, CRC-32
-# verify, deflate members through OUR RFC 1951 codec) on the driver-
+# verify, deflate members through stdlib raw zlib) on the driver-
 # checked path with the INDEPENDENT implementation in the loop both
 # directions, per bucket of documents:
 #   stdlib zipfile (zlib deflate) builds the archive -> OURS extracts
@@ -4826,9 +4823,9 @@ SELECT doc_id,
 FROM documents ORDER BY doc_id
 """,
     doc="From-scratch ZIP container with the independent stdlib "
-        "zipfile in the loop both directions per bucket: zlib-built "
-        "archives decoded by our EOCD/central-directory walker + RFC "
-        "1951 inflate, and our archives verified by stdlib testzip.",
+        "zipfile in the loop both directions per bucket: zipfile-built "
+        "archives decoded by our EOCD/central-directory walker, and "
+        "our archives verified by stdlib testzip.",
 )
 
 
@@ -5589,7 +5586,7 @@ FROM ranked GROUP BY c_mktsegment ORDER BY c_mktsegment
 # ---------------------------------------------------------------------------
 # git_packfile_scan (round 11): the from-scratch git object-store
 # codec (operators/gitpack.py — PACK v2 walk, OFS/REF delta decode,
-# loose zlib objects through OUR inflate, FIPS 180-1 SHA-1 from
+# loose and packed zlib objects via stdlib zlib, FIPS 180-1 SHA-1 from
 # scratch) on the driver-checked path with the REAL git binary writing
 # every byte: per bucket of documents an actual repository takes two
 # commits (v1 text, then an appended marker) and is gc-packed, so

@@ -1,19 +1,24 @@
-"""From-scratch DEFLATE/zlib/gzip (r11), pinned both directions
-against the independent stdlib zlib/gzip implementations across every
-compression level (0 = stored blocks, 1/6/9 = different match-finder
-behaviors and dynamic-table shapes)."""
+"""DEFLATE where the package still touches it directly: ZIP members
+(raw RFC 1951 through ``zlib`` with ``wbits=-15`` in
+operators/ziparchive.py) and gzip members (``multimodal.decode_gzip``,
+the WARC gzip seam). Pinned both directions against stdlib
+``zipfile``/``gzip`` at every compression level (0 = stored deflate
+blocks, 1/6/9 = different match-finder behaviours and dynamic-table
+shapes), plus the public CRC-32 vector and loud failure on corrupt
+members."""
 
 from __future__ import annotations
 
 import gzip as gz
+import io
 import random
-import zlib
+import zipfile
 
 import pytest
 
-from precios_nexo_sperant_etl_spark.operators.deflatecodec import (
-    DeflateError, adler32, crc32, deflate, gzip_compress,
-    gzip_decompress, inflate, zlib_compress, zlib_decompress)
+from precios_nexo_sperant_etl_spark.operators.multimodal import decode_gzip
+from precios_nexo_sperant_etl_spark.operators.ziparchive import (
+    ZipError, zip_create, zip_extract, zip_list)
 
 rng = random.Random(42)
 
@@ -29,51 +34,64 @@ CASES = [
 ]
 
 
+def _stdlib_zip(data: bytes, level: int) -> bytes:
+    buf = io.BytesIO()
+    with zipfile.ZipFile(buf, "w", zipfile.ZIP_DEFLATED,
+                         compresslevel=level) as zf:
+        zf.writestr("member.bin", data)
+    return buf.getvalue()
+
+
 def test_public_check_vectors():
-    assert adler32(b"Wikipedia") == 0x11E60398
-    assert crc32(b"123456789") == zlib.crc32(b"123456789")
-    assert adler32(b"") == 1
+    blob = zip_create([("check.txt", b"123456789")])
+    assert zip_list(blob)[0]["crc"] == 0xCBF43926   # CRC-32 check value
+    assert zip_extract(blob)[0]["crc_ok"]
 
 
 @pytest.mark.parametrize("case", range(len(CASES)))
 @pytest.mark.parametrize("level", [0, 1, 6, 9])
 def test_stdlib_encoder_our_inflate(case, level):
     c = CASES[case]
-    assert inflate(zlib.compress(c, level)[2:-4]) == c
+    (m,) = zip_extract(_stdlib_zip(c, level))
+    assert m["data"] == c and m["crc_ok"] and m["method"] == 8
     if level == 6:
-        assert zlib_decompress(zlib.compress(c, 6)) == c
-        assert gzip_decompress(gz.compress(c)) == c
+        assert decode_gzip(gz.compress(c)) == c
 
 
 @pytest.mark.parametrize("case", range(len(CASES)))
 def test_our_encoder_stdlib_decodes(case):
     c = CASES[case]
-    assert zlib.decompress(zlib_compress(c)) == c
-    assert gz.decompress(gzip_compress(c)) == c
-    assert inflate(deflate(c)) == c
+    blob = zip_create([("member.bin", c)])
+    zf = zipfile.ZipFile(io.BytesIO(blob))
+    assert zf.testzip() is None
+    assert zf.read("member.bin") == c
+    # deflate only where it shrinks the member, stored otherwise
+    info = zf.getinfo("member.bin")
+    assert info.compress_size <= max(len(c), 1)
+    assert zip_extract(blob)[0]["data"] == c
 
 
 def test_gzip_header_variants():
     # FNAME + FCOMMENT + FEXTRA headers all skip correctly
-    import io
     buf = io.BytesIO()
     with gz.GzipFile(fileobj=buf, mode="wb", filename="member.txt",
                      mtime=123456) as f:
         f.write(b"named payload")
-    assert gzip_decompress(buf.getvalue()) == b"named payload"
+    assert decode_gzip(buf.getvalue()) == b"named payload"
 
 
 def test_corruption_is_loud():
-    blob = bytearray(zlib_compress(b"payload " * 500))
-    blob[-1] ^= 0xFF
-    with pytest.raises(DeflateError):
-        zlib_decompress(bytes(blob))
-    g = bytearray(gzip_compress(b"payload " * 500))
-    g[-6] ^= 0xFF
-    with pytest.raises(DeflateError):
-        gzip_decompress(bytes(g))
-    with pytest.raises(DeflateError):
-        inflate(b"\x07")             # reserved block type
+    blob = bytearray(zip_create([("m.txt", b"payload " * 500)]))
+    assert zip_list(bytes(blob))[0]["method"] == 8
+    blob[30 + len("m.txt")] = 0x07   # final block, reserved type 11
+    with pytest.raises(ZipError, match="deflate error"):
+        zip_extract(bytes(blob))
+    g = bytearray(gz.compress(b"payload " * 500))
+    g[-6] ^= 0xFF                    # CRC-32 trailer
+    with pytest.raises(ValueError, match="corrupt gzip"):
+        decode_gzip(bytes(g))
+    with pytest.raises(ValueError, match="corrupt gzip"):
+        decode_gzip(gz.compress(b"payload " * 500)[:-12])   # truncated
 
 
 try:
@@ -83,12 +101,13 @@ try:
     @settings(max_examples=60, deadline=None)
     @given(st.binary(min_size=0, max_size=4000))
     def test_hyp_our_deflate_stdlib_inflates(data):
-        assert zlib.decompress(zlib_compress(data)) == data
+        zf = zipfile.ZipFile(io.BytesIO(zip_create([("m", data)])))
+        assert zf.read("m") == data
 
     @settings(max_examples=60, deadline=None)
     @given(st.binary(min_size=0, max_size=4000),
            st.sampled_from([0, 1, 6, 9]))
     def test_hyp_stdlib_deflate_we_inflate(data, lvl):
-        assert inflate(zlib.compress(data, lvl)[2:-4]) == data
+        assert zip_extract(_stdlib_zip(data, lvl))[0]["data"] == data
 except ImportError:  # pragma: no cover
     pass

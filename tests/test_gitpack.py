@@ -8,12 +8,13 @@ import os
 import random
 import shutil
 import subprocess
+import zlib
 
 import pytest
 
 from precios_nexo_sperant_etl_spark.operators.gitpack import (
     GitError, apply_delta, build_pack, object_sha, parse_pack,
-    parse_tree, read_loose_object, read_repo_objects, sha1_hex)
+    parse_tree, read_loose_object, read_repo_objects, sha1, sha1_hex)
 
 GIT = shutil.which("git")
 pytestmark = pytest.mark.skipif(GIT is None, reason="git binary absent")
@@ -146,9 +147,44 @@ def test_corruption_detected(tmp_path):
 
 
 def test_loose_object_size_check():
-    from precios_nexo_sperant_etl_spark.operators.deflatecodec import (
-        zlib_compress)
-    assert read_loose_object(zlib_compress(b"blob 3\x00abc")) \
+    assert read_loose_object(zlib.compress(b"blob 3\x00abc")) \
         == ("blob", b"abc")
     with pytest.raises(GitError):
-        read_loose_object(zlib_compress(b"blob 99\x00abc"))
+        read_loose_object(zlib.compress(b"blob 99\x00abc"))
+    with pytest.raises(GitError, match="bad loose object"):
+        read_loose_object(b"not zlib at all")
+
+
+def test_member_boundaries_in_concatenated_pack():
+    """Pack entries are zlib members laid back to back with no length
+    field: each must end exactly where its decompressor stops, whatever
+    the member sizes (tiny, incompressible, larger than one read slice)."""
+    r = random.Random(5)
+    objs = [("blob", b""), ("blob", b"x"),
+            ("blob", r.randbytes(9000)),           # stored, > 4 KiB slice
+            ("blob", b"repetitive " * 20000),      # 220 KB, ~1 KB member
+            ("tree", b""), ("commit", r.randbytes(70000))]
+    pack = build_pack(objs)
+    got = parse_pack(pack)
+    assert [(e["type"], e["content"]) for e in got] == objs
+    # each entry's offset is the previous member's end, and the last
+    # member ends at the 20-byte SHA-1 trailer
+    for e, nxt in zip(got, got[1:] + [{"offset": len(pack) - 20}]):
+        hdr = 1
+        while pack[e["offset"] + hdr - 1] & 0x80:
+            hdr += 1
+        member = pack[e["offset"] + hdr:nxt["offset"]]
+        d = zlib.decompressobj()
+        assert d.decompress(member) == e["content"]
+        assert d.eof and d.unused_data == b""
+
+
+def test_truncated_member_is_loud():
+    body = build_pack([("blob", b"payload " * 100)])[:-20]
+    cut = body[:-5]                   # lose the Adler-32 trailer
+    with pytest.raises(ValueError, match="ended before"):
+        parse_pack(cut + sha1(cut))
+    bad = bytearray(body)
+    bad[-8] ^= 0xFF                   # corrupt deflate data
+    with pytest.raises(GitError, match="bad zlib member"):
+        parse_pack(bytes(bad) + sha1(bytes(bad)))

@@ -78,6 +78,19 @@ def test_isclose_semantics(spark):
     assert got == [True, False, True, False]
 
 
+def test_ddot_null_input_is_null(spark):
+    """A NULL array yields NULL, also next to an empty array (whose
+    size alone would otherwise select the empty-fold 0.0)."""
+    from precios_nexo_sperant_etl_spark.functions.exact import ddot
+    df = spark.createDataFrame(
+        [(0, None, []), (1, [], None), (2, None, None), (3, [], []),
+         (4, [1.0, 2.0], [3.0, 4.0]), (5, None, [1.0])],
+        "i int, a array<float>, b array<float>")
+    got = {r["i"]: r["d"] for r in
+           df.select("i", ddot(F.col("a"), F.col("b")).alias("d")).collect()}
+    assert got == {0: None, 1: None, 2: None, 3: 0.0, 4: 11.0, 5: None}
+
+
 def test_nullsafe_neq_case_sensitive(spark):
     """F17: case-sensitive by design — 'Disponible (Visible)' vs
     'disponible' flags a change (the reference's committed audit quirk)."""

@@ -109,6 +109,26 @@ def test_update_prices_string_dates_drive_dedup(spark):
     assert f201[COL_PRECIO] == 300.25 and f201[COL_ESTADO] == "separado"
 
 
+def test_match_with_null_price_and_state_counts_as_match(spark):
+    """A Sperant row whose keys match but whose price AND state are both
+    NULL still counts as Con_Match (APN:422-424): the flag is membership
+    of the key pair in the deduped Sperant set, not a non-null value."""
+    nexo, _ = _fixture(spark)
+    sperant = spark.createDataFrame(
+        [("Fenix", "201", None, None, None, 0)],
+        "nombre_proyecto string, nombre string, precio_lista double, "
+        "estado_comercial string, fecha_actualizacion timestamp, _ord long")
+    out = update_prices(nexo, sperant)
+    updated = {(r["Proyecto"], r[COL_NUMERO]): r for r in out["updated"].collect()}
+    f201 = updated[("Fenix", "201")]
+    assert f201["tiene_match"] and not f201["Sin_Match"]
+    assert f201[COL_PRECIO] == 300.25 and f201[COL_ESTADO] == "Disponible"
+    assert not updated[("Fenix", "202")]["tiene_match"]
+    assert "_m" not in out["updated"].columns
+    fenix = {r["Proyecto"]: r for r in out["resumen"].collect()}["Fenix"]
+    assert (fenix["Con_Match"], fenix["Sin_Match"], fenix["Cambios"]) == (1, 1, 0)
+
+
 def test_pipeline_idempotent(spark):
     """Running the update twice changes nothing the second time (SURVEY §5
     property): after the first pass the Nexo side already carries the

@@ -6,6 +6,8 @@ sampling-free ``repartition(1).sortWithinPartitions`` shape is kept."""
 
 import os
 
+import pytest
+
 from precios_nexo_sperant_etl_spark.operators.sortutil import final_sort
 
 
@@ -38,3 +40,10 @@ def test_guard_falls_back_to_parallel_sort(spark, monkeypatch):
     out_small = final_sort(small, "k")
     assert "rangepartitioning" not in _plan(out_small)
     assert [r["k"] for r in out_small.collect()] == list(range(50))
+
+
+@pytest.mark.parametrize("raw", ["abc", "-1", "1.5"])
+def test_bad_guard_value_names_the_variable(spark, monkeypatch, raw):
+    monkeypatch.setenv("SPARK_GRAFT_SERIAL_SORT_GUARD", raw)
+    with pytest.raises(ValueError, match="SPARK_GRAFT_SERIAL_SORT_GUARD"):
+        final_sort(spark.range(3), "id")

@@ -1,9 +1,8 @@
-"""xz/LZMA2/LZMA decoder (r11): from-scratch adaptive range decoding
-pinned against the independent stdlib lzma encoder — every preset tier
-(0/6/9e exercise different chunk shapes and match finders), every
-check type (CRC32/CRC64/SHA-256/none), custom lc/lp/pb literal
-contexts, and multistream concatenation. Decode-only by design: there
-is no self-roundtrip at all, so nothing can hide in shared tables."""
+"""xz multistream census (operators/xzlzma.py) over stdlib ``lzma``:
+content, the per-stream check name read from the stream flags, and the
+block count read from the index — for every check type, preset and
+literal-context setting, multistream with stream padding — plus loud
+failure on corrupt, truncated and non-xz input."""
 
 from __future__ import annotations
 
@@ -12,8 +11,7 @@ import random
 
 import pytest
 
-from precios_nexo_sperant_etl_spark.operators.xzlzma import (
-    XzError, crc64_xz, decode_xz)
+from precios_nexo_sperant_etl_spark.operators.xzlzma import decode_xz
 
 rng = random.Random(42)
 
@@ -26,23 +24,25 @@ CASES = [
     b"x",
 ]
 
+CHECKS = ((lzma.CHECK_CRC32, "crc32"), (lzma.CHECK_CRC64, "crc64"),
+          (lzma.CHECK_SHA256, "sha256"), (lzma.CHECK_NONE, "none"))
+
 
 @pytest.mark.parametrize("case", range(len(CASES)))
 def test_all_check_types(case):
     c = CASES[case]
-    for check, nm in ((lzma.CHECK_CRC32, "crc32"),
-                      (lzma.CHECK_CRC64, "crc64"),
-                      (lzma.CHECK_SHA256, "sha256"),
-                      (lzma.CHECK_NONE, "none")):
+    for check, nm in CHECKS:
         d = decode_xz(lzma.compress(c, format=lzma.FORMAT_XZ, check=check))
         assert d["content"] == c
         assert d["checks"] == [nm]
+        assert d["n_streams"] == 1 and d["n_blocks"] == 1
 
 
 @pytest.mark.parametrize("preset", [0, 1, 6, 9 | lzma.PRESET_EXTREME])
 def test_presets(preset):
     for c in CASES:
-        assert decode_xz(lzma.compress(c, preset=preset))["content"] == c
+        d = decode_xz(lzma.compress(c, preset=preset))
+        assert d["content"] == c and d["n_blocks"] == 1
 
 
 def test_custom_literal_contexts():
@@ -59,6 +59,55 @@ def test_multistream():
     d = decode_xz(ms)
     assert d["content"] == b"stream-one stream-two"
     assert d["n_streams"] == 2 and d["n_blocks"] == 2
+    padded = (lzma.compress(b"a", check=lzma.CHECK_SHA256) + b"\x00" * 8
+              + lzma.compress(b"b", check=lzma.CHECK_NONE) + b"\x00" * 4)
+    d = decode_xz(padded)
+    assert d["content"] == b"ab" and d["checks"] == ["sha256", "none"]
+
+
+def _vli(n: int) -> bytes:
+    out = bytearray()
+    while n >= 0x80:
+        out.append(n & 0x7F | 0x80)
+        n >>= 7
+    return bytes(out + bytes([n]))
+
+
+def _multi_block_xz(chunks: list[bytes], check: int) -> bytes:
+    """One xz stream holding one block per chunk, spliced from stdlib
+    single-block streams: the blocks are copied as they are, and a new
+    index (one record per block) and footer are written per the xz
+    file-format spec. The stdlib encoder has no block-size knob."""
+    import struct
+    import zlib
+    blocks, records = [], []
+    for c in chunks:
+        s = lzma.compress(c, check=check)
+        backward = struct.unpack("<I", s[-8:-4])[0]
+        index = s[-12 - (backward + 1) * 4:-12]
+        blocks.append(s[12:len(s) - 12 - len(index)])
+        records.append(index[2:-4].rstrip(b"\x00"))   # one record's VLIs
+    header = s[:12]
+    index = b"\x00" + _vli(len(chunks)) + b"".join(records)
+    index += b"\x00" * (-len(index) % 4)
+    index += struct.pack("<I", zlib.crc32(index))
+    tail = struct.pack("<I", len(index) // 4 - 1) + header[6:8]
+    footer = struct.pack("<I", zlib.crc32(tail)) + tail + b"YZ"
+    return header + b"".join(blocks) + index + footer
+
+
+@pytest.mark.parametrize("check,nm", CHECKS)
+def test_index_block_count_per_check(check, nm):
+    """The census reads each stream's block count from its index,
+    found through the footer's backward size."""
+    for n in (1, 3, 8):
+        chunks = [b"block %d " % i * (200 * i + 1) for i in range(n)]
+        blob = _multi_block_xz(chunks, check)
+        assert lzma.decompress(blob) == b"".join(chunks)
+        d = decode_xz(blob + lzma.compress(b"!", check=check))
+        assert d["content"] == b"".join(chunks) + b"!"
+        assert d["checks"] == [nm, nm]
+        assert d["n_streams"] == 2 and d["n_blocks"] == n + 1
 
 
 def test_fuzz_vs_stdlib():
@@ -72,21 +121,30 @@ def test_fuzz_vs_stdlib():
 
 
 def test_crc64_known_vector():
-    # xz's CRC64 (ECMA-182 reflected): public check value for
-    # "123456789"
-    assert crc64_xz(b"123456789") == 0x995DC9BBDF1939FA
+    """xz's CRC64 (ECMA-182 reflected) check value for "123456789" sits
+    right after the block; liblzma verifies it, so flipping it fails."""
+    blob = bytearray(lzma.compress(b"123456789", check=lzma.CHECK_CRC64))
+    at = blob.index((0x995DC9BBDF1939FA).to_bytes(8, "little"))
+    assert decode_xz(bytes(blob))["checks"] == ["crc64"]
+    blob[at] ^= 0x01
+    with pytest.raises(lzma.LZMAError):
+        decode_xz(bytes(blob))
 
 
 def test_corruption_is_loud():
     blob = bytearray(lzma.compress(b"payload " * 1000))
     blob[30] ^= 0xFF
-    with pytest.raises(XzError):
+    with pytest.raises(lzma.LZMAError):
         decode_xz(bytes(blob))
-    with pytest.raises(XzError):
+    with pytest.raises(lzma.LZMAError):
         decode_xz(b"not an xz stream")
     good = lzma.compress(b"payload")
-    with pytest.raises(XzError):
+    with pytest.raises(ValueError, match="ended before"):
         decode_xz(good[:-4])              # truncated footer
+    with pytest.raises(ValueError, match="empty"):
+        decode_xz(b"")
+    with pytest.raises(lzma.LZMAError):
+        decode_xz(good + b"trailing garbage bytes")
 
 
 try:
@@ -104,20 +162,9 @@ except ImportError:  # pragma: no cover
 
 
 def test_lzma_alone_legacy_format():
-    """Legacy .lzma (FORMAT_ALONE): unknown-size, end-marker-terminated
-    single stream — the marker path LZMA2 never exercises."""
-    from precios_nexo_sperant_etl_spark.operators.xzlzma import (
-        decode_lzma_alone)
-    r = random.Random(3)
-    for c in [b"hello", b"a" * 50000, b"",
-              bytes(r.randrange(256) for _ in range(7000)),
-              b"repeat " * 3000]:
-        for preset in (1, 6, 9):
-            blob = lzma.compress(c, format=lzma.FORMAT_ALONE,
-                                 preset=preset)
-            assert decode_lzma_alone(blob) == c
-    with pytest.raises(XzError):
-        decode_lzma_alone(b"\x5d\x00\x00\x01\x00")        # truncated
-    good = bytearray(lzma.compress(b"x" * 500, format=lzma.FORMAT_ALONE))
-    with pytest.raises(XzError):
-        decode_lzma_alone(bytes(good[:-10]))              # no end marker
+    """Legacy .lzma (FORMAT_ALONE) is not an xz container: the census
+    refuses it rather than guessing a check or block count."""
+    blob = lzma.compress(b"hello", format=lzma.FORMAT_ALONE)
+    assert lzma.decompress(blob) == b"hello"
+    with pytest.raises(lzma.LZMAError):
+        decode_xz(blob)
