@@ -2,10 +2,10 @@
 records dump + the nested KPI document {cards, by_proyecto, by_estado}.
 
 The heavy work (counts, means, exact medians, value counts) happens in
-three Spark aggregations — grouped, combinable, one shuffle each. Only the
-final tiny per-group rows are collected to assemble the nested dict, which
-is a serving-layer document, not a dataset (at 100 TB the aggregate output
-is still ≤ |projects| rows).
+one grouping-set aggregation — a ``cube`` over project and state, one
+shuffle. Only its ≤ (|projects|+1)·(|states|+1) rows are collected, and
+the nested dict is ordered on the driver: a serving-layer document, not a
+dataset (at 100 TB the aggregate output is still that small).
 """
 
 from __future__ import annotations
@@ -16,7 +16,7 @@ from typing import Any
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..operators.kpi import kpi_by_group, kpi_cards, value_counts
+from ..functions.exact import davg
 from ..sources.ingest import COL_NUMERO
 
 
@@ -49,30 +49,35 @@ def kpi_document(df: DataFrame, price_col: str, project_col: str = "Proyecto",
     out: dict[str, Any] = {"generated_at": now, "cards": {},
                            "by_proyecto": {}, "by_estado": {}}
 
-    cards = kpi_cards(df, price_col).collect()[0]
-    out["cards"]["unidades_totales"] = cards["unidades_totales"]
-    if cards["precio_promedio"] is not None:
-        out["cards"]["precio_promedio"] = float(round(cards["precio_promedio"], 2))
-        out["cards"]["precio_median"] = float(round(cards["precio_median"], 2))
+    # One cube, read by grouping_id (a NULL project is a group of its own):
+    # 0 = (project, state), 1 = project, 2 = state, 3 = all rows.
+    # Each level gives what ``operators.kpi`` computes for it.
+    price = F.col(price_col)
+    estado = F.coalesce(F.col(state_col).cast("string"), F.lit("__NA__"))
+    rows = (df.cube(F.col(project_col).alias("p"), estado.alias("e"))
+              .agg(F.grouping_id().alias("g"), F.count(F.lit(1)).alias("n"),
+                   davg(price).alias("avg"), F.median(price).alias("med"))
+              .collect())
+    level: dict[int, list] = {0: [], 1: [], 2: [], 3: []}
+    for r in rows:
+        level[r["g"]].append(r)
 
-    per_project = kpi_by_group(df, project_col, price_col).collect()
-    states = (df.groupBy(project_col,
-                         F.coalesce(F.col(state_col).cast("string"),
-                                    F.lit("__NA__")).alias("estado"))
-                .count().collect())
-    state_map: dict[str, dict[str, int]] = {}
-    for r in states:
-        state_map.setdefault(r[project_col], {})[r["estado"]] = r["count"]
-    for r in sorted(per_project, key=lambda r: str(r[project_col])):
-        rec: dict[str, Any] = {"unidades": r["unidades"]}
-        if r["precio_promedio"] is not None:
-            rec["precio_promedio"] = float(round(r["precio_promedio"], 2))
-            rec["precio_median"] = float(round(r["precio_median"], 2))
-        by_state = state_map.get(r[project_col], {})
-        rec["por_estado"] = dict(
-            sorted(by_state.items(), key=lambda kv: (-kv[1], kv[0])))
-        out["by_proyecto"][r[project_col]] = rec
+    def prices(rec: dict[str, Any], r) -> dict[str, Any]:
+        if r["avg"] is not None:
+            rec["precio_promedio"] = float(round(r["avg"], 2))
+            rec["precio_median"] = float(round(r["med"], 2))
+        return rec
 
-    out["by_estado"] = {
-        r["value"]: r["count"] for r in value_counts(df, state_col).collect()}
+    def by_count(rs) -> dict[str, int]:
+        """``value_counts()`` order: count desc, then the value."""
+        return dict(sorted(((r["e"], r["n"]) for r in rs),
+                           key=lambda kv: (-kv[1], kv[0])))
+
+    total = level[3][0] if level[3] else {"n": 0, "avg": None}
+    out["cards"] = prices({"unidades_totales": total["n"]}, total)
+    for r in sorted(level[1], key=lambda r: str(r["p"])):
+        rec = prices({"unidades": r["n"]}, r)
+        rec["por_estado"] = by_count(s for s in level[0] if s["p"] == r["p"])
+        out["by_proyecto"][r["p"]] = rec
+    out["by_estado"] = by_count(level[2])
     return out

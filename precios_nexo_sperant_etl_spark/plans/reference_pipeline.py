@@ -4,9 +4,15 @@ as ``price_pipeline`` but with the real Nexo/Sperant column vocabulary,
 update rules, and audit outputs, so a user of the reference can run their
 actual workload on this engine.
 
-Lazy single-DAG design: stages 2-9 build one plan; the audit shares the
-enriched lineage. The Sperant dimension is deduped then broadcast; the
-Nexo fact side never shuffles before the final per-project aggregation.
+Materialized once: stages 2-9 build one plan (the Sperant dimension is
+deduped then broadcast; the Nexo fact side never shuffles), and the flagged
+frame is computed once with ``localCheckpoint`` so that ``updated``,
+``detalle``, ``resumen`` and every sink scan it instead of re-running the
+dedup window and the join. ``localCheckpoint`` rather than ``persist``:
+its blocks belong to the checkpointed frame, and Spark's ContextCleaner
+frees them once the caller drops the frames and the JVM collects them,
+whereas a ``persist()`` stays pinned until someone calls ``unpersist`` —
+and a caller making one call per artifact has no scope to do that in.
 """
 
 from __future__ import annotations
@@ -17,7 +23,7 @@ from pyspark.sql import functions as F
 from ..functions.normalize import intlike_canon, norm_key
 from ..operators.audit import audit_summary, change_flags
 from ..operators.dedup import dedup_keep_latest
-from ..operators.join import key_set_difference, left_enrich, match_flags
+from ..operators.join import left_enrich, match_flags
 from ..operators.update import coalesce_update, tower_prefix
 from ..sources.ingest import COL_ESTADO, COL_NUMERO, COL_PRECIO
 
@@ -109,7 +115,8 @@ def update_prices(nexo: DataFrame, sperant: DataFrame,
         merged.withColumn("_precio_despues", F.col(COL_PRECIO).cast("double"))
               .withColumn("_estado_despues", F.col(COL_ESTADO)),
         price_before="_precio_antes", price_after="_precio_despues",
-        state_before="_estado_antes", state_after="_estado_despues")
+        state_before="_estado_antes", state_after="_estado_despues",
+    ).localCheckpoint(eager=True)
 
     resumen = audit_summary(flagged, group_col="Proyecto").orderBy("Proyecto")
 
@@ -124,14 +131,38 @@ def update_prices(nexo: DataFrame, sperant: DataFrame,
     updated = flagged.drop("_precio_antes", "_estado_antes", "_precio_despues",
                            "_estado_despues", "_key_proy", "_key_num")
 
-    solo_nexo = key_set_difference(
-        nexo.select(F.trim(F.col("Proyecto").cast("string")).alias("p")),
-        sperant.select(F.trim(F.col("nombre_proyecto").cast("string")).alias("p")),
-        "p", "p").withColumnRenamed("key", "Proyecto_solo_df_total")
-    solo_sperant = key_set_difference(
-        sperant.select(F.trim(F.col("nombre_proyecto").cast("string")).alias("p")),
-        nexo.select(F.trim(F.col("Proyecto").cast("string")).alias("p")),
-        "p", "p").withColumnRenamed("key", "Proyecto_solo_df_sperant")
-
+    spark = flagged.sparkSession
+    solo_nexo, solo_sperant = _project_set_differences(nexo, sperant)
     return {"updated": updated, "resumen": resumen, "detalle": detalle,
-            "solo_nexo": solo_nexo, "solo_sperant": solo_sperant}
+            "solo_nexo": spark.createDataFrame(
+                [(k,) for k in solo_nexo], "Proyecto_solo_df_total string"),
+            "solo_sperant": spark.createDataFrame(
+                [(k,) for k in solo_sperant], "Proyecto_solo_df_sperant string")}
+
+
+def _project_set_differences(nexo: DataFrame,
+                             sperant: DataFrame) -> tuple[list, list]:
+    """J4 (APN:467-470) both ways from one aggregation and one collect:
+    the trimmed (not lowercased) project names of both sides are unioned
+    and grouped once, and the ≤ |projects| keys are split and sorted on
+    the driver into (Nexo-only, Sperant-only).
+
+    Same answer as ``key_set_difference`` in each direction: an anti-join
+    never matches a NULL key, so NULL is in a side's difference whenever
+    that side has one. NULL sorts first, then code-point order, which is
+    Spark's UTF-8 byte order.
+    """
+    keys = (nexo.select(F.trim(F.col("Proyecto").cast("string")).alias("p"),
+                        F.lit(True).alias("nexo"))
+            .unionByName(sperant.select(
+                F.trim(F.col("nombre_proyecto").cast("string")).alias("p"),
+                F.lit(False).alias("nexo")))
+            .groupBy("p").agg(F.bool_or("nexo").alias("in_nexo"),
+                              F.bool_or(~F.col("nexo")).alias("in_sperant"))
+            .collect())
+
+    def only(a: str, b: str) -> list:
+        return sorted((r["p"] for r in keys if r[a] and (r["p"] is None or not r[b])),
+                      key=lambda k: (k is not None, k or ""))
+
+    return only("in_nexo", "in_sperant"), only("in_sperant", "in_nexo")

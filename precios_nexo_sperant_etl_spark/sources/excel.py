@@ -442,11 +442,20 @@ def _xml_escape(s: str) -> str:
              .replace(">", "&gt;"))
 
 
+def _sheet_name(name: object, i: int) -> str:
+    return re.sub(r"[\[\]:*?/\\]", "", str(name))[:31] or f"Sheet{i}"
+
+
 def write_xlsx(path: str, sheets: dict[str, list[list[object]]]) -> None:
     """Minimal dependency-free ``.xlsx`` writer: numbers/bools as native
     cells, everything else as inline strings. Enough for the audit
     workbook artifacts (S7/S8) and for round-trip tests of
     :func:`read_xlsx_rows`; deliberately no styles/formulas/dates.
+
+    Sheet names are made legal for Excel, which repairs or refuses a
+    workbook otherwise: the characters ``[]:*?/\\`` are dropped, the rest
+    is cut to 31 characters, and ``Sheet{i}`` stands in when nothing is
+    left.
     """
     ct_overrides = []
     wb_sheets = []
@@ -458,7 +467,7 @@ def write_xlsx(path: str, sheets: dict[str, list[list[object]]]) -> None:
             f'<Override PartName="/{part}" ContentType="application/vnd.'
             'openxmlformats-officedocument.spreadsheetml.worksheet+xml"/>')
         wb_sheets.append(
-            f'<sheet name="{_xml_escape(str(name))}" sheetId="{i}" '
+            f'<sheet name="{_xml_escape(_sheet_name(name, i))}" sheetId="{i}" '
             f'r:id="rId{i}"/>')
         rels.append(
             f'<Relationship Id="rId{i}" Type="http://schemas.openxmlformats'

@@ -203,3 +203,115 @@ def _sheet_df(path, name):
     rows = read_xlsx_rows(path, sheet_name=name)
     header, data = rows[0], rows[1:]
     return {c: [r[i] for r in data] for i, c in enumerate(header)}
+
+
+def _nexo_frame(spark, projects):
+    return spark.createDataFrame(
+        [(p, str(100 + i), 1.0, "Disponible") for i, p in enumerate(projects)],
+        f"Proyecto string, `{COL_NUMERO}` string, `{COL_PRECIO}` double, "
+        f"`{COL_ESTADO}` string")
+
+
+def _sperant_frame(spark, projects):
+    return spark.createDataFrame(
+        [(p, str(100 + i), 2.0, "vendido", None, i) for i, p in enumerate(projects)],
+        "nombre_proyecto string, nombre string, precio_lista double, "
+        "estado_comercial string, fecha_actualizacion timestamp, _ord long")
+
+
+@pytest.mark.parametrize("nexo_projects, sperant_projects", [
+    # case variants, padding, a blank name and a NULL on the Sperant side only
+    (["Matera", " Fenix ", "Alameda", "Bosque"],
+     ["matera", "Fenix", "  ", None, "Solitario", "Bosque  ", "Álamo"]),
+    # a NULL key on both sides belongs to both differences
+    ([None, "Matera", "", "Zeta"], [None, "Matera ", "MATERA", "Zeta"]),
+    # nothing in common
+    (["Uno"], ["Dos", None]),
+])
+def test_set_differences_match_key_set_difference(spark, nexo_projects,
+                                                  sperant_projects):
+    """Both set differences come from one aggregation; each must be what
+    the per-direction anti-join ``key_set_difference`` gives, order
+    (NULL first, then binary string order) included."""
+    from precios_nexo_sperant_etl_spark.operators.join import key_set_difference
+
+    nexo = _nexo_frame(spark, nexo_projects)
+    sperant = _sperant_frame(spark, sperant_projects)
+    out = update_prices(nexo, sperant)
+    n = nexo.select(F.trim(F.col("Proyecto")).alias("p"))
+    s = sperant.select(F.trim(F.col("nombre_proyecto")).alias("p"))
+    for got, a, b in ((out["solo_nexo"], n, s), (out["solo_sperant"], s, n)):
+        want = [r[0] for r in key_set_difference(a, b, "p", "p").collect()]
+        assert [r[0] for r in got.collect()] == want
+
+
+def test_checkpoints_are_freed_once_dropped(spark):
+    """``ingest_project_files`` and ``update_prices`` each hold a
+    ``localCheckpoint``: stored while the caller keeps the frames, and
+    released by Spark's ContextCleaner once the caller drops them."""
+    import gc
+    import time
+
+    sc = spark.sparkContext
+
+    def stored():
+        return {info.id() for info in sc._jsc.sc().getRDDStorageInfo()}
+
+    before = stored()
+    nexo, sperant = _fixture(spark)
+    out = update_prices(nexo, sperant)
+    assert out["resumen"].count() == 2
+    assert len(stored() - before) >= 2
+    del nexo, sperant, out
+
+    deadline = time.monotonic() + 10
+    while True:
+        gc.collect()
+        spark._jvm.System.gc()
+        left = stored() - before
+        if not left or time.monotonic() > deadline:
+            break
+        time.sleep(0.25)
+    assert not left, f"RDDs still stored after the frames were dropped: {left}"
+
+
+def test_reference_pipeline_pins_nothing():
+    """A ``persist()``/``cache()`` would outlive every frame built on it;
+    the pipeline's one materialization is a ``localCheckpoint``."""
+    import ast
+    import inspect
+
+    from precios_nexo_sperant_etl_spark.plans import reference_pipeline
+
+    tree = ast.parse(inspect.getsource(reference_pipeline))
+    calls = {node.func.attr for node in ast.walk(tree)
+             if isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)}
+    assert not calls & {"persist", "cache"}
+    assert "localCheckpoint" in calls
+
+
+def test_perfbench_program_smoke(spark, tmp_path, monkeypatch):
+    """The benchmarked program (``perfbench/price.py``) on three small
+    projects: every output checks out against the independent answers,
+    and the whole run stays within 20 Spark jobs (one materialized
+    update; 47 jobs when every artifact re-ran the join)."""
+    import os
+
+    monkeypatch.syspath_prepend(
+        os.path.join(os.path.dirname(os.path.dirname(__file__)), "perfbench"))
+    import gen
+    import price
+
+    projects = ["Matera", "Capadocia", "Fenix"]
+    inp = gen.generate(str(tmp_path / "in"), 7, projects, (20, 30), "xls",
+                       ("Napoles",))
+    out = str(tmp_path / "out")
+    sc = spark.sparkContext
+    sc.setJobGroup("reference-pipeline-smoke", "perfbench program smoke test")
+    try:
+        price.run_program(spark, inp, out, False, price.Program())
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup("reference-pipeline-smoke")
+    assert price.check(out, gen.expected(inp), projects) == []
+    assert len(jobs) <= 20

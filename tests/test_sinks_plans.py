@@ -122,6 +122,38 @@ def test_audit_workbook_roundtrip(spark, tmp_path):
     assert all(len(v) == 0 for v in sheets["Solo_en_df_total"].values())
 
 
+def test_workbook_sheet_names_are_legal_for_excel(spark, tmp_path, monkeypatch):
+    """Excel refuses sheet names over 31 characters or holding any of
+    ``[]:*?/\\``: the writer drops those characters, cuts the rest to 31
+    and falls back to ``Sheet{i}``. The per-project sink passes the raw
+    project name, so it goes through the same rule."""
+    import re
+    import zipfile
+
+    from precios_nexo_sperant_etl_spark.sources.excel import read_xlsx_rows, write_xlsx
+    from precios_nexo_sperant_etl_spark.sources.sinks import write_excel_per_group
+
+    monkeypatch.syspath_prepend(
+        os.path.join(os.path.dirname(os.path.dirname(__file__)), "perfbench"))
+    from sheets import read_xlsx
+
+    project = "Torre [Norte]: fase 2/3 * ¿final? \\ edificio principal"
+    df = spark.createDataFrame([(project, "101", 9.5)], "Proyecto string, u string, p double")
+    path, = write_excel_per_group(df, str(tmp_path / "per_group"))
+    legal = "Torre Norte fase 23  ¿final  ed"
+    assert read_xlsx_rows(path, sheet_name=legal) == [["Proyecto", "u", "p"],
+                                                       [project, "101", 9.5]]
+    assert read_xlsx(path) == [["Proyecto", "u", "p"], [project, "101", 9.5]]
+
+    path = str(tmp_path / "names.xlsx")
+    write_xlsx(path, {"[]:*?/\\": [["a"]], "Ok": [["b"]]})
+    with zipfile.ZipFile(path) as zf:
+        names = re.findall(r'<sheet name="([^"]*)"', zf.read("xl/workbook.xml").decode())
+    assert names == ["Sheet1", "Ok"]
+    assert read_xlsx_rows(path, sheet_name="Sheet1") == [["a"]]
+    assert read_xlsx(path, 1) == [["b"]]
+
+
 def test_q7_q10_broadcast_dimensions(spark):
     """The new join anchors keep their dimension chains broadcast: the
     only sort-merge exchange allowed is the fact-fact lineitem⋈orders
