@@ -259,10 +259,10 @@ HEADLINE = [
     "kaplan_meier_conversion",  # survival curve, ordered float fold
     "gini_concentration",       # exact-cents Lorenz/Gini
     "git_packfile_scan",        # git-written packs, our delta decode
-    "scratch_hash_audit",       # from-scratch MD5/SHA-1/SHA-256
+    "scratch_hash_audit",       # hashlib MD5/SHA-1/SHA-256
     "zipf_heaps_fit",           # corpus-law OLS, micro-int moments
     "misra_gries_heavy_hitters",  # deterministic mergeable sketch
-    "aes_gcm_envelope_roundtrip",  # from-scratch AES-GCM seal/open
+    "aes_gcm_envelope_roundtrip",  # cryptography AES-GCM seal/open
     "soundex_blocking_census",  # phonetic blocking, pure codegen
     "streaming_zip_census",     # checkpointed zip landing stream
     "arrow_ipc_scratch_read",   # raw-flatbuffers Arrow IPC decode

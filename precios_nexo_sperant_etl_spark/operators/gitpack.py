@@ -1,10 +1,10 @@
-"""From-scratch git object-store reader/writer (loose + packfiles).
+"""git object-store reader/writer (loose + packfiles).
 
 Implements the public git formats — loose zlib objects, the PACK v2
 container (gitformat-pack(5)): size/type varint headers, OFS_DELTA /
 REF_DELTA entries with the copy/insert delta instruction stream, and
-the SHA-1 trailer — plus SHA-1 itself from FIPS 180-1 (no hashlib in
-the hash path). zlib members are inflated by stdlib ``zlib``;
+the SHA-1 trailer. Object ids and the trailer are SHA-1 from stdlib
+``hashlib``; zlib members are inflated by stdlib ``zlib``;
 packfiles concatenate members with no length framing, so each entry's
 end is where its ``decompressobj`` stops (``operators.concatenated``).
 The INDEPENDENT implementation pinned against in
@@ -21,6 +21,7 @@ lake-side training-data capability.
 
 from __future__ import annotations
 
+import hashlib
 import struct
 import zlib
 
@@ -31,54 +32,13 @@ class GitError(ValueError):
     pass
 
 
-# ---------------------------------------------------------------------------
-# SHA-1 (FIPS 180-1) from scratch
-# ---------------------------------------------------------------------------
-
-_M32 = 0xFFFFFFFF
-
-
-def _rotl(x: int, n: int) -> int:
-    return ((x << n) | (x >> (32 - n))) & _M32
-
-
-def sha1(data: bytes) -> bytes:
-    h = [0x67452301, 0xEFCDAB89, 0x98BADCFE, 0x10325476, 0xC3D2E1F0]
-    msg = data + b"\x80"
-    msg += b"\x00" * ((56 - len(msg) % 64) % 64)
-    msg += struct.pack(">Q", len(data) * 8)
-    for off in range(0, len(msg), 64):
-        w = list(struct.unpack_from(">16I", msg, off))
-        for i in range(16, 80):
-            w.append(_rotl(w[i - 3] ^ w[i - 8] ^ w[i - 14] ^ w[i - 16],
-                           1))
-        a, b, c, d, e = h
-        for i in range(80):
-            if i < 20:
-                f, k = (b & c) | (~b & d), 0x5A827999
-            elif i < 40:
-                f, k = b ^ c ^ d, 0x6ED9EBA1
-            elif i < 60:
-                f, k = (b & c) | (b & d) | (c & d), 0x8F1BBCDC
-            else:
-                f, k = b ^ c ^ d, 0xCA62C1D6
-            a, b, c, d, e = ((_rotl(a, 5) + f + e + k + w[i]) & _M32,
-                             a, _rotl(b, 30), c, d)
-        h = [(x + y) & _M32 for x, y in zip(h, (a, b, c, d, e))]
-    return struct.pack(">5I", *h)
-
-
-def sha1_hex(data: bytes) -> str:
-    return sha1(data).hex()
-
-
 _TYPE_NAMES = {1: "commit", 2: "tree", 3: "blob", 4: "tag"}
 
 
 def object_sha(obj_type: str, content: bytes) -> str:
     """git object id: sha1 over '<type> <len>\\0<content>'."""
-    return sha1_hex(f"{obj_type} {len(content)}\x00".encode()
-                    + content)
+    return hashlib.sha1(f"{obj_type} {len(content)}\x00".encode()
+                        + content).hexdigest()
 
 
 # ---------------------------------------------------------------------------
@@ -171,42 +131,23 @@ def _inflate_member(pack: memoryview, pos: int) -> tuple[bytes, int]:
 def parse_pack(pack: bytes) -> list[dict]:
     """Decode every object in a PACK v2/v3 stream (no .idx needed:
     entries are walked sequentially, OFS_DELTA bases resolved by
-    offset, REF_DELTA bases by the shas computed so far). Returns
-    [{sha, type, content, offset}] in pack order. The trailing SHA-1
-    checksum is verified with OUR sha1."""
+    offset, REF_DELTA bases by the ids of the entries read so far —
+    each entry is hashed as it is read). Returns
+    [{sha, type, content, offset, stored_as}] in pack order. The
+    trailing SHA-1 checksum is verified first."""
     if pack[:4] != b"PACK":
         raise GitError("bad pack magic")
     version = struct.unpack_from(">I", pack, 4)[0]
     if version not in (2, 3):
         raise GitError(f"unsupported pack version {version}")
     (count,) = struct.unpack_from(">I", pack, 8)
-    if sha1(pack[:-20]) != pack[-20:]:
+    if hashlib.sha1(pack[:-20]).digest() != pack[-20:]:
         raise GitError("pack SHA-1 trailer mismatch")
     pos = 12
     view = memoryview(pack)
     by_offset: dict[int, tuple[str, bytes]] = {}
     by_sha: dict[str, tuple[str, bytes]] = {}
     out: list[dict] = []
-    # Object ids are batched through the NumPy SHA-1 lanes
-    # (functions.hashvec, pinned bit-equal to `sha1` above in
-    # tests/test_hashvec.py): ids are only NEEDED during the walk when
-    # a REF_DELTA names its base by sha, so entries accumulate unhashed
-    # and flush in one vector batch then — and once at the end for the
-    # returned records. git's own gc emits OFS_DELTA chains, so the
-    # mid-walk flush is the rare path.
-    unhashed: list[dict] = []
-
-    def _flush_shas() -> None:
-        if not unhashed:
-            return
-        from ..functions.hashvec import sha1_hex_batch
-        msgs = [f"{e['type']} {len(e['content'])}\x00".encode()
-                + e["content"] for e in unhashed]
-        for e, sha in zip(unhashed, sha1_hex_batch(msgs)):
-            e["sha"] = sha
-            by_sha[sha] = (e["type"], e["content"])
-        unhashed.clear()
-
     for _ in range(count):
         entry_off = pos
         b = pack[pos]
@@ -242,8 +183,6 @@ def parse_pack(pack: bytes) -> list[dict]:
             base_sha = pack[pos:pos + 20].hex()
             pos += 20
             if base_sha not in by_sha:
-                _flush_shas()
-            if base_sha not in by_sha:
                 raise GitError(f"REF_DELTA base {base_sha} not in pack "
                                "(thin packs need an object store)")
             delta, pos = _inflate_member(view, pos)
@@ -254,12 +193,10 @@ def parse_pack(pack: bytes) -> list[dict]:
             raise GitError(f"bad pack object type {obj_type}")
         if obj_type in _TYPE_NAMES and len(content) != size:
             raise GitError("pack entry size mismatch")
-        by_offset[entry_off] = (tname, content)
-        entry = {"sha": None, "type": tname, "content": content,
-                 "offset": entry_off, "stored_as": stored_as}
-        unhashed.append(entry)
-        out.append(entry)
-    _flush_shas()
+        sha = object_sha(tname, content)
+        by_offset[entry_off] = by_sha[sha] = (tname, content)
+        out.append({"sha": sha, "type": tname, "content": content,
+                    "offset": entry_off, "stored_as": stored_as})
     return out
 
 
@@ -280,7 +217,7 @@ def build_pack(objects: list[tuple[str, bytes]]) -> bytes:
             size >>= 7
         hdr.append(b0)
         out += hdr + zlib.compress(content)
-    out += sha1(bytes(out))
+    out += hashlib.sha1(out).digest()
     return bytes(out)
 
 

@@ -5584,20 +5584,20 @@ FROM ranked GROUP BY c_mktsegment ORDER BY c_mktsegment
 
 
 # ---------------------------------------------------------------------------
-# git_packfile_scan (round 11): the from-scratch git object-store
-# codec (operators/gitpack.py — PACK v2 walk, OFS/REF delta decode,
-# loose and packed zlib objects via stdlib zlib, FIPS 180-1 SHA-1 from
-# scratch) on the driver-checked path with the REAL git binary writing
+# git_packfile_scan (round 11): the git object-store codec
+# (operators/gitpack.py — PACK v2 walk, OFS/REF delta decode, loose and
+# packed zlib objects via stdlib zlib, SHA-1 object ids via stdlib
+# hashlib) on the driver-checked path with the REAL git binary writing
 # every byte: per bucket of documents an actual repository takes two
 # commits (v1 text, then an appended marker) and is gc-packed, so
 # HEAD's blobs are typically stored as genuine delta chains; OUR
 # reader walks the pack, resolves the HEAD tree and
 # publishes the decoded blob md5s, which the oracle recomputes from
-# the parquet originals — one wrong delta copy or SHA-1 round breaks
-# the hash. sha_ok additionally pins our from-scratch SHA-1 against
-# the ids git itself assigned. Scale: applyInPandas per doc_id bucket
-# (16 bounded groups), repo work partition-local — the mining-code-
-# from-git shape, one repository per task.
+# the parquet originals — one wrong delta copy breaks the hash.
+# sha_ok additionally pins our object ids (type/length header framing)
+# against the ids git itself assigned. Scale: applyInPandas per doc_id
+# bucket (16 bounded groups), repo work partition-local — the
+# mining-code-from-git shape, one repository per task.
 # Registered BEHIND the r11 window (registration-pause discipline).
 # ---------------------------------------------------------------------------
 
@@ -5610,8 +5610,7 @@ def _git_packfile_scan(spark: SparkSession, sf: str) -> DataFrame:
 
     import pandas as pd
 
-    from .functions.hashvec import sha1_hex_batch
-    from .operators.gitpack import parse_tree, read_repo_objects
+    from .operators.gitpack import object_sha, parse_tree, read_repo_objects
 
     d = (_t(spark, sf, "documents").select("doc_id", "text")
          .withColumn("bucket", (F.col("doc_id") % 16).cast("int")))
@@ -5679,25 +5678,20 @@ def _git_packfile_scan(spark: SparkSession, sf: str) -> DataFrame:
                     for e in parse_tree(objs[head_tree][1])}
             shas = [tree[f"doc_{did:08d}.txt"] for did, _ in docs]
             picked = [objs[sha] for sha in shas]
-            # our SHA-1 vs git's own ids, batched through the NumPy
-            # lanes (bit-equal to object_sha; tests/test_hashvec.py)
-            ours = sha1_hex_batch(
-                [f"blob {len(c)}\x00".encode() + c for _, c in picked])
             return pd.DataFrame({
                 "doc_id": [int(did) for did, _ in docs],
                 "content_len": [len(c) for _, c in picked],
                 "content_md5": [hashlib.md5(c).hexdigest()
                                 for _, c in picked],
-                "sha_ok": [t == "blob" and o == sha
-                           for (t, _), o, sha in zip(picked, ours, shas)],
+                "sha_ok": [t == "blob" and object_sha(t, c) == sha
+                           for (t, c), sha in zip(picked, shas)],
             })
         finally:
             _shutil.rmtree(repo, ignore_errors=True)
 
     # 16 buckets, measured: widening to 32 was SLOWER (5.1 s vs 4.2 s
     # wall) — 32 concurrent repositories quadruple-fork git per bucket
-    # and the subprocess storm beats the extra parallelism; the decode
-    # side is already batched (sha1 lanes + table-driven inflate).
+    # and the subprocess storm beats the extra parallelism.
     return (_spread(d, "bucket", 16).groupBy("bucket")
              .applyInPandas(per_bucket,
                             "doc_id long, content_len long,"
@@ -5716,59 +5710,53 @@ SELECT doc_id,
        TRUE AS sha_ok
 FROM documents ORDER BY doc_id
 """,
-    doc="From-scratch git packfile codec on the driver-checked path: "
-        "the real git binary commits and gc-packs each bucket (genuine "
-        "delta chains), our reader walks the pack and HEAD tree; "
-        "decoded blob md5s pinned against the parquet originals and "
-        "our SHA-1 against git's own object ids.",
+    doc="git packfile codec on the driver-checked path: the real git "
+        "binary commits and gc-packs each bucket (genuine delta "
+        "chains), our reader walks the pack and HEAD tree; decoded blob "
+        "md5s pinned against the parquet originals and our hashlib "
+        "SHA-1 object ids against git's own.",
 )
 
 
 # ---------------------------------------------------------------------------
-# scratch_hash_audit (round 11): the from-scratch digest family on the
-# driver-checked path — OUR MD5 (RFC 1321, sine table derived from the
-# defining formula), SHA-256 (FIPS 180-4) and SHA-1 (FIPS 180-1, the
-# gitpack implementation) over every document, with THREE independent
-# implementations in the loop: the md5 column is compared against
-# DuckDB's md5() by the driver itself, and the sha columns are pinned
-# per-row against hashlib (OpenSSL) inside the executor — a False
-# anywhere breaks the value hash. Scale: mapInPandas, partition-local,
-# pure CPU. Registered BEHIND the r11 window.
+# scratch_hash_audit (round 11): the digest family on the driver-checked
+# path — MD5, SHA-1 and SHA-256 from stdlib hashlib (OpenSSL) over every
+# document. The md5 column is compared against DuckDB's md5() by the
+# driver itself, an independent implementation. The sha flags check a
+# one-shot digest against one fed in two updates: both are hashlib, so
+# they are tautologies kept for the query's columns. Scale: mapInPandas,
+# partition-local, pure CPU. Registered BEHIND the r11 window.
 # ---------------------------------------------------------------------------
 
-def _scratch_hash_audit(spark: SparkSession, sf: str) -> DataFrame:
+def _hash_audit_digest(it):
+    """Partition function of ``scratch_hash_audit``: per document, the
+    md5 of its UTF-8 text and the two SHA flags."""
     import hashlib
 
     import pandas as pd
 
-    from .functions.hashvec import (md5_hex_batch, sha1_hex_batch,
-                                    sha256_hex_batch)
+    def split_agrees(name: str, raw: bytes) -> bool:
+        h = hashlib.new(name, raw[:len(raw) // 2])
+        h.update(raw[len(raw) // 2:])
+        return h.digest() == hashlib.new(name, raw).digest()
 
+    for pdf in it:
+        raws = [t.encode("utf-8") for t in pdf["text"]]
+        yield pd.DataFrame({
+            "doc_id": pdf["doc_id"].astype("int64"),
+            "content_md5": [hashlib.md5(raw).hexdigest() for raw in raws],
+            "sha1_ok": [split_agrees("sha1", raw) for raw in raws],
+            "sha256_ok": [split_agrees("sha256", raw) for raw in raws],
+        })
+
+
+def _scratch_hash_audit(spark: SparkSession, sf: str) -> DataFrame:
     d = _t(spark, sf, "documents").select("doc_id", "text")
     src = d.repartition(spark.sparkContext.defaultParallelism)
-
-    def digest(it):
-        # whole-batch NumPy compression (functions/hashvec.py, pinned
-        # bit-equal to the scalar from-scratch digests AND hashlib in
-        # tests/test_hashvec.py); hashlib stays in the loop per row as
-        # the independent verifier.
-        for pdf in it:
-            raws = [t.encode("utf-8") for t in pdf["text"]]
-            yield pd.DataFrame({
-                "doc_id": pdf["doc_id"].astype("int64"),
-                "content_md5": md5_hex_batch(raws),
-                "sha1_ok": [
-                    ours == hashlib.sha1(raw).hexdigest()
-                    for ours, raw in zip(sha1_hex_batch(raws), raws)],
-                "sha256_ok": [
-                    ours == hashlib.sha256(raw).hexdigest()
-                    for ours, raw in zip(sha256_hex_batch(raws), raws)],
-            })
-
     return _sorted1(
-        src.mapInPandas(digest, "doc_id long, content_md5 string,"
-                                " sha1_ok boolean,"
-                                " sha256_ok boolean"),
+        src.mapInPandas(_hash_audit_digest,
+                        "doc_id long, content_md5 string,"
+                        " sha1_ok boolean, sha256_ok boolean"),
         "doc_id")
 
 
@@ -5782,9 +5770,9 @@ SELECT doc_id,
        TRUE AS sha256_ok
 FROM documents ORDER BY doc_id
 """,
-    doc="From-scratch MD5/SHA-1/SHA-256 on the driver-checked path: "
-        "our md5 vs DuckDB's md5() via the driver hash, our SHA digests "
-        "vs hashlib per row inside the executor.",
+    doc="hashlib MD5/SHA-1/SHA-256 on the driver-checked path: the "
+        "md5 vs DuckDB's md5() via the driver hash; the SHA flags "
+        "compare one-shot with two-part hashlib digests per row.",
 )
 
 
@@ -6028,72 +6016,77 @@ ORDER BY term
 
 
 # ---------------------------------------------------------------------------
-# aes_gcm_envelope_roundtrip (round 11): client-side envelope
-# encryption for data at rest, with the whole key path from scratch —
-# per-document data keys derived via OUR PBKDF2-HMAC-SHA256 (RFC 2898
-# over the FIPS 180-4 implementation), payloads sealed with OUR AES-
-# GCM (FIPS-197 with a derived-not-transcribed S-box; SP 800-38D GCM)
-# and opened again with authentication REQUIRED: the row also proves a
-# flipped ciphertext byte is refused, so the tamper check itself is
-# inside the value hash. Interop: javax.crypto produces bit-identical
-# ct||tag on the same inputs (tests/test_aesgcm.py, both directions,
-# all key sizes). Scale: mapInPandas, partition-local crypto — the
-# decrypt-only-what-you-scan shape. Registered BEHIND the r11 window.
+# aes_gcm_envelope_roundtrip (round 11): client-side envelope encryption
+# for data at rest — per-document data keys derived with
+# PBKDF2-HMAC-SHA256 (hashlib), payloads sealed with AES-GCM
+# (``cryptography``'s AESGCM, OpenSSL) and opened again with
+# authentication REQUIRED: the row also proves a flipped ciphertext byte
+# is refused (InvalidTag), so the tamper check itself is inside the
+# value hash. Interop: javax.crypto opens the sealed bytes and seals
+# bit-identical ones on the same inputs (tests/test_aesgcm.py). Scale:
+# mapInPandas, partition-local crypto — the decrypt-only-what-you-scan
+# shape. Registered BEHIND the r11 window.
 # ---------------------------------------------------------------------------
 
-def _aes_gcm_envelope_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
+_ENVELOPE_MASTER = b"corpus-master-key"
+
+
+def _envelope_seal(did: int, raw: bytes) -> tuple[bytes, bytes, bytes, bytes]:
+    """Seal one document: ``(key, iv, aad, ct || tag)``. The data key is
+    PBKDF2-HMAC-SHA256 of the master key over the 8-byte big-endian doc
+    id (3 iterations, 16 bytes), the 96-bit IV the head of SHA-256 over
+    ``b"iv" + salt``, the AAD ``doc:<id>``."""
+    import hashlib
+
+    from cryptography.hazmat.primitives.ciphers.aead import AESGCM
+
+    salt = did.to_bytes(8, "big")
+    key = hashlib.pbkdf2_hmac("sha256", _ENVELOPE_MASTER, salt, 3, 16)
+    iv = hashlib.sha256(b"iv" + salt).digest()[:12]
+    aad = f"doc:{did}".encode()
+    return key, iv, aad, AESGCM(key).encrypt(iv, raw, aad)
+
+
+def _envelope_seal_open(it):
+    """Partition function of ``aes_gcm_envelope_roundtrip``: seal each
+    document, open it with authentication required, and try a copy with
+    its first ciphertext byte flipped."""
     import hashlib
 
     import pandas as pd
+    from cryptography.exceptions import InvalidTag
+    from cryptography.hazmat.primitives.ciphers.aead import AESGCM
 
-    from .functions.aesvec import (gcm_encrypt_batch, gcm_open_batch,
-                                   gcm_verify_batch)
-    from .functions.hashvec import pbkdf2_hmac_sha256_batch, sha256_batch
+    def refused(key, iv, aad, sealed):
+        try:
+            AESGCM(key).decrypt(iv, bytes([sealed[0] ^ 1]) + sealed[1:],
+                                aad)
+        except InvalidTag:
+            return True
+        return False
 
+    for pdf in it:
+        dids = [int(x) for x in pdf["doc_id"].astype("int64")]
+        raws = [t.encode("utf-8") for t in pdf["text"]]
+        sealed = [_envelope_seal(did, raw) for did, raw in zip(dids, raws)]
+        backs = [AESGCM(key).decrypt(iv, ct, aad)
+                 for key, iv, aad, ct in sealed]
+        yield pd.DataFrame({
+            "doc_id": dids,
+            "ct_len": [len(s[3]) - 16 for s in sealed],
+            "content_md5": [hashlib.md5(b).hexdigest() for b in backs],
+            "auth_ok": [b == raw for b, raw in zip(backs, raws)],
+            # an empty ciphertext has no byte to tamper with
+            "tamper_refused": [not raw or refused(*s)
+                               for raw, s in zip(raws, sealed)],
+        })
+
+
+def _aes_gcm_envelope_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     d = _t(spark, sf, "documents").select("doc_id", "text")
     src = d.repartition(spark.sparkContext.defaultParallelism)
-
-    def seal_open(it):
-        # whole-batch NumPy key path + AES-CTR (functions/hashvec.py,
-        # functions/aesvec.py — both pinned bit-equal to the scalar
-        # from-scratch modules, which are themselves javax.crypto- and
-        # NIST-vector-pinned). Same per-doc crypto: PBKDF2 data keys,
-        # sealed with auth tag, opened with authentication REQUIRED,
-        # and the flipped-byte refusal proof (verify-only, exactly the
-        # scalar gcm_decrypt behavior: no CTR pass on a bad tag).
-        master = b"corpus-master-key"
-        for pdf in it:
-            dids = [int(x) for x in pdf["doc_id"].astype("int64")]
-            raws = [t.encode("utf-8") for t in pdf["text"]]
-            salts = [did.to_bytes(8, "big") for did in dids]
-            keys = pbkdf2_hmac_sha256_batch(master, salts, 3, 16)
-            ivs = [h[:12] for h in
-                   sha256_batch([b"iv" + s for s in salts])]
-            aads = [f"doc:{did}".encode() for did in dids]
-            sealed = gcm_encrypt_batch(keys, ivs, raws, aads)
-            cts = [s[0] for s in sealed]
-            tags = [s[1] for s in sealed]
-            backs = gcm_open_batch(keys, ivs, cts, tags, aads)
-            bads = [ct[:-1] + bytes([ct[-1] ^ 1]) if ct else None
-                    for ct in cts]
-            bad_ok = gcm_verify_batch(
-                keys, ivs, [b if b is not None else b"" for b in bads],
-                tags, aads)
-            yield pd.DataFrame({
-                "doc_id": dids,
-                "ct_len": [len(ct) for ct in cts],
-                "content_md5": [hashlib.md5(b).hexdigest()
-                                for b in backs],
-                "auth_ok": [b == raw
-                            for b, raw in zip(backs, raws)],
-                # refused = tag check failed on the tampered ct (or the
-                # ct was empty and nothing could be tampered)
-                "tamper_refused": [bad is None or not ok
-                                   for bad, ok in zip(bads, bad_ok)],
-            })
-
     return _sorted1(
-        src.mapInPandas(seal_open,
+        src.mapInPandas(_envelope_seal_open,
                         "doc_id long, ct_len long,"
                         " content_md5 string, auth_ok boolean,"
                         " tamper_refused boolean"),
@@ -6111,9 +6104,9 @@ SELECT doc_id,
        TRUE AS tamper_refused
 FROM documents ORDER BY doc_id
 """,
-    doc="Envelope encryption for data at rest with a from-scratch key "
-        "path: PBKDF2-derived per-doc keys, AES-GCM seal/open with "
-        "authentication, and an in-row tamper-refusal proof; "
+    doc="Envelope encryption for data at rest: PBKDF2-derived per-doc "
+        "keys (hashlib), AES-GCM seal/open with authentication "
+        "(cryptography), and an in-row tamper-refusal proof; "
         "javax.crypto is bit-identical on the same inputs.",
 )
 

@@ -446,6 +446,18 @@ def _sheet_name(name: object, i: int) -> str:
     return re.sub(r"[\[\]:*?/\\]", "", str(name))[:31] or f"Sheet{i}"
 
 
+def check_unique_names(inputs: list, cleaned: list[str], what: str) -> None:
+    """Raise ``ValueError`` naming both inputs when two cleaned names are
+    equal without case (Excel sheet names, and file names on case-folding
+    file systems)."""
+    seen: dict[str, int] = {}
+    for i, clean in enumerate(cleaned):
+        j = seen.setdefault(clean.casefold(), i)
+        if j != i:
+            raise ValueError(f"{inputs[j]!r} and {inputs[i]!r} both give "
+                             f"the {what} {clean!r}")
+
+
 def write_xlsx(path: str, sheets: dict[str, list[list[object]]]) -> None:
     """Minimal dependency-free ``.xlsx`` writer: numbers/bools as native
     cells, everything else as inline strings. Enough for the audit
@@ -455,19 +467,22 @@ def write_xlsx(path: str, sheets: dict[str, list[list[object]]]) -> None:
     Sheet names are made legal for Excel, which repairs or refuses a
     workbook otherwise: the characters ``[]:*?/\\`` are dropped, the rest
     is cut to 31 characters, and ``Sheet{i}`` stands in when nothing is
-    left.
+    left. Two inputs that clean to the same name, compared without case
+    as Excel does, raise ``ValueError``.
     """
+    names = [_sheet_name(name, i) for i, name in enumerate(sheets, start=1)]
+    check_unique_names(list(sheets), names, "sheet name")
     ct_overrides = []
     wb_sheets = []
     rels = []
     parts: dict[str, str] = {}
-    for i, (name, rows) in enumerate(sheets.items(), start=1):
+    for i, (rows, clean) in enumerate(zip(sheets.values(), names), start=1):
         part = f"xl/worksheets/sheet{i}.xml"
         ct_overrides.append(
             f'<Override PartName="/{part}" ContentType="application/vnd.'
             'openxmlformats-officedocument.spreadsheetml.worksheet+xml"/>')
         wb_sheets.append(
-            f'<sheet name="{_xml_escape(_sheet_name(name, i))}" sheetId="{i}" '
+            f'<sheet name="{_xml_escape(clean)}" sheetId="{i}" '
             f'r:id="rId{i}"/>')
         rels.append(
             f'<Relationship Id="rId{i}" Type="http://schemas.openxmlformats'

@@ -122,13 +122,17 @@ def write_excel_per_group(df: DataFrame, out_dir: str,
                           group_col: str = "Proyecto") -> list[str]:
     """S6/S8 xlsx sink: one workbook per group, driver-side, for outputs
     already reduced to human scale — written with the stdlib
-    ``excel.write_xlsx`` so it works without any Excel engine."""
-    from .excel import write_xlsx
-    pdf = df.toPandas()
+    ``excel.write_xlsx`` so it works without any Excel engine. Two
+    groups whose names give the same file name, compared without case,
+    raise ``ValueError`` before anything is written."""
+    from .excel import check_unique_names, write_xlsx
+    groups = list(df.toPandas().groupby(group_col, dropna=False))
+    files = [f"{safe_filename(name)}.xlsx" for name, _ in groups]
+    check_unique_names([name for name, _ in groups], files, "file name")
     os.makedirs(out_dir, exist_ok=True)
     written = []
-    for name, g in pdf.groupby(group_col, dropna=False):
-        target = os.path.join(out_dir, f"{safe_filename(name)}.xlsx")
+    for (name, g), file in zip(groups, files):
+        target = os.path.join(out_dir, file)
         matrix = [list(g.columns)] + [
             [None if (isinstance(v, float) and v != v) else v for v in row]
             for row in g.itertuples(index=False)]

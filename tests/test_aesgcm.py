@@ -1,68 +1,71 @@
-"""AES + GCM: FIPS-197 / NIST SP 800-38D vectors, both-direction
-interop pins against the INDEPENDENT javax.crypto (JVM)
-AES/GCM/NoPadding, and the tamper-refusal contract."""
+"""The envelope step of ``aes_gcm_envelope_roundtrip``: its sealed bytes
+pinned to known answers, its seal/open partition function, the
+tamper-refusal contract, and both-direction interop against the
+INDEPENDENT javax.crypto (JVM) AES/GCM/NoPadding and SHA-256."""
 
-import random
+import hashlib
 
+import pandas as pd
 import pytest
+from cryptography.exceptions import InvalidTag
+from cryptography.hazmat.primitives.ciphers.aead import AESGCM
 
-from precios_nexo_sperant_etl_spark.functions.aesgcm import (
-    AesError, aes_key, decrypt_block, encrypt_block, gcm_decrypt,
-    gcm_encrypt)
+from precios_nexo_sperant_etl_spark.queries_scale_part4 import (
+    _envelope_seal, _envelope_seal_open)
+
+DOCS = [(0, ""), (1, "hola"), (7, "texto con eñes y acentós"),
+        (42, "x" * 1000), (2**40 + 3, "€ — 漢字 🙂")]
 
 
 def test_fips197_block_vectors():
-    key = bytes.fromhex("2b7e151628aed2a6abf7158809cf4f3c")
-    pt = bytes.fromhex("3243f6a8885a308d313198a2e0370734")
-    assert encrypt_block(aes_key(key), pt).hex() \
-        == "3925841d02dc09fbdc118597196a0b32"
-    p = bytes.fromhex("00112233445566778899aabbccddeeff")
-    k192 = bytes.fromhex("000102030405060708090a0b0c0d0e0f"
-                         "1011121314151617")
-    k256 = bytes.fromhex("000102030405060708090a0b0c0d0e0f"
-                         "101112131415161718191a1b1c1d1e1f")
-    assert encrypt_block(aes_key(k192), p).hex() \
-        == "dda97ca4864cdfe06eaf70a0ec0d7191"
-    assert encrypt_block(aes_key(k256), p).hex() \
-        == "8ea2b7ca516745bfeafc49904b496089"
-    for k in (key, k192, k256):
-        assert decrypt_block(aes_key(k), encrypt_block(aes_key(k), p)) \
-            == p
+    """Known answers: key, IV and ct || tag of three documents, as the
+    earlier pure-Python PBKDF2/SHA-256/AES-GCM stack wrote them. A change
+    to the key path or the cipher would make stored envelopes
+    unreadable; the query's oracle sees only lengths and digests."""
+    want = {
+        0: ("e6be760d2035dba96ed34180bfd3706c", "7aafac16f18723050c2bae98",
+            "a03a94b06ef2a89e24e12e5a3d92037a"),
+        1: ("b8a98d1a370e09e3cda1039bfe32a107", "11f179677a5ede26401fc683",
+            "9917a3b5710692e83fe54c0d609cb0d818e69268"),
+        7: ("5a81fa88713d64960418236fac3579e1", "668ef32e95afaa009441e5bc",
+            "e2377709fb41b4fbef3edda09264ccdcea3595df64eb82f616d2433dc547"
+            "d5548c3d1b142e931013b832"),
+    }
+    for did, text in DOCS[:3]:
+        key, iv, aad, sealed = _envelope_seal(did, text.encode())
+        assert (key.hex(), iv.hex(), sealed.hex()) == want[did]
+        assert aad == f"doc:{did}".encode()
 
 
 def test_nist_gcm_vectors():
-    key = bytes.fromhex("feffe9928665731c6d6a8f9467308308")
-    iv = bytes.fromhex("cafebabefacedbaddecaf888")
-    pt = bytes.fromhex(
-        "d9313225f88406e5a55909c5aff5269a86a7a9531534f7da2e4c303d8a31"
-        "8a721c3c0c95956809532fcf0e2449a6b525b16aedf5aa0de657ba637b39"
-        "1aafd255")
-    ct, tag = gcm_encrypt(key, iv, pt)
-    assert tag.hex() == "4d5c2af327cd64a62cf35abd2ba6fab4"
-    aad = bytes.fromhex("feedfacedeadbeeffeedfacedeadbeefabaddad2")
-    ct, tag = gcm_encrypt(key, iv, pt[:60], aad)
-    assert tag.hex() == "5bc94fbc3221a5db94fae95ae7121a47"
-    assert gcm_decrypt(key, iv, ct, tag, aad) == pt[:60]
-    # empty everything (test case 1 with the zero key)
-    ct, tag = gcm_encrypt(b"\x00" * 16, b"\x00" * 12, b"")
-    assert ct == b""
-    assert tag.hex() == "58e2fccefa7e3061367f1d57a4e7455a"
+    """The partition function over one batch: ciphertext as long as the
+    UTF-8 text, the opened text's md5, and both flags true — the empty
+    document included, which has no byte to tamper with."""
+    pdf = pd.DataFrame({"doc_id": [d for d, _ in DOCS],
+                        "text": [t for _, t in DOCS]})
+    out, = _envelope_seal_open(iter([pdf]))
+    raws = [t.encode() for _, t in DOCS]
+    assert out["doc_id"].tolist() == [d for d, _ in DOCS]
+    assert out["ct_len"].tolist() == [len(r) for r in raws]
+    assert out["content_md5"].tolist() \
+        == [hashlib.md5(r).hexdigest() for r in raws]
+    assert out["auth_ok"].all() and out["tamper_refused"].all()
 
 
 def test_tamper_refusal():
-    key, iv = b"k" * 16, b"n" * 12
-    ct, tag = gcm_encrypt(key, iv, b"secret payload", b"aad")
-    with pytest.raises(AesError):
-        gcm_decrypt(key, iv, ct, bytes(16), b"aad")
-    with pytest.raises(AesError):
-        gcm_decrypt(key, iv, ct[:-1] + bytes([ct[-1] ^ 1]), tag, b"aad")
-    with pytest.raises(AesError):
-        gcm_decrypt(key, iv, ct, tag, b"other aad")
-    with pytest.raises(AesError):
-        aes_key(b"short")
+    key, iv, aad, sealed = _envelope_seal(7, b"secret payload")
+    aead = AESGCM(key)
+    assert aead.decrypt(iv, sealed, aad) == b"secret payload"
+    for bad_sealed, bad_aad in (
+            (bytes([sealed[0] ^ 1]) + sealed[1:], aad),   # flipped ct byte
+            (sealed[:-16] + bytes(16), aad),              # zeroed tag
+            (sealed, b"doc:8"),                           # wrong AAD
+            (sealed[:-1], aad)):                          # cut tag
+        with pytest.raises(InvalidTag):
+            aead.decrypt(iv, bad_sealed, bad_aad)
 
 
-def _jvm_gcm(spark, key, iv, data, aad, encrypt=True, tag=b""):
+def _jvm_gcm(spark, key, iv, data, aad, encrypt=True):
     jvm = spark.sparkContext._jvm
     cipher = jvm.javax.crypto.Cipher.getInstance("AES/GCM/NoPadding")
     ks = jvm.javax.crypto.spec.SecretKeySpec(key, "AES")
@@ -70,49 +73,36 @@ def _jvm_gcm(spark, key, iv, data, aad, encrypt=True, tag=b""):
     mode = jvm.javax.crypto.Cipher.ENCRYPT_MODE if encrypt \
         else jvm.javax.crypto.Cipher.DECRYPT_MODE
     cipher.init(mode, ks, spec)
-    if aad:
-        cipher.updateAAD(aad)
-    return bytes(cipher.doFinal(data + (b"" if encrypt else tag)))
+    cipher.updateAAD(aad)
+    return bytes(cipher.doFinal(data))
 
 
 def test_jvm_decrypts_ours(spark):
-    rng = random.Random(51)
-    for klen in (16, 24, 32):
-        for _ in range(6):
-            key = bytes(rng.randrange(256) for _ in range(klen))
-            iv = bytes(rng.randrange(256) for _ in range(12))
-            pt = bytes(rng.randrange(256)
-                       for _ in range(rng.randrange(0, 200)))
-            aad = bytes(rng.randrange(256)
-                        for _ in range(rng.randrange(0, 40)))
-            ct, tag = gcm_encrypt(key, iv, pt, aad)
-            assert _jvm_gcm(spark, key, iv, ct, aad, encrypt=False,
-                            tag=tag) == pt
+    """The bytes the seal step writes open under javax.crypto with the
+    same key, IV and AAD."""
+    for did, text in DOCS:
+        key, iv, aad, sealed = _envelope_seal(did, text.encode())
+        assert _jvm_gcm(spark, key, iv, sealed, aad,
+                        encrypt=False) == text.encode()
 
 
 def test_ours_decrypts_jvm(spark):
-    rng = random.Random(52)
-    for klen in (16, 24, 32):
-        for _ in range(6):
-            key = bytes(rng.randrange(256) for _ in range(klen))
-            iv = bytes(rng.randrange(256) for _ in range(12))
-            pt = bytes(rng.randrange(256)
-                       for _ in range(rng.randrange(0, 200)))
-            aad = bytes(rng.randrange(256)
-                        for _ in range(rng.randrange(0, 40)))
-            blob = _jvm_gcm(spark, key, iv, pt, aad)   # ct || tag
-            ct, tag = blob[:-16], blob[-16:]
-            ours_ct, ours_tag = gcm_encrypt(key, iv, pt, aad)
-            assert (ours_ct, ours_tag) == (ct, tag)     # bit-identical
-            assert gcm_decrypt(key, iv, ct, tag, aad) == pt
+    """javax.crypto seals the same documents bit-identically, and the
+    open step accepts its bytes."""
+    for did, text in DOCS:
+        key, iv, aad, sealed = _envelope_seal(did, text.encode())
+        theirs = _jvm_gcm(spark, key, iv, text.encode(), aad)
+        assert theirs == sealed
+        assert AESGCM(key).decrypt(iv, theirs, aad) == text.encode()
 
 
 def test_non_96bit_ivs_match_jvm(spark):
-    rng = random.Random(77)
-    for ivlen in (8, 13, 16, 20, 32):
-        key = bytes(rng.randrange(256) for _ in range(16))
-        iv = bytes(rng.randrange(256) for _ in range(ivlen))
-        pt = bytes(rng.randrange(256) for _ in range(70))
-        blob = _jvm_gcm(spark, key, iv, pt, b"hdr")
-        ct, tag = gcm_encrypt(key, iv, pt, b"hdr")
-        assert ct + tag == blob
+    """Every IV is 96 bits (the length GCM uses as is, with no GHASH of
+    the IV) and is the head of javax.crypto's SHA-256 over
+    ``b"iv" + salt``."""
+    md = spark.sparkContext._jvm.java.security.MessageDigest
+    for did, text in DOCS:
+        _, iv, _, _ = _envelope_seal(did, text.encode())
+        salt = did.to_bytes(8, "big")
+        assert len(iv) == 12
+        assert iv == bytes(md.getInstance("SHA-256").digest(b"iv" + salt))[:12]

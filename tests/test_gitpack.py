@@ -1,7 +1,7 @@
 """git object store / packfile codec: pinned against the REAL git
 binary in both directions (git builds gc'd repos with genuine delta
 chains that we decode; git index-packs and cat-files the packs we
-write), and from-scratch SHA-1 pinned against hashlib."""
+write), and object ids pinned against ``git hash-object``."""
 
 import hashlib
 import os
@@ -14,7 +14,7 @@ import pytest
 
 from precios_nexo_sperant_etl_spark.operators.gitpack import (
     GitError, apply_delta, build_pack, object_sha, parse_pack,
-    parse_tree, read_loose_object, read_repo_objects, sha1, sha1_hex)
+    parse_tree, read_loose_object, read_repo_objects)
 
 GIT = shutil.which("git")
 pytestmark = pytest.mark.skipif(GIT is None, reason="git binary absent")
@@ -52,16 +52,25 @@ def _mk_repo(tmp_path):
     return repo, files
 
 
-def test_sha1_matches_hashlib():
+def test_sha1_matches_hashlib(tmp_path):
+    """Object ids (SHA-1 over the '<type> <len>\\0' header and the
+    content) agree with ``git hash-object`` on random blobs and on the
+    lengths around SHA-1's 64-byte block and 56-byte padding edge, once
+    the header is counted in."""
     rng = random.Random(3)
-    for _ in range(150):
-        d = bytes(rng.randrange(256)
-                  for _ in range(rng.randrange(0, 400)))
-        assert sha1_hex(d) == hashlib.sha1(d).hexdigest()
-    # boundary lengths around the 64-byte block and 56-byte pad edge
-    for n in (0, 55, 56, 57, 63, 64, 65, 119, 120, 128):
-        d = bytes(range(256))[:n] * 1
-        assert sha1_hex(d[:n]) == hashlib.sha1(d[:n]).hexdigest()
+    blobs = [rng.randbytes(rng.randrange(0, 400)) for _ in range(40)]
+    blobs += [bytes(range(256))[:n] for n in (0, 46, 47, 48, 55, 56, 57,
+                                              63, 64, 65, 119, 120, 128)]
+    paths = []
+    for i, b in enumerate(blobs):
+        paths.append(tmp_path / f"b{i}")
+        paths[-1].write_bytes(b)
+    p = subprocess.run(["git", "hash-object", "--stdin-paths"],
+                       input="\n".join(map(str, paths)).encode(),
+                       check=True, env=_ENV, cwd=tmp_path,
+                       capture_output=True)
+    assert [object_sha("blob", b) for b in blobs] \
+        == p.stdout.decode().split()
 
 
 def test_loose_objects_roundtrip(tmp_path):
@@ -183,8 +192,8 @@ def test_truncated_member_is_loud():
     body = build_pack([("blob", b"payload " * 100)])[:-20]
     cut = body[:-5]                   # lose the Adler-32 trailer
     with pytest.raises(ValueError, match="ended before"):
-        parse_pack(cut + sha1(cut))
+        parse_pack(cut + hashlib.sha1(cut).digest())
     bad = bytearray(body)
     bad[-8] ^= 0xFF                   # corrupt deflate data
     with pytest.raises(GitError, match="bad zlib member"):
-        parse_pack(bytes(bad) + sha1(bytes(bad)))
+        parse_pack(bytes(bad) + hashlib.sha1(bad).digest())

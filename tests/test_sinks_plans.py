@@ -7,6 +7,7 @@ import glob
 import json
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from precios_nexo_sperant_etl_spark.plans.price_pipeline import core_update_audit
@@ -152,6 +153,34 @@ def test_workbook_sheet_names_are_legal_for_excel(spark, tmp_path, monkeypatch):
     assert names == ["Sheet1", "Ok"]
     assert read_xlsx_rows(path, sheet_name="Sheet1") == [["a"]]
     assert read_xlsx(path, 1) == [["b"]]
+
+
+def test_sheet_name_collision_is_refused(tmp_path):
+    """Names are cleaned one by one, so two inputs can clean to the same
+    sheet name, which Excel refuses. Excel compares sheet names without
+    case, so ``"ab"`` and ``"AB"`` collide too."""
+    from precios_nexo_sperant_etl_spark.sources.excel import write_xlsx
+
+    path = tmp_path / "dup.xlsx"
+    for sheets in ({"a/b": [["x"]], "ab": [["y"]]},
+                   {"ab": [["x"]], "A*B": [["y"]]}):
+        with pytest.raises(ValueError, match="'a/b' and 'ab'|'ab' and 'A\\*B'"):
+            write_xlsx(str(path), sheets)
+    assert not path.exists()
+
+
+def test_workbook_file_name_collision_is_refused(spark, tmp_path):
+    """``"Tizón"`` and ``"Tizn"`` both give ``Tizn.xlsx``: the second
+    project would overwrite the first, so the sink refuses before it
+    writes any workbook."""
+    from precios_nexo_sperant_etl_spark.sources.sinks import write_excel_per_group
+
+    df = spark.createDataFrame([("Tizón", 1), ("Tizn", 2), ("Alameda", 3)],
+                               "Proyecto string, v int")
+    out = tmp_path / "per_group"
+    with pytest.raises(ValueError, match="'Tizn' and 'Tizón'|'Tizón' and 'Tizn'"):
+        write_excel_per_group(df, str(out))
+    assert not out.exists()
 
 
 def test_q7_q10_broadcast_dimensions(spark):
