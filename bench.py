@@ -250,9 +250,9 @@ HEADLINE = [
     "streaming_scd2_upsert",    # foreachBatch merge into state
     "lz4_frame_roundtrip",      # from-scratch LZ4 frame + xxHash32
     "zip_archive_extract",      # ZIP container, stdlib both ways
-    "parquet_footer_stats",     # thrift footer parse vs data rescan
+    "parquet_footer_stats",     # pyarrow footer stats vs data rescan
     "rowgroup_pruning_scan",    # footer-stat pruning end-to-end
-    "sqlite_table_scan",        # SQLite b-tree file decode
+    "sqlite_table_scan",        # sqlite3 deserialize table read
     "string_distance_suite",    # 4 edit distances vs DuckDB's four
     "geo_nearest_city",         # haversine + bbox prefilter census
     "funnel_attribution",       # RANGE-frame first/last touch
@@ -265,7 +265,7 @@ HEADLINE = [
     "aes_gcm_envelope_roundtrip",  # cryptography AES-GCM seal/open
     "soundex_blocking_census",  # phonetic blocking, pure codegen
     "streaming_zip_census",     # checkpointed zip landing stream
-    "arrow_ipc_scratch_read",   # raw-flatbuffers Arrow IPC decode
+    "arrow_ipc_scratch_read",   # pyarrow IPC stream write+read
     "spearman_rank_corr",       # tie-safe integer-exact rank corr
 ]
 

@@ -1,34 +1,24 @@
-"""From-scratch SQLite database-file reader (read-only table scans).
+"""SQLite database-file table reads through the stdlib ``sqlite3``.
 
-Implements the public SQLite file format (sqlite.org/fileformat2.html):
-the 100-byte header, table b-tree interior/leaf pages, cell pointer
-arrays, the record serial-type encoding, payload overflow chains, and
-the ``sqlite_master`` catalog walk — from scratch, no ``sqlite3``
-import in this module. The stdlib ``sqlite3`` (the real SQLite C
-library) is the INDEPENDENT implementation the tests and the
-driver-checked query pin against: it writes the databases, we decode
-the raw bytes, and its own query results are the expected values.
-
-Why this exists in a Spark engine: operational exports very often
-arrive as ``.sqlite``/``.db`` files (app telemetry, crawl frontiers,
-annotation tools). At fleet scale each file is one partition — the
-decode is partition-local bytes-in/rows-out, the same executor-side
-shape as the WARC/xlsx/zip walkers. The reference ETL has no database
-ingestion at all (its only source is .xlsx —
+Operational exports often arrive as ``.sqlite``/``.db`` files (app
+telemetry, crawl frontiers, annotation tools). At fleet scale each file
+is one partition: the read is partition-local bytes-in/rows-out, the
+same executor-side shape as the WARC/xlsx/zip walkers. The reference
+ETL has no database ingestion at all (its only source is .xlsx —
 Actualizar_Precios_de_Nexo.py:33-45); this is lake-side surface.
 
-Supported: rowid tables (incl. the INTEGER PRIMARY KEY rowid-alias
-rule), all serial types, interior/leaf table b-trees of any depth,
-overflow chains, UTF-8 databases, freelist'd pages left by deletes
-(they are simply never referenced from the b-tree). Refused loudly:
-WITHOUT ROWID tables (index b-tree layout), non-UTF-8 text encodings,
-WAL-mode files whose -wal sidecar would be authoritative.
+``sqlite_read_table`` hands the file's bytes to the real SQLite library
+(``Connection.deserialize`` into a private ``:memory:`` connection) and
+reads one rowid table back. Every bad input ends in ``SqliteError``:
+a missing magic, a truncated or corrupt file, undecodable text, a
+missing table, WITHOUT ROWID tables (they have no rowid to publish) and
+WAL-mode files, whose ``-wal`` sidecar may hold committed rows that the
+file's bytes alone do not.
 """
 
 from __future__ import annotations
 
-import re
-import struct
+import sqlite3
 
 
 class SqliteError(ValueError):
@@ -37,260 +27,46 @@ class SqliteError(ValueError):
 
 _MAGIC = b"SQLite format 3\x00"
 
-# Corrupt bytes can land an unpack/slice/decode anywhere in the walk;
-# the module contract is that every public entry point terminates with
-# SqliteError on a bad file, so low-level exceptions are converted at
-# the boundary rather than bounds-checking every unpack twice.
-_LOWLEVEL = (struct.error, IndexError, KeyError, OverflowError,
-             UnicodeDecodeError, TypeError, AttributeError,
-             RecursionError, ValueError)
-
-
-def _guarded(fn, *args):
-    try:
-        return fn(*args)
-    except SqliteError:
-        raise
-    except _LOWLEVEL as e:
-        raise SqliteError(f"corrupt database: {type(e).__name__}: {e}") \
-            from e
-
-
-def _varint(buf: bytes, pos: int) -> tuple[int, int]:
-    """SQLite varint: 1-9 bytes big-endian base-128; the 9th byte
-    contributes 8 full bits. Returns (value, next_pos)."""
-    v = 0
-    for i in range(8):
-        b = buf[pos + i]
-        v = (v << 7) | (b & 0x7F)
-        if not b & 0x80:
-            return v, pos + i + 1
-    v = (v << 8) | buf[pos + 8]
-    return v, pos + 9
-
-
-def _twos(v: int, bits: int) -> int:
-    if v >= 1 << (bits - 1):
-        v -= 1 << bits
-    return v
-
-
-class _Db:
-    def __init__(self, blob: bytes) -> None:
-        if blob[:16] != _MAGIC:
-            raise SqliteError("not a SQLite database (bad magic)")
-        page_size = struct.unpack_from(">H", blob, 16)[0]
-        self.page_size = 65536 if page_size == 1 else page_size
-        reserved = blob[20]
-        self.usable = self.page_size - reserved
-        if self.usable < 480:
-            raise SqliteError("usable page size below the 480-byte floor")
-        enc = struct.unpack_from(">I", blob, 56)[0]
-        if enc not in (0, 1):           # 0: pre-first-table fresh db
-            raise SqliteError(f"unsupported text encoding {enc} "
-                              "(only UTF-8 databases)")
-        self.blob = blob
-
-    def page(self, n: int) -> bytes:
-        off = (n - 1) * self.page_size
-        p = self.blob[off:off + self.page_size]
-        if len(p) != self.page_size:
-            raise SqliteError(f"page {n} out of range")
-        return p
-
-    # -- record (serial-type) decoding ------------------------------------
-
-    def _record(self, payload: bytes) -> list:
-        hdr_len, pos = _varint(payload, 0)
-        serials = []
-        while pos < hdr_len:
-            s, pos = _varint(payload, pos)
-            serials.append(s)
-        pos = hdr_len
-        out = []
-        for s in serials:
-            if s == 0:
-                out.append(None)
-            elif 1 <= s <= 6:
-                width = {1: 1, 2: 2, 3: 3, 4: 4, 5: 6, 6: 8}[s]
-                v = int.from_bytes(payload[pos:pos + width], "big")
-                out.append(_twos(v, width * 8))
-                pos += width
-            elif s == 7:
-                out.append(struct.unpack_from(">d", payload, pos)[0])
-                pos += 8
-            elif s == 8:
-                out.append(0)
-            elif s == 9:
-                out.append(1)
-            elif s >= 12 and s % 2 == 0:
-                n = (s - 12) // 2
-                out.append(payload[pos:pos + n])
-                pos += n
-            elif s >= 13:
-                n = (s - 13) // 2
-                out.append(payload[pos:pos + n].decode("utf-8"))
-                pos += n
-            else:
-                raise SqliteError(f"reserved serial type {s}")
-        return out
-
-    # -- payload assembly (local prefix + overflow chain) ------------------
-
-    def _payload(self, page: bytes, cell: int, plen: int,
-                 pos: int) -> bytes:
-        u = self.usable
-        x = u - 35                      # table-leaf max local payload
-        if plen <= x:
-            return page[pos:pos + plen]
-        if plen > len(self.blob):
-            raise SqliteError("payload length exceeds database size")
-        m = ((u - 12) * 32) // 255 - 23
-        k = m + ((plen - m) % (u - 4))
-        local = k if k <= x else m
-        out = bytearray(page[pos:pos + local])
-        (nxt,) = struct.unpack_from(">I", page, pos + local)
-        # a corrupt chain can cycle; no valid chain is longer than the
-        # page count, so cap the walk there
-        max_pages = len(self.blob) // self.page_size + 1
-        hops = 0
-        while nxt and len(out) < plen:
-            hops += 1
-            if hops > max_pages:
-                raise SqliteError("overflow chain cycle")
-            p = self.page(nxt)
-            (nxt,) = struct.unpack_from(">I", p, 0)
-            out += p[4:4 + (plen - len(out))]
-        if len(out) != plen:
-            raise SqliteError("overflow chain shorter than payload")
-        return bytes(out)
-
-    # -- table b-tree walk --------------------------------------------------
-
-    def walk_table(self, root: int, _depth: int = 0):
-        """Yield (rowid, values) in rowid order for every row under a
-        table b-tree (in-order traversal: interior cells left to
-        right, right-most pointer last)."""
-        if _depth > 40:
-            raise SqliteError("b-tree deeper than 40 levels (cycle?)")
-        pno = root
-        page = self.page(pno)
-        hdr = 100 if pno == 1 else 0
-        ptype = page[hdr]
-        n_cells = struct.unpack_from(">H", page, hdr + 3)[0]
-        if ptype == 5:                  # interior table page
-            ptr_base = hdr + 12
-            for i in range(n_cells):
-                (off,) = struct.unpack_from(">H", page,
-                                            ptr_base + 2 * i)
-                (child,) = struct.unpack_from(">I", page, off)
-                yield from self.walk_table(child, _depth + 1)
-            (right,) = struct.unpack_from(">I", page, hdr + 8)
-            yield from self.walk_table(right, _depth + 1)
-        elif ptype == 13:               # leaf table page
-            ptr_base = hdr + 8
-            for i in range(n_cells):
-                (off,) = struct.unpack_from(">H", page,
-                                            ptr_base + 2 * i)
-                plen, pos = _varint(page, off)
-                rowid, pos = _varint(page, pos)
-                # varints are two's-complement 64-bit: negative
-                # rowids arrive as the full 9-byte encoding
-                rowid = _twos(rowid & 0xFFFFFFFFFFFFFFFF, 64)
-                payload = self._payload(page, i, plen, pos)
-                yield rowid, self._record(payload)
-        elif ptype in (2, 10):
-            raise SqliteError(
-                "index b-tree under a table root: WITHOUT ROWID "
-                "tables are not supported")
-        else:
-            raise SqliteError(f"unknown page type {ptype} "
-                              f"on page {pno}")
-
-
-def _master_rows(db: _Db):
-    # sqlite_master schema: (type, name, tbl_name, rootpage, sql)
-    for _rowid, vals in db.walk_table(1):
-        yield vals
-
-
-_COL_RE = re.compile(r'^\s*(?:"([^"]+)"|\[([^\]]+)\]|`([^`]+)`|(\w+))')
-
-
-def _parse_columns(sql: str) -> tuple[list[str], int | None]:
-    """Column names (and the INTEGER-PRIMARY-KEY ordinal, if any) from
-    a CREATE TABLE statement — the documented subset: no computed
-    columns, table constraints recognised by their leading keyword."""
-    inner = sql[sql.index("(") + 1:sql.rindex(")")]
-    parts, depth, cur = [], 0, []
-    for ch in inner:
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        if ch == "," and depth == 0:
-            parts.append("".join(cur))
-            cur = []
-        else:
-            cur.append(ch)
-    parts.append("".join(cur))
-    names: list[str] = []
-    ipk: int | None = None
-    constraint_kw = ("primary", "unique", "check", "foreign",
-                     "constraint")
-    for p in parts:
-        m = _COL_RE.match(p)
-        if not m:
-            continue
-        name = next(g for g in m.groups() if g is not None)
-        if name.lower() in constraint_kw:
-            continue                    # table-level constraint
-        if re.search(r"\bINTEGER\s+PRIMARY\s+KEY\b", p, re.I):
-            ipk = len(names)
-        names.append(name)
-    return names, ipk
-
-
-def sqlite_list_tables(blob: bytes) -> list[str]:
-    return _guarded(_list_tables, blob)
-
-
-def _list_tables(blob: bytes) -> list[str]:
-    db = _Db(blob)
-    return sorted(v[1] for v in _master_rows(db)
-                  if v[0] == "table" and not str(v[1]).startswith(
-                      "sqlite_"))
-
 
 def sqlite_read_table(blob: bytes, table: str) -> dict:
-    """Decode every row of ``table``: returns ``{"columns": [...],
-    "rows": [tuple, ...]}`` with the INTEGER PRIMARY KEY rowid-alias
-    rule applied (such columns are stored as NULL; the rowid is the
-    value)."""
-    return _guarded(_read_table, blob, table)
-
-
-def _read_table(blob: bytes, table: str) -> dict:
-    db = _Db(blob)
-    entry = None
-    for vals in _master_rows(db):
-        if vals[0] == "table" and vals[1] == table:
-            entry = vals
-            break
-    if entry is None:
-        raise SqliteError(f"no such table: {table!r}")
-    rootpage, sql = entry[3], entry[4]
-    if sql and re.search(r"WITHOUT\s+ROWID", sql, re.I):
-        raise SqliteError(f"{table!r} is a WITHOUT ROWID table "
-                          "(index-layout b-tree) — not supported")
-    columns, ipk = _parse_columns(sql)
-    rows = []
-    for rowid, vals in db.walk_table(rootpage):
-        # short records: missing trailing columns read as NULL
-        if len(vals) < len(columns):
-            vals = vals + [None] * (len(columns) - len(vals))
-        if ipk is not None and vals[ipk] is None:
-            vals = list(vals)
-            vals[ipk] = rowid
-        rows.append(tuple(vals[:len(columns)]))
-    return {"columns": columns, "rows": rows}
+    """Read every row of ``table`` in rowid order. Returns
+    ``{"columns": [...], "types": [...], "rowids": [...],
+    "rows": [tuple, ...]}``: ``types`` are the declared column types
+    as ``PRAGMA table_info`` reports them, and an INTEGER PRIMARY KEY
+    column holds its row's rowid."""
+    # checked before deserialize: an empty blob makes it raise MemoryError
+    if blob[:16] != _MAGIC:
+        raise SqliteError("not a SQLite database (bad magic)")
+    if 2 in blob[18:20]:                # write/read format versions
+        raise SqliteError("WAL-mode database: its -wal sidecar may hold "
+                          "committed rows the file alone does not")
+    con = sqlite3.connect(":memory:")
+    try:
+        con.deserialize(blob)
+        kind = con.execute(
+            "SELECT type, wr FROM pragma_table_list "
+            "WHERE schema = 'main' AND name = ?", (table,)).fetchone()
+        if kind is None or kind[0] != "table":
+            raise SqliteError(f"no such table: {table!r}")
+        if kind[1]:
+            raise SqliteError(f"{table!r} is a WITHOUT ROWID table: it "
+                              "has no rowid to publish")
+        info = con.execute("SELECT name, type FROM pragma_table_info(?) "
+                           "ORDER BY cid", (table,)).fetchall()
+        columns = [name for name, _ in info]
+        # a column may shadow a rowid alias; SQLite offers three
+        lowered = {c.lower() for c in columns}
+        alias = next((a for a in ("rowid", "_rowid_", "oid")
+                      if a not in lowered), None)
+        if alias is None:
+            raise SqliteError(f"{table!r} shadows every rowid alias")
+        quoted = '"' + table.replace('"', '""') + '"'
+        got = con.execute(f"SELECT {alias}, * FROM {quoted} "
+                          f"ORDER BY {alias}").fetchall()
+    except (sqlite3.Error, UnicodeDecodeError) as e:
+        raise SqliteError(f"corrupt database: {type(e).__name__}: {e}") \
+            from e
+    finally:
+        con.close()
+    return {"columns": columns, "types": [t for _, t in info],
+            "rowids": [r[0] for r in got], "rows": [r[1:] for r in got]}

@@ -4830,18 +4830,45 @@ FROM documents ORDER BY doc_id
 
 
 # ---------------------------------------------------------------------------
-# parquet_footer_stats (round 11): the from-scratch parquet FOOTER
-# parser (operators/parquetmeta.py — Thrift compact protocol + the
-# parquet-format IDL, no pyarrow in the loop) on the driver-checked
-# path, as the 100 TB pruning primitive: one task per table does a
-# footer-ONLY read (seek to the PAR1 trailer, one bounded tail read —
+# parquet_footer_stats (round 11): parquet FOOTER statistics on the
+# driver-checked path, as the 100 TB pruning primitive: one task per
+# table does a footer-ONLY read (``pyarrow.parquet.read_metadata`` —
 # kilobytes per file regardless of file size) and emits the footer's
 # own row counts, null counts and min/max statistics per column chunk,
-# aggregated across row groups. The oracle recomputes THE SAME numbers
-# from the data with a full DuckDB scan — writer (parquet-cpp), parser
-# (ours) and verifier (duckdb) are three independent implementations.
+# folded across row groups by ``_footer_column_stats``. The oracle
+# recomputes THE SAME numbers from the data with a full DuckDB scan:
+# the writer and the footer reader are both Arrow's parquet-cpp, the
+# verifier is DuckDB.
 # Registered BEHIND the r11 window (registration-pause discipline).
 # ---------------------------------------------------------------------------
+
+
+def _footer_column_stats(path: str,
+                         cols) -> tuple[int, dict[str, dict]]:
+    """Footer-only statistics of one parquet file: its row count, and
+    for each column of ``cols`` the null count, min and max folded
+    across its row groups (min/max None when no row group has them).
+    ``pyarrow.parquet.read_metadata`` reads only the footer."""
+    import pyarrow.parquet as pq
+
+    md = pq.read_metadata(path)
+    stats = {c: {"nulls": 0, "min": None, "max": None} for c in cols}
+    for g in range(md.num_row_groups):
+        rg = md.row_group(g)
+        for i in range(rg.num_columns):
+            chunk = rg.column(i)
+            agg = stats.get(chunk.path_in_schema)
+            st = chunk.statistics
+            if agg is None or st is None:
+                continue
+            agg["nulls"] += st.null_count or 0
+            if st.has_min_max:
+                agg["min"] = st.min if agg["min"] is None \
+                    else min(agg["min"], st.min)
+                agg["max"] = st.max if agg["max"] is None \
+                    else max(agg["max"], st.max)
+    return md.num_rows, stats
+
 
 _FOOTER_STAT_COLS: list[tuple[str, str]] = [
     ("customer", "c_acctbal"), ("customer", "c_custkey"),
@@ -4870,33 +4897,13 @@ def _parquet_footer_stats(spark: SparkSession, sf: str) -> DataFrame:
            .repartition(len(tables), "tbl"))
 
     def per_table(it):
-        from .operators.parquetmeta import read_footer
         for pdf in it:
             rows = []
             for t in pdf["tbl"]:
-                footer = read_footer(_os.path.join(sf, f"{t}.parquet"))
-                per_col: dict[str, dict] = {}
-                n_rows = 0
-                for rg in footer["row_groups"]:
-                    n_rows += rg["num_rows"]
-                    for c in rg["columns"]:
-                        if c["path"] not in wanted[t]:
-                            continue
-                        st = c["statistics"]
-                        agg = per_col.setdefault(
-                            c["path"], {"nulls": 0, "min": None,
-                                        "max": None})
-                        agg["nulls"] += st["null_count"] or 0
-                        if st["min"] is not None and (
-                                agg["min"] is None
-                                or st["min"] < agg["min"]):
-                            agg["min"] = st["min"]
-                        if st["max"] is not None and (
-                                agg["max"] is None
-                                or st["max"] > agg["max"]):
-                            agg["max"] = st["max"]
+                n_rows, stats = _footer_column_stats(
+                    _os.path.join(sf, f"{t}.parquet"), wanted[t])
                 for col in wanted[t]:
-                    agg = per_col[col]
+                    agg = stats[col]
                     rows.append({
                         "tbl": t, "col": col, "n_rows": n_rows,
                         "null_count": agg["nulls"],
@@ -4924,11 +4931,10 @@ register(
         f" FROM {t}"
         for t, c in _FOOTER_STAT_COLS
     ) + "\nORDER BY tbl, col",
-    doc="From-scratch parquet footer parser (Thrift compact protocol) "
-        "as the pruning primitive: footer-only bounded tail reads, one "
+    doc="Parquet footer statistics as the pruning primitive: "
+        "footer-only reads through pyarrow.parquet.read_metadata, one "
         "task per table; footer statistics must equal DuckDB's full "
-        "rescan of the data — writer, parser and verifier are three "
-        "independent implementations.",
+        "rescan of the data.",
 )
 
 
@@ -4936,15 +4942,16 @@ register(
 # rowgroup_pruning_scan (round 11): footer-based scan pruning driven
 # END-TO-END — orders are bucketed by fixed price bands (one parquet
 # file per band via repartition(bucket)+partitionBy, executor-side),
-# then for each probe predicate the PRUNING DECISION is made from OUR
-# footer parser alone (bounded tail reads over the file manifest — the
-# established file-manifest-sized lake-op class) and only surviving
-# files are scanned. Published per predicate: how many files the
-# footer stats admitted, and the exact row count + orderkey sum from
-# the pruned scan. The oracle recomputes all three from a FULL scan —
-# so a footer min/max decoded wrong either admits a file the oracle's
-# band census doesn't count, or (worse) silently drops rows and breaks
-# n_rows/key_sum. Integer sums keep the comparison exact.
+# then for each probe predicate the PRUNING DECISION is made from the
+# footer statistics alone (``_footer_column_stats``: footer-only reads
+# over the file manifest — the established file-manifest-sized lake-op
+# class) and only surviving files are scanned. Published per
+# predicate: how many files the footer stats admitted, and the exact
+# row count + orderkey sum from the pruned scan. The oracle recomputes
+# all three from a FULL scan — so a footer min/max read wrong either
+# admits a file the oracle's band census doesn't count, or (worse)
+# silently drops rows and breaks n_rows/key_sum. Integer sums keep the
+# comparison exact.
 # Registered BEHIND the r11 window (registration-pause discipline).
 # ---------------------------------------------------------------------------
 
@@ -4961,8 +4968,6 @@ def _rowgroup_pruning_scan(spark: SparkSession, sf: str) -> DataFrame:
     import tempfile
     from functools import reduce
 
-    from .operators.parquetmeta import read_footer
-
     out = tempfile.mkdtemp(prefix="footer_prune_")
     orders = _t(spark, sf, "orders").select("o_orderkey", "o_totalprice")
     (orders
@@ -4974,13 +4979,9 @@ def _rowgroup_pruning_scan(spark: SparkSession, sf: str) -> DataFrame:
     files = sorted(_glob.glob(_os.path.join(out, "bucket=*", "*.parquet")))
     ranges = []
     for path in files:                  # footer-ONLY reads, manifest-sized
-        mins, maxs = [], []
-        for rg in read_footer(path)["row_groups"]:
-            for c in rg["columns"]:
-                if c["path"] == "o_totalprice":
-                    mins.append(c["statistics"]["min"])
-                    maxs.append(c["statistics"]["max"])
-        ranges.append((path, min(mins), max(maxs)))
+        _, stats = _footer_column_stats(path, ["o_totalprice"])
+        st = stats["o_totalprice"]
+        ranges.append((path, st["min"], st["max"]))
 
     parts = []
     for i, (lo, hi) in enumerate(_PRUNE_PREDICATES):
@@ -5018,23 +5019,23 @@ register(
         for i, (lo, hi) in enumerate(_PRUNE_PREDICATES)
     ) + "\nORDER BY pred_id",
     doc="Footer-stat scan pruning end-to-end: per-band parquet files, "
-        "pruning decided from our footer parser alone, survivors "
+        "pruning decided from pyarrow footer statistics alone, survivors "
         "rescanned; files-admitted census and exact integer aggregates "
         "both pinned against a DuckDB full scan.",
 )
 
 
 # ---------------------------------------------------------------------------
-# sqlite_table_scan (round 11): the from-scratch SQLite file-format
-# reader (operators/sqlitefile.py — b-tree pages, serial-type records,
-# overflow chains, IPK rowid aliasing) on the driver-checked path with
-# the INDEPENDENT implementation writing every byte: per bucket of
-# documents, the real SQLite library (stdlib sqlite3, executor-side)
-# builds a database with an INTEGER PRIMARY KEY table and our reader
-# decodes the raw serialized bytes back; texts are long enough that
-# some rows traverse genuine overflow chains and the 500+-row buckets
-# exercise interior pages at sf>=0.1. Every published value is
-# recomputed by the oracle from the parquet originals. Scale:
+# sqlite_table_scan (round 11): SQLite database files on the
+# driver-checked path: per bucket of documents, the real SQLite library
+# (stdlib sqlite3, executor-side) builds a database with an INTEGER
+# PRIMARY KEY table, serializes it, and ``sqlite_read_table``
+# (operators/sqlitefile.py) reads the bytes back through the same
+# library (``deserialize``); texts are long enough that some rows
+# traverse overflow chains and the 500+-row buckets span interior
+# pages at sf>=0.1. row_ok compares what SQLite wrote with what SQLite
+# read back. Every published value is recomputed by the oracle from
+# the parquet originals. Scale:
 # applyInPandas per doc_id bucket — partition-local bytes-in/rows-out,
 # one file per bucket, the established container-walker shape.
 # Registered BEHIND the r11 window (registration-pause discipline).
@@ -5095,10 +5096,10 @@ SELECT doc_id,
        TRUE AS row_ok
 FROM documents ORDER BY doc_id
 """,
-    doc="From-scratch SQLite file-format reader on the driver-checked "
-        "path: the real SQLite library writes each bucket's database, "
-        "our b-tree/record/overflow decoder reads the raw bytes back; "
-        "values pinned against the parquet originals.",
+    doc="SQLite database files on the driver-checked path: the stdlib "
+        "sqlite3 writes each bucket's database and reads the serialized "
+        "bytes back through sqlite_read_table; values pinned against "
+        "the parquet originals.",
 )
 
 
@@ -5594,15 +5595,37 @@ FROM ranked GROUP BY c_mktsegment ORDER BY c_mktsegment
 # reader walks the pack, resolves the HEAD tree and
 # publishes the decoded blob md5s, which the oracle recomputes from
 # the parquet originals — one wrong delta copy breaks the hash.
-# sha_ok additionally pins our object ids (type/length header framing)
-# against the ids git itself assigned. Scale: applyInPandas per doc_id
+# sha_ok is whether each id git's tree names is a blob in our object
+# map, which is keyed by the ids our reader computes (type/length
+# header framing), so it pins ours against git's; a miss publishes
+# False with a null length and md5. Scale: applyInPandas per doc_id
 # bucket (16 bounded groups), repo work partition-local — the
 # mining-code-from-git shape, one repository per task.
 # Registered BEHIND the r11 window (registration-pause discipline).
 # ---------------------------------------------------------------------------
 
-def _git_packfile_scan(spark: SparkSession, sf: str) -> DataFrame:
+def _git_pick_blobs(objs: dict, doc_ids: list, shas: list):
+    """One row per document: look git's id up in ``objs``. A hit on a
+    blob proves the id, because ``read_repo_objects`` keys every object
+    by the SHA-1 of its own bytes; a miss (or a non-blob) gives
+    ``sha_ok`` False and a null length and md5."""
     import hashlib
+
+    import pandas as pd
+
+    blobs = [o[1] if o is not None and o[0] == "blob" else None
+             for o in (objs.get(sha) for sha in shas)]
+    return pd.DataFrame({
+        "doc_id": doc_ids,
+        "content_len": pd.array([None if c is None else len(c)
+                                 for c in blobs], dtype="Int64"),
+        "content_md5": [None if c is None else hashlib.md5(c).hexdigest()
+                        for c in blobs],
+        "sha_ok": [c is not None for c in blobs],
+    })
+
+
+def _git_packfile_scan(spark: SparkSession, sf: str) -> DataFrame:
     import os as _os
     import shutil as _shutil
     import subprocess
@@ -5610,7 +5633,7 @@ def _git_packfile_scan(spark: SparkSession, sf: str) -> DataFrame:
 
     import pandas as pd
 
-    from .operators.gitpack import object_sha, parse_tree, read_repo_objects
+    from .operators.gitpack import parse_tree, read_repo_objects
 
     d = (_t(spark, sf, "documents").select("doc_id", "text")
          .withColumn("bucket", (F.col("doc_id") % 16).cast("int")))
@@ -5676,16 +5699,9 @@ def _git_packfile_scan(spark: SparkSession, sf: str) -> DataFrame:
             objs = read_repo_objects(_os.path.join(repo, ".git"))
             tree = {e["name"]: e["sha"]
                     for e in parse_tree(objs[head_tree][1])}
-            shas = [tree[f"doc_{did:08d}.txt"] for did, _ in docs]
-            picked = [objs[sha] for sha in shas]
-            return pd.DataFrame({
-                "doc_id": [int(did) for did, _ in docs],
-                "content_len": [len(c) for _, c in picked],
-                "content_md5": [hashlib.md5(c).hexdigest()
-                                for _, c in picked],
-                "sha_ok": [t == "blob" and object_sha(t, c) == sha
-                           for (t, c), sha in zip(picked, shas)],
-            })
+            return _git_pick_blobs(
+                objs, [int(did) for did, _ in docs],
+                [tree[f"doc_{did:08d}.txt"] for did, _ in docs])
         finally:
             _shutil.rmtree(repo, ignore_errors=True)
 
@@ -6180,64 +6196,60 @@ FROM sdx GROUP BY sdx ORDER BY sdx
 
 # ---------------------------------------------------------------------------
 # arrow_ipc_scratch_read (round 11): the engine's INTERCHANGE format
-# decoded from scratch — pyarrow (the independent implementation)
-# writes one IPC stream per shard executor-side, and OUR reader
-# (operators/arrowipc.py: raw flatbuffers vtable/union/struct-vector
-# decode + the columnar buffer layouts, no flatbuffers runtime)
-# extracts every row back, nulls included (every 7th n_chars is
-# written null and must come back null, exercising validity bitmaps
-# on the driver-checked path). Complements arrow_ipc_roundtrip
-# (pyarrow→pyarrow through our Arrow seam) by replacing the READ side
-# with the from-scratch decoder. Oracle recomputes all published
-# values from the parquet originals. Scale: _spread-partitioned
-# applyInPandas shards, decode partition-local.
+# written and read per shard executor-side — pyarrow writes one IPC
+# stream per shard in 64-row batches and reads every row back with
+# ``pyarrow.ipc.open_stream(...).read_all()``, nulls included (every
+# 7th n_chars is written null and must come back null, exercising
+# validity bitmaps on the driver-checked path). Since the reader is
+# pyarrow too, this repeats arrow_ipc_roundtrip's pyarrow→pyarrow
+# path shard by shard. Oracle recomputes all published values from
+# the parquet originals. Scale: _spread-partitioned applyInPandas
+# shards, decode partition-local.
 # Registered BEHIND the r11 window (registration-pause discipline).
 # ---------------------------------------------------------------------------
 
-def _arrow_ipc_scratch_read(spark: SparkSession, sf: str) -> DataFrame:
+def _arrow_ipc_build_and_read(pdf):
+    """One shard: write ``pdf`` (doc_id, text, n_chars, lang) as an
+    Arrow IPC stream of 64-row batches with every 7th doc_id's n_chars
+    null, read the stream back and publish one row per document."""
     import hashlib
     import io as _io
 
     import pandas as pd
+    import pyarrow as pa
+    import pyarrow.ipc as ipc
 
+    src = sorted(zip(pdf["doc_id"].astype("int64"), pdf["text"],
+                     pdf["n_chars"].astype("int64"), pdf["lang"]))
+    table = pa.table({
+        "doc_id": pa.array([int(i) for i, _, _, _ in src],
+                           type=pa.int64()),
+        "text": pa.array([t for _, t, _, _ in src], type=pa.string()),
+        "n_chars": pa.array([None if i % 7 == 0 else int(n)
+                             for i, _, n, _ in src], type=pa.int64()),
+        "lang": pa.array([lg for _, _, _, lg in src], type=pa.string()),
+    })
+    buf = _io.BytesIO()
+    with ipc.new_stream(buf, table.schema) as w:
+        w.write_table(table, max_chunksize=64)
+    got = ipc.open_stream(buf.getvalue()).read_all()
+    assert got.column_names == ["doc_id", "text", "n_chars", "lang"]
+    return pd.DataFrame({
+        "doc_id": got["doc_id"].to_pylist(),
+        "text_md5": [hashlib.md5(t.encode("utf-8")).hexdigest()
+                     for t in got["text"].to_pylist()],
+        "n_chars_or_null": pd.array(got["n_chars"].to_pylist(),
+                                    dtype="Int64"),
+        "lang": got["lang"].to_pylist(),
+    })
+
+
+def _arrow_ipc_scratch_read(spark: SparkSession, sf: str) -> DataFrame:
     d = (_t(spark, sf, "documents")
          .select("doc_id", "text", "n_chars", "lang")
          .withColumn("shard", (F.col("doc_id") % 16).cast("long")))
-
-    def build_and_read(pdf: pd.DataFrame) -> pd.DataFrame:
-        import pyarrow as pa
-        import pyarrow.ipc as ipc
-
-        from .operators.arrowipc import read_arrow_stream
-        src = sorted(zip(pdf["doc_id"].astype("int64"), pdf["text"],
-                         pdf["n_chars"].astype("int64"), pdf["lang"]))
-        table = pa.table({
-            "doc_id": pa.array([int(i) for i, _, _, _ in src],
-                               type=pa.int64()),
-            "text": pa.array([t for _, t, _, _ in src]),
-            "n_chars": pa.array([None if i % 7 == 0 else int(n)
-                                 for i, _, n, _ in src],
-                                type=pa.int64()),
-            "lang": pa.array([lg for _, _, _, lg in src]),
-        })
-        buf = _io.BytesIO()
-        with ipc.new_stream(buf, table.schema) as w:
-            w.write_table(table, max_chunksize=64)
-        got = read_arrow_stream(buf.getvalue())
-        assert got["columns"] == ["doc_id", "text", "n_chars", "lang"]
-        rows = []
-        for did, text, n_chars, lang in got["rows"]:
-            rows.append({
-                "doc_id": int(did),
-                "text_md5": hashlib.md5(text.encode("utf-8"))
-                .hexdigest(),
-                "n_chars_or_null": n_chars,
-                "lang": lang,
-            })
-        return pd.DataFrame(rows).astype({"n_chars_or_null": "object"})
-
     return (_spread(d, "shard", 16).groupBy("shard")
-            .applyInPandas(build_and_read,
+            .applyInPandas(_arrow_ipc_build_and_read,
                            "doc_id long, text_md5 string,"
                            " n_chars_or_null long, lang string")
             .transform(_sorted1, "doc_id"))
@@ -6254,11 +6266,10 @@ SELECT doc_id,
        lang
 FROM documents ORDER BY doc_id
 """,
-    doc="From-scratch Arrow IPC decode on the driver-checked path: "
+    doc="Arrow IPC stream write and read on the driver-checked path: "
         "pyarrow writes per-shard streams (64-row batches, every 7th "
-        "n_chars null), our raw-flatbuffers reader extracts rows and "
-        "validity bitmaps; all values pinned against the parquet "
-        "originals.",
+        "n_chars null) and reads them back with ipc.open_stream; all "
+        "values pinned against the parquet originals.",
 )
 
 

@@ -754,31 +754,42 @@ class ZipWriter(DataSourceWriter):
 
 
 _SQLITE_AFFINITY_RULES = (
-    # (substring, spark type, python coercion) — the documented SQLite
-    # type-affinity rules, applied in order
-    ("INT", LongType(), "int"),
-    ("CHAR", StringType(), "str"),
-    ("CLOB", StringType(), "str"),
-    ("TEXT", StringType(), "str"),
-    ("BLOB", BinaryType(), "bytes"),
-    ("REAL", "real", "float"),
-    ("FLOA", "real", "float"),
-    ("DOUB", "real", "float"),
+    # (substring of the declared type, spark type) — the documented
+    # SQLite type-affinity rules, applied in order
+    ("INT", LongType()),
+    ("CHAR", StringType()),
+    ("CLOB", StringType()),
+    ("TEXT", StringType()),
+    ("BLOB", BinaryType()),
+    ("REAL", DoubleType()),
+    ("FLOA", DoubleType()),
+    ("DOUB", DoubleType()),
 )
+
+
+def _sqlite_affinity(decl_type: str):
+    decl_type = decl_type.upper()
+    for sub, typ in _SQLITE_AFFINITY_RULES:
+        if sub in decl_type:
+            return typ
+    # untyped columns have BLOB affinity; NUMERIC ones render as text
+    return BinaryType() if not decl_type.strip() else StringType()
 
 
 class SqliteDataSource(DataSource):
     """``spark.read.format("sqlite").option("table", t)``: one row per
-    table row, decoded by the from-scratch b-tree reader
-    (``operators.sqlitefile``), one partition per database file. The
-    schema comes from the declared column types of the FIRST file's
-    CREATE TABLE via the documented SQLite affinity rules (INT→long,
-    CHAR/CLOB/TEXT→string, BLOB/untyped→binary, REAL/FLOA/DOUB→double,
-    else→string rendering); values that cannot coerce raise loudly.
-    ``spark.read`` schema is ``(db_file, rowid, <table columns...>)``.
+    table row, read through the stdlib ``sqlite3``
+    (``operators.sqlitefile.sqlite_read_table``), one partition per
+    database file. The schema comes from the FIRST file's declared
+    column types (``PRAGMA table_info``) via the documented SQLite
+    affinity rules (INT→long, CHAR/CLOB/TEXT→string, BLOB/untyped→
+    binary, REAL/FLOA/DOUB→double, else→string rendering); values that
+    cannot coerce raise ``ValueError``, and a bad file raises
+    ``SqliteError`` at planning and at read. ``spark.read`` schema is
+    ``(db_file, rowid, <table columns...>)``, where ``rowid`` is
+    SQLite's own rowid.
     Write side: ``df.write.format("sqlite")`` lands one database per
-    partition through the real SQLite library (stdlib), giving the
-    read path a genuinely independent producer."""
+    partition through the same library."""
 
     @classmethod
     def name(cls) -> str:
@@ -791,37 +802,14 @@ class SqliteDataSource(DataSource):
         return t
 
     def schema(self) -> StructType:
-        from ..operators.sqlitefile import _Db, _master_rows, _parse_columns
-        sample = _file_list(self.options)[0]
-        with open(sample, "rb") as f:
-            blob = f.read()
-        decl = None
-        for vals in _master_rows(_Db(blob)):
-            if vals[0] == "table" and vals[1] == self._table():
-                decl = vals[4]
-        if decl is None:
-            raise ValueError(f"table {self._table()!r} absent from "
-                             f"sample file {sample!r}")
-        names, _ = _parse_columns(decl)
-        fields = [StructField("db_file", StringType()),
-                  StructField("rowid", LongType())]
-        inner = decl[decl.index("(") + 1:decl.rindex(")")]
-        for name in names:
-            # find this column's declared type in the DDL
-            m = re.search(r'(?:"%s"|\[%s\]|`%s`|\b%s\b)\s+([A-Za-z0-9 ]*)'
-                          % tuple([re.escape(name)] * 4), inner)
-            decl_type = (m.group(1) if m else "").upper()
-            typ = StringType()
-            matched = False
-            for sub, t, _coerce in _SQLITE_AFFINITY_RULES:
-                if sub in decl_type:
-                    typ = DoubleType() if t == "real" else t
-                    matched = True
-                    break
-            if not matched:
-                typ = BinaryType() if not decl_type.strip() else typ
-            fields.append(StructField(name, typ))
-        return StructType(fields)
+        from ..operators.sqlitefile import sqlite_read_table
+        with open(_file_list(self.options)[0], "rb") as f:
+            got = sqlite_read_table(f.read(), self._table())
+        return StructType(
+            [StructField("db_file", StringType()),
+             StructField("rowid", LongType())]
+            + [StructField(name, _sqlite_affinity(decl))
+               for name, decl in zip(got["columns"], got["types"])])
 
     def reader(self, schema: StructType) -> "SqliteReader":
         return SqliteReader(self.options, self._table(), schema)
@@ -855,7 +843,7 @@ class SqliteReader(DataSourceReader):
             [_FilePartition("\x00empty")]
 
     def read(self, partition: _FilePartition):
-        from ..operators.sqlitefile import _Db, _master_rows, sqlite_read_table
+        from ..operators.sqlitefile import sqlite_read_table
         if partition.path == "\x00empty":
             return
         with open(partition.path, "rb") as f:
@@ -869,7 +857,7 @@ class SqliteReader(DataSourceReader):
                 f"planned schema (from the first file) says {want}")
         base = os.path.basename(partition.path)
         types = [f.dataType for f in self.schema.fields[2:]]
-        for rid, vals in enumerate(got["rows"]):
+        for rid, vals in zip(got["rowids"], got["rows"]):
             out = [base, rid]
             for v, t in zip(vals, types):
                 if v is None:

@@ -1,106 +1,72 @@
-"""From-scratch Arrow IPC stream reader (raw flatbuffers decode):
-pinned against pyarrow, which writes every stream; our reader must
-reproduce to_pylist() exactly across types, nulls, chunking, both
-container formats, and must refuse the unsupported encodings."""
+"""``arrow_ipc_scratch_read``'s shard step (``_arrow_ipc_build_and_read``):
+pyarrow writes each shard as an IPC stream of 64-row batches with
+every 7th doc_id's n_chars null and reads it back; every published row
+must equal what went in, across batch boundaries, nulls, unicode and
+empty shards."""
 
-import io
+import hashlib
 import random
 
-import pyarrow as pa
-import pyarrow.ipc as ipc
-import pytest
+import pandas as pd
 
-from precios_nexo_sperant_etl_spark.operators.arrowipc import (
-    ArrowIpcError, read_arrow_stream)
+from precios_nexo_sperant_etl_spark.queries_scale_part4 import (
+    _arrow_ipc_build_and_read)
+
+COLUMNS = ["doc_id", "text_md5", "n_chars_or_null", "lang"]
 
 
-def _pin(table, chunk=None):
-    buf = io.BytesIO()
-    with ipc.new_stream(buf, table.schema) as w:
-        w.write_table(table, max_chunksize=chunk or 1 << 20)
-    got = read_arrow_stream(buf.getvalue())
-    assert got["columns"] == table.column_names
-    assert got["rows"] == [tuple(d.values()) for d in table.to_pylist()]
+def _shard(doc_ids, rng):
+    texts = ["".join(rng.choice("abcdeé漢 ") for _ in
+                     range(rng.randrange(0, 40))) for _ in doc_ids]
+    return pd.DataFrame({
+        "doc_id": list(doc_ids),
+        "text": texts,
+        "n_chars": [len(t) for t in texts],
+        "lang": [rng.choice(["es", "en", "pt"]) for _ in doc_ids],
+    })
+
+
+def _expected(pdf):
+    rows = sorted(zip(pdf["doc_id"], pdf["text"], pdf["n_chars"],
+                      pdf["lang"]))
+    return [(int(i), hashlib.md5(t.encode("utf-8")).hexdigest(),
+             None if i % 7 == 0 else int(n), lg)
+            for i, t, n, lg in rows]
+
+
+def _pin(pdf):
+    got = _arrow_ipc_build_and_read(pdf)
+    assert list(got.columns) == COLUMNS
+    rows = [tuple(None if v is pd.NA else v for v in r)
+            for r in got.itertuples(index=False, name=None)]
+    assert rows == _expected(pdf)
     return got
 
 
 def test_all_flat_types_with_nulls():
-    t = pa.table({
-        "i64": pa.array([1, None, -3, 2 ** 62], type=pa.int64()),
-        "i8": pa.array([-1, 2, None, 127], type=pa.int8()),
-        "u16": pa.array([0, 65535, 7, None], type=pa.uint16()),
-        "u64": pa.array([0, 2 ** 63, None, 1], type=pa.uint64()),
-        "f64": pa.array([1.5, None, -0.25, float("inf")]),
-        "f32": pa.array([1.0, 2.5, None, -8.0], type=pa.float32()),
-        "b": pa.array([True, False, None, True]),
-        "s": pa.array(["hola", None, "", "acentós y 漢字"]),
-        "bin": pa.array([b"\x00\xff", b"", None, b"xyz"],
-                        type=pa.binary()),
-        "fx": pa.array([b"abcd", b"efgh", None, b"ijkl"],
-                       type=pa.binary(4)),
-        "ls": pa.array(["big", None, "x" * 300, ""],
-                       type=pa.large_string()),
-        "lb": pa.array([b"bb", None, b"", b"q" * 99],
-                       type=pa.large_binary()),
+    pdf = pd.DataFrame({
+        "doc_id": [14, 3, 7, 0, 22],
+        "text": ["hola", "", "acentós y 漢字", "x" * 300, "tab\tnl\n"],
+        "n_chars": [4, 0, 11, 300, 7],
+        "lang": ["es", "en", "", "es", "pt"],
     })
-    assert _pin(t)["n_batches"] == 1
+    got = _pin(pdf)
+    # every 7th doc_id comes back null, the rest keep their n_chars
+    assert got["n_chars_or_null"].isna().tolist() == [True, False, True,
+                                                      True, False]
 
 
 def test_multi_batch_and_random_property():
     rng = random.Random(61)
-    n = 500
-    t = pa.table({
-        "k": pa.array([rng.randrange(-10**9, 10**9) if rng.random() > .1
-                       else None for _ in range(n)], type=pa.int64()),
-        "v": pa.array([rng.random() if rng.random() > .1 else None
-                       for _ in range(n)]),
-        "s": pa.array(["".join(rng.choice("abcdeé ") for _ in
-                               range(rng.randrange(0, 30)))
-                       if rng.random() > .1 else None
-                       for _ in range(n)]),
-    })
-    got = _pin(t, chunk=64)
-    assert got["n_batches"] == 8
+    # shard sizes on and around the 64-row batch boundary
+    for n in (1, 63, 64, 65, 128, 129, 500):
+        ids = rng.sample(range(-10 ** 6, 10 ** 6), n)
+        _pin(_shard(ids, rng))
 
 
 def test_no_null_and_empty_tables():
-    _pin(pa.table({"a": [1, 2, 3], "s": ["x", "y", "z"]}))
-    _pin(pa.table({"a": pa.array([], type=pa.int32())}))
-
-
-def test_file_format_accepted():
-    t = pa.table({"a": [1, 2], "s": ["p", "q"]})
-    buf = io.BytesIO()
-    with ipc.new_file(buf, t.schema) as w:
-        w.write_table(t)
-    got = read_arrow_stream(buf.getvalue())
-    assert got["rows"] == [(1, "p"), (2, "q")]
-
-
-def test_unsupported_shapes_refused():
-    td = pa.table({"d": pa.array(["a", "b", "a"]).dictionary_encode()})
-    buf = io.BytesIO()
-    with ipc.new_stream(buf, td.schema) as w:
-        w.write_table(td)
-    with pytest.raises(ArrowIpcError, match="dictionary"):
-        read_arrow_stream(buf.getvalue())
-
-    t = pa.table({"a": [1, 2]})
-    buf = io.BytesIO()
-    with ipc.new_stream(buf, t.schema,
-                        options=ipc.IpcWriteOptions(
-                            compression="zstd")) as w:
-        w.write_table(t)
-    with pytest.raises(ArrowIpcError, match="compressed"):
-        read_arrow_stream(buf.getvalue())
-
-    tn = pa.table({"l": pa.array([[1, 2], [3]],
-                                 type=pa.list_(pa.int64()))})
-    buf = io.BytesIO()
-    with ipc.new_stream(buf, tn.schema) as w:
-        w.write_table(tn)
-    with pytest.raises(ArrowIpcError):
-        read_arrow_stream(buf.getvalue())
-
-    with pytest.raises(ArrowIpcError):
-        read_arrow_stream(b"not an arrow stream")
+    rng = random.Random(7)
+    got = _pin(_shard([i for i in range(1, 100) if i % 7], rng))
+    assert got["n_chars_or_null"].notna().all()
+    empty = _arrow_ipc_build_and_read(_shard([], rng))
+    assert list(empty.columns) == COLUMNS and len(empty) == 0

@@ -15,8 +15,6 @@ from precios_nexo_sperant_etl_spark.operators.gitpack import (
     GitError, build_pack, parse_pack)
 from precios_nexo_sperant_etl_spark.operators.lz4codec import (
     Lz4Error, lz4_frame_compress, lz4_frame_decompress)
-from precios_nexo_sperant_etl_spark.operators.parquetmeta import (
-    ParquetMetaError, parse_footer)
 from precios_nexo_sperant_etl_spark.operators.sqlitefile import (
     SqliteError, sqlite_read_table)
 from precios_nexo_sperant_etl_spark.operators.ziparchive import (
@@ -26,9 +24,8 @@ from precios_nexo_sperant_etl_spark.operators.ziparchive import (
 # TERMINATION with an exception, not silent wrong output. The named
 # module errors dominate; slicing/unpacking errors are acceptable
 # residue on byte-level truncation.
-_LOUD = (Lz4Error, ZipError, SqliteError, GitError, ParquetMetaError,
-         ValueError, IndexError, KeyError, OverflowError,
-         UnicodeDecodeError)
+_LOUD = (Lz4Error, ZipError, SqliteError, GitError, ValueError,
+         IndexError, KeyError, OverflowError, UnicodeDecodeError)
 
 
 @settings(max_examples=60, deadline=None)
@@ -87,8 +84,6 @@ def test_zip_mutation_terminates(raw, data):
 def test_garbage_never_parses_as_containers(junk):
     with pytest.raises(_LOUD):
         zip_extract(junk)
-    with pytest.raises(_LOUD):
-        parse_footer(junk)
     with pytest.raises(_LOUD):
         parse_pack(junk)
     with pytest.raises(_LOUD):

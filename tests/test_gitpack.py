@@ -107,6 +107,32 @@ def test_tree_walk_matches_working_files(tmp_path):
         assert objs[e["sha"]][1].decode() == files[e["name"]]
 
 
+def test_pick_blobs_flags_ids_missing_from_objs(tmp_path):
+    """git_packfile_scan's pick step: an id the tree names but the
+    object map lacks, or one naming a non-blob, gives sha_ok False and
+    null content columns instead of a KeyError."""
+    from precios_nexo_sperant_etl_spark.queries_scale_part4 import (
+        _git_pick_blobs)
+    repo, files = _mk_repo(tmp_path)
+    objs = read_repo_objects(str(repo / ".git"))
+    head_tree = _git("rev-parse", "HEAD^{tree}",
+                     cwd=repo).stdout.decode().strip()
+    tree = {e["name"]: e["sha"] for e in parse_tree(objs[head_tree][1])}
+    names = sorted(files)[:4]
+    shas = [tree[n] for n in names] + [head_tree]
+    del objs[shas[1]]
+    got = _git_pick_blobs(objs, list(range(5)), shas)
+    assert got["doc_id"].tolist() == [0, 1, 2, 3, 4]
+    assert got["sha_ok"].tolist() == [True, False, True, True, False]
+    for i in (1, 4):
+        assert got["content_len"].isna()[i]
+        assert got["content_md5"][i] is None
+    for i in (0, 2, 3):
+        body = files[names[i]].encode()
+        assert got["content_len"][i] == len(body)
+        assert got["content_md5"][i] == hashlib.md5(body).hexdigest()
+
+
 def test_our_pack_accepted_by_git(tmp_path):
     repo, _ = _mk_repo(tmp_path)
     blobs = [("blob", f"payload {i} ".encode() * 50) for i in range(10)]

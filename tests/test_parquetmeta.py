@@ -1,7 +1,9 @@
-"""Parquet footer parser (from-scratch Thrift compact protocol) pinned
-against the INDEPENDENT pyarrow parquet reader: every column-chunk
-field on every testdata table, multi-row-group layouts, nulls, string
-stats, codec variants, key-value metadata, and malformed-input errors."""
+"""Parquet footer statistics (``_footer_column_stats`` over
+``pyarrow.parquet.read_metadata``) pinned against the data itself, read
+in full through pandas: row counts, null counts and min/max folded
+across row groups on every testdata table, multi-row-group layouts,
+every codec, nested schema paths, a footer-only read that never touches
+the data pages, and malformed-input errors."""
 
 import os
 import struct
@@ -11,50 +13,31 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
-from precios_nexo_sperant_etl_spark.operators.parquetmeta import (
-    ParquetMetaError, parse_footer, read_footer)
+from precios_nexo_sperant_etl_spark.queries_scale_part4 import (
+    _footer_column_stats)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_SMALL", "/root/testdata/sf0.001")
 
 
-def _pin_file(path):
-    ours = read_footer(path)
-    ref = pq.ParquetFile(path).metadata
-    assert ours["num_rows"] == ref.num_rows
-    assert ours["created_by"] == ref.created_by
-    assert len(ours["row_groups"]) == ref.num_row_groups
-    for g in range(ref.num_row_groups):
-        rg, rrg = ours["row_groups"][g], ref.row_group(g)
-        assert rg["num_rows"] == rrg.num_rows
-        assert len(rg["columns"]) == rrg.num_columns
-        for i, c in enumerate(rg["columns"]):
-            rc = rrg.column(i)
-            assert c["path"] == rc.path_in_schema
-            assert c["physical_type"] == rc.physical_type
-            # pyarrow collapses the LZ4_RAW enum (7) to "LZ4" in its
-            # public API; our parser keeps the spec enum name
-            assert c["codec"] == {"LZ4": "LZ4_RAW"}.get(rc.compression,
-                                                        rc.compression)
-            assert c["num_values"] == rc.num_values
-            assert c["total_compressed_size"] == rc.total_compressed_size
-            assert (c["total_uncompressed_size"]
-                    == rc.total_uncompressed_size)
-            st = rc.statistics
-            if st is None:
-                continue
-            if st.null_count is not None:
-                assert c["statistics"]["null_count"] == st.null_count
-            # raw physical min/max: compare only where pyarrow performs
-            # no logical-type conversion (ints/floats stay raw)
-            if st.has_min_max and isinstance(st.min, (int, float)) \
-                    and c["physical_type"] in ("INT32", "INT64",
-                                               "DOUBLE", "FLOAT"):
-                assert c["statistics"]["min"] == st.min
-                assert c["statistics"]["max"] == st.max
-            if st.has_min_max and isinstance(st.min, str) \
-                    and c["physical_type"] == "BYTE_ARRAY":
-                assert c["statistics"]["min"] == st.min.encode("utf-8")
-                assert c["statistics"]["max"] == st.max.encode("utf-8")
+def _pin_file(path, cols=None):
+    """Every flat column's footer stats equal a full pandas read."""
+    df = pq.read_table(path).to_pandas()
+    cols = cols or [c for c in df.columns
+                    if not pa.types.is_nested(
+                        pq.read_schema(path).field(c).type)]
+    n_rows, stats = _footer_column_stats(path, cols)
+    assert n_rows == len(df)
+    for c in cols:
+        vals = df[c].dropna()
+        assert stats[c]["nulls"] == len(df) - len(vals), c
+        if len(vals) == 0:
+            assert stats[c]["min"] is None and stats[c]["max"] is None
+            continue
+        lo, hi = stats[c]["min"], stats[c]["max"]
+        if pd.api.types.is_datetime64_any_dtype(df[c]):
+            lo, hi = pd.Timestamp(lo), pd.Timestamp(hi)
+        assert (lo, hi) == (vals.min(), vals.max()), c
+    return stats
 
 
 def test_pin_every_testdata_table_against_pyarrow():
@@ -72,72 +55,77 @@ def test_multi_row_group_and_nulls(tmp_path):
     })
     path = str(tmp_path / "multi.parquet")
     pq.write_table(pa.Table.from_pandas(df), path, row_group_size=1500)
-    _pin_file(path)
-    ours = read_footer(path)
-    assert len(ours["row_groups"]) == 7
-    # aggregated footer stats equal data-derived truth
-    null_total = sum(rg["columns"][1]["statistics"]["null_count"]
-                     for rg in ours["row_groups"])
-    assert null_total == df["v"].isna().sum()
-    mins = [rg["columns"][0]["statistics"]["min"]
-            for rg in ours["row_groups"]]
-    assert min(mins) == 0
-    assert mins == sorted(mins)         # k is written in order
+    assert pq.read_metadata(path).num_row_groups == 7
+    stats = _pin_file(path, ["k", "v", "s"])
+    # folded across all 7 row groups, not the first or last one's
+    assert stats["v"]["nulls"] == df["v"].isna().sum() == 1429
+    assert (stats["k"]["min"], stats["k"]["max"]) == (0, n - 1)
+    assert (stats["v"]["min"], stats["v"]["max"]) == (0.5, 4999.5)
+    assert (stats["s"]["min"], stats["s"]["max"]) == ("name_000",
+                                                      "name_099")
 
 
 @pytest.mark.parametrize("codec", ["NONE", "SNAPPY", "GZIP", "ZSTD",
                                    "LZ4"])
 def test_codec_field_parses(tmp_path, codec):
-    df = pd.DataFrame({"a": range(100), "b": ["x"] * 100})
+    df = pd.DataFrame({"a": range(100), "b": ["x", None] * 50})
     path = str(tmp_path / f"c_{codec}.parquet")
-    pq.write_table(pa.Table.from_pandas(df), path, compression=codec)
-    ours = read_footer(path)
-    want = {"NONE": "UNCOMPRESSED", "LZ4": "LZ4_RAW"}.get(codec, codec)
-    assert ours["row_groups"][0]["columns"][0]["codec"] == want
-    _pin_file(path)
-
-
-def test_key_value_metadata(tmp_path):
-    tbl = pa.Table.from_pandas(pd.DataFrame({"a": [1, 2]}))
-    tbl = tbl.replace_schema_metadata({"engine": "spark-first",
-                                       "round": "11"})
-    path = str(tmp_path / "kv.parquet")
-    pq.write_table(tbl, path)
-    kv = read_footer(path)["key_value_metadata"]
-    assert kv.get("engine") == "spark-first"
-    assert kv.get("round") == "11"
+    pq.write_table(pa.Table.from_pandas(df), path, compression=codec,
+                   row_group_size=30)
+    stats = _pin_file(path, ["a", "b"])
+    assert stats["b"]["nulls"] == 50
 
 
 def test_schema_elements(tmp_path):
-    df = pd.DataFrame({"i32": pd.array([1, None], dtype="Int32"),
-                       "f": [1.5, 2.5], "s": ["a", None]})
+    # columns are picked by their schema path: nested struct children
+    # are "parent.child", and a column the file lacks keeps empty stats
+    tbl = pa.table({
+        "i32": pa.array([1, None, 3], type=pa.int32()),
+        "f": [1.5, 2.5, -4.0],
+        "st": pa.array([{"x": 5, "y": "b"}, {"x": -2, "y": "a"},
+                        {"x": None, "y": "c"}]),
+    })
     path = str(tmp_path / "sch.parquet")
-    pq.write_table(pa.Table.from_pandas(df), path)
-    sch = read_footer(path)["schema"]
-    assert sch[0]["num_children"] == 3          # root group
-    by_name = {e["name"]: e for e in sch[1:]}
-    assert by_name["i32"]["physical_type"] == "INT32"
-    assert by_name["i32"]["repetition"] == "OPTIONAL"
-    assert by_name["f"]["physical_type"] == "DOUBLE"
-    assert by_name["s"]["physical_type"] == "BYTE_ARRAY"
+    pq.write_table(tbl, path)
+    n_rows, stats = _footer_column_stats(
+        path, ["i32", "f", "st.x", "st.y", "absent"])
+    assert n_rows == 3
+    assert stats["i32"] == {"nulls": 1, "min": 1, "max": 3}
+    assert stats["f"] == {"nulls": 0, "min": -4.0, "max": 2.5}
+    assert stats["st.x"] == {"nulls": 1, "min": -2, "max": 5}
+    assert stats["st.y"] == {"nulls": 0, "min": "a", "max": "c"}
+    assert stats["absent"] == {"nulls": 0, "min": None, "max": None}
 
 
 def test_footer_only_read_is_bounded(tmp_path):
-    # a file whose body dwarfs its footer: read_footer must parse from
-    # the bounded tail (the PAR1 trailer names the footer length)
-    df = pd.DataFrame({"payload": [os.urandom(1000).hex()
+    # zero every byte between the leading PAR1 and the footer: the data
+    # pages are gone, so a full read fails, yet the footer-only read
+    # still returns the original statistics
+    df = pd.DataFrame({"k": range(2000),
+                       "payload": [os.urandom(200).hex()
                                    for _ in range(2000)]})
     path = str(tmp_path / "big.parquet")
-    pq.write_table(pa.Table.from_pandas(df), path)
-    (flen,) = struct.unpack("<I", open(path, "rb").read()[-8:-4])
-    assert flen + 8 < os.path.getsize(path) // 4
-    assert read_footer(path)["num_rows"] == 2000
+    pq.write_table(pa.Table.from_pandas(df), path, row_group_size=500)
+    want = _pin_file(path, ["k", "payload"])
+    with open(path, "rb") as f:
+        blob = bytearray(f.read())
+    (flen,) = struct.unpack("<I", blob[-8:-4])
+    assert flen + 8 < len(blob) // 4
+    blob[4:len(blob) - 8 - flen] = bytes(len(blob) - 12 - flen)
+    with open(path, "wb") as f:
+        f.write(blob)
+    with pytest.raises(Exception):
+        pq.read_table(path).to_pandas()
+    assert _footer_column_stats(path, ["k", "payload"]) == (2000, want)
 
 
-def test_errors():
-    with pytest.raises(ParquetMetaError):
-        parse_footer(b"not parquet at all")
-    with pytest.raises(ParquetMetaError):
-        parse_footer(b"\xff" * 4 + b"PAR1")     # footer longer than tail
-    with pytest.raises(ParquetMetaError, match="not a parquet file"):
-        read_footer("/dev/null")
+def test_errors(tmp_path):
+    junk = tmp_path / "junk.parquet"
+    junk.write_bytes(b"not parquet at all")
+    cut = tmp_path / "cut.parquet"
+    cut.write_bytes(b"PAR1" + b"\xff" * 4 + b"PAR1")   # footer > file
+    for path in (str(junk), str(cut), "/dev/null"):
+        with pytest.raises(pa.ArrowInvalid):
+            _footer_column_stats(path, ["a"])
+    with pytest.raises((FileNotFoundError, OSError)):
+        _footer_column_stats(str(tmp_path / "missing.parquet"), ["a"])

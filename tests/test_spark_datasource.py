@@ -5,6 +5,7 @@ executor-side, one input partition per file."""
 from __future__ import annotations
 
 import pyspark.sql.functions as F
+import pytest
 
 from precios_nexo_sperant_etl_spark.operators.webdataset import build_warc
 from precios_nexo_sperant_etl_spark.operators.zstdframe import (
@@ -559,6 +560,71 @@ def test_sqlite_format_schema_mismatch_fails_loudly(spark, tmp_path):
     with _pytest.raises(Exception) as ei:
         df.collect()
     assert "columns" in str(ei.value)
+
+
+def test_sqlite_format_rowid_is_sqlites_rowid(spark, tmp_path):
+    register_data_sources(spark)
+    import sqlite3
+    con = sqlite3.connect(str(tmp_path / "a.sqlite"))
+    con.execute("CREATE TABLE t(v TEXT)")
+    con.executemany("INSERT INTO t VALUES (?)", [(c,) for c in "abcde"])
+    con.execute("DELETE FROM t WHERE v = 'b'")
+    con.commit()
+    con.close()
+    con = sqlite3.connect(str(tmp_path / "b.sqlite"))
+    con.execute("CREATE TABLE k(id INTEGER PRIMARY KEY, v TEXT)")
+    con.executemany("INSERT INTO k VALUES (?, ?)", [(7, "x"), (42, "y")])
+    con.commit()
+    con.close()
+    t = (spark.read.format("sqlite").option("table", "t")
+         .load(str(tmp_path / "a.sqlite")))
+    assert [(r["rowid"], r["v"]) for r in t.orderBy("rowid").collect()] \
+        == [(1, "a"), (3, "c"), (4, "d"), (5, "e")]
+    k = (spark.read.format("sqlite").option("table", "k")
+         .load(str(tmp_path / "b.sqlite")))
+    assert [tuple(r) for r in k.orderBy("rowid").collect()] == [
+        ("b.sqlite", 7, 7, "x"), ("b.sqlite", 42, 42, "y")]
+
+
+@pytest.mark.parametrize("case", ["truncated", "empty", "wal"])
+def test_sqlite_format_bad_file_fails_loudly(tmp_path, case):
+    """A bad file raises SqliteError both where it plans the schema
+    (first file) and where it is read (a later file)."""
+    import sqlite3
+
+    from precios_nexo_sperant_etl_spark.operators.sqlitefile import \
+        SqliteError
+    from precios_nexo_sperant_etl_spark.sources.spark_datasource import (
+        SqliteDataSource, _FilePartition)
+    from tests.test_sqlite import _wal_file
+    good = str(tmp_path / "a_good.sqlite")
+    con = sqlite3.connect(good)
+    con.execute("CREATE TABLE t(k INTEGER PRIMARY KEY)")
+    con.executemany("INSERT INTO t VALUES (?)", [(i,) for i in range(3)])
+    con.commit()
+    con.close()
+    bad = str(tmp_path / "b_bad.sqlite")
+    keep = None
+    if case == "wal":
+        keep = _wal_file(bad)
+    else:
+        with open(bad, "wb") as f:
+            f.write(b"SQLite format 3\x00\x10\x00"
+                    if case == "truncated" else b"")
+    try:
+        with pytest.raises(SqliteError,
+                           match="WAL" if case == "wal" else ""):
+            SqliteDataSource({"path": bad, "table": "t"}).schema()
+        ds = SqliteDataSource({"path": str(tmp_path / "*.sqlite"),
+                               "table": "t"})
+        reader = ds.reader(ds.schema())
+        assert len(list(reader.read(_FilePartition(good)))) == 3
+        with pytest.raises(SqliteError,
+                           match="WAL" if case == "wal" else ""):
+            list(reader.read(_FilePartition(bad)))
+    finally:
+        if keep is not None:
+            keep.close()
 
 
 def test_zip_streaming_source(spark, tmp_path):

@@ -1,9 +1,9 @@
-"""SQLite file-format reader: pinned against the INDEPENDENT stdlib
-sqlite3 (the real SQLite C library) — it writes databases, we decode
-the raw bytes, its query results are the expected values. Covers
-serial-type widths, overflow chains, multi-level b-trees, deletes,
-IPK rowid aliasing, ALTER TABLE short records, page sizes, and the
-refused shapes."""
+"""SQLite table reads (``sqlite_read_table``): the stdlib sqlite3
+writes each database and its own query results are the expected
+values. Covers serial-type widths, overflow chains, multi-level
+b-trees, deletes, IPK rowid aliasing, ALTER TABLE short records, page
+sizes, rowids, and the refused shapes: every bad input ends in
+SqliteError."""
 
 import random
 import sqlite3
@@ -11,7 +11,7 @@ import sqlite3
 import pytest
 
 from precios_nexo_sperant_etl_spark.operators.sqlitefile import (
-    SqliteError, sqlite_list_tables, sqlite_read_table)
+    SqliteError, sqlite_read_table)
 
 
 def _db(page_size=None):
@@ -105,20 +105,75 @@ def test_page_sizes(page_size):
         "select k,t from p order by k").fetchall()
 
 
-def test_multiple_tables_listed():
-    con = _db()
-    con.execute("create table b1(x)")
-    con.execute("create table a2(y)")
-    con.execute("create index ix on a2(y)")   # indexes are not tables
-    assert sqlite_list_tables(con.serialize()) == ["a2", "b1"]
-
-
 def test_without_rowid_refused():
     con = _db()
     con.execute("create table w(k text primary key, v) without rowid")
     con.execute("insert into w values ('a', 1)")
     with pytest.raises(SqliteError, match="WITHOUT ROWID"):
         sqlite_read_table(con.serialize(), "w")
+
+
+def test_rowids_are_sqlites_after_deletes():
+    con = _db()
+    con.execute("create table t(v text)")
+    con.executemany("insert into t values (?)",
+                    [(c,) for c in "abcde"])
+    con.execute("delete from t where v = 'b'")
+    con.execute("create table ipk(k integer primary key, v text)")
+    con.executemany("insert into ipk values (?,?)",
+                    [(10, "a"), (-5, "b"), (99, "c")])
+    blob = con.serialize()
+    got = sqlite_read_table(blob, "t")
+    assert got["rowids"] == [1, 3, 4, 5]
+    assert got["rows"] == [("a",), ("c",), ("d",), ("e",)]
+    got = sqlite_read_table(blob, "ipk")
+    assert got["rowids"] == [-5, 10, 99]
+    assert got["rows"] == [(-5, "b"), (10, "a"), (99, "c")]
+    assert got["types"] == ["INTEGER", "TEXT"]
+    # a column named rowid shadows the keyword, not the rowid itself
+    con.execute('create table shadow("ROWID" text, v)')
+    con.executemany("insert into shadow values (?,?)",
+                    [("r1", 1), ("r2", 2), ("r3", 3)])
+    con.execute("delete from shadow where v = 1")
+    got = sqlite_read_table(con.serialize(), "shadow")
+    assert got["rowids"] == [2, 3]
+    assert got["rows"] == [("r2", 2), ("r3", 3)]
+
+
+def _wal_file(path):
+    """A WAL-mode database whose -wal sidecar holds a committed 11th
+    row; the connection is returned open so the sidecar stays."""
+    con = sqlite3.connect(path)
+    con.execute("PRAGMA journal_mode = WAL")
+    con.execute("PRAGMA wal_autocheckpoint = 0")
+    con.execute("create table t(k integer primary key)")
+    con.executemany("insert into t values (?)",
+                    [(i,) for i in range(10)])
+    con.commit()
+    con.execute("PRAGMA wal_checkpoint(TRUNCATE)")
+    con.execute("insert into t values (10)")
+    con.commit()
+    return con
+
+
+def test_wal_mode_refused(tmp_path):
+    path = str(tmp_path / "wal.sqlite")
+    con = _wal_file(path)
+    try:
+        assert con.execute("select count(*) from t").fetchone() == (11,)
+        with open(path, "rb") as f:
+            blob = f.read()
+        with pytest.raises(SqliteError, match="WAL"):
+            sqlite_read_table(blob, "t")
+    finally:
+        con.close()
+
+
+@pytest.mark.parametrize("blob", [b"", b"SQLite format 3\x00\x10\x00"],
+                         ids=["empty", "truncated"])
+def test_empty_and_truncated_refused(blob):
+    with pytest.raises(SqliteError):
+        sqlite_read_table(blob, "t")
 
 
 def test_garbage_and_missing_table():
