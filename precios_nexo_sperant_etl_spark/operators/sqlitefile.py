@@ -28,12 +28,14 @@ class SqliteError(ValueError):
 _MAGIC = b"SQLite format 3\x00"
 
 
-def sqlite_read_table(blob: bytes, table: str) -> dict:
+def sqlite_read_table(blob: bytes, table: str, rows: bool = True) -> dict:
     """Read every row of ``table`` in rowid order. Returns
     ``{"columns": [...], "types": [...], "rowids": [...],
     "rows": [tuple, ...]}``: ``types`` are the declared column types
     as ``PRAGMA table_info`` reports them, and an INTEGER PRIMARY KEY
-    column holds its row's rowid."""
+    column holds its row's rowid. ``rows=False`` validates the file and
+    the table the same way but skips the row fetch, leaving ``rowids``
+    and ``rows`` out: a schema needs only the column types."""
     # checked before deserialize: an empty blob makes it raise MemoryError
     if blob[:16] != _MAGIC:
         raise SqliteError("not a SQLite database (bad magic)")
@@ -60,13 +62,16 @@ def sqlite_read_table(blob: bytes, table: str) -> dict:
                       if a not in lowered), None)
         if alias is None:
             raise SqliteError(f"{table!r} shadows every rowid alias")
-        quoted = '"' + table.replace('"', '""') + '"'
-        got = con.execute(f"SELECT {alias}, * FROM {quoted} "
-                          f"ORDER BY {alias}").fetchall()
+        out = {"columns": columns, "types": [t for _, t in info]}
+        if rows:
+            quoted = '"' + table.replace('"', '""') + '"'
+            got = con.execute(f"SELECT {alias}, * FROM {quoted} "
+                              f"ORDER BY {alias}").fetchall()
+            out["rowids"] = [r[0] for r in got]
+            out["rows"] = [r[1:] for r in got]
     except (sqlite3.Error, UnicodeDecodeError) as e:
         raise SqliteError(f"corrupt database: {type(e).__name__}: {e}") \
             from e
     finally:
         con.close()
-    return {"columns": columns, "types": [t for _, t in info],
-            "rowids": [r[0] for r in got], "rows": [r[1:] for r in got]}
+    return out

@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 
 from ..functions.exact import davg
 from ..sources.ingest import COL_NUMERO
+from .reference_pipeline import canonical_units
 
 
 def records(df: DataFrame, prefer: list[str] | None = None) -> DataFrame:
@@ -25,7 +26,12 @@ def records(df: DataFrame, prefer: list[str] | None = None) -> DataFrame:
     columns present, ready for ``df.write.json`` (Spark emits NULL for
     null doubles natively — the NaN→None hygiene pass is free). The
     accented names are the ones ingest produces; the unaccented ones are
-    the reference's own spelling."""
+    the reference's own spelling. Unit numbers are published canonical
+    (``canonical_units``), as the update writes them, so a lookup by the
+    unit's printed number finds it whether the frame came from ingest or
+    from ``update_prices``."""
+    if COL_NUMERO in df.columns:
+        df = canonical_units(df)
     if prefer is None:
         prefer = ["Proyecto", COL_NUMERO, "Numero de inmueble",
                   "Precio de lista", "Precio de lista_num",

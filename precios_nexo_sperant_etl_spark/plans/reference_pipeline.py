@@ -31,13 +31,21 @@ SPERANT_KEYS = ("nombre_proyecto", "nombre")
 SPERANT_VALS = ("precio_lista", "estado_comercial", "fecha_actualizacion")
 
 
-def prepare_nexo(nexo: DataFrame) -> DataFrame:
-    """Stages 4/2.5: unit-number canonicalization (F6/F7, APN:243-250),
-    tower prefix (P11), join keys (F1, APN:325-326)."""
+def canonical_units(nexo: DataFrame) -> DataFrame:
+    """Stages 4/2.5: unit-number canonicalization (F6/F7, APN:243-250)
+    and tower prefix (P11). Idempotent, so an already-updated frame
+    passes through unchanged."""
     df = nexo.withColumn(COL_NUMERO, intlike_canon(F.col(COL_NUMERO)))
     if "Tipología" in df.columns:
         df = tower_prefix(df, project_col="Proyecto", typology_col="Tipología",
                           unit_col=COL_NUMERO)
+    return df
+
+
+def prepare_nexo(nexo: DataFrame) -> DataFrame:
+    """Canonical unit numbers (``canonical_units``) plus the join keys
+    (F1, APN:325-326)."""
+    df = canonical_units(nexo)
     return (df.withColumn("_key_proy", norm_key(F.col("Proyecto")))
               .withColumn("_key_num", norm_key(F.col(COL_NUMERO))))
 

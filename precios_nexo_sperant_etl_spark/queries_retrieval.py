@@ -15,7 +15,7 @@ from pyspark.sql import functions as F
 
 from .operators.retrieval import rrf_fuse, sparse_overlap_topk
 from .operators.similarity import cosine_topk
-from .queries_scale import _DUCK_TOKENS, _duck_dot
+from .queries_scale_common import _DUCK_TOKENS, _duck_dot
 from .registry import register
 from .sources.tables import load_tables
 

@@ -4,13 +4,10 @@ DuckDB hash-fold snippets that keep Spark/DuckDB doubles and hashes
 bit-identical, and the operator imports every part uses.
 
 queries_scale.py grew to 14k lines by r8; r9 split it into four parts
-AT REGISTRATION BOUNDARIES (VERDICT r8 item 6). The split is by
-contiguous position, not by theme, because the registration order is
-load-bearing (the driver's 50-slot stamp window keys off queries()
-order) and the file grew chronologically with families interleaved —
-a thematic regroup would have reordered the registry. The golden-order
-test (tests/test_registry_types.py::test_registry_order_is_frozen)
-pins the exact key sequence.
+at registration boundaries, by contiguous position rather than by theme,
+because the file grew chronologically with families interleaved.
+Registration order no longer matters: ``registry.queries()`` is ordered
+from the stamp ledger (``tools/stamp_ledger.json``).
 """
 
 from __future__ import annotations

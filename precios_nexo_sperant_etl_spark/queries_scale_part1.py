@@ -1,8 +1,7 @@
 """Scale-family queries, part file: dedup, MinHash/SimHash/embedding similarity, text analysis, event-time windows, temporal joins, multimodal plumbing, curation pipelines (registrations 1-~70 of the scale family).
 
 Split from queries_scale.py at registration boundaries — see
-queries_scale_common.py for why the split is positional. Import order
-(queries_scale.py) IS the registration order; do not reorder.
+queries_scale_common.py for why the split is positional.
 """
 
 from .queries_scale_common import *  # noqa: F401,F403

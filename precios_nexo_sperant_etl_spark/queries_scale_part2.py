@@ -1,8 +1,7 @@
 """Scale-family queries, part file: sampling, packing, token budgets, domain mixtures, DSIR, BPE, diagnostics, sketches-adjacent scale ops (registrations ~70-140).
 
 Split from queries_scale.py at registration boundaries — see
-queries_scale_common.py for why the split is positional. Import order
-(queries_scale.py) IS the registration order; do not reorder.
+queries_scale_common.py for why the split is positional.
 """
 
 from .operators.spread import fanout

@@ -1,8 +1,7 @@
 """Scale-family queries, part file: web ingest (WARC/robots/sitemaps/PSL), WebDataset/TFRecord/Avro/Arrow containers, image-audio codecs, quotas and stats (registrations ~140-210).
 
 Split from queries_scale.py at registration boundaries — see
-queries_scale_common.py for why the split is positional. Import order
-(queries_scale.py) IS the registration order; do not reorder.
+queries_scale_common.py for why the split is positional.
 """
 
 from .queries_scale_common import *  # noqa: F401,F403

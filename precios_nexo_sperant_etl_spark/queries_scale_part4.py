@@ -1,8 +1,7 @@
 """Scale-family queries, part file: media probes (MP4/MP3/H.264/WebM), preference/eval audits, lake ops, near-dup consensus, KN perplexity, FLAC/zstd, winnowing (registrations ~210-end).
 
 Split from queries_scale.py at registration boundaries — see
-queries_scale_common.py for why the split is positional. Import order
-(queries_scale.py) IS the registration order; do not reorder.
+queries_scale_common.py for why the split is positional.
 """
 
 from .operators.spread import fanout
@@ -4968,7 +4967,10 @@ def _rowgroup_pruning_scan(spark: SparkSession, sf: str) -> DataFrame:
     import tempfile
     from functools import reduce
 
-    out = tempfile.mkdtemp(prefix="footer_prune_")
+    # one copy per input dir, overwritten by the next run: the returned
+    # frame reads these files lazily, so they cannot be removed here
+    out = _os.path.join(tempfile.gettempdir(), "footer_prune_"
+                        + _os.path.abspath(sf).strip("/").replace("/", "_"))
     orders = _t(spark, sf, "orders").select("o_orderkey", "o_totalprice")
     (orders
      .withColumn("bucket",

@@ -22,8 +22,8 @@ from contextlib import contextmanager
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .queries_scale import _DUCK_TOKENS, _HIT_SQL, _PRED_SQL, _STOP_SQL
-from .queries_scale_common import _sorted1
+from .queries_scale_common import _DUCK_TOKENS, _sorted1
+from .queries_scale_part1 import _HIT_SQL, _PRED_SQL, _STOP_SQL
 from .registry import register
 
 #: Streaming STATE partition count — sized to state volume, NOT core

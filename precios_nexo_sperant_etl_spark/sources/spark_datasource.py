@@ -804,7 +804,7 @@ class SqliteDataSource(DataSource):
     def schema(self) -> StructType:
         from ..operators.sqlitefile import sqlite_read_table
         with open(_file_list(self.options)[0], "rb") as f:
-            got = sqlite_read_table(f.read(), self._table())
+            got = sqlite_read_table(f.read(), self._table(), rows=False)
         return StructType(
             [StructField("db_file", StringType()),
              StructField("rowid", LongType())]

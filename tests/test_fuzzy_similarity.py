@@ -456,7 +456,7 @@ def test_source_temperature_mix_math(spark):
 def test_filter_funnel_monotone_and_consistent(spark):
     """The funnel can only shrink: n_in >= n_out per stage, each stage's
     n_in equals the previous stage's n_out, fractions in [0,1]."""
-    import precios_nexo_sperant_etl_spark.queries_scale as qs
+    import precios_nexo_sperant_etl_spark.queries_scale_part2 as qs
     rows = qs._filter_funnel(spark, "/root/testdata/sf0.001").collect()
     assert [r["stage"] for r in rows] == [1, 2, 3]
     for r in rows:
@@ -868,7 +868,7 @@ def test_ccnet_lm_buckets_partition_and_order(spark):
     """Buckets partition each language's scored docs and respect the
     score order: every head score >= every middle score >= every tail
     score within a language."""
-    import precios_nexo_sperant_etl_spark.queries_scale as qs
+    import precios_nexo_sperant_etl_spark.queries_scale_part2 as qs
     rows = qs._ccnet_lm_buckets(spark, "/root/testdata/sf0.001").collect()
     by_lang = {}
     for r in rows:
@@ -897,7 +897,6 @@ def test_ewma_hand_computed(spark):
     user with one day returns that day's count; date order must follow
     the calendar even when input rows arrive shuffled."""
     import datetime as dt
-    import precios_nexo_sperant_etl_spark.queries_scale as qs
     from pyspark.sql import functions as F
     rows = []
     # user 1: deliberately inserted out of calendar order
@@ -1023,7 +1022,7 @@ def test_snm_pairs_window_and_threshold(spark, tmp_path):
     # (second word) would miss: 'azure pen' ~ 'azury pen' share no block
     # key ('pen' vs 'pen' would match -- use differing second words).
     import os
-    from precios_nexo_sperant_etl_spark.queries_scale import _snm_part_pairs
+    from precios_nexo_sperant_etl_spark.queries_scale_part2 import _snm_part_pairs
     sf = str(tmp_path / "sf")
     os.makedirs(sf)
     for t in ("region", "nation", "customer", "supplier", "orders",

@@ -337,7 +337,7 @@ def test_shard_assignment_balances_tokens(spark):
     land in exactly one of the 8 shards."""
     import sys
     sys.path.insert(0, "/root/repo")
-    from precios_nexo_sperant_etl_spark.queries_scale import (
+    from precios_nexo_sperant_etl_spark.queries_scale_part1 import (
         _shard_assignment)
 
     out = _shard_assignment(spark, SF_DIR)

@@ -129,3 +129,22 @@ def test_errors(tmp_path):
             _footer_column_stats(path, ["a"])
     with pytest.raises((FileNotFoundError, OSError)):
         _footer_column_stats(str(tmp_path / "missing.parquet"), ["a"])
+
+
+def test_pruning_scan_keeps_one_copy(spark, tmp_path, monkeypatch):
+    """``rowgroup_pruning_scan`` writes its bucketed copy of ``orders``
+    to one directory per input dir and overwrites it, so repeated runs
+    leave one copy behind, not one per run."""
+    import glob
+    import tempfile
+
+    from precios_nexo_sperant_etl_spark.queries_scale_part4 import (
+        _rowgroup_pruning_scan)
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    first = _rowgroup_pruning_scan(spark, SF_DIR).collect()
+    files = sorted(glob.glob(str(tmp_path / "footer_prune_*" / "*" / "*")))
+    second = _rowgroup_pruning_scan(spark, SF_DIR).collect()
+    assert len(glob.glob(str(tmp_path / "footer_prune_*"))) == 1
+    assert len(glob.glob(str(tmp_path / "footer_prune_*" / "*" / "*"))) \
+        == len(files)
+    assert first == second

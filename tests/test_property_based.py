@@ -268,7 +268,7 @@ def _ntile_reference(n, k=5):
 @given(st.integers(1, 300))
 def test_ntile5_arithmetic_matches_sql_semantics(spark, n):
     from pyspark.sql import functions as F
-    from precios_nexo_sperant_etl_spark.queries_scale import _ntile5_expr
+    from precios_nexo_sperant_etl_spark.queries_scale_part1 import _ntile5_expr
     got = [r["b"] for r in
            (spark.range(1, n + 1)
             .select(F.expr(_ntile5_expr("id", n)).alias("b"))

@@ -9,8 +9,8 @@ from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from precios_nexo_sperant_etl_spark.queries_audit import _expectations
-from precios_nexo_sperant_etl_spark.queries_scale import (_SYS_N,
-                                                          _systematic_sample)
+from precios_nexo_sperant_etl_spark.queries_scale_part2 import (
+    _SYS_N, _systematic_sample)
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -123,7 +123,7 @@ def test_price_trend_matches_numpy_ols(spark):
 
 def test_pearson_matches_numpy(spark):
     import numpy as np
-    from precios_nexo_sperant_etl_spark.queries_scale import (
+    from precios_nexo_sperant_etl_spark.queries_scale_part2 import (
         _discount_price_corr)
     got = {r.l_returnflag: r.pearson_r
            for r in _discount_price_corr(spark, SF_DIR).collect()}
@@ -141,7 +141,7 @@ def test_pearson_matches_numpy(spark):
 
 
 def test_event_rules_invariants(spark):
-    from precios_nexo_sperant_etl_spark.queries_scale import _event_rules
+    from precios_nexo_sperant_etl_spark.queries_scale_part2 import _event_rules
     rows = _event_rules(spark, SF_DIR).collect()
     assert rows
     for r in rows:
@@ -155,7 +155,7 @@ def test_event_rules_invariants(spark):
 
 
 def test_winsorized_mean_bounded_by_clip_points(spark):
-    from precios_nexo_sperant_etl_spark.queries_scale import _winsorized_mean
+    from precios_nexo_sperant_etl_spark.queries_scale_part2 import _winsorized_mean
     got = {r.o_orderstatus: r.winsorized_mean
            for r in _winsorized_mean(spark, SF_DIR).collect()}
     pct = spark.read.parquet(f"{SF_DIR}/orders.parquet").groupBy(
@@ -167,7 +167,7 @@ def test_winsorized_mean_bounded_by_clip_points(spark):
 
 
 def test_pareto_frontier_matches_bruteforce(spark):
-    from precios_nexo_sperant_etl_spark.queries_scale import _pareto_frontier
+    from precios_nexo_sperant_etl_spark.queries_scale_part2 import _pareto_frontier
     got = {r.doc_id for r in _pareto_frontier(spark, SF_DIR).collect()}
     from precios_nexo_sperant_etl_spark.operators.text import (
         BPE_ISH_PATTERN, quality_expr)
@@ -189,7 +189,7 @@ def test_pareto_frontier_matches_bruteforce(spark):
 def test_pareto_two_pass_equals_single_window(spark):
     from precios_nexo_sperant_etl_spark.operators.text import (
         BPE_ISH_PATTERN, quality_expr)
-    from precios_nexo_sperant_etl_spark.queries_scale import (
+    from precios_nexo_sperant_etl_spark.queries_scale_part2 import (
         _pareto_frontier, pareto_frontier_two_pass)
     d = spark.read.parquet(f"{SF_DIR}/documents.parquet").select(
         "doc_id", quality_expr(F.col("text")).alias("quality"),
@@ -201,8 +201,8 @@ def test_pareto_two_pass_equals_single_window(spark):
 
 
 def test_survival_km_matches_python_reference(spark):
-    from precios_nexo_sperant_etl_spark.queries_scale import (_KM_HORIZONS,
-                                                              _survival_km)
+    from precios_nexo_sperant_etl_spark.queries_scale_part2 import (
+        _KM_HORIZONS, _survival_km)
     row = _survival_km(spark, SF_DIR).collect()[0]
     ev = spark.read.parquet(f"{SF_DIR}/events.parquet").select(
         "user_id", "ts", "event_type").collect()
@@ -239,7 +239,7 @@ def test_survival_km_matches_python_reference(spark):
 
 def test_cusum_closed_form_matches_recurrence(spark):
     import math
-    from precios_nexo_sperant_etl_spark.queries_scale import (
+    from precios_nexo_sperant_etl_spark.queries_scale_part2 import (
         _event_volume_cusum)
     row = _event_volume_cusum(spark, SF_DIR).collect()[0]
     daily = sorted(
@@ -262,7 +262,7 @@ def test_cusum_closed_form_matches_recurrence(spark):
 
 
 def test_quantile_calibration_uniformizes_each_source(spark):
-    from precios_nexo_sperant_etl_spark.queries_scale import (
+    from precios_nexo_sperant_etl_spark.queries_scale_part2 import (
         _quantile_normalized_quality)
     rows = _quantile_normalized_quality(spark, SF_DIR).collect()
     assert rows
@@ -314,7 +314,7 @@ def test_epoch_schedule_invariants(spark):
     """The epoch scheduler (waterfill over 3x caps at a 1.5x budget)
     exhausts the budget exactly, never exceeds any source's repetition
     cap, and pins epochs to allocated/supply."""
-    from precios_nexo_sperant_etl_spark.queries_scale import _epoch_schedule
+    from precios_nexo_sperant_etl_spark.queries_scale_part2 import _epoch_schedule
     out = _epoch_schedule(spark, "/root/testdata/sf0.001").collect()
     assert out, "no sources"
     total = sum(r.supply_tokens for r in out)
@@ -366,7 +366,7 @@ def test_waterfill_property_random_supplies(spark):
 
 def test_heaps_vocab_growth_monotone_and_exact_at_full(spark):
     from precios_nexo_sperant_etl_spark.operators.text import tokens
-    from precios_nexo_sperant_etl_spark.queries_scale import \
+    from precios_nexo_sperant_etl_spark.queries_scale_part2 import \
         _heaps_vocab_growth
     rows = _heaps_vocab_growth(spark, SF_DIR).collect()
     assert [r.decile for r in rows] == list(range(1, 11))
@@ -384,7 +384,7 @@ def test_heaps_vocab_growth_monotone_and_exact_at_full(spark):
 
 
 def test_pq_codes_pack_and_range(spark):
-    from precios_nexo_sperant_etl_spark.queries_scale import _pq_codes
+    from precios_nexo_sperant_etl_spark.queries_scale_part4 import _pq_codes
     rows = _pq_codes(spark, SF_DIR).collect()
     assert rows, "pq produced no codes"
     for r in rows:

@@ -74,13 +74,16 @@ def test_update_prices_end_to_end(spark):
 
 def test_records_keep_ingest_columns(spark):
     """records.json carries the unit number and typology under the
-    accented names ingest produces, so a dashboard can look a unit up."""
+    accented names ingest produces, so a dashboard can look a unit up.
+    Units are canonical even straight from ingest: "101.0" reads "101"
+    and a tower project's units carry their tower letter, as in the
+    updated workbooks."""
     nexo, _ = _fixture(spark)
     got = records(nexo)
     assert got.columns == ["Proyecto", COL_NUMERO, COL_PRECIO, COL_ESTADO,
                            "Tipología"]
     assert {r[COL_NUMERO] for r in got.collect()} == {
-        "101.0", "102", "A103", "201", "202"}
+        "A101", "B102", "A103", "201", "202"}
 
 
 def test_update_prices_string_dates_drive_dedup(spark):

@@ -627,6 +627,40 @@ def test_sqlite_format_bad_file_fails_loudly(tmp_path, case):
             keep.close()
 
 
+
+def test_sqlite_format_schema_skips_row_fetch(tmp_path, monkeypatch):
+    """Planning learns the column types without reading the table's
+    rows: no statement that schema() runs selects from the table, while
+    read() still fetches every row."""
+    import sqlite3
+
+    from precios_nexo_sperant_etl_spark.sources.spark_datasource import (
+        SqliteDataSource, _FilePartition)
+    path = str(tmp_path / "many.sqlite")
+    con = sqlite3.connect(path)
+    con.execute("CREATE TABLE t(k INTEGER PRIMARY KEY, v TEXT)")
+    con.executemany("INSERT INTO t VALUES (?, ?)",
+                    ((i, f"v{i}") for i in range(20_000)))
+    con.commit()
+    con.close()
+    statements = []
+    connect = sqlite3.connect
+
+    def traced(*args, **kwargs):
+        c = connect(*args, **kwargs)
+        c.set_trace_callback(statements.append)
+        return c
+
+    monkeypatch.setattr(sqlite3, "connect", traced)
+    ds = SqliteDataSource({"path": path, "table": "t"})
+    schema = ds.schema()
+    assert schema.simpleString() == \
+        "struct<db_file:string,rowid:bigint,k:bigint,v:string>"
+    assert statements and not [q for q in statements if '"t"' in q]
+    statements.clear()
+    assert len(list(ds.reader(schema).read(_FilePartition(path)))) == 20_000
+    assert [q for q in statements if 'FROM "t"' in q]
+
 def test_zip_streaming_source(spark, tmp_path):
     """readStream.format('zip'): archives landing between micro-batches
     are picked up exactly once, members decoded by our walker."""

@@ -7,8 +7,7 @@ cd "$(dirname "$0")/.."
 WINDOW=$(python - <<'PY'
 import sys; sys.path.insert(0, '.')
 from precios_nexo_sperant_etl_spark import registry
-registry._load_all()
-print(" ".join(registry._CHECK_FIRST))
+print(" ".join(list(registry.queries())[:50]))
 PY
 )
 python tools/check_parity.py /root/testdata/sf0.01 $WINDOW

@@ -120,7 +120,7 @@ def stress_partition_invariance(sf_dir: str) -> None:
             raise AssertionError(f"Gram moments differ under {name}")
         print(f"  gram moments     {name:<24} identical")
 
-    from precios_nexo_sperant_etl_spark.queries_scale import _boot_means_df
+    from precios_nexo_sperant_etl_spark.queries_scale_part3 import _boot_means_df
     sf = sf_dir
 
     def means_fingerprint():

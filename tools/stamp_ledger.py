@@ -1,19 +1,19 @@
 """Driver-stamp ledger: which queries have correctness evidence, how old
-it is, and whether the implementation changed since — so rotating
-``registry._CHECK_FIRST`` (the driver's 50-slot window) stops being
-hand-maintained archaeology.
+it is, and whether the implementation changed since. ``registry.queries()``
+is ordered from this ledger (``registry._stamp_order``), so the driver's
+50-slot window always holds the queries that need evidence most.
 
 Mechanics
 ---------
 - The driver stamps only the first 50 ``queries()`` entries per round
   (``CORRECTNESS_r{N}.json``); everything else keeps older stamps.
 - A stamp is *current* only if the query's implementation hasn't changed
-  since the stamping round. This tool fingerprints each query as
-  ``sha256(source of the registered fn + oracle SQL)`` and records the
-  fingerprint alongside the stamping round in ``tools/stamp_ledger.json``
-  (``--update``, run once after each driver round). The next run then
-  flags any query whose current fingerprint differs from its recorded
-  one — those belong at the front of the next window.
+  since the stamping round. ``registry._fingerprint`` fingerprints each
+  query as ``sha256(source of the registered fn + oracle SQL)``, and
+  ``--update`` (run once after each driver round) records the
+  fingerprint alongside the stamping round in ``tools/stamp_ledger.json``.
+  A query whose current fingerprint differs from its recorded one is
+  stale, and ``queries()`` puts it right after the never-stamped ones.
 - ``--update`` computes each absorbed fingerprint FROM THE GIT COMMIT
   that introduced that round's ``CORRECTNESS_r{N}.json`` (the driver
   commits the working tree, then runs verify, so that commit is exactly
@@ -26,14 +26,7 @@ Mechanics
 - Fingerprints cover the registered callable's own source (via
   ``inspect.getsource``; for lambdas that is the whole ``register(...)``
   statement) plus the oracle string. A rewrite of a HELPER the fn calls
-  is not detected — front-load consumers manually in that case, as the
-  rotation-policy comments in ``registry.py`` already do.
-
-Bootstrap caveat: the ledger was initialized mid-round-4 (pre-driver),
-so fingerprints for rounds 1-3 reflect round-4 code. Queries rewritten
-in round 4 after their r03 stamp are front-loaded in ``_CHECK_FIRST``
-and will re-stamp on the next driver run, after which ``--update``
-makes their records truthful.
+  is not detected.
 
 Usage::
 
@@ -44,8 +37,6 @@ Usage::
 from __future__ import annotations
 
 import glob
-import hashlib
-import inspect
 import json
 import os
 import re
@@ -56,136 +47,15 @@ sys.path.insert(0, ROOT)
 
 from precios_nexo_sperant_etl_spark import registry  # noqa: E402
 
-LEDGER = os.path.join(ROOT, "tools", "stamp_ledger.json")
+LEDGER = registry._LEDGER
 OUT_MD = os.path.join(ROOT, "STAMPS.md")
-
-
-#: Queries deliberately left outside the CURRENT round's 50-slot window
-#: (added after its slots were committed); the next round's rotation
-#: must front-load them. Maps name -> the CORRECTNESS round in which the
-#: deferral was granted: the excuse is valid only while that round is
-#: still the newest — once a later round lands, a still-unstamped
-#: deferred query is a rotation bug again (exit 1), not an info line.
-DEFERRED_TO_NEXT: dict[str, int] = {
-    # The late-r7 additions that arrived AFTER the r8 window's 50 slots
-    # were committed (the registry's ROUND-9 QUEUE comment names the
-    # same cohort). Granted against r08: each is parity-green at sf0.01
-    # and sf0.1 in its registration session plus the mid-r8 full sweeps;
-    # all head the r9 window. Once CORRECTNESS_r09 lands, any of these
-    # still unstamped flips back to a rotation bug (exit 1).
-    **{name: 8 for name in [
-        "adpcm_wav_roundtrip", "annotator_kappa", "arrow_ipc_roundtrip",
-        "avi_mjpeg_frame_sample", "avro_container_roundtrip",
-        "avro_snappy_roundtrip", "blocklist_screen", "compaction_plan",
-        "confusable_skeleton", "crawl_token_bucket",
-        "dp_randomized_response", "gini_domain_concentration",
-        "h264_sps_probe", "idn_label_roundtrip", "image_dhash_neardup",
-        "longest_repeated_substring", "manifest_prune_audit",
-        "media_curation_pipeline", "mp4_sample_table_probe",
-        "neardup_consensus", "png_palette_roundtrip", "pq_adc_topk",
-        "pq_quantization_codes", "preference_cycle_audit",
-        "quality_stump_probe", "robots_txt_gate",
-        "schema_evolution_audit", "streaming_attribution_join",
-        "streaming_dedup_redelivery", "streaming_session_builtin",
-        "streaming_static_enrich", "tfrecord_roundtrip",
-        "tiff_decode_roundtrip", "tiff_multipage_roundtrip",
-        "unicode_script_mix", "webm_block_probe",
-    ]},
-    # r8-session additions (registered after the committed r8 window;
-    # same parity discipline, head the r9 queue with the cohort above):
-    **{name: 8 for name in [
-        "kneser_ney_perplexity", "levenshtein_decontam",
-        "length_matched_sample", "sitemap_url_extract",
-        "phonetic_blocking", "jl_projection_audit",
-        "bradley_terry_strengths", "holt_winters_forecast",
-        "flac_subframe_decode", "zstd_frame_probe",
-        "elo_ratings", "probe_auc_rank", "winnowing_fingerprints",
-    ]},
-    # r9-session additions (the round's only four new queries — VERDICT
-    # r8 items 4 and 8, plus the WARC-over-zstd composition), registered
-    # BEHIND the window on purpose so the 49-query stamp backlog drains
-    # (item 1); all parity-green at sf0.01 and sf0.1, tuned and vanilla,
-    # in their registration session. They head the r10 queue.
-    "zstd_compressed_roundtrip": 9,
-    "h264_slice_header_walk": 9,
-    "warc_zst_extract": 9,
-    "av1_obu_probe": 9,
-    # r10-session addition (VERDICT r9 item 5: RFC 8878 §5 dictionary
-    # frames), registered BEHIND the committed r10 window per the
-    # registration-pause discipline (item 2); parity-green at sf0.01
-    # tuned AND vanilla plus sf0.1 in its registration session, and
-    # interop-tested against the real zstd binary. Heads the r11 queue.
-    "zstd_dict_roundtrip": 10,
-    "warc_datasource_roundtrip": 10,
-    # r11-session additions (VERDICT r10 item 5: the readStream
-    # warc/tfrecord sources as driver-checkable queries), registered
-    # BEHIND the committed r11 window per the registration-pause
-    # discipline (third round running); parity-green at sf0.01 tuned
-    # AND vanilla plus sf0.1 in their registration session. They head
-    # the r12 queue.
-    "streaming_warc_census": 11,
-    "streaming_tfrecord_census": 11,
-    "bm25_topk": 11,
-    "bitext_mining_pairs": 11,
-    "clustering_agreement": 11,
-    "interval_union_coverage": 11,
-    "isotonic_calibration": 11,
-    "golden_record_merge": 11,
-    "fellegi_sunter_weights": 11,
-    "series_ohlc_downsample": 11,
-    "bz2_multistream_extract": 11,
-    "xz_dump_extract": 11,
-    "wikipedia_dump_pipeline": 11,
-    "mojibake_repair_audit": 11,
-    "ip_range_lookup_join": 11,
-    "deflate_dynamic_roundtrip": 11,
-    "lake_time_travel": 11,
-    "event_pattern_match": 11,
-    "streaming_scd2_upsert": 11,
-    # r11 second-session additions, same discipline and evidence (each
-    # parity-green sf0.01 tuned AND vanilla plus sf0.1 in its
-    # registration session; whole registry swept 0-failed at sf0.01
-    # after the last of them landed). All head the r12 queue per the
-    # registry rotation comment.
-    "lz4_frame_roundtrip": 11,
-    "zip_archive_extract": 11,
-    "parquet_footer_stats": 11,
-    "rowgroup_pruning_scan": 11,
-    "sqlite_table_scan": 11,
-    "string_distance_suite": 11,
-    "geo_nearest_city": 11,
-    "funnel_attribution": 11,
-    "kaplan_meier_conversion": 11,
-    "gini_concentration": 11,
-    "git_packfile_scan": 11,
-    "scratch_hash_audit": 11,
-    "zipf_heaps_fit": 11,
-    "misra_gries_heavy_hitters": 11,
-    "aes_gcm_envelope_roundtrip": 11,
-    "soundex_blocking_census": 11,
-    "streaming_zip_census": 11,
-    "arrow_ipc_scratch_read": 11,
-    "spearman_rank_corr": 11,
-    # r10-session addition #2 (H.264 I_PCM slice-data decode — the
-    # lossless subset, one layer past r9's slice-header walk); same
-    # discipline and evidence: parity-green sf0.01 tuned AND vanilla
-    # plus sf0.1 in its registration session. Heads the r11 queue.
-    "h264_ipcm_roundtrip": 10,
-}
-
-
-def _fingerprint(q: registry.Query) -> str:
-    try:
-        src = inspect.getsource(q.fn)
-    except (OSError, TypeError):  # builtins/partial — fall back to repr
-        src = repr(q.fn)
-    return hashlib.sha256(
-        (src + "\x00" + (q.oracle or "")).encode()).hexdigest()[:16]
+WINDOW = 50  # queries() entries the driver stamps per round
 
 
 #: Subprocess body run inside a historical git worktree: prints the
-#: {query: fingerprint} map for the registry AS OF that commit. Must
-#: mirror ``_fingerprint`` exactly (same hash recipe, same truncation).
+#: {query: fingerprint} map for the registry AS OF that commit. It
+#: carries its own copy of ``registry._fingerprint``'s recipe (same hash,
+#: same truncation) because older commits lack that helper.
 _FP_SCRIPT = r"""
 import hashlib, inspect, json, os, sys
 sys.path.insert(0, os.getcwd())
@@ -257,10 +127,7 @@ def _correctness_rounds() -> list[tuple[int, dict]]:
 def main(update: bool = False) -> int:
     registry._load_all()
     rounds = _correctness_rounds()
-    ledger = {}
-    if os.path.exists(LEDGER):
-        with open(LEDGER) as f:
-            ledger = json.load(f)
+    ledger = registry._read_ledger(LEDGER)
 
     # Last green round + check kind per query, from the driver's files.
     last: dict[str, tuple[int, str]] = {}
@@ -294,7 +161,7 @@ def main(update: bool = False) -> int:
             fps = at_commit_cache[commit]
             for name in fresh:
                 fp = (fps or {}).get(name) \
-                    or _fingerprint(registry._REGISTRY[name])
+                    or registry._fingerprint(registry._REGISTRY[name])
                 ledger[name] = {"round": rnd, "fp": fp}
             if fps is None:
                 print(f"WARNING: r{rnd:02d} fingerprints taken from the "
@@ -320,19 +187,23 @@ def main(update: bool = False) -> int:
                   "`python tools/stamp_ledger.py --update` BEFORE editing "
                   "query code this round, or fresh stamps will read stale.")
 
-    window = {n: i + 1 for i, n in enumerate(registry._CHECK_FIRST)}
     lines = [
         "# Driver-stamp ledger",
         "",
         "Generated by `python tools/stamp_ledger.py` — do not edit. "
-        "`changed` = implementation fingerprint differs from the one "
-        "recorded at stamp time (stale evidence; front-load it).",
+        "Rows are in `registry.queries()` order, computed from "
+        "`tools/stamp_ledger.json`: never stamped, then changed since "
+        "stamp, then current, oldest stamp first. The driver stamps the "
+        "first 50 (`window slot`). `changed` = implementation "
+        "fingerprint differs from the one recorded at stamp time "
+        "(stale evidence).",
         "",
         "| query | last stamp | check | changed since stamp | window slot |",
         "|---|---|---|---|---|",
     ]
+    order = registry._ordered()
     stale = []
-    for name in registry._ordered():
+    for i, name in enumerate(order):
         q = registry._REGISTRY[name]
         rnd, kind = last.get(name, (None, "—"))
         rec = ledger.get(name)
@@ -340,15 +211,15 @@ def main(update: bool = False) -> int:
             changed = "—(never stamped)"
         elif rec is None:
             changed = "unknown"
-        elif rec["fp"] != _fingerprint(q):
+        elif rec["fp"] != registry._fingerprint(q):
             changed = "YES"
             stale.append(name)
         else:
             changed = "no"
-        slot = window.get(name, "")
+        slot = i + 1 if i < WINDOW else ""
         lines.append(f"| {name} | {'r%02d' % rnd if rnd else '—'} | {kind} "
                      f"| {changed} | {slot} |")
-    never = [n for n in registry._ordered() if n not in last]
+    never = [n for n in order if n not in last]
     lines += [
         "",
         f"Totals: {len(registry._REGISTRY)} queries, "
@@ -361,29 +232,11 @@ def main(update: bool = False) -> int:
         lines.append(f"Never stamped: {', '.join(sorted(never))}.")
     if stale:
         lines.append(f"Stale (changed since stamp): {', '.join(stale)}.")
-    out_of_window = [n for n in (never + stale) if n not in window]
-    newest_rnd = rounds[-1][0] if rounds else 0
-    deferred = sorted(n for n in out_of_window
-                      if DEFERRED_TO_NEXT.get(n, -1) >= newest_rnd)
-    bug = sorted(n for n in out_of_window if n not in deferred)
-    status = 0
-    if deferred:
-        lines.append(
-            f"Deferred to the next round's window (deliberate — added "
-            f"after this round's 50 slots were committed to "
-            f"fixed-red/changed/never-stamped essentials; all are "
-            f"locally type-strict parity green, tuned AND vanilla, at "
-            f"sf0.01 and sf0.1): {', '.join(deferred)}.")
-    if bug:
-        lines.append(
-            f"**ROTATION BUG: {', '.join(bug)} need "
-            "evidence but are outside the 50-slot window.**")
-        status = 1
     with open(OUT_MD, "w") as f:
         f.write("\n".join(lines) + "\n")
     print("\n".join(lines[-6:]))
     print(f"\nwrote {OUT_MD}")
-    return status
+    return 0
 
 
 if __name__ == "__main__":
