@@ -183,7 +183,7 @@ HEADLINE = [
     "pq_adc_topk",              # LUT-literal ADC scan + per-query topk
     "tfrecord_roundtrip",       # proto wire codec + CRC32C framing
     "avro_container_roundtrip", # zigzag OCF codec, schema-driven
-    "avro_snappy_roundtrip",    # snappy blocks + CRC32 verification
+    "avro_snappy_roundtrip",    # libsnappy blocks + CRC32 verification
     "longest_repeated_substring",  # suffix array + Kasai per doc
     "mp4_sample_table_probe",   # stbl expansion + offset readback
     "manifest_prune_audit",     # zone-map skip/scan accounting
@@ -248,7 +248,7 @@ HEADLINE = [
     "lake_time_travel",         # commit-log snapshot replay
     "event_pattern_match",      # regex funnel over event strings
     "streaming_scd2_upsert",    # foreachBatch merge into state
-    "lz4_frame_roundtrip",      # from-scratch LZ4 frame + xxHash32
+    "lz4_frame_roundtrip",      # liblz4 frames + our xxHash32 checksums
     "zip_archive_extract",      # ZIP container, stdlib both ways
     "parquet_footer_stats",     # pyarrow footer stats vs data rescan
     "rowgroup_pruning_scan",    # footer-stat pruning end-to-end

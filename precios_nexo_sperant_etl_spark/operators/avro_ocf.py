@@ -13,6 +13,9 @@ Encoding facts exercised here (and pinned by the oracle/tests):
 - the container: magic ``Obj\\x01``, a metadata map (avro.schema JSON +
   avro.codec), a 16-byte sync marker, then data blocks of
   (record_count, byte_size, records, sync) — sync verified per block.
+- avro.codec=snappy blocks go through the libsnappy that pyarrow
+  bundles, each followed by a big-endian CRC-32 of the uncompressed
+  block that the reader verifies.
 
 The decoder is SCHEMA-DRIVEN: it parses the embedded JSON schema and
 walks a record of {long, double, string, bytes, array<long>} fields in
@@ -23,6 +26,8 @@ from __future__ import annotations
 
 import json
 import struct
+
+import pyarrow as pa
 
 
 def zigzag(n: int) -> bytes:
@@ -108,7 +113,7 @@ def write_ocf(schema: dict, records: list[dict], sync: bytes,
     """Serialize records to a genuine Avro OCF: magic, metadata map
     (embedded schema JSON + codec), sync marker, multi-record data
     blocks each closed by the sync marker. ``codec="snappy"`` runs
-    each block through the from-scratch Snappy encoder below and
+    each block through libsnappy (``snappy_compress`` below) and
     appends the spec's 4-byte big-endian CRC32 of the UNCOMPRESSED
     block."""
     if len(sync) != 16:
@@ -221,115 +226,34 @@ def read_ocf(payload: bytes) -> dict:
 
 # ---------------------------------------------------------------------------
 # Snappy block format (github.com/google/snappy format_description.txt)
-# from scratch — the compression the lake stack (parquet/orc/avro)
-# leans on. Decoder handles all four tag kinds (literal with extended
-# lengths, 1/2/4-byte-offset copies, overlapping copies); the encoder
-# is a greedy 4-byte hash matcher, enough to produce genuine
-# copy-bearing streams for the decoder and the Avro snappy codec below.
+# through the libsnappy that pyarrow bundles — the compression the lake
+# stack (parquet/orc/avro) leans on.
 # ---------------------------------------------------------------------------
 
 def snappy_compress(data: bytes) -> bytes:
-    """Greedy Snappy encoder: varint uncompressed length, then
-    literal / 2-byte-offset copy elements found by a 4-byte hash
-    table (matches 4..64 bytes, window <= 65535 — the common emit
-    shapes; the decoder handles every shape regardless)."""
-    out = bytearray()
-    n = len(data)
-    v = n
-    while True:
-        b = v & 0x7F
-        v >>= 7
-        out.append(b | 0x80 if v else b)
-        if not v:
-            break
-
-    def emit_literal(lo: int, hi: int) -> None:
-        ln = hi - lo
-        while ln > 0:
-            chunk = min(ln, 0x10000)
-            if chunk <= 60:
-                out.append((chunk - 1) << 2)
-            elif chunk <= 0x100:
-                out.append(60 << 2)
-                out.append(chunk - 1)
-            else:
-                out.append(61 << 2)
-                out.extend((chunk - 1).to_bytes(2, "little"))
-            out.extend(data[lo:lo + chunk])
-            lo += chunk
-            ln -= chunk
-
-    table: dict[bytes, int] = {}
-    i = lit = 0
-    while i + 4 <= n:
-        key = data[i:i + 4]
-        j = table.get(key, -1)
-        table[key] = i
-        if j >= 0 and i - j <= 0xFFFF and data[j:j + 4] == key:
-            emit_literal(lit, i)
-            m = 4
-            while i + m < n and data[j + m] == data[i + m] and m < 64:
-                m += 1
-            # 2-byte-offset copy: length 1..64 in the tag's high 6 bits
-            out.append(((m - 1) << 2) | 2)
-            out.extend((i - j).to_bytes(2, "little"))
-            i += m
-            lit = i
-        else:
-            i += 1
-    emit_literal(lit, n)
-    return bytes(out)
+    return pa.compress(data, codec="snappy", asbytes=True)
 
 
 def snappy_decompress(payload: bytes) -> bytes:
-    """Full Snappy block decoder: preamble varint, literal tags with
-    1/2/3/4-byte extended lengths, copy tags with 1/2/4-byte offsets,
-    overlapping copies byte-by-byte, exact output-length check."""
+    """Decode one Snappy block. The preamble varint (at most 5 bytes)
+    is read here so a corrupt declared length is refused before any
+    allocation: a 3-byte copy element emits at most 64 bytes, so the
+    body can expand to no more than 64/3 of its size."""
     pos = shift = want = 0
     while True:
-        if pos >= len(payload):
-            raise ValueError("snappy preamble overruns")
+        if pos >= len(payload) or pos == 5:
+            raise ValueError("bad snappy length preamble")
         b = payload[pos]
         pos += 1
         want |= (b & 0x7F) << shift
         if not b & 0x80:
             break
         shift += 7
-        if shift > 35:
-            raise ValueError("snappy length varint too long")
-    out = bytearray()
-    while pos < len(payload):
-        tag = payload[pos]
-        pos += 1
-        kind = tag & 3
-        if kind == 0:                                # literal
-            ln = tag >> 2
-            if ln >= 60:
-                nb = ln - 59
-                ln = int.from_bytes(payload[pos:pos + nb], "little")
-                pos += nb
-            ln += 1
-            if pos + ln > len(payload):
-                raise ValueError("literal overruns input")
-            out += payload[pos:pos + ln]
-            pos += ln
-            continue
-        if kind == 1:                                # copy, 1-byte offset
-            ln = ((tag >> 2) & 0x7) + 4
-            off = ((tag >> 5) << 8) | payload[pos]
-            pos += 1
-        elif kind == 2:                              # copy, 2-byte offset
-            ln = (tag >> 2) + 1
-            off = int.from_bytes(payload[pos:pos + 2], "little")
-            pos += 2
-        else:                                        # copy, 4-byte offset
-            ln = (tag >> 2) + 1
-            off = int.from_bytes(payload[pos:pos + 4], "little")
-            pos += 4
-        if off == 0 or off > len(out):
-            raise ValueError("copy offset outside window")
-        for _ in range(ln):                          # may self-overlap
-            out.append(out[-off])
-    if len(out) != want:
-        raise ValueError("snappy output length mismatch")
-    return bytes(out)
+    if want >> 32 or want > (len(payload) - pos) * 64 // 3:
+        raise ValueError(f"snappy preamble declares {want} bytes, more "
+                         f"than a {len(payload) - pos}-byte body holds")
+    try:
+        return pa.decompress(payload, decompressed_size=want,
+                             codec="snappy", asbytes=True)
+    except (OSError, pa.ArrowException) as ex:
+        raise ValueError(f"corrupt snappy block: {ex}") from ex

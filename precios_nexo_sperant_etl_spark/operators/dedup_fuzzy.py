@@ -44,16 +44,6 @@ PROD_N_PERMS = 128
 PROD_N_BANDS = 16
 
 
-def _final_sort(df: DataFrame, *cols: str) -> DataFrame:
-    """Total-order a pair/audit-sized result without ``orderBy``'s
-    range-exchange SAMPLING pass, which re-executes the final stage of
-    the child plan (here: the verify joins) once more per action — the
-    same fix as ``queries_scale_common._sorted1`` (see
-    OPTIMIZATION_r11.md). Pair relations are collision-sized, so the
-    single output partition is the documented audit-scale gear."""
-    return final_sort(df, *cols)
-
-
 def minhash_params(n_perms: int) -> list[tuple[int, int]]:
     """Deterministic (a, b) permutation parameters for any signature
     width. The first 8 are the toy constants (so oracle SQL generated
@@ -313,9 +303,9 @@ def minhash_dedup_pairs(df: DataFrame, text_col: str = "text",
                               n_perms=n_perms)
     pairs = minhash_band_pairs(sigs, id_col, n_bands=n_bands,
                                max_bucket_size=max_bucket_size)
-    return _final_sort(jaccard_pairs(hashed, pairs, id_col)
-                       .filter(F.col("jaccard") >= threshold),
-                       "doc_a", "doc_b")
+    return final_sort(jaccard_pairs(hashed, pairs, id_col)
+                      .filter(F.col("jaccard") >= threshold),
+                      "doc_a", "doc_b")
 
 
 def minhash_join(left: DataFrame, right: DataFrame, text_col: str = "text",
@@ -361,9 +351,9 @@ def minhash_join(left: DataFrame, right: DataFrame, text_col: str = "text",
     cand = (bl.withColumnRenamed(id_col, "doc_a")
               .join(br.withColumnRenamed(id_col, "doc_b"), ["band", "bh"])
               .select("doc_a", "doc_b").distinct())
-    return _final_sort(jaccard_pairs(hl, cand, id_col, hashed_b=hr)
-                       .filter(F.col("jaccard") >= threshold),
-                       "doc_a", "doc_b")
+    return final_sort(jaccard_pairs(hl, cand, id_col, hashed_b=hr)
+                      .filter(F.col("jaccard") >= threshold),
+                      "doc_a", "doc_b")
 
 
 def ngram_jaccard_pairs(df: DataFrame, text_col: str = "text",
@@ -399,9 +389,9 @@ def ngram_jaccard_pairs(df: DataFrame, text_col: str = "text",
     b = cand_src.select(F.col(id_col).alias("doc_b"), "h")
     pairs = (a.join(b, "h").filter(F.col("doc_a") < F.col("doc_b"))
               .select("doc_a", "doc_b").distinct())
-    return _final_sort(jaccard_pairs(hashed, pairs, id_col)
-                       .filter(F.col("jaccard") >= threshold),
-                       "doc_a", "doc_b")
+    return final_sort(jaccard_pairs(hashed, pairs, id_col)
+                      .filter(F.col("jaccard") >= threshold),
+                      "doc_a", "doc_b")
 
 
 def contamination_screen(df: DataFrame, benchmark: DataFrame,
@@ -431,7 +421,7 @@ def contamination_screen(df: DataFrame, benchmark: DataFrame,
                          F.coalesce(F.col("_c"), F.lit(0)).alias("n_overlap"),
                          (F.coalesce(F.col("_c"), F.lit(0))
                           / F.col("n_shingles")).alias("contamination"))
-                 .transform(_final_sort, id_col))
+                 .transform(final_sort, id_col))
 
 
 def simhash(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
@@ -587,7 +577,7 @@ def containment_pairs(df: DataFrame, text_col: str = "text",
                     (F.col("common") / F.col("n_a")).alias("containment_a"),
                     (F.col("common") / F.col("n_b")).alias("containment_b"))
             .filter(F.col("containment") >= threshold)
-            .transform(_final_sort, "doc_a", "doc_b"))
+            .transform(final_sort, "doc_a", "doc_b"))
 
 
 def duplicate_ngram_stats(df: DataFrame, text_col: str = "text",
@@ -627,4 +617,4 @@ def duplicate_ngram_stats(df: DataFrame, text_col: str = "text",
                   .select(F.col(id_col), "n_ngrams", "n_dup_ngrams",
                           (F.col("n_dup_ngrams") / F.col("n_ngrams"))
                            .alias("dup_ngram_rate"))
-                  .transform(_final_sort, id_col))
+                  .transform(final_sort, id_col))

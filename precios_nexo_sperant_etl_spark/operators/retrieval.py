@@ -26,13 +26,6 @@ from .spread import fanout_by
 from .text import md5_hash, tokens
 
 
-def _final_sort(df: DataFrame, *cols) -> DataFrame:
-    """Total-order an audit-sized result without ``orderBy``'s
-    range-exchange SAMPLING pass (re-executes the final child stage once
-    more per action — see OPTIMIZATION_r11.md /
-    ``queries_scale_common._sorted1``)."""
-    return final_sort(df, *cols)
-
 def term_sets(docs: DataFrame, ngram: int = 1, text_col: str = "text",
               id_col: str = "doc_id") -> DataFrame:
     """Distinct ``(did, term)`` pairs per document: whitespace unigrams
@@ -135,7 +128,7 @@ def sparse_overlap_topk(docs: DataFrame, query_ids: list[int], k: int = 20,
                .orderBy(F.desc("overlap"), F.asc("neighbor_id")))
     return (scored.withColumn("rank", F.row_number().over(w))
                   .filter(F.col("rank") <= k)
-                  .transform(_final_sort, "query_id", "rank"))
+                  .transform(final_sort, "query_id", "rank"))
 
 
 def rrf_fuse(a: DataFrame, b: DataFrame, k0: int = 60,
@@ -162,7 +155,7 @@ def rrf_fuse(a: DataFrame, b: DataFrame, k0: int = 60,
                .orderBy(F.desc("rrf_score"), F.asc("neighbor_id")))
     return (fused.withColumn("fused_rank", F.row_number().over(w))
                  .filter(F.col("fused_rank") <= topk)
-                 .transform(_final_sort, "query_id", "fused_rank"))
+                 .transform(final_sort, "query_id", "fused_rank"))
 
 
 def negative_samples(docs: DataFrame, n_buckets: int = 64, k: int = 2,
@@ -238,7 +231,7 @@ def negative_samples(docs: DataFrame, n_buckets: int = 64, k: int = 2,
                            .otherwise(F.col("m1_strat")).alias("neg_strat"),
                           F.coalesce(fallback, F.lit(False))
                            .alias("used_fallback"))
-                  .transform(_final_sort, "anchor_id", "j"))
+                  .transform(final_sort, "anchor_id", "j"))
 
 
 def term_freqs(docs: DataFrame, ngram: int = 2, text_col: str = "text",
@@ -383,4 +376,4 @@ def bm25_topk(docs: DataFrame, query_ids: list[int], k: int = 10,
                .orderBy(F.desc("bm25_micro"), F.asc("neighbor_id")))
     return (folded.withColumn("rank", F.row_number().over(w))
                   .filter(F.col("rank") <= k)
-                  .transform(_final_sort, "query_id", "rank"))
+                  .transform(final_sort, "query_id", "rank"))

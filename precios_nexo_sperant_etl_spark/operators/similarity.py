@@ -40,14 +40,6 @@ def _arr_lit(vals) -> Column:
     return F.expr("array(" + ",".join(f"{float(v)!r}D" for v in vals) + ")")
 
 
-def _final_sort(df: DataFrame, *cols) -> DataFrame:
-    """Total-order an audit-sized result without ``orderBy``'s
-    range-exchange SAMPLING pass (it re-executes the final child stage
-    once more per action — see OPTIMIZATION_r11.md and
-    ``queries_scale_common._sorted1``)."""
-    return final_sort(df, *cols)
-
-
 def cosine_topk(emb: DataFrame, query_ids: list[int], k: int = 3,
                 id_col: str = "vec_id", vec_col: str = "embedding",
                 use_arrow: bool = False) -> DataFrame:
@@ -92,7 +84,7 @@ def cosine_topk(emb: DataFrame, query_ids: list[int], k: int = 3,
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
     return (scored.withColumn("rank", F.row_number().over(w))
                   .filter(F.col("rank") <= k)
-                  .transform(_final_sort, "query_id", "rank"))
+                  .transform(final_sort, "query_id", "rank"))
 
 
 def lsh_bucket_expr(vec_col: str, n_planes: int = 8) -> str:
@@ -177,7 +169,7 @@ def ivf_cosine_topk(emb: DataFrame, query_ids: list[int], k: int = 3,
     w2 = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
     return (scored.withColumn("rank", F.row_number().over(w2))
                   .filter(F.col("rank") <= k)
-                  .transform(_final_sort, "query_id", "rank"))
+                  .transform(final_sort, "query_id", "rank"))
 
 
 def assign_kmeans_cells(emb: DataFrame, n_cells: int = 10, n_iter: int = 3,
@@ -455,7 +447,7 @@ def embedding_neardup_lsh(emb: DataFrame, threshold: float = 0.9,
                         (ddot(F.col("va"), F.col("vb"))
                          / (F.col("na") * F.col("nb"))).alias("cosine"))
              .filter(F.col("cosine") >= threshold)
-             .transform(_final_sort, "vec_a", "vec_b"))
+             .transform(final_sort, "vec_a", "vec_b"))
 
 
 def semdedup_survivors_diverse(emb: DataFrame, threshold: float = 0.35,
@@ -529,7 +521,7 @@ def semdedup_survivors_diverse(emb: DataFrame, threshold: float = 0.35,
                   .select("kb").distinct())
     return (ranked.join(drops, ranked[id_col] == drops["kb"], "left_anti")
                   .select(F.col(id_col), F.col("cell"))
-                  .transform(_final_sort, id_col))
+                  .transform(final_sort, id_col))
 
 
 def semdedup_drops_arrow(cells: DataFrame, threshold: float,
@@ -640,7 +632,7 @@ def semdedup_survivors(emb: DataFrame, threshold: float = 0.35,
     return (cells.join(drops, cells[id_col] == drops["drop_id"],
                        "left_anti")
                  .select(F.col(id_col), F.col("cell"))
-                 .transform(_final_sort, id_col))
+                 .transform(final_sort, id_col))
 
 
 def lsh_cosine_topk(emb: DataFrame, query_ids: list[int], k: int = 3,
@@ -665,7 +657,7 @@ def lsh_cosine_topk(emb: DataFrame, query_ids: list[int], k: int = 3,
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
     return (scored.withColumn("rank", F.row_number().over(w))
                   .filter(F.col("rank") <= k)
-                  .transform(_final_sort, "query_id", "rank"))
+                  .transform(final_sort, "query_id", "rank"))
 
 
 #: Cap on rows per group for ``label_centroids(exact=True)`` — each
@@ -873,4 +865,4 @@ def bitext_margin_pairs(docs: DataFrame, emb: DataFrame,
     return (scored
             .where(F.col("margin_micro")
                    >= int(round(margin_threshold * 1000000)))
-            .transform(_final_sort, "id_a", "id_b"))
+            .transform(final_sort, "id_a", "id_b"))

@@ -30,13 +30,6 @@ LANG_PROFILES: dict[str, tuple[str, ...]] = {
 STOPWORDS = tuple(w for ws in LANG_PROFILES.values() for w in ws)
 
 
-def _final_sort(df: DataFrame, *cols) -> DataFrame:
-    """Total-order an audit-sized result without ``orderBy``'s
-    range-exchange SAMPLING pass (re-executes the final child stage once
-    more per action — see OPTIMIZATION_r11.md /
-    ``queries_scale_common._sorted1``)."""
-    return final_sort(df, *cols)
-
 def tokens(text: Column) -> Column:
     """Whitespace tokenization of trimmed text."""
     return F.split(F.trim(text), r"\s+")
@@ -342,7 +335,7 @@ def paragraph_dedup(df: DataFrame, text_col: str = "text",
                          lambda x: x["para"]),
                      sep).alias("text_dedup"))
             .filter(F.col("n_kept") > 0)
-            .transform(_final_sort, id_col))
+            .transform(final_sort, id_col))
 
 
 def repetition_stats(df: DataFrame, text_col: str = "text",
@@ -393,7 +386,7 @@ def repetition_stats(df: DataFrame, text_col: str = "text",
                .withColumn(f"top{n}gram_char_frac",
                            F.coalesce(frac, F.lit(0.0)))
                .drop("m"))
-    return _final_sort(out.drop("_toks", "n_chars"), id_col)
+    return final_sort(out.drop("_toks", "n_chars"), id_col)
 
 
 def exact_substring_coverage(df: DataFrame, window: int = 8,
@@ -488,7 +481,7 @@ def exact_substring_coverage(df: DataFrame, window: int = 8,
                                   .cast("double") /
                                 F.col("n_tokens").cast("double"))
                           .otherwise(F.lit(0.0)).alias("dup_frac"))
-                 .transform(_final_sort, id_col))
+                 .transform(final_sort, id_col))
 
 
 def bigram_lm_scores(df: DataFrame, text_col: str = "text",
@@ -551,7 +544,7 @@ def bigram_lm_scores(df: DataFrame, text_col: str = "text",
     return (agg.select(F.col(id_col),
                        F.size("ps").cast("long").alias("n_bigrams"),
                        (fold / F.size("ps")).alias("mean_bigram_p"))
-            .transform(_final_sort, id_col))
+            .transform(final_sort, id_col))
 
 
 def chunk_documents(docs: DataFrame, chunk_size: int = 32, step: int = 24,
@@ -652,7 +645,7 @@ def dsir_importance_weights(docs: DataFrame, target: Column, k: int = 32,
     fold = F.aggregate(vals, F.lit(1.0), lambda a, x: a * x)
     return (agg.select(F.col(id_col), F.size("ps").alias("n_scored"),
                        fold.alias("dsir_weight"))
-               .transform(_final_sort, id_col))
+               .transform(final_sort, id_col))
 
 
 #: Gopher-style rule thresholds (Rae et al. 2021, arXiv:2112.11446,
@@ -738,7 +731,7 @@ def gopher_quality_flags(df: DataFrame, text_col: str = "text",
         ok_alpha.alias("ok_alpha_words"),
         ok_stop.alias("ok_stopwords"),
         (ok_wc & ok_wl & ok_sym & ok_alpha & ok_stop)
-            .alias("passes_gopher")).transform(_final_sort, id_col)
+            .alias("passes_gopher")).transform(final_sort, id_col)
 
 
 def temperature_mix(docs: DataFrame, group_col: str = "source") -> DataFrame:
@@ -1008,7 +1001,7 @@ def kneser_ney_scores(df: DataFrame, text_col: str = "text",
                        F.size("ps").cast("long").alias("n_bigrams"),
                        (fold / F.size("ps")).alias("mean_kn_p"),
                        "min_kn_p")
-            .transform(_final_sort, id_col))
+            .transform(final_sort, id_col))
 
 
 def soundex_col(name: Column) -> Column:

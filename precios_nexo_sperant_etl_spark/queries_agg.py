@@ -16,16 +16,12 @@ from .operators.serve import distinct_sorted, equality_filters, global_search, s
 from .operators.spread import fanout
 from .registry import register
 from .queries_scale_common import _sorted1
-from .sources.tables import load_tables
+from .sources.tables import table as _t
 
 # DECIMAL type used by functions.exact — the oracle must accumulate in the
 # exact same type for bit-identical double results. Scale 2 matches the
 # data's true decimal scale (see functions/exact.py docstring).
 _DEC = "DECIMAL(18,2)"
-
-
-def _t(spark: SparkSession, sf: str, name: str) -> DataFrame:
-    return load_tables(spark, sf)[name]
 
 
 # ---------------------------------------------------------------------------

@@ -16,13 +16,9 @@ from pyspark.sql import functions as F
 
 from .operators.text import tokens
 from .registry import register
-from .sources.tables import load_tables
+from .sources.tables import table as _t
 
 _DUCK_TOKENS = "string_split_regex(trim(text), '\\s+')"
-
-
-def _t(spark: SparkSession, sf: str, name: str) -> DataFrame:
-    return load_tables(spark, sf)[name]
 
 
 # ---------------------------------------------------------------------------

@@ -12,12 +12,9 @@ from pyspark.sql.functions import broadcast
 from .registry import register
 from .queries_scale_common import _sorted1
 from .sources.tables import load_tables
+from .sources.tables import table as _t
 
 _DEC = "DECIMAL(18,2)"
-
-
-def _t(spark: SparkSession, sf: str, name: str) -> DataFrame:
-    return load_tables(spark, sf)[name]
 
 
 # ---------------------------------------------------------------------------

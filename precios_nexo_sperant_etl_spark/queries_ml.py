@@ -36,11 +36,7 @@ from pyspark.sql.types import (DoubleType, LongType, StringType,
 from .operators.text import LANG_PROFILES, tokens, word_set_hits
 from .registry import register
 from .queries_scale_common import _sorted1
-from .sources.tables import load_tables
-
-
-def _t(spark: SparkSession, sf: str, name: str) -> DataFrame:
-    return load_tables(spark, sf)[name]
+from .sources.tables import table as _t
 
 
 #: Feature cap keeps every Gram entry inside BIGINT headroom at any

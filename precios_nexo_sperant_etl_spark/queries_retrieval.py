@@ -17,11 +17,7 @@ from .operators.retrieval import rrf_fuse, sparse_overlap_topk
 from .operators.similarity import cosine_topk
 from .queries_scale_common import _DUCK_TOKENS, _duck_dot
 from .registry import register
-from .sources.tables import load_tables
-
-
-def _t(spark: SparkSession, sf: str, name: str) -> DataFrame:
-    return load_tables(spark, sf)[name]
+from .sources.tables import table as _t
 
 
 # ---------------------------------------------------------------------------

@@ -26,6 +26,7 @@ __all__ = [
     "_duck_char_hash",
     "_duck_dot",
     "_duck_md5_hash",
+    "_scratch_dir",
     "_sorted1",
     "_spread",
     "_t",
@@ -40,7 +41,6 @@ __all__ = [
     "fingerprint",
     "ivf_cosine_topk",
     "lang_id",
-    "load_tables",
     "minhash_dedup_pairs",
     "minhash_signatures",
     "ngram_jaccard_pairs",
@@ -59,6 +59,10 @@ __all__ = [
     "tumbling_agg",
 ]
 
+import os
+import shutil
+import tempfile
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -76,11 +80,7 @@ from .operators.text import (HASH_P, LANG_PROFILES, STOPWORDS, fingerprint,
 from .operators.windows import sessionize, sliding_agg, tumbling_agg
 from .oracle_util import duck_bround
 from .registry import register
-from .sources.tables import load_tables
-
-
-def _t(spark: SparkSession, sf: str, name: str) -> DataFrame:
-    return load_tables(spark, sf)[name]
+from .sources.tables import table as _t
 
 
 # ---- portable SQL snippets (DuckDB side of the shared hash folds) ---------
@@ -141,6 +141,20 @@ def _sorted1(df, *cols):
     """
     from .operators.sortutil import final_sort
     return final_sort(df, *cols)
+
+
+def _scratch_dir(prefix: str, sf: str) -> str:
+    """An empty ``<tempdir>/<prefix><abspath(sf), "/" → "_">`` directory:
+    one per query and input, wiped and reused by the next run instead of
+    a new ``mkdtemp`` per run. The returned frame reads these files
+    lazily, so the query cannot remove them, and stream checkpoints
+    must not carry over from an earlier run. Two concurrent runs of one
+    query on one input would share it."""
+    path = os.path.join(tempfile.gettempdir(), prefix
+                        + os.path.abspath(sf).strip("/").replace("/", "_"))
+    shutil.rmtree(path, ignore_errors=True)
+    os.makedirs(path)
+    return path
 
 
 def _spread(df, key, n_groups):

@@ -946,8 +946,8 @@ ORDER BY d.doc_id
 # ---------------------------------------------------------------------------
 # Snappy-coded Avro OCF — same container walk as
 # avro_container_roundtrip but with avro.codec=snappy: every block runs
-# through the from-scratch Snappy decoder (operators/avro_ocf.py,
-# hypothesis-tested vs the public format description) and the spec's
+# through libsnappy (pyarrow's bundled codec, via operators/avro_ocf.py,
+# which bounds the declared length before decoding) and the spec's
 # big-endian CRC32-of-uncompressed check before records decode. A
 # compression_saved column (null-codec bytes minus snappy bytes,
 # summed per shard) proves real copy-bearing streams were produced —
@@ -1037,7 +1037,7 @@ JOIN t ON t.doc_id = d.doc_id
 GROUP BY d.doc_id, d.shard, s.n_blocks, d.n
 ORDER BY d.doc_id
 """,
-    doc="Snappy-coded Avro OCF: from-scratch Snappy block decode + "
+    doc="Snappy-coded Avro OCF: libsnappy block decode + "
         "the spec's CRC32-of-uncompressed verification per block, "
         "then the schema-driven record walk; decoded values replayed "
         "arithmetically, with a pinned boolean that compression "
@@ -4684,17 +4684,17 @@ FROM s ORDER BY user_id
 
 
 # ---------------------------------------------------------------------------
-# lz4_frame_roundtrip (round 11): the from-scratch LZ4 block + frame
-# codec (operators/lz4codec.py — LZ4 frame spec v1.6.3 with xxHash32
-# header/block/content checksums, also implemented from scratch) on
-# the driver-checked path: per document OUR frame encoder (block
-# checksums on) then OUR decoder, every checksum verified on the way
-# back. The independent-implementation pins (lz4-java fast/HC/frame,
-# net.jpountz xxhash 32/64, both directions) live in tests/test_lz4.py
-# — the query proves the executor-side plumbing at data scale. Scale:
-# mapInPandas, partition-local codec work, identical shape to the
-# zstd/deflate/xz roundtrip queries (exponents 0.15-0.69).
-# Registered BEHIND the r11 window (registration-pause discipline).
+# lz4_frame_roundtrip (round 11): the LZ4 frame codec
+# (operators/lz4codec.py — LZ4 frame spec v1.6.3) on the driver-checked
+# path: per document OUR frame writer (liblz4 blocks from pyarrow, our
+# xxHash32 header/block/content checksums, block checksums on) then
+# liblz4's frame decoder, every checksum verified on the way back.
+# self_ok now checks liblz4's blocks against liblz4's decoder, so it is
+# close to a tautology; the independent-implementation pins (lz4-java
+# frames both directions, net.jpountz xxhash 32/64) live in
+# tests/test_lz4.py — the query proves the executor-side plumbing at
+# data scale. Scale: mapInPandas, partition-local codec work, identical
+# shape to the zstd/deflate/xz roundtrip queries (exponents 0.15-0.69).
 # ---------------------------------------------------------------------------
 
 def _lz4_frame_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
@@ -4743,9 +4743,9 @@ SELECT doc_id,
        TRUE AS self_ok
 FROM documents ORDER BY doc_id
 """,
-    doc="From-scratch LZ4 frame codec (xxHash32 checksums included) "
-        "driver-checked per document; lz4-java both-direction interop "
-        "pins in tests/test_lz4.py.",
+    doc="LZ4 frames (liblz4 blocks and decoder via pyarrow, our "
+        "xxHash32 checksums) driver-checked per document; lz4-java "
+        "both-direction frame interop pins in tests/test_lz4.py.",
 )
 
 
@@ -4964,13 +4964,9 @@ _PRUNE_PREDICATES: list[tuple[float, float]] = [
 def _rowgroup_pruning_scan(spark: SparkSession, sf: str) -> DataFrame:
     import glob as _glob
     import os as _os
-    import tempfile
     from functools import reduce
 
-    # one copy per input dir, overwritten by the next run: the returned
-    # frame reads these files lazily, so they cannot be removed here
-    out = _os.path.join(tempfile.gettempdir(), "footer_prune_"
-                        + _os.path.abspath(sf).strip("/").replace("/", "_"))
+    out = _scratch_dir("footer_prune_", sf)
     orders = _t(spark, sf, "orders").select("o_orderkey", "o_totalprice")
     (orders
      .withColumn("bucket",

@@ -19,16 +19,12 @@ from .operators.sketches import (KMV_SPACE, bloom_bits, bloom_probe,
 from .operators.text import tokens
 from .queries_scale_common import _sorted1
 from .registry import register
-from .sources.tables import load_tables
+from .sources.tables import table as _t
 
 _DUCK_TOKENS = "string_split_regex(trim(text), '\\s+')"
 
 #: DuckDB twin of text.md5_hash (48-bit integer hash of a string).
 _DUCK_H = "('0x' || substr(md5({s}), 1, 12))::BIGINT"
-
-
-def _t(spark: SparkSession, sf: str, name: str) -> DataFrame:
-    return load_tables(spark, sf)[name]
 
 
 def _duck_bucket(s: str, seed: int, width: int) -> str:

@@ -16,13 +16,12 @@ from __future__ import annotations
 
 import functools
 import os
-import tempfile
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .queries_scale_common import _DUCK_TOKENS, _sorted1
+from .queries_scale_common import _DUCK_TOKENS, _scratch_dir, _sorted1
 from .queries_scale_part1 import _HIT_SQL, _PRED_SQL, _STOP_SQL
 from .registry import register
 
@@ -67,7 +66,7 @@ def _sized_stream_state(fn):
 @_sized_stream_state
 def _streaming_curation_hashes(spark: SparkSession, sf: str) -> DataFrame:
     from .streaming.stream_curation import stream_curated_to_lake
-    out = tempfile.mkdtemp(prefix="stream_curation_q_")
+    out = _scratch_dir("stream_curation_q_", sf)
     stream_curated_to_lake(spark, sf, out)
     landed = spark.read.parquet(os.path.join(out, "docs"))
     return (landed.select("text_hash").distinct()
@@ -117,7 +116,7 @@ def _streaming_hll_registers(spark: SparkSession, sf: str) -> DataFrame:
     from .streaming.stream_curation import stream_documents
     from .streaming.stream_sketches import (read_hll_registers,
                                             streaming_hll_to_lake)
-    out = tempfile.mkdtemp(prefix="stream_hll_q_")
+    out = _scratch_dir("stream_hll_q_", sf)
     q = streaming_hll_to_lake(stream_documents(spark, sf),
                               os.path.join(out, "regs"),
                               os.path.join(out, "ckpt"))
@@ -176,7 +175,7 @@ def _streaming_cms_counters(spark: SparkSession, sf: str) -> DataFrame:
     from .streaming.stream_curation import stream_documents
     from .streaming.stream_sketches import (read_cms_counters,
                                             streaming_cms_to_lake)
-    out = tempfile.mkdtemp(prefix="stream_cms_q_")
+    out = _scratch_dir("stream_cms_q_", sf)
     q = streaming_cms_to_lake(stream_documents(spark, sf),
                               os.path.join(out, "counters"),
                               os.path.join(out, "ckpt"),
@@ -238,7 +237,7 @@ def _streaming_bloom_bits(spark: SparkSession, sf: str) -> DataFrame:
     from .streaming.stream_curation import stream_documents
     from .streaming.stream_sketches import (read_bloom_bits,
                                             streaming_bloom_to_lake)
-    out = tempfile.mkdtemp(prefix="stream_bloom_q_")
+    out = _scratch_dir("stream_bloom_q_", sf)
     q = streaming_bloom_to_lake(stream_documents(spark, sf),
                                 os.path.join(out, "bits"),
                                 os.path.join(out, "ckpt"),
@@ -333,7 +332,7 @@ def _streaming_kmv_minima(spark: SparkSession, sf: str) -> DataFrame:
     from .streaming.stream_curation import stream_documents
     from .streaming.stream_sketches import (read_kmv_sketch,
                                             streaming_kmv_to_lake)
-    out = tempfile.mkdtemp(prefix="stream_kmv_q_")
+    out = _scratch_dir("stream_kmv_q_", sf)
     q = streaming_kmv_to_lake(stream_documents(spark, sf),
                               os.path.join(out, "minima"),
                               os.path.join(out, "ckpt"), k=_SKMV_K)
@@ -393,7 +392,7 @@ def _streaming_gram_moments(spark: SparkSession, sf: str) -> DataFrame:
     from .streaming.stream_curation import stream_documents
     from .streaming.stream_sketches import (read_gram_moments,
                                             streaming_gram_to_lake)
-    out = tempfile.mkdtemp(prefix="stream_gram_q_")
+    out = _scratch_dir("stream_gram_q_", sf)
     q = streaming_gram_to_lake(stream_documents(spark, sf),
                                os.path.join(out, "moments"),
                                os.path.join(out, "ckpt"))
@@ -441,7 +440,7 @@ def _streaming_lww_snapshot(spark: SparkSession, sf: str) -> DataFrame:
     from .streaming.stream_curation import stream_documents
     from .streaming.stream_sketches import (read_lww_snapshot,
                                             streaming_lww_to_lake)
-    out = tempfile.mkdtemp(prefix="stream_lww_q_")
+    out = _scratch_dir("stream_lww_q_", sf)
     q = streaming_lww_to_lake(stream_documents(spark, sf),
                               os.path.join(out, "snap"),
                               os.path.join(out, "ckpt"))
@@ -554,7 +553,7 @@ def _streaming_stateful_sessions(spark: SparkSession, sf: str) -> DataFrame:
                         " fl array<boolean>",
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout))
-    out = tempfile.mkdtemp(prefix="stream_sess_q_")
+    out = _scratch_dir("stream_sess_q_", sf)
     q = (sessions.writeStream.format("parquet")
          .option("path", os.path.join(out, "sessions"))
          .option("checkpointLocation", os.path.join(out, "ckpt"))
@@ -604,7 +603,7 @@ def _streaming_static_enrich(spark: SparkSession, sf: str) -> DataFrame:
     from .sources.tables import load_tables
     from .streaming.stream_kpis import (read_static_enrich,
                                         streaming_static_enrich_to_lake)
-    out = tempfile.mkdtemp(prefix="stream_enrich_q_")
+    out = _scratch_dir("stream_enrich_q_", sf)
     cust = load_tables(spark, sf)["customer"]
     q = streaming_static_enrich_to_lake(
         spark, sf, os.path.join(out, "agg"), os.path.join(out, "ckpt"),
@@ -652,7 +651,7 @@ GROUP BY 1, 2 ORDER BY segment, event_type
 @_sized_stream_state
 def _streaming_session_builtin(spark: SparkSession, sf: str) -> DataFrame:
     from .streaming.stream_kpis import streaming_session_landing
-    out = tempfile.mkdtemp(prefix="stream_sess_q_")
+    out = _scratch_dir("stream_sess_builtin_q_", sf)
     q = streaming_session_landing(spark, sf, os.path.join(out, "agg"),
                                   os.path.join(out, "ckpt"))
     if not q.awaitTermination(120):
@@ -701,7 +700,7 @@ ORDER BY user_id, session_start
 @_sized_stream_state
 def _streaming_dedup_redelivery(spark: SparkSession, sf: str) -> DataFrame:
     from .streaming.stream_kpis import streaming_dedup_landing
-    out = tempfile.mkdtemp(prefix="stream_dedup_q_")
+    out = _scratch_dir("stream_dedup_q_", sf)
     q = streaming_dedup_landing(spark, sf, os.path.join(out, "rows"),
                                 os.path.join(out, "ckpt"))
     if not q.awaitTermination(120):
@@ -749,7 +748,7 @@ FROM events GROUP BY event_type ORDER BY event_type
 def _streaming_attribution_join(spark: SparkSession, sf: str) -> DataFrame:
     from .streaming.stream_kpis import (stream_events,
                                         streaming_click_purchase_join)
-    out = tempfile.mkdtemp(prefix="stream_attr_q_")
+    out = _scratch_dir("stream_attr_q_", sf)
     pairs = streaming_click_purchase_join(stream_events(spark, sf))
     q = (pairs.writeStream.format("parquet")
          .option("path", os.path.join(out, "pairs"))
@@ -822,7 +821,7 @@ def _streaming_warc_census(spark: SparkSession, sf: str) -> DataFrame:
     from .sources.spark_datasource import register_data_sources
 
     register_data_sources(spark)
-    root = tempfile.mkdtemp(prefix="stream_warc_q_")
+    root = _scratch_dir("stream_warc_q_", sf)
     land = os.path.join(root, "land")
     os.makedirs(land)
     sink = os.path.join(root, "sink")
@@ -895,7 +894,7 @@ def _streaming_tfrecord_census(spark: SparkSession, sf: str) -> DataFrame:
     from .sources.spark_datasource import register_data_sources
 
     register_data_sources(spark)
-    root = tempfile.mkdtemp(prefix="stream_tfrec_q_")
+    root = _scratch_dir("stream_tfrec_q_", sf)
     land = os.path.join(root, "land")
     os.makedirs(land)
     sink = os.path.join(root, "sink")
@@ -976,7 +975,7 @@ def _streaming_scd2_upsert(spark: SparkSession, sf: str) -> DataFrame:
     from .operators.update import scd2_merge
     from .queries_scale_common import _t
 
-    root = tempfile.mkdtemp(prefix="stream_scd2_")
+    root = _scratch_dir("stream_scd2_", sf)
     land = os.path.join(root, "land")
     os.makedirs(land)
     state_root = os.path.join(root, "state")
@@ -1079,7 +1078,7 @@ def _streaming_zip_census(spark: SparkSession, sf: str) -> DataFrame:
     from .sources.spark_datasource import register_data_sources
 
     register_data_sources(spark)
-    root = tempfile.mkdtemp(prefix="stream_zip_q_")
+    root = _scratch_dir("stream_zip_q_", sf)
     land = os.path.join(root, "land")
     os.makedirs(land)
     sink = os.path.join(root, "sink")

@@ -776,6 +776,18 @@ def _sqlite_affinity(decl_type: str):
     return BinaryType() if not decl_type.strip() else StringType()
 
 
+def _refuse_sqlite_reserved(columns, where: str) -> None:
+    """``db_file`` and ``rowid`` are the columns the read side adds; a
+    table column of either name (in any case) would plan a schema with
+    duplicate names, so refuse it here with a clear error."""
+    for c in columns:
+        if c.lower() in ("db_file", "rowid"):
+            raise ValueError(
+                f"{where} has a column named {c!r}; the sqlite format "
+                f"reserves 'db_file' and 'rowid' for the columns its "
+                f"reads add — drop or rename it")
+
+
 class SqliteDataSource(DataSource):
     """``spark.read.format("sqlite").option("table", t)``: one row per
     table row, read through the stdlib ``sqlite3``
@@ -787,7 +799,8 @@ class SqliteDataSource(DataSource):
     cannot coerce raise ``ValueError``, and a bad file raises
     ``SqliteError`` at planning and at read. ``spark.read`` schema is
     ``(db_file, rowid, <table columns...>)``, where ``rowid`` is
-    SQLite's own rowid.
+    SQLite's own rowid; a table column named ``db_file`` or ``rowid``
+    (any case) is refused with ``ValueError`` on both sides.
     Write side: ``df.write.format("sqlite")`` lands one database per
     partition through the same library."""
 
@@ -805,6 +818,7 @@ class SqliteDataSource(DataSource):
         from ..operators.sqlitefile import sqlite_read_table
         with open(_file_list(self.options)[0], "rb") as f:
             got = sqlite_read_table(f.read(), self._table(), rows=False)
+        _refuse_sqlite_reserved(got["columns"], f"table {self._table()!r}")
         return StructType(
             [StructField("db_file", StringType()),
              StructField("rowid", LongType())]
@@ -884,6 +898,7 @@ class SqliteWriter(DataSourceWriter):
         path = options.get("path")
         if not path:
             raise ValueError("path option is required")
+        _refuse_sqlite_reserved(schema.fieldNames(), "the written frame")
         self.dir = _require_shared_fs(path)
         self.table = table
         self.schema = schema

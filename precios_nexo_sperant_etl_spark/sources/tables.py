@@ -58,6 +58,11 @@ def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return dict(out)
 
 
+def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """One table of :func:`load_tables`."""
+    return load_tables(spark, sf_dir)[name]
+
+
 def register_views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     """Load tables and register each as a temp view for ``spark.sql``."""
     dfs = load_tables(spark, sf_dir)

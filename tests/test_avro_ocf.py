@@ -111,6 +111,31 @@ def test_snappy_property(data):
     assert snappy_decompress(snappy_compress(data)) == data
 
 
+def test_snappy_declared_length_checked_before_allocating(monkeypatch):
+    from precios_nexo_sperant_etl_spark.operators import avro_ocf as av
+
+    def _never(*_a, **_k):
+        raise AssertionError("libsnappy called on an impossible length")
+
+    monkeypatch.setattr(av.pa, "decompress", _never)
+    # 2**32 - 1 declared over a 3-byte body (at most 64 bytes of output)
+    with pytest.raises(ValueError, match="4294967295"):
+        av.snappy_decompress(b"\xff\xff\xff\xff\x0f" + b"\x0a\x01\x00")
+    for bad in (b"", b"\x80\x80", b"\xff" * 5 + b"\x01abc"):
+        with pytest.raises(ValueError):      # empty, cut, 6-byte varint
+            av.snappy_decompress(bad)
+
+
+def test_snappy_corrupt_body_raises_value_error():
+    from precios_nexo_sperant_etl_spark.operators.avro_ocf import (
+        snappy_compress, snappy_decompress)
+    good = snappy_compress(b"the quick brown fox " * 50)
+    for bad in (good[:-1], good + b"\x00", good[:1] + b"\x03" + good[2:],
+                b"\x08\x05\x07"):         # a copy before any literal
+        with pytest.raises(ValueError):
+            snappy_decompress(bad)
+
+
 def test_snappy_ocf_roundtrip_and_crc():
     from precios_nexo_sperant_etl_spark.operators.avro_ocf import (
         read_ocf, write_ocf)

@@ -104,7 +104,7 @@ def test_baseline_jpeg_decodes_within_tolerance_in_imageio(spark):
 
 # ---------------------------------------------------------------------------
 # Non-image JVM cross-checks riding the same session: snappy (the
-# from-scratch Avro-OCF codec vs Spark's bundled snappy-java, both
+# Avro-OCF codec's libsnappy vs Spark's bundled snappy-java, both
 # directions) and CRC-32C (the TFRecord masked-CRC base vs
 # java.util.zip.CRC32C).
 # ---------------------------------------------------------------------------

@@ -1,8 +1,8 @@
-"""LZ4 block/frame + xxHash32/64: pure-python properties and interop
-pins against the INDEPENDENT lz4-java implementation bundled with Spark
-(net.jpountz.lz4 / net.jpountz.xxhash). Both directions are pinned —
-our decoder on lz4-java fast/HC/frame output, lz4-java's decoders on
-our output — so encoder and decoder cannot share a wrong table."""
+"""LZ4 frames + xxHash32, and the zstd module's xxHash64: properties,
+the corrupt-input contract, and interop pins against the INDEPENDENT
+lz4-java implementation bundled with Spark (net.jpountz.lz4 /
+net.jpountz.xxhash). Frames are pinned both directions: our decoder on
+lz4-java frame output, lz4-java's decoder on our frames."""
 
 import os
 import random
@@ -10,8 +10,8 @@ import random
 import pytest
 
 from precios_nexo_sperant_etl_spark.operators.lz4codec import (
-    Lz4Error, lz4_block_compress, lz4_block_decompress,
-    lz4_frame_compress, lz4_frame_decompress, xxh32, xxh64)
+    Lz4Error, lz4_frame_compress, lz4_frame_decompress, xxh32)
+from precios_nexo_sperant_etl_spark.operators.zstdentropy import xxh64
 
 
 def _texty(rng, n):
@@ -30,26 +30,15 @@ def test_xxh64_known_vectors():
     assert xxh64(b"") == 0xEF46DB3751D8E999
 
 
-# --- pure-python properties -------------------------------------------------
-
-def test_block_roundtrip_property():
-    rng = random.Random(7)
-    for _ in range(150):
-        data = _texty(rng, rng.randrange(0, 4000))
-        assert lz4_block_decompress(lz4_block_compress(data),
-                                    max_size=len(data)) == data
-
+# --- properties and the corrupt-input contract -----------------------------
 
 def test_frame_roundtrip_all_options():
     rng = random.Random(8)
     for bchk in (False, True):
-        for cchk in (False, True):
-            for csize in (False, True):
-                data = _texty(rng, rng.randrange(0, 200000))
-                f = lz4_frame_compress(data, block_checksum=bchk,
-                                       content_checksum=cchk,
-                                       content_size=csize)
-                assert lz4_frame_decompress(f) == data
+        for n in (0, 1, 65535, 65536, 65537, 200000):
+            data = _texty(rng, n)
+            f = lz4_frame_compress(data, block_checksum=bchk)
+            assert lz4_frame_decompress(f) == data
 
 
 def test_frame_incompressible_stored_blocks():
@@ -74,19 +63,58 @@ def test_frame_corruption_detected():
         lz4_frame_decompress(bytes(f))
 
 
-def test_frame_dictionary_id_refused():
-    f = bytearray(lz4_frame_compress(b"x" * 100))
-    # force the DictID flag on and fix the header checksum
-    f[4] |= 1
-    desc = bytes(f[4:4 + 10])           # FLG+BD+contentsize(8)
-    f[14] = (xxh32(desc) >> 8) & 0xFF
-    with pytest.raises(Lz4Error, match="Dictionary_ID"):
-        lz4_frame_decompress(bytes(f) + (0).to_bytes(4, "little"))
+def test_skippable_frames_only_decode_to_empty():
+    sk = ((0x184D2A5F).to_bytes(4, "little")
+          + (3).to_bytes(4, "little") + b"abc")
+    assert lz4_frame_decompress(sk + sk) == b""
 
 
-def test_block_zero_offset_rejected():
+def _frame(flg: int, dict_id: int | None, blocks: list[bytes]) -> bytes:
+    """A hand-built frame: 64 KiB blocks, no content size or checksum;
+    each block is (size word, payload)."""
+    desc = bytes([flg, 0x40])
+    if dict_id is not None:
+        desc += dict_id.to_bytes(4, "little")
+    return ((0x184D2204).to_bytes(4, "little") + desc
+            + bytes([(xxh32(desc) >> 8) & 0xFF]) + b"".join(blocks)
+            + b"\x00" * 4)
+
+
+def test_frame_dictionary_id_decodes_without_dictionary_reference():
+    # an 8-byte match at offset 4 before any literal, then 5 literals:
+    # well formed when 4 bytes of history precede it (a linked frame
+    # whose first block is stored) ...
+    block = (9).to_bytes(4, "little") + b"\x04\x04\x00\x50abcde"
+    stored = (4 | 0x80000000).to_bytes(4, "little") + b"wxyz"
+    assert (lz4_frame_decompress(_frame(0x40, None, [stored, block]))
+            == b"wxyz" + b"wxyzwxyzabcde")
+    # ... so a frame naming a dictionary decodes while no block reaches
+    # into it, and fails once one does (no dictionary is supplied)
+    assert lz4_frame_decompress(_frame(0x61, 7, [stored])) == b"wxyz"
     with pytest.raises(Lz4Error):
-        lz4_block_decompress(b"\x14abcd\x00\x00", max_size=100)
+        lz4_frame_decompress(_frame(0x61, 7, [block]))
+
+
+@pytest.mark.parametrize("case", ["block_checksum", "content_checksum",
+                                  "truncated", "trailing_garbage",
+                                  "empty", "bad_magic"])
+def test_frame_corrupt_input_contract(case):
+    data = b"payload " * 1000
+    f = bytearray(lz4_frame_compress(data, block_checksum=True))
+    if case == "block_checksum":        # the one block's xxh32
+        f[-12] ^= 1
+    elif case == "content_checksum":
+        f[-1] ^= 1
+    elif case == "truncated":
+        f = f[:-5]
+    elif case == "trailing_garbage":
+        f += b"garbage!"
+    elif case == "empty":
+        f = b""
+    else:
+        f[0] ^= 1
+    with pytest.raises(Lz4Error):
+        lz4_frame_decompress(bytes(f))
 
 
 # --- interop pins against lz4-java ------------------------------------------
@@ -103,28 +131,6 @@ def test_xxhash_matches_jvm(spark):
             == xxh32(data, seed)
         assert h64.hash(data, 0, len(data), seed) \
             & 0xFFFFFFFFFFFFFFFF == xxh64(data, seed)
-
-
-def test_block_decoder_on_lz4java_output(spark):
-    fac = spark.sparkContext._jvm.net.jpountz.lz4.LZ4Factory \
-        .fastestInstance()
-    rng = random.Random(12)
-    for comp in (fac.fastCompressor(), fac.highCompressor()):
-        for _ in range(40):
-            data = _texty(rng, rng.randrange(0, 6000))
-            jb = bytes(comp.compress(data))
-            assert lz4_block_decompress(jb, max_size=len(data)) == data
-
-
-def test_lz4java_decodes_our_blocks(spark):
-    fac = spark.sparkContext._jvm.net.jpountz.lz4.LZ4Factory \
-        .fastestInstance()
-    dec = fac.fastDecompressor()
-    rng = random.Random(13)
-    for _ in range(40):
-        data = _texty(rng, rng.randrange(1, 6000))
-        ours = lz4_block_compress(data)
-        assert bytes(dec.decompress(ours, len(data))) == data
 
 
 def test_frame_decoder_on_lz4java_frames(spark):
@@ -144,10 +150,9 @@ def test_lz4java_decodes_our_frames(spark):
     jvm = spark.sparkContext._jvm
     rng = random.Random(15)
     for bchk in (False, True):
-        for bid in (4, 7):
+        for _ in range(2):
             data = _texty(rng, rng.randrange(0, 300000))
-            ours = lz4_frame_compress(data, block_checksum=bchk,
-                                      block_max_id=bid)
+            ours = lz4_frame_compress(data, block_checksum=bchk)
             fis = jvm.net.jpountz.lz4.LZ4FrameInputStream(
                 jvm.java.io.ByteArrayInputStream(ours))
             assert bytes(fis.readAllBytes()) == data

@@ -586,6 +586,43 @@ def test_sqlite_format_rowid_is_sqlites_rowid(spark, tmp_path):
         ("b.sqlite", 7, 7, "x"), ("b.sqlite", 42, 42, "y")]
 
 
+def test_sqlite_format_refuses_its_reserved_column_names(spark, tmp_path):
+    """A sqlite read carries db_file/rowid; writing it back as is would
+    store them as table columns and the re-read would plan duplicate
+    names. The writer refuses such a frame, the reader such a table;
+    without the two columns the round trip returns the rows."""
+    import sqlite3
+
+    from precios_nexo_sperant_etl_spark.sources.spark_datasource import \
+        SqliteDataSource
+    register_data_sources(spark)
+    con = sqlite3.connect(str(tmp_path / "src.sqlite"))
+    con.execute("CREATE TABLE t(k INTEGER, v TEXT)")
+    con.executemany("INSERT INTO t VALUES (?, ?)",
+                    [(1, "a"), (2, "b"), (3, "c")])
+    con.commit()
+    con.close()
+    src = (spark.read.format("sqlite").option("table", "t")
+           .load(str(tmp_path / "src.sqlite")))
+    with pytest.raises(Exception, match="column named 'db_file'") as ei:
+        src.write.format("sqlite").option("table", "t") \
+           .mode("append").save(str(tmp_path / "back"))
+    assert "ValueError" in str(ei.value)
+    src.drop("db_file", "rowid").write.format("sqlite") \
+       .option("table", "t").mode("append").save(str(tmp_path / "back"))
+    back = (spark.read.format("sqlite").option("table", "t")
+            .load(str(tmp_path / "back" / "part-*")))
+    assert sorted((r["k"], r["v"]) for r in back.collect()) == [
+        (1, "a"), (2, "b"), (3, "c")]
+    con = sqlite3.connect(str(tmp_path / "own.sqlite"))
+    con.execute("CREATE TABLE t(RowId INTEGER, v TEXT)")
+    con.commit()
+    con.close()
+    with pytest.raises(ValueError, match="column named 'RowId'"):
+        SqliteDataSource({"path": str(tmp_path / "own.sqlite"),
+                          "table": "t"}).schema()
+
+
 @pytest.mark.parametrize("case", ["truncated", "empty", "wal"])
 def test_sqlite_format_bad_file_fails_loudly(tmp_path, case):
     """A bad file raises SqliteError both where it plans the schema

@@ -197,3 +197,25 @@ def test_streaming_gram_equals_batch_and_replay_idempotent(spark, tmp_path):
                                 str(tmp_path / "ckpt_gram2"))
     assert q2.awaitTermination(120)
     assert read_gram_moments(spark, out).collect()[0].asDict() == batch
+
+
+def test_streaming_query_keeps_one_scratch_dir(spark, tmp_path,
+                                               monkeypatch):
+    """A streaming query lands under one directory per query and input,
+    wiped by its next run, so repeated runs leave one directory (not one
+    per run) and carry no checkpoint or landed file over."""
+    import glob
+    import tempfile
+
+    from precios_nexo_sperant_etl_spark.queries_streaming import (
+        _streaming_scd2_upsert)
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    first = _streaming_scd2_upsert(spark, SF_DIR).collect()
+    (root,) = glob.glob(str(tmp_path / "stream_scd2_*"))
+    stale = os.path.join(root, "ckpt", "left_by_an_earlier_run")
+    os.makedirs(os.path.dirname(stale), exist_ok=True)
+    open(stale, "w").close()
+    second = _streaming_scd2_upsert(spark, SF_DIR).collect()
+    assert glob.glob(str(tmp_path / "stream_scd2_*")) == [root]
+    assert not os.path.exists(stale)
+    assert first and first == second
