@@ -249,7 +249,7 @@ HEADLINE = [
     "event_pattern_match",      # regex funnel over event strings
     "streaming_scd2_upsert",    # foreachBatch merge into state
     "lz4_frame_roundtrip",      # liblz4 frames + our xxHash32 checksums
-    "zip_archive_extract",      # ZIP container, stdlib both ways
+    "zip_archive_extract",      # zipfile directory, our inflate/CRC
     "parquet_footer_stats",     # pyarrow footer stats vs data rescan
     "rowgroup_pruning_scan",    # footer-stat pruning end-to-end
     "sqlite_table_scan",        # sqlite3 deserialize table read

@@ -1,14 +1,20 @@
-"""From-scratch ZIP container reader/writer over stdlib raw DEFLATE.
+"""ZIP container reader/writer: the central directory read by stdlib
+``zipfile``, members inflated and CRC-checked by us, archives written
+by us.
 
-Implements the public PKWARE APPNOTE.TXT container format: End Of
-Central Directory (+ ZIP64 EOCD/locator), central directory file
-headers, local file headers, data-descriptor streams, methods 0
-(stored) and 8 (raw RFC 1951 deflate through ``zlib`` with
-``wbits=-15``), CRC-32 verification, and UTF-8 name handling
-(general-purpose bit 11 and the CP437 legacy fallback). The container
-walk is ours; stdlib ``zipfile`` is the independent implementation the
-tests pin against in both directions (it writes, we read; we write, it
-reads and ``testzip``s).
+Reading: ``zipfile`` finds the End Of Central Directory (under a
+trailing archive comment, through the ZIP64 locator and widened extra
+fields, re-anchored under a self-extractor prefix) and decodes the
+member names (UTF-8 under general-purpose bit 11, CP437 otherwise).
+``zip_extract`` then reads each local header itself and inflates the
+payload with ``zlib`` raw deflate (``wbits=-15``). It does not call
+``ZipFile.read``: that raises on a bad CRC, while the zip data source
+publishes a CRC mismatch as a ``crc_mismatch`` row. Every refusal is a
+``ZipError``; a CRC mismatch is a ``crc_ok=False`` member, not an
+error.
+
+Writing: ``zip_create`` is ours, so the tests can pin it against the
+independent ``zipfile`` (we write, it reads and ``testzip``s).
 
 Reference parity context: the reference ETL walks directories of loose
 .xlsx workbooks (Actualizar_Precios_de_Nexo.py:33-45); datasets at
@@ -18,19 +24,17 @@ container natively — same motivation as the WARC/TFRecord sources.
 Why central-directory-first: streamed zips (general-purpose bit 3) have
 zero sizes in the LOCAL header with a data descriptor after the
 payload, so the only authoritative sizes/CRCs live in the central
-directory. We therefore locate members via the directory and use its
-sizes, which also makes the reader robust to self-extractor prefixes
-(the EOCD scan anchors everything to the directory offset delta).
+directory.
 """
 
 from __future__ import annotations
 
+import io
 import struct
+import zipfile
 import zlib
 
 _EOCD_SIG = 0x06054B50
-_EOCD64_SIG = 0x06064B50
-_EOCD64_LOC_SIG = 0x07064B50
 _CDFH_SIG = 0x02014B50
 _LFH_SIG = 0x04034B50
 
@@ -43,117 +47,31 @@ class ZipError(ValueError):
     pass
 
 
-def _decode_name(raw: bytes, flags: int) -> str:
-    if flags & (1 << 11):               # EFS: name is UTF-8
-        return raw.decode("utf-8")
-    return raw.decode("cp437")
-
-
-def _find_eocd(blob: bytes) -> tuple[int, dict]:
-    """Scan the last 64 KiB + 22 bytes for the EOCD record (the comment
-    may be up to 65535 bytes, so the signature is not at a fixed
-    offset)."""
-    n = len(blob)
-    lo = max(0, n - 22 - 0xFFFF)
-    pos = blob.rfind(struct.pack("<I", _EOCD_SIG), lo)
-    while pos >= 0:
-        if pos + 22 <= n:
-            (sig, disk, cd_disk, n_disk, n_total, cd_size, cd_off,
-             clen) = struct.unpack_from("<IHHHHIIH", blob, pos)
-            if pos + 22 + clen == n:
-                return pos, {"disk": disk, "n_total": n_total,
-                             "cd_size": cd_size, "cd_off": cd_off}
-        pos = blob.rfind(struct.pack("<I", _EOCD_SIG), lo, pos)
-    raise ZipError("no End-Of-Central-Directory record found")
-
-
-def _maybe_zip64(blob: bytes, eocd_pos: int, eocd: dict) -> dict:
-    """If the EOCD fields are saturated, chase the ZIP64 locator."""
-    need64 = (eocd["n_total"] == 0xFFFF or eocd["cd_off"] == 0xFFFFFFFF
-              or eocd["cd_size"] == 0xFFFFFFFF)
-    loc_pos = eocd_pos - 20
-    if loc_pos >= 0:
-        (sig,) = struct.unpack_from("<I", blob, loc_pos)
-        if sig == _EOCD64_LOC_SIG:
-            (_, _, e64_off, _) = struct.unpack_from("<IIQI", blob, loc_pos)
-            (sig64, _, _, _, _, _, n_total, cd_size, cd_off) = \
-                struct.unpack_from("<IQHHIIQQQ", blob, e64_off)
-            # <IQHHIIQQQ: sig, size-of-record, ver-made, ver-need,
-            # disk, cd-disk, entries-this-disk... need careful layout:
-            if sig64 != _EOCD64_SIG:
-                raise ZipError("ZIP64 locator points at a non-EOCD64")
-            (sig64, rec_size, vmade, vneed, disk, cd_disk, n_this,
-             n_total, cd_size, cd_off) = struct.unpack_from(
-                "<IQHHIIQQQQ", blob, e64_off)
-            return {"n_total": n_total, "cd_size": cd_size,
-                    "cd_off": cd_off}
-    if need64:
-        raise ZipError("EOCD fields saturated but no ZIP64 locator")
-    return eocd
-
-
-def _extra_u64s(extra: bytes, need: int) -> list[int]:
-    """Pull ``need`` uint64s from the 0x0001 ZIP64 extra field."""
-    pos = 0
-    while pos + 4 <= len(extra):
-        tag, sz = struct.unpack_from("<HH", extra, pos)
-        pos += 4
-        if tag == 0x0001:
-            vals = []
-            off = pos
-            for _ in range(need):
-                if off + 8 > pos + sz:
-                    break
-                vals.append(struct.unpack_from("<Q", extra, off)[0])
-                off += 8
-            return vals
-        pos += sz
-    return []
-
-
 def zip_list(blob: bytes) -> list[dict]:
-    """Parse the central directory; no payload decompression."""
-    eocd_pos, eocd = _find_eocd(blob)
-    eocd = _maybe_zip64(blob, eocd_pos, eocd)
-    # tolerate a fixed prefix (self-extractor stub): the directory ends
-    # where the EOCD (or EOCD64) begins, so re-anchor its start.
-    cd_start = eocd["cd_off"]
-    entries: list[dict] = []
-    pos = cd_start
-    for _ in range(eocd["n_total"]):
-        if pos + 46 > len(blob):
-            raise ZipError("central directory truncated")
-        (sig, vmade, vneed, flags, method, mtime, mdate, crc, csize,
-         usize, nlen, elen, clen, disk, iattr, eattr, lfh_off) = \
-            struct.unpack_from("<IHHHHHHIIIHHHHHII", blob, pos)
-        if sig != _CDFH_SIG:
-            raise ZipError(f"bad central-directory signature at {pos}")
-        pos += 46
-        raw_name = blob[pos:pos + nlen]
-        pos += nlen
-        extra = blob[pos:pos + elen]
-        pos += elen
-        pos += clen
-        saturated = [v for v in (usize, csize, lfh_off)
-                     if v == 0xFFFFFFFF]
-        if saturated:
-            vals = _extra_u64s(extra, len(saturated))
-            if len(vals) != len(saturated):
-                raise ZipError("ZIP64 extra field missing widened sizes")
-            it = iter(vals)
-            if usize == 0xFFFFFFFF:
-                usize = next(it)
-            if csize == 0xFFFFFFFF:
-                csize = next(it)
-            if lfh_off == 0xFFFFFFFF:
-                lfh_off = next(it)
-        entries.append({
-            "name": _decode_name(raw_name, flags),
-            "method": method, "flags": flags, "crc": crc,
-            "compressed_size": csize, "uncompressed_size": usize,
-            "lfh_offset": lfh_off,
-        })
-    return entries
+    """The central directory, read by stdlib ``zipfile``; no payload
+    decompression. ``lfh_offset`` is already shifted by any prefix."""
+    try:
+        with zipfile.ZipFile(io.BytesIO(blob)) as zf:
+            infos = zf.infolist()
+    # ValueError covers a name flagged UTF-8 that is not UTF-8
+    except (zipfile.BadZipFile, ValueError, EOFError,
+            NotImplementedError) as exc:
+        raise ZipError(f"bad zip central directory: {exc}") from exc
+    # zipfile reads entries until the directory's declared byte size is
+    # used up, so a corrupt name or extra length silently swallows the
+    # entries after it: hold the count to the end record's (0xFFFF =
+    # saturated, the ZIP64 record holds the count). zipfile took the
+    # last signature with a whole 22-byte record after it.
+    eocd = blob.rfind(struct.pack("<I", _EOCD_SIG), 0, len(blob) - 18)
+    (n_total,) = struct.unpack_from("<H", blob, eocd + 10)
+    if n_total not in (len(infos), 0xFFFF):
+        raise ZipError(f"central directory holds {len(infos)} entries, "
+                       f"the end record says {n_total}")
+    return [{"name": i.filename, "method": i.compress_type,
+             "flags": i.flag_bits, "crc": i.CRC,
+             "compressed_size": i.compress_size,
+             "uncompressed_size": i.file_size,
+             "lfh_offset": i.header_offset} for i in infos]
 
 
 def zip_extract(blob: bytes) -> list[dict]:
@@ -163,7 +81,9 @@ def zip_extract(blob: bytes) -> list[dict]:
     out = []
     for e in zip_list(blob):
         off = e["lfh_offset"]
-        if off + 30 > len(blob):
+        # zipfile shifts offsets by the prefix it infers, which a
+        # corrupt directory offset makes negative
+        if off < 0 or off + 30 > len(blob):
             raise ZipError(f"local header offset out of range: {off}")
         (sig, vneed, flags, method, mtime, mdate, crc, csize, usize,
          nlen, elen) = struct.unpack_from("<IHHHHHIIIHH", blob, off)

@@ -743,8 +743,7 @@ ORDER BY source
 # ---------------------------------------------------------------------------
 
 def _orc_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
-    import tempfile
-    out = tempfile.mkdtemp(prefix="orc_roundtrip_")
+    out = _scratch_dir("orc_roundtrip_", sf)
     d = _t(spark, sf, "documents")
     d.write.mode("overwrite").orc(out)
     back = spark.read.orc(out)

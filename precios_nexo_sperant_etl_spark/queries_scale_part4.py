@@ -1405,13 +1405,12 @@ FROM t ORDER BY doc_id
 
 def _arrow_ipc_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     import os as _os
-    import tempfile as _tf
 
     import pandas as pd
     import pyarrow as pa
     import pyarrow.ipc as ipc
 
-    out = _tf.mkdtemp(prefix="arrow_ipc_rt_")
+    out = _scratch_dir("arrow_ipc_rt_", sf)
     d = (_t(spark, sf, "documents")
          .select("doc_id", "text", "lang", "source")
          .withColumn("shard", (F.col("doc_id") % 16).cast("long")))
@@ -4233,12 +4232,10 @@ ORDER BY d.doc_id
 # ---------------------------------------------------------------------------
 
 def _warc_datasource_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
-    import tempfile
-
     from .sources.spark_datasource import register_data_sources
 
     register_data_sources(spark)
-    out = tempfile.mkdtemp(prefix="warc_ds_roundtrip_")
+    out = _scratch_dir("warc_ds_roundtrip_", sf)
     d = _t(spark, sf, "documents").select("doc_id", "text")
     (d.repartition(8)
       .select(F.lit("response").alias("warc_type"),
@@ -4750,14 +4747,17 @@ FROM documents ORDER BY doc_id
 
 
 # ---------------------------------------------------------------------------
-# zip_archive_extract (round 11): the from-scratch ZIP container
-# (operators/ziparchive.py — EOCD/ZIP64/central-directory walk, CRC-32
-# verify, deflate members through stdlib raw zlib) on the driver-
-# checked path with the INDEPENDENT implementation in the loop both
-# directions, per bucket of documents:
+# zip_archive_extract (round 11): the ZIP container
+# (operators/ziparchive.py — central directory read by stdlib zipfile,
+# local headers, raw-zlib inflate and the CRC-32 verdict ours, archives
+# written by our zip_create) on the driver-checked path with stdlib
+# zipfile in the loop both directions, per bucket of documents:
 #   stdlib zipfile (zlib deflate) builds the archive -> OURS extracts
 #   OURS builds the archive -> stdlib extracts + testzip()s
-# so neither direction is a self-roundtrip. Scale: applyInPandas per
+# In the zipfile->ours direction zipfile reads the directory on both
+# sides (a tautology kept for the owner to retire; inflate and CRC are
+# ours); ours->zipfile pins our writer against an independent reader.
+# Scale: applyInPandas per
 # doc_id bucket (32 bounded groups of ~n/32 docs), archive work
 # partition-local; same shape as webdataset_roundtrip.
 # Registered BEHIND the r11 window (registration-pause discipline).
@@ -4821,10 +4821,11 @@ SELECT doc_id,
        TRUE AS stdlib_reads_ours
 FROM documents ORDER BY doc_id
 """,
-    doc="From-scratch ZIP container with the independent stdlib "
-        "zipfile in the loop both directions per bucket: zipfile-built "
-        "archives decoded by our EOCD/central-directory walker, and "
-        "our archives verified by stdlib testzip.",
+    doc="ZIP container with stdlib zipfile in the loop both "
+        "directions per bucket: zipfile-built archives listed by "
+        "zipfile's central-directory read and inflated + CRC-checked "
+        "by ours, and our zip_create archives verified by stdlib "
+        "testzip.",
 )
 
 

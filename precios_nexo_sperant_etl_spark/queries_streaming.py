@@ -1068,8 +1068,9 @@ def _streaming_zip_census(spark: SparkSession, sf: str) -> DataFrame:
     ``streaming_warc_census``, over ``readStream.format("zip")``: each
     wave lands ZIP archives written by ``df.write.format("zip")`` (our
     central-directory writer, stdlib-verified in pytest), the stream
-    reader extracts members through OUR walker + stdlib raw inflate with
-    CRC verdicts, and the landed union must hold every document
+    reader lists members through stdlib zipfile's directory read and
+    extracts them through our raw inflate with CRC verdicts, and the
+    landed union must hold every document
     exactly once with oracle-recomputed lengths and md5s."""
     import glob
     import shutil

@@ -1,10 +1,14 @@
 """Native Spark read formats via the PySpark 4 Python Data Source API
 (public `pyspark.sql.datasource`): ``spark.read.format(...)`` for
 ``xlsx``, ``warc``, ``tfrecord``, ``zip`` and ``sqlite`` over the
-repo's from-scratch readers, so workbook exports, web-crawl archives,
-record files, zipped datasets and SQLite exports ingest like any
-first-class format — planning on the driver, PARSING ON EXECUTORS,
-one input partition per file.
+repo's container readers (the workbook, WARC and TFRecord codecs, the
+``zipfile``-directory ZIP reader, the stdlib ``sqlite3``), so workbook
+exports, web-crawl archives, record files, zipped datasets and SQLite
+exports ingest like any first-class format — planning on the driver,
+PARSING ON EXECUTORS, one input partition per file. Every format is
+one ``_FileScan`` (file list, pruning, pushed filters) plus its own
+``rows(path)``, and one ``_PartWriter`` (the part-file commit
+protocol) plus its own ``write_part``.
 
 Why this exists next to ``sources.ingest``: ``ingest_project_files``
 is the reference's tolerant per-file fan-in (warn-and-skip,
@@ -13,12 +17,15 @@ are the Spark-idiomatic spelling for the common case of a CONSISTENT
 layout — they compose with every DataFrame reader option, show up in
 the plan as a scan, and let Catalyst prune columns on top. The xlsx
 reader normalizes and aligns with the same ingest helpers
-(``_parse_file_rows``, ``union_names``, ``align_rows``). Both parse on
+(``_parse_file_rows``, ``union_names``, ``align_rows``). All parse on
 executors, one file per task; nothing but the file list and column
 names ever crosses the driver.
 
 Scale notes: the file list comes from a driver-side glob (metadata
-only). xlsx schema inference reads the header rows of the first
+only); names starting with ``_`` or ``.`` (the ``_SUCCESS`` manifest)
+are skipped in directory listings and globs, as Spark's file sources
+do, so a directory these writers made reads back. xlsx schema
+inference reads the header rows of the first
 ``samples`` files (default 1) at planning time and takes the
 first-seen-ordered union of names; other files align by name
 executor-side (missing name → null, extra name → dropped unless
@@ -43,6 +50,7 @@ from __future__ import annotations
 import glob as _glob
 import os
 import re
+from contextlib import suppress
 
 from pyspark.sql.datasource import (DataSource, DataSourceReader,
                                     DataSourceWriter, EqualTo, Filter, In,
@@ -73,8 +81,9 @@ def _require_shared_fs(path: str) -> str:
             return path[len(m.group(0)) - 1:][1:] or "/"
         raise SharedFilesystemRequired(
             f"path {path!r} uses scheme {scheme!r}: the xlsx/warc/"
-            "tfrecord formats read and write through the shared POSIX "
-            "filesystem only (driver-visible AND executor-visible). "
+            "tfrecord/zip/sqlite formats read and write through the "
+            "shared POSIX filesystem only (driver-visible AND "
+            "executor-visible). "
             "Stage object-store data onto a shared mount, or use "
             "Spark's built-in Hadoop-FS formats for that tier.")
     return path
@@ -85,9 +94,14 @@ def _file_list(options: dict) -> list[str]:
     if not path:
         raise ValueError("path option is required")
     path = _require_shared_fs(path)
-    files = sorted(_glob.glob(path)) if any(c in path for c in "*?[") \
-        else ([os.path.join(path, f) for f in sorted(os.listdir(path))]
-              if os.path.isdir(path) else [path])
+    if any(c in path for c in "*?["):
+        files = sorted(_glob.glob(path))
+    elif os.path.isdir(path):
+        files = [os.path.join(path, f) for f in sorted(os.listdir(path))]
+    else:
+        return [path]                   # a named file is read as given
+    files = [f for f in files
+             if not os.path.basename(f).startswith(("_", "."))]
     if not files:
         raise ValueError(f"no input files match {path!r}")
     return files
@@ -96,29 +110,6 @@ def _file_list(options: dict) -> list[str]:
 class _FilePartition(InputPartition):
     def __init__(self, path: str) -> None:
         self.path = path
-
-
-def _snapshot_parts(out_dir: str) -> list[str]:
-    """Overwrite semantics for the part-file writers, commit-protocol
-    style: SNAPSHOT the previous part files at planning and delete
-    them only at ``commit()``, after every new part is written — so a
-    failed or aborted job leaves the old dataset intact (new part
-    names carry fresh uuids, so old and new never collide). The
-    non-atomic window is the commit itself: old parts are removed one
-    by one before the new ``_SUCCESS`` lands, exactly like Spark's
-    non-transactional overwrite of a directory sink."""
-    if not os.path.isdir(out_dir):
-        return []
-    return [f for f in sorted(os.listdir(out_dir))
-            if f.startswith("part-") or f == "_SUCCESS"]
-
-
-def _remove_old_parts(out_dir: str, old_parts: list[str]) -> None:
-    for f in old_parts:
-        try:
-            os.remove(os.path.join(out_dir, f))
-        except OSError:
-            pass
 
 
 def _sheet_opt(options: dict):
@@ -148,6 +139,118 @@ def _string_predicate(f: Filter):
     if isinstance(f, StringContains):
         return f.attribute[0], lambda v, val=f.value: val in v
     return None
+
+
+class _FileScan(DataSourceReader):
+    """One input partition per file. ``pushFilters`` consumes string
+    predicates on ``file_col`` — FILE PRUNING, tested against
+    ``_file_key(path)`` in ``partitions()``, so unmatched files are
+    never opened (the Python-datasource analog of partition pruning) —
+    and on ``row_col``, tested on field ``row_idx`` of each row before
+    it leaves the reader; everything else goes back to Spark to
+    evaluate post-scan. A format implements ``rows(path)``."""
+
+    file_col: str
+    row_col: str | None = None
+    row_idx = 0
+
+    def __init__(self, options: dict) -> None:
+        self.files = _file_list(options)
+        self._file_tests: list = []
+        self._row_tests: list = []
+
+    def _file_key(self, path: str) -> str:
+        return os.path.basename(path)
+
+    def pushFilters(self, filters):
+        for f in filters:
+            sp = _string_predicate(f)
+            if sp and sp[0] == self.file_col:
+                self._file_tests.append(sp[1])
+            elif sp and sp[0] == self.row_col:
+                self._row_tests.append(sp[1])
+            else:
+                yield f
+
+    def partitions(self) -> list[InputPartition]:
+        files = [p for p in self.files
+                 if all(t(self._file_key(p)) for t in self._file_tests)]
+        return [_FilePartition(p) for p in files] or \
+            [_FilePartition("\x00empty")]
+
+    def read(self, partition: _FilePartition):
+        if partition.path == "\x00empty":       # all files pruned
+            return
+        for row in self.rows(partition.path):
+            if all(t(row[self.row_idx]) for t in self._row_tests):
+                yield row
+
+
+class _PartCommit(WriterCommitMessage):
+    def __init__(self, path: str, rows: int) -> None:
+        self.path = path
+        self.rows = rows
+
+
+class _PartWriter(DataSourceWriter):
+    """The part-file commit protocol, one copy for every format: each
+    task writes ONE part, ``part-<partition>-<uuid><ext>``, through the
+    format's ``write_part(path, rows) -> row count``; ``commit`` writes
+    a ``_SUCCESS`` manifest (``part\trows`` per line), ``abort`` removes
+    this attempt's parts — partition-local work, no driver collect.
+
+    Overwrite SNAPSHOTS the previous parts at planning and deletes them
+    only at ``commit()``, after every new part is written, so a failed
+    or aborted job leaves the old dataset intact (fresh uuids keep old
+    and new names apart). The non-atomic window is the commit itself:
+    old parts are removed one by one before the new ``_SUCCESS`` lands,
+    like Spark's non-transactional overwrite of a directory sink."""
+
+    fmt: str                            # format name, for errors
+    ext: str
+    needs: tuple = ()                   # columns the encoder reads
+
+    def __init__(self, options: dict, schema: StructType,
+                 overwrite: bool) -> None:
+        path = options.get("path")
+        if not path:
+            raise ValueError("path option is required")
+        self.dir = _require_shared_fs(path)
+        self.columns = [f.name for f in schema.fields]
+        for c in self.needs:
+            if c not in self.columns:
+                raise ValueError(f"{self.fmt} writer needs column {c!r}")
+        self.idx = {c: self.columns.index(c) for c in self.needs}
+        self._old_parts = []
+        if overwrite and os.path.isdir(self.dir):
+            self._old_parts = [f for f in sorted(os.listdir(self.dir))
+                               if f.startswith("part-") or f == "_SUCCESS"]
+
+    def write(self, iterator) -> _PartCommit:
+        import uuid
+
+        from pyspark import TaskContext
+        ctx = TaskContext.get()
+        pid = ctx.partitionId() if ctx is not None else 0
+        os.makedirs(self.dir, exist_ok=True)
+        name = f"part-{pid:05d}-{uuid.uuid4().hex}{self.ext}"
+        return _PartCommit(
+            name, self.write_part(os.path.join(self.dir, name), iterator))
+
+    def commit(self, messages) -> None:
+        for f in self._old_parts:
+            with suppress(OSError):
+                os.remove(os.path.join(self.dir, f))
+        manifest = sorted(f"{m.path}\t{m.rows}" for m in messages
+                          if m is not None)
+        with open(os.path.join(self.dir, "_SUCCESS"), "w") as f:
+            f.write("\n".join(manifest) + "\n")
+
+    def abort(self, messages) -> None:
+        for m in messages:
+            if m is not None:
+                with suppress(OSError):
+                    os.remove(os.path.join(self.dir, m.path))
 
 
 class ExcelDataSource(DataSource):
@@ -193,13 +296,17 @@ class ExcelDataSource(DataSource):
         return ExcelWriter(self.options, schema, overwrite)
 
 
-class ExcelReader(DataSourceReader):
+class ExcelReader(_FileScan):
+    # Proyecto (= the file stem): a per-project query over a 1 000-file
+    # export opens exactly the matching workbooks
+    file_col = "Proyecto"
+
     def __init__(self, options: dict, schema: StructType) -> None:
-        self.files = _file_list(options)
+        super().__init__(options)
         self.header_row = options.get("header_row")
         self.sheet = _sheet_opt(options)
         self.names = [f.name for f in schema.fields]
-        # read() maps cells positionally into [Proyecto, <data...>, _ord];
+        # rows() maps cells positionally into [Proyecto, <data...>, _ord];
         # a user-supplied .schema(...) that drops or moves the sentinels
         # would silently misalign values to columns — fail at planning.
         if not self.names or self.names[0] != "Proyecto" \
@@ -209,99 +316,51 @@ class ExcelReader(DataSourceReader):
                 f"with '_ord' (got {self.names!r}); select/rename after "
                 "the scan instead of overriding the schema shape")
         self.strict = str(options.get("strict", "false")).lower() == "true"
-        self._project_tests: list = []
 
-    def pushFilters(self, filters):
-        """Consume string predicates on ``Proyecto`` (= the file stem):
-        file-level pruning, so a per-project query over a 1 000-file
-        export opens exactly the matching workbooks."""
-        for f in filters:
-            sp = _string_predicate(f)
-            if sp and sp[0] == "Proyecto":
-                self._project_tests.append(sp[1])
-            else:
-                yield f
+    def _file_key(self, path: str) -> str:
+        return os.path.splitext(os.path.basename(path))[0]
 
-    def partitions(self) -> list[InputPartition]:
-        files = [p for p in self.files
-                 if all(t(os.path.splitext(os.path.basename(p))[0])
-                        for t in self._project_tests)]
-        return [_FilePartition(p) for p in files] or \
-            [_FilePartition("\x00empty")]
-
-    def read(self, partition: _FilePartition):
+    def rows(self, path: str):
         from .excel import read_xlsx_rows
         from .ingest import _parse_file_rows, align_rows
-        if partition.path == "\x00empty":       # all files pruned
-            return
         hdr = int(self.header_row) if self.header_row is not None else None
-        names, rows = _parse_file_rows(
-            read_xlsx_rows(partition.path, self.sheet), hdr)
-        project = os.path.splitext(os.path.basename(partition.path))[0]
+        names, rows = _parse_file_rows(read_xlsx_rows(path, self.sheet), hdr)
         target = self.names[1:-1]                 # strip Proyecto/_ord
         if self.strict:
             extra = [n for n in names
                      if n not in ("Proyecto",) and n not in target]
             if extra:
                 raise ValueError(
-                    f"xlsx strict mode: {partition.path} has columns "
+                    f"xlsx strict mode: {path} has columns "
                     f"{extra} absent from the inferred schema — raise "
                     "the 'samples' option (or drop strict) so no "
                     "column is silently lost")
-        yield from align_rows(project, names, rows, target)
+        yield from align_rows(self._file_key(path), names, rows, target)
 
 
-class _XlsxCommit(WriterCommitMessage):
-    def __init__(self, path: str, rows: int) -> None:
-        self.path = path
-        self.rows = rows
-
-
-class ExcelWriter(DataSourceWriter):
+class ExcelWriter(_PartWriter):
     """``df.write.format("xlsx").save(dir)``: one workbook PER
     PARTITION, written executor-side with the stdlib xlsx codec —
     the fleet-scale gear for the S6/S8 per-group sinks (the
     driver-side audit-workbook sinks in ``sources.sinks`` stay for
-    the small multi-sheet artifacts). Files land as
-    ``part-<partition>-<uuid>.xlsx`` with one header row (the
-    DataFrame's column names) and every cell serialized with the
-    writer's native-number/inline-string rules; ``commit`` writes a
-    ``_SUCCESS`` manifest listing the committed parts, ``abort``
-    removes this attempt's files — partition-local work, no driver
-    collect anywhere."""
+    the small multi-sheet artifacts). Each part has one header row
+    (the DataFrame's column names) and every cell serialized with the
+    writer's native-number/inline-string rules."""
+
+    fmt, ext = "xlsx", ".xlsx"
 
     def __init__(self, options: dict, schema: StructType,
                  overwrite: bool) -> None:
-        path = options.get("path")
-        if not path:
-            raise ValueError("path option is required")
-        self.dir = _require_shared_fs(path)
-        self.columns = [f.name for f in schema.fields]
+        super().__init__(options, schema, overwrite)
         self.sheet = str(options.get("sheet", "Sheet1"))
-        self._old_parts = _snapshot_parts(self.dir) if overwrite else []
 
-    def write(self, iterator) -> _XlsxCommit:
-        import uuid
-
-        from pyspark import TaskContext
-
+    def write_part(self, path: str, iterator) -> int:
         from .excel import write_xlsx
-        ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx is not None else 0
         rows = [list(self.columns)]
-        for row in iterator:
-            rows.append([row[i] for i in range(len(self.columns))])
-        os.makedirs(self.dir, exist_ok=True)
-        name = f"part-{pid:05d}-{uuid.uuid4().hex}.xlsx"
-        write_xlsx(os.path.join(self.dir, name), {self.sheet: rows})
-        return _XlsxCommit(name, len(rows) - 1)
-
-    def commit(self, messages) -> None:
-        _remove_old_parts(self.dir, self._old_parts)
-        _write_manifest(self.dir, messages)
-
-    def abort(self, messages) -> None:
-        _abort_parts(self.dir, messages)
+        rows += [[row[i] for i in range(len(self.columns))]
+                 for row in iterator]
+        write_xlsx(path, {self.sheet: rows})
+        return len(rows) - 1
 
 
 class WarcDataSource(DataSource):
@@ -340,39 +399,13 @@ class WarcDataSource(DataSource):
         return WarcWriter(self.options, schema, overwrite)
 
 
-class WarcReader(DataSourceReader):
-    def __init__(self, options: dict) -> None:
-        self.files = _file_list(options)
-        self._file_tests: list = []
-        self._type_tests: list = []
+class WarcReader(_FileScan):
+    file_col, row_col, row_idx = "warc_file", "warc_type", 2
 
-    def pushFilters(self, filters):
-        """Consume string predicates on ``warc_file`` (FILE PRUNING —
-        unmatched members are never opened, the Python-datasource
-        analog of partition pruning) and on ``warc_type`` (record
-        pruning before the row leaves the reader). Everything else is
-        returned for Spark to evaluate post-scan."""
-        for f in filters:
-            sp = _string_predicate(f)
-            if sp and sp[0] == "warc_file":
-                self._file_tests.append(sp[1])
-            elif sp and sp[0] == "warc_type":
-                self._type_tests.append(sp[1])
-            else:
-                yield f
-
-    def partitions(self) -> list[InputPartition]:
-        files = [p for p in self.files
-                 if all(t(os.path.basename(p)) for t in self._file_tests)]
-        return [_FilePartition(p) for p in files] or \
-            [_FilePartition("\x00empty")]
-
-    def read(self, partition: _FilePartition):
+    def rows(self, path: str):
         from ..operators.webdataset import parse_warc_records
         from ..operators.zstdframe import UnsupportedZstd, decode_zstd_stream
-        if partition.path == "\x00empty":       # all files pruned
-            return
-        with open(partition.path, "rb") as f:
+        with open(path, "rb") as f:
             blob = f.read()
         if blob[:3] == b"BZh":                  # .warc.bz2 member
             from ..operators.bzip2 import decode_bzip2
@@ -403,37 +436,13 @@ class WarcReader(DataSourceReader):
                 dictionary = blob[8:8 + size]
                 blob = decode_zstd_stream(
                     blob, dictionary=dictionary)["content"]
-        name = os.path.basename(partition.path)
+        name = os.path.basename(path)
         for i, rec in enumerate(parse_warc_records(blob)):
-            if all(t(rec["type"]) for t in self._type_tests):
-                yield (name, i, rec["type"], rec["record_id"],
-                       rec["content_length"], bytes(rec["payload"]))
+            yield (name, i, rec["type"], rec["record_id"],
+                   rec["content_length"], bytes(rec["payload"]))
 
 
-class _PartCommit(WriterCommitMessage):
-    def __init__(self, path: str, rows: int) -> None:
-        self.path = path
-        self.rows = rows
-
-
-def _write_manifest(out_dir: str, messages) -> None:
-    manifest = sorted(f"{m.path}\t{m.rows}" for m in messages
-                      if m is not None)
-    with open(os.path.join(out_dir, "_SUCCESS"), "w") as f:
-        f.write("\n".join(manifest) + "\n")
-
-
-def _abort_parts(out_dir: str, messages) -> None:
-    for m in messages:
-        if m is None:
-            continue
-        try:
-            os.remove(os.path.join(out_dir, m.path))
-        except OSError:
-            pass
-
-
-class WarcWriter(DataSourceWriter):
+class WarcWriter(_PartWriter):
     """``df.write.format("warc").save(dir)``: one WARC member per
     partition, executor-side, re-sharding crawl records at fleet
     scale. Input columns (by name): ``warc_type``, ``record_id``,
@@ -442,42 +451,27 @@ class WarcWriter(DataSourceWriter):
     .warc.gz / .warc.zst / .warc.bz2 / .warc.lz4 — the reader sniffs
     all five)."""
 
+    fmt = "warc"
+    needs = ("warc_type", "record_id", "payload")
+
     def __init__(self, options: dict, schema: StructType,
                  overwrite: bool) -> None:
-        path = options.get("path")
-        if not path:
-            raise ValueError("path option is required")
-        self.dir = _require_shared_fs(path)
-        comp = str(options.get("compression", "none")).lower()
-        if comp not in ("none", "gzip", "zstd", "bz2", "lz4"):
+        super().__init__(options, schema, overwrite)
+        self.comp = str(options.get("compression", "none")).lower()
+        self.ext = {"none": ".warc", "gzip": ".warc.gz", "zstd": ".warc.zst",
+                    "bz2": ".warc.bz2", "lz4": ".warc.lz4"}.get(self.comp)
+        if self.ext is None:
             raise ValueError("compression must be none/gzip/zstd/bz2/lz4")
-        self.comp = comp
-        self._old_parts = _snapshot_parts(self.dir) if overwrite else []
-        names = [f.name for f in schema.fields]
-        for c in ("warc_type", "record_id", "payload"):
-            if c not in names:
-                raise ValueError(f"warc writer needs column {c!r}")
-        self.idx = {c: names.index(c)
-                    for c in ("warc_type", "record_id", "payload")}
 
-    def write(self, iterator) -> _PartCommit:
+    def write_part(self, path: str, iterator) -> int:
         import bz2
         import gzip
-        import uuid
-
-        from pyspark import TaskContext
 
         from ..operators.webdataset import build_warc
-        ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx is not None else 0
-        recs = []
-        for row in iterator:
-            recs.append((str(row[self.idx["warc_type"]]),
-                         str(row[self.idx["record_id"]]),
-                         bytes(row[self.idx["payload"]])))
+        recs = [(str(row[self.idx["warc_type"]]),
+                 str(row[self.idx["record_id"]]),
+                 bytes(row[self.idx["payload"]])) for row in iterator]
         blob = build_warc(recs)
-        ext = {"none": ".warc", "gzip": ".warc.gz", "zstd": ".warc.zst",
-               "bz2": ".warc.bz2", "lz4": ".warc.lz4"}[self.comp]
         if self.comp == "gzip":
             blob = gzip.compress(blob)
         elif self.comp == "bz2":
@@ -489,18 +483,9 @@ class WarcWriter(DataSourceWriter):
         elif self.comp == "lz4":
             from ..operators.lz4codec import lz4_frame_compress
             blob = lz4_frame_compress(blob) if blob else blob
-        os.makedirs(self.dir, exist_ok=True)
-        name = f"part-{pid:05d}-{uuid.uuid4().hex}{ext}"
-        with open(os.path.join(self.dir, name), "wb") as f:
+        with open(path, "wb") as f:
             f.write(blob)
-        return _PartCommit(name, len(recs))
-
-    def commit(self, messages) -> None:
-        _remove_old_parts(self.dir, self._old_parts)
-        _write_manifest(self.dir, messages)
-
-    def abort(self, messages) -> None:
-        _abort_parts(self.dir, messages)
+        return len(recs)
 
 
 class TFRecordDataSource(DataSource):
@@ -533,75 +518,46 @@ class TFRecordDataSource(DataSource):
         return FileStreamReader(self.options, TFRecordReader)
 
 
-class TFRecordReader(DataSourceReader):
-    def __init__(self, options: dict) -> None:
-        self.files = _file_list(options)
+class TFRecordReader(_FileScan):
+    file_col = "tf_file"
 
-    def partitions(self) -> list[InputPartition]:
-        return [_FilePartition(p) for p in self.files]
-
-    def read(self, partition: _FilePartition):
+    def rows(self, path: str):
         from ..operators.tfrecord import read_records
-        with open(partition.path, "rb") as f:
+        with open(path, "rb") as f:
             payload = f.read()
-        name = os.path.basename(partition.path)
+        name = os.path.basename(path)
         for i, rec in enumerate(read_records(payload)):
             yield (name, i, bytes(rec))
 
 
-class TFRecordWriter(DataSourceWriter):
+class TFRecordWriter(_PartWriter):
     """One .tfrecord file per partition; rows need a ``record`` binary
     column (extra columns are ignored — ordering/placement is the
     caller's repartition/sortWithinPartitions concern)."""
 
-    def __init__(self, options: dict, schema: StructType,
-                 overwrite: bool = False) -> None:
-        path = options.get("path")
-        if not path:
-            raise ValueError("path option is required")
-        self.dir = _require_shared_fs(path)
-        names = [f.name for f in schema.fields]
-        if "record" not in names:
-            raise ValueError("tfrecord writer needs a 'record' column")
-        self.rec_idx = names.index("record")
-        self._old_parts = _snapshot_parts(self.dir) if overwrite else []
+    fmt, ext, needs = "tfrecord", ".tfrecord", ("record",)
 
-    def write(self, iterator) -> _PartCommit:
-        import uuid
-
-        from pyspark import TaskContext
-
+    def write_part(self, path: str, iterator) -> int:
         from ..operators.tfrecord import frame_records
-        ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx is not None else 0
-        recs = [bytes(row[self.rec_idx]) for row in iterator]
-        os.makedirs(self.dir, exist_ok=True)
-        name = f"part-{pid:05d}-{uuid.uuid4().hex}.tfrecord"
-        with open(os.path.join(self.dir, name), "wb") as f:
+        recs = [bytes(row[self.idx["record"]]) for row in iterator]
+        with open(path, "wb") as f:
             f.write(frame_records(recs))
-        return _PartCommit(name, len(recs))
-
-    def commit(self, messages) -> None:
-        _remove_old_parts(self.dir, self._old_parts)
-        _write_manifest(self.dir, messages)
-
-    def abort(self, messages) -> None:
-        _abort_parts(self.dir, messages)
+        return len(recs)
 
 
 class FileStreamReader(SimpleDataSourceStreamReader):
     """Micro-batch over a growing directory of members (the
     crawl/training-data landing shape), generic over a per-file batch
-    reader class (warc, tfrecord). The offset is the LEXICOGRAPHICALLY
-    LARGEST member name processed so far — small and replayable —
-    which assumes members arrive with monotonically increasing names
-    (Common Crawl's segment naming does; name landing files
-    accordingly). ``readBetweenOffsets`` replays any (start, end]
+    reader class (warc, tfrecord, zip). The offset is the
+    LEXICOGRAPHICALLY LARGEST member name processed so far — small and
+    replayable — which assumes members arrive with monotonically
+    increasing names (Common Crawl's segment naming does; name landing
+    files accordingly). ``readBetweenOffsets`` replays any (start, end]
     window deterministically for recovery."""
 
-    def __init__(self, options: dict, reader_cls=None) -> None:
+    def __init__(self, options: dict, reader_cls) -> None:
         self.options = dict(options)
-        self.reader_cls = reader_cls or WarcReader
+        self.reader_cls = reader_cls
         path = options.get("path")
         if not path:
             raise ValueError("path option is required")
@@ -616,8 +572,7 @@ class FileStreamReader(SimpleDataSourceStreamReader):
         return {"last": ""}
 
     def _rows(self, path: str):
-        r = self.reader_cls({"path": path})
-        yield from r.read(_FilePartition(path))
+        yield from self.reader_cls({"path": path}).rows(path)
 
     def read(self, start: dict):
         names = {os.path.basename(p): p for p in self._files()}
@@ -635,16 +590,15 @@ class FileStreamReader(SimpleDataSourceStreamReader):
                 yield from self._rows(names[n])
 
 
-
-
 class ZipDataSource(DataSource):
-    """``spark.read/write.format("zip")`` over the from-scratch ZIP
-    container (``operators.ziparchive``): read yields one row per
-    archive member with the payload decoded through OUR central-
-    directory walker + stdlib raw inflate and its CRC-32 verdict; write
-    lands ONE archive per partition (columns ``name``, ``data``) with
-    a ``_SUCCESS`` manifest, same commit/abort protocol as the other
-    part-file writers. Read schema:
+    """``spark.read/write.format("zip")`` over ``operators.ziparchive``:
+    read yields one row per archive member, found through the stdlib
+    ``zipfile`` central-directory read, inflated by stdlib raw
+    ``zlib`` from our local-header read, with its CRC-32 verdict
+    (``crc_mismatch`` is a row, not an error); write lands ONE archive
+    per partition (columns ``name``, ``data``) built by our
+    ``zip_create``, through the shared part-file commit protocol.
+    Read schema:
     ``(zip_file, member_index, name, size, method, crc_ok, data)``."""
 
     @classmethod
@@ -672,85 +626,30 @@ class ZipDataSource(DataSource):
         return FileStreamReader(self.options, ZipReader)
 
 
-class ZipReader(DataSourceReader):
-    def __init__(self, options: dict) -> None:
-        self.files = _file_list(options)
-        self._file_tests: list = []
-        self._name_tests: list = []
+class ZipReader(_FileScan):
+    file_col, row_col, row_idx = "zip_file", "name", 2
 
-    def pushFilters(self, filters):
-        """String predicates on ``zip_file`` prune unopened archives
-        (file-level pruning); predicates on ``name`` prune members
-        before the row leaves the reader."""
-        for f in filters:
-            sp = _string_predicate(f)
-            if sp and sp[0] == "zip_file":
-                self._file_tests.append(sp[1])
-            elif sp and sp[0] == "name":
-                self._name_tests.append(sp[1])
-            else:
-                yield f
-
-    def partitions(self) -> list[InputPartition]:
-        files = [p for p in self.files
-                 if all(t(os.path.basename(p)) for t in self._file_tests)]
-        return [_FilePartition(p) for p in files] or \
-            [_FilePartition("\x00empty")]
-
-    def read(self, partition: _FilePartition):
+    def rows(self, path: str):
         from ..operators.ziparchive import zip_extract
-        if partition.path == "\x00empty":
-            return
-        with open(partition.path, "rb") as f:
+        with open(path, "rb") as f:
             blob = f.read()
-        base = os.path.basename(partition.path)
+        base = os.path.basename(path)
         for i, m in enumerate(zip_extract(blob)):
-            if all(t(m["name"]) for t in self._name_tests):
-                yield (base, i, m["name"], len(m["data"]),
-                       int(m["method"]),
-                       "ok" if m["crc_ok"] else "crc_mismatch",
-                       bytes(m["data"]))
+            yield (base, i, m["name"], len(m["data"]), int(m["method"]),
+                   "ok" if m["crc_ok"] else "crc_mismatch",
+                   bytes(m["data"]))
 
 
-class ZipWriter(DataSourceWriter):
-    def __init__(self, options: dict, schema: StructType,
-                 overwrite: bool) -> None:
-        path = options.get("path")
-        if not path:
-            raise ValueError("path option is required")
-        self.dir = _require_shared_fs(path)
-        self._old_parts = _snapshot_parts(self.dir) if overwrite else []
-        names = [f.name for f in schema.fields]
-        for c in ("name", "data"):
-            if c not in names:
-                raise ValueError(f"zip writer needs column {c!r}")
-        self.idx = {c: names.index(c) for c in ("name", "data")}
+class ZipWriter(_PartWriter):
+    fmt, ext, needs = "zip", ".zip", ("name", "data")
 
-    def write(self, iterator) -> _PartCommit:
-        import uuid
-
-        from pyspark import TaskContext
-
+    def write_part(self, path: str, iterator) -> int:
         from ..operators.ziparchive import zip_create
-        ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx is not None else 0
-        entries = []
-        for row in iterator:
-            entries.append((str(row[self.idx["name"]]),
-                            bytes(row[self.idx["data"]])))
-        blob = zip_create(entries)
-        os.makedirs(self.dir, exist_ok=True)
-        name = f"part-{pid:05d}-{uuid.uuid4().hex}.zip"
-        with open(os.path.join(self.dir, name), "wb") as f:
-            f.write(blob)
-        return _PartCommit(name, len(entries))
-
-    def commit(self, messages) -> None:
-        _remove_old_parts(self.dir, self._old_parts)
-        _write_manifest(self.dir, messages)
-
-    def abort(self, messages) -> None:
-        _abort_parts(self.dir, messages)
+        entries = [(str(row[self.idx["name"]]), bytes(row[self.idx["data"]]))
+                   for row in iterator]
+        with open(path, "wb") as f:
+            f.write(zip_create(entries))
+        return len(entries)
 
 
 _SQLITE_AFFINITY_RULES = (
@@ -834,42 +733,27 @@ class SqliteDataSource(DataSource):
                             overwrite)
 
 
-class SqliteReader(DataSourceReader):
+class SqliteReader(_FileScan):
+    file_col = "db_file"
+
     def __init__(self, options: dict, table: str,
                  schema: StructType) -> None:
-        self.files = _file_list(options)
+        super().__init__(options)
         self.table = table
         self.schema = schema
-        self._file_tests: list = []
 
-    def pushFilters(self, filters):
-        for f in filters:
-            sp = _string_predicate(f)
-            if sp and sp[0] == "db_file":
-                self._file_tests.append(sp[1])
-            else:
-                yield f
-
-    def partitions(self) -> list[InputPartition]:
-        files = [p for p in self.files
-                 if all(t(os.path.basename(p)) for t in self._file_tests)]
-        return [_FilePartition(p) for p in files] or \
-            [_FilePartition("\x00empty")]
-
-    def read(self, partition: _FilePartition):
+    def rows(self, path: str):
         from ..operators.sqlitefile import sqlite_read_table
-        if partition.path == "\x00empty":
-            return
-        with open(partition.path, "rb") as f:
+        with open(path, "rb") as f:
             blob = f.read()
         got = sqlite_read_table(blob, self.table)
         want = [f.name for f in self.schema.fields[2:]]
+        base = os.path.basename(path)
         if got["columns"] != want:
             raise ValueError(
-                f"{os.path.basename(partition.path)!r}: table "
-                f"{self.table!r} has columns {got['columns']}, the "
-                f"planned schema (from the first file) says {want}")
-        base = os.path.basename(partition.path)
+                f"{base!r}: table {self.table!r} has columns "
+                f"{got['columns']}, the planned schema (from the first "
+                f"file) says {want}")
         types = [f.dataType for f in self.schema.fields[2:]]
         for rid, vals in zip(got["rowids"], got["rows"]):
             out = [base, rid]
@@ -892,25 +776,18 @@ class SqliteReader(DataSourceReader):
             yield tuple(out)
 
 
-class SqliteWriter(DataSourceWriter):
+class SqliteWriter(_PartWriter):
+    fmt, ext = "sqlite", ".sqlite"
+
     def __init__(self, options: dict, table: str, schema: StructType,
                  overwrite: bool) -> None:
-        path = options.get("path")
-        if not path:
-            raise ValueError("path option is required")
-        _refuse_sqlite_reserved(schema.fieldNames(), "the written frame")
-        self.dir = _require_shared_fs(path)
+        super().__init__(options, schema, overwrite)
+        _refuse_sqlite_reserved(self.columns, "the written frame")
         self.table = table
         self.schema = schema
-        self._old_parts = _snapshot_parts(self.dir) if overwrite else []
 
-    def write(self, iterator) -> _PartCommit:
+    def write_part(self, path: str, iterator) -> int:
         import sqlite3
-        import uuid
-
-        from pyspark import TaskContext
-        ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx is not None else 0
         ddl_types = []
         for f in self.schema.fields:
             t = f.dataType
@@ -934,24 +811,15 @@ class SqliteWriter(DataSourceWriter):
                               else v for v in row))
             n += 1
         con.commit()
-        os.makedirs(self.dir, exist_ok=True)
-        name = f"part-{pid:05d}-{uuid.uuid4().hex}.sqlite"
-        with open(os.path.join(self.dir, name), "wb") as f:
+        with open(path, "wb") as f:
             f.write(con.serialize())
-        return _PartCommit(name, n)
-
-    def commit(self, messages) -> None:
-        _remove_old_parts(self.dir, self._old_parts)
-        _write_manifest(self.dir, messages)
-
-    def abort(self, messages) -> None:
-        _abort_parts(self.dir, messages)
+        return n
 
 
 def register_data_sources(spark) -> None:
-    """Idempotently register both formats on a session, enabling the
-    Python-datasource filter-pushdown conf they implement (runtime-
-    settable; off by default in Spark 4.1)."""
+    """Idempotently register the five formats on a session, enabling
+    the Python-datasource filter-pushdown conf their readers implement
+    (runtime-settable; off by default in Spark 4.1)."""
     spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
     spark.dataSource.register(ExcelDataSource)
     spark.dataSource.register(WarcDataSource)

@@ -278,6 +278,7 @@ def streaming_late_window_counts(spark: SparkSession, sf_dir: str,
     import glob
     import shutil
 
+    from ..queries_scale_common import _scratch_dir
     from ..sources.tables import load_tables
 
     events = load_tables(spark, sf_dir)["events"].select(
@@ -288,7 +289,7 @@ def streaming_late_window_counts(spark: SparkSession, sf_dir: str,
     t_late = max_ts - datetime.timedelta(hours=72)
     is_late = (F.col("ts") < F.lit(t_late)) & (F.col("user_id") % 5 == 0)
 
-    root = tempfile.mkdtemp(prefix="stream_late_")
+    root = _scratch_dir("stream_late_", sf_dir)
     stage = os.path.join(root, "stage")
     os.makedirs(stage)
 

@@ -72,7 +72,7 @@ def test_zip_mutation_terminates(raw, data):
     blob[i] ^= data.draw(st.integers(1, 255))
     try:
         members = zip_extract(bytes(blob))
-    except _LOUD:
+    except ZipError:                # every refusal is a ZipError
         return
     for m in members:
         # wrong bytes must be flagged by CRC (or the flip was benign)

@@ -390,46 +390,133 @@ def test_object_store_uri_raises_named_error(spark, tmp_path):
             .collect()
 
 
-def test_overwrite_defers_old_part_removal_to_commit(tmp_path):
-    """Commit-protocol overwrite (ADVICE r10): old parts survive
-    planning and write; they disappear only at commit. An aborted
-    overwrite leaves the previous dataset fully intact."""
-    from pyspark.sql.types import BinaryType, StructField, StructType
+# format -> (extra options, column names and types the writer takes,
+# row carrying a string value, read-back row -> that value)
+_WRITE_CASES = {
+    "xlsx": ({"header_row": "0"}, [("u", "string")],
+             lambda v: (v,), lambda r: r[1]),
+    "warc": ({}, [("warc_type", "string"), ("record_id", "string"),
+                  ("payload", "binary")],
+             lambda v: ("response", v, v.encode()), lambda r: r[3]),
+    "tfrecord": ({}, [("record", "binary")],
+                 lambda v: (v.encode(),), lambda r: r[2].decode()),
+    "zip": ({}, [("name", "string"), ("data", "binary")],
+            lambda v: (v, v.encode()), lambda r: r[2]),
+    "sqlite": ({"table": "t"}, [("v", "string")],
+               lambda v: (v,), lambda r: r[2]),
+}
 
-    from precios_nexo_sperant_etl_spark.operators.tfrecord import (
-        read_records)
-    from precios_nexo_sperant_etl_spark.sources.spark_datasource import (
-        TFRecordWriter)
 
+def _source(fmt: str, path):
+    from precios_nexo_sperant_etl_spark.sources import spark_datasource as sd
+    cls = {"xlsx": sd.ExcelDataSource, "warc": sd.WarcDataSource,
+           "tfrecord": sd.TFRecordDataSource, "zip": sd.ZipDataSource,
+           "sqlite": sd.SqliteDataSource}[fmt]
+    return cls({"path": str(path), **_WRITE_CASES[fmt][0]})
+
+
+@pytest.mark.parametrize("fmt", sorted(_WRITE_CASES))
+def test_overwrite_defers_old_part_removal_to_commit(tmp_path, fmt):
+    """Commit-protocol overwrite (ADVICE r10), the same for every
+    writer: old parts survive planning and write; they disappear only
+    at commit. An aborted overwrite leaves the previous dataset fully
+    intact, and the manifest lists ``part<TAB>rows`` per part."""
+    from pyspark.sql.types import (BinaryType, StringType, StructField,
+                                   StructType)
+
+    _, cols, row, value = _WRITE_CASES[fmt]
+    schema = StructType([StructField(n, {"string": StringType(),
+                                         "binary": BinaryType()}[t])
+                         for n, t in cols])
     out = tmp_path / "ds"
     out.mkdir()
-    schema = StructType([StructField("record", BinaryType())])
+
+    def parts():
+        return sorted(p.name for p in out.glob("part-*"))
+
+    def values():
+        reader = _source(fmt, out).reader(_source(fmt, out).schema())
+        return sorted(value(r) for p in reader.partitions()
+                      for r in reader.read(p))
+
     # seed an existing committed dataset
-    w0 = TFRecordWriter({"path": str(out)}, schema, False)
-    m0 = w0.write(iter([(b"old-1",), (b"old-2",)]))
-    w0.commit([m0])
-    old_parts = sorted(p.name for p in out.glob("part-*"))
+    w0 = _source(fmt, out).writer(schema, False)
+    w0.commit([w0.write(iter([row("old-1"), row("old-2")]))])
+    old_parts = parts()
     assert len(old_parts) == 1
+    assert (out / "_SUCCESS").read_text() == f"{old_parts[0]}\t2\n"
 
     # overwrite attempt #1: write, then ABORT — old data intact
-    w1 = TFRecordWriter({"path": str(out)}, schema, True)
-    assert sorted(p.name for p in out.glob("part-*")) == old_parts
-    m1 = w1.write(iter([(b"new-A",)]))
-    assert set(old_parts) <= {p.name for p in out.glob("part-*")}
+    w1 = _source(fmt, out).writer(schema, True)
+    assert parts() == old_parts
+    m1 = w1.write(iter([row("new-A")]))
+    assert set(old_parts) < set(parts())
     w1.abort([m1])
-    assert sorted(p.name for p in out.glob("part-*")) == old_parts
-    assert (out / "_SUCCESS").exists()
-    data = b"".join(rec for p in out.glob("part-*")
-                    for rec in read_records(p.read_bytes()))
-    assert data == b"old-1old-2"
+    assert parts() == old_parts
+    assert (out / "_SUCCESS").read_text() == f"{old_parts[0]}\t2\n"
+    assert values() == ["old-1", "old-2"]
 
     # overwrite attempt #2: write + COMMIT — old parts replaced
-    w2 = TFRecordWriter({"path": str(out)}, schema, True)
-    m2 = w2.write(iter([(b"new-B",)]))
-    w2.commit([m2])
-    parts = sorted(p.name for p in out.glob("part-*"))
-    assert len(parts) == 1 and parts != old_parts
-    assert read_records((out / parts[0]).read_bytes()) == [b"new-B"]
+    w2 = _source(fmt, out).writer(schema, True)
+    w2.commit([w2.write(iter([row("new-B"), row("new-C"), row("new-D")]))])
+    new_parts = parts()
+    assert len(new_parts) == 1 and new_parts != old_parts
+    assert (out / "_SUCCESS").read_text() == f"{new_parts[0]}\t3\n"
+    assert values() == ["new-B", "new-C", "new-D"]
+
+
+@pytest.mark.parametrize("fmt", sorted(_WRITE_CASES))
+def test_directory_a_writer_made_reads_back(spark, tmp_path, fmt):
+    """Loading the directory itself (not a ``part-*`` glob) skips the
+    ``_SUCCESS`` manifest, as Spark's file sources skip ``_``/``.``
+    names, so what a writer made reads back as written."""
+    register_data_sources(spark)
+    opts, cols, row, value = _WRITE_CASES[fmt]
+    out = tmp_path / fmt
+    vals = [f"v-{i}" for i in range(6)]
+    df = spark.createDataFrame([row(v) for v in vals],
+                               ", ".join(f"{n} {t}" for n, t in cols))
+    df.repartition(2).write.format(fmt).options(**opts) \
+      .mode("append").save(str(out))
+    assert (out / "_SUCCESS").exists()
+    back = spark.read.format(fmt).options(**opts).load(str(out))
+    assert sorted(value(r) for r in back.collect()) == vals
+
+
+def test_tfrecord_file_pushdown(spark, tmp_path):
+    """String predicates on ``tf_file`` prune files at planning."""
+    from precios_nexo_sperant_etl_spark.operators.tfrecord import (
+        frame_records)
+    register_data_sources(spark)
+    for i in range(3):
+        (tmp_path / f"s{i}.tfrecord").write_bytes(
+            frame_records([b"r%d-a" % i, b"r%d-b" % i]))
+    base = spark.read.format("tfrecord").load(str(tmp_path / "*.tfrecord"))
+    one = base.where(F.col("tf_file") == "s1.tfrecord")
+    assert one.rdd.getNumPartitions() == 1
+    assert sorted(bytes(r["record"]) for r in one.collect()) == \
+        [b"r1-a", b"r1-b"]
+    two = base.where(F.col("tf_file").isin("s0.tfrecord", "s2.tfrecord"))
+    assert two.rdd.getNumPartitions() == 2 and two.count() == 4
+    assert base.where(F.col("tf_file") == "nope").count() == 0
+
+
+def test_warc_roundtrip_query_keeps_one_scratch_dir(spark, tmp_path,
+                                                    monkeypatch):
+    """warc_datasource_roundtrip writes under one directory per input,
+    wiped by its next run: two runs leave one directory and agree."""
+    import glob
+    import tempfile
+
+    from precios_nexo_sperant_etl_spark.queries_scale_part4 import (
+        _warc_datasource_roundtrip)
+    from tests.conftest import SF_DIR
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    first = _warc_datasource_roundtrip(spark, SF_DIR).collect()
+    (root,) = glob.glob(str(tmp_path / "warc_ds_roundtrip_*"))
+    second = _warc_datasource_roundtrip(spark, SF_DIR).collect()
+    assert glob.glob(str(tmp_path / "warc_ds_roundtrip_*")) == [root]
+    assert first and first == second
 
 
 def test_warc_zstd_external_dict_frame_refuses(spark, tmp_path):
@@ -700,7 +787,7 @@ def test_sqlite_format_schema_skips_row_fetch(tmp_path, monkeypatch):
 
 def test_zip_streaming_source(spark, tmp_path):
     """readStream.format('zip'): archives landing between micro-batches
-    are picked up exactly once, members decoded by our walker."""
+    are picked up exactly once, members decoded by zip_extract."""
     import io
     import time
     import zipfile

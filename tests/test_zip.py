@@ -138,3 +138,77 @@ def test_roundtrip_many_members_property():
     zf = zipfile.ZipFile(io.BytesIO(blob))
     assert zf.testzip() is None
     assert [zf.read(n) for n, _ in entries] == [d for _, d in entries]
+
+
+# -- corrupt-input contract: every refusal is a ZipError; a CRC mismatch
+# -- is a flagged member, never an error and never silently right
+
+
+def _stdlib_zip(members):
+    buf = io.BytesIO()
+    with zipfile.ZipFile(buf, "w", zipfile.ZIP_DEFLATED) as zf:
+        for name, data in members:
+            zf.writestr(name, data)
+    return buf.getvalue()
+
+
+def test_invalid_utf8_name_raises_zip_error():
+    blob = bytearray(zip_create([("ñ.txt", b"flagged utf-8 name")]))
+    cd = blob.rindex(b"PK\x01\x02")
+    blob[cd + 46] = 0xFF            # first name byte: not UTF-8 any more
+    with pytest.raises(ZipError):
+        zip_extract(bytes(blob))
+
+
+def test_prefixed_archive_reads():
+    """A self-extractor stub ahead of an archive whose offsets do not
+    count it: every offset is re-anchored to the directory."""
+    blob = b"#!/bin/sh\nexec unzip \"$0\"\n" * 2 + zip_create(
+        [("a.txt", b"first " * 40), ("b.txt", b"second")])
+    members = zip_extract(blob)
+    assert [(m["name"], m["data"]) for m in members] == [
+        ("a.txt", b"first " * 40), ("b.txt", b"second")]
+    assert all(m["crc_ok"] for m in members)
+
+
+def test_negative_local_header_offset_raises_zip_error():
+    """A directory offset past the directory's real start makes the
+    inferred prefix negative, and with it the first member's
+    local-header offset."""
+    blob = bytearray(zip_create([("a.txt", b"payload")]))
+    eocd = blob.rindex(b"PK\x05\x06")
+    cd_off = int.from_bytes(blob[eocd + 16:eocd + 20], "little")
+    blob[eocd + 16:eocd + 20] = (cd_off + 10).to_bytes(4, "little")
+    with pytest.raises(ZipError, match="local header offset"):
+        zip_extract(bytes(blob))
+
+
+def test_swallowed_directory_entry_raises_zip_error():
+    """A comment length that runs over the next directory entries hides
+    them from the byte-bounded directory read; the end record's entry
+    count refuses the archive instead of dropping members."""
+    blob = bytearray(_stdlib_zip([("a.txt", b"one"), ("b.txt", b"two")]))
+    cd = blob.index(b"PK\x01\x02")
+    blob[cd + 32] = 0xFF            # comment length of the first entry
+    with pytest.raises(ZipError, match="end record"):
+        zip_extract(bytes(blob))
+
+
+def test_every_single_byte_flip_is_refused_flagged_or_benign():
+    """Exhaustive single-byte flips of a stdlib archive: each one
+    raises ZipError, flags a CRC mismatch, or returns every member's
+    bytes intact (a flipped name byte can rename a member)."""
+    members = [("a.bin", bytes(range(256)) * 2), ("dir/ñ.txt", b"x" * 300),
+               ("s.txt", b"stored")]
+    base = _stdlib_zip(members)
+    want = sorted(d for _, d in members)
+    for i in range(len(base)):
+        for x in (0x01, 0x80, 0xFF):
+            blob = bytearray(base)
+            blob[i] ^= x
+            try:
+                got = zip_extract(bytes(blob))
+            except ZipError:
+                continue
+            if all(m["crc_ok"] for m in got):
+                assert sorted(m["data"] for m in got) == want, (i, x)
